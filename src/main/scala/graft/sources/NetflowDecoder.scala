@@ -1,10 +1,10 @@
 package graft.sources
 
 import graft.flow.FlowSchema
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
 
@@ -20,12 +20,18 @@ import scala.jdk.CollectionConverters._
   * (the reference's 65536-entry function table, netflow.c:56,824-837,
   * becomes a Map lookup).
   *
-  * Distribution model: packets are decoded with `mapPartitions`; the
-  * template cache is partition-local, so routing an exporter's packets to
-  * a stable partition (repartition by exporter ip) reproduces the
-  * reference's socket-per-thread affinity (STEP-BY-STEP.md:138-156) at
-  * cluster scale. Templates arriving in the same packet as data (the
-  * normal NetFlow startup behavior) always decode.
+  * Distribution model: packets are decoded per partition by the
+  * [[DecodeFlows]] plan node; the template cache is partition-local, so
+  * routing an exporter's packets to a stable partition (repartition by
+  * exporter ip) reproduces the reference's socket-per-thread affinity
+  * (STEP-BY-STEP.md:138-156) at cluster scale. Templates arriving in the
+  * same packet as data (the normal NetFlow startup behavior) always
+  * decode. Each flow is decoded straight into an array of Catalyst
+  * values (Long, UTF8String, Array[Byte], null) that becomes the output
+  * InternalRow, like the reference's fixed-width `struct flow_info`
+  * (flow-info.h:10-33); no `Row` or encoder sits between decode and
+  * the plan. [[decodePacket]] is the per-packet view for callers
+  * outside Spark and returns Java Strings instead.
   */
 object NetflowDecoder {
 
@@ -34,7 +40,14 @@ object NetflowDecoder {
     * share the numeric space with field ids but mean something else, so
     * they must never hit the field dispatch). */
   final case class Template(fields: Seq[(Int, Int, Long)],
-                            isOptions: Boolean = false)
+                            isOptions: Boolean = false) {
+    // record-layout sums, computed once per template instead of per
+    // record (65535 marks an IPFIX variable-length field)
+    lazy val recLen: Int = fields.iterator.map(_._2).sum
+    lazy val varFields: Int = fields.count(_._2 == 65535)
+    lazy val fixedLen: Int =
+      fields.iterator.map(_._2).filter(_ != 65535).sum
+  }
 
   /** Partition-local template store with LRU eviction and EPOCH
     * history: templates are keyed by (exporter, source-id, version,
@@ -58,7 +71,7 @@ object NetflowDecoder {
     private def lru[K, V](cap: Int) =
       new java.util.LinkedHashMap[K, V](64, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[K, V]): Boolean = size() > cap
+            e: java.util.Map.Entry[K, V]): Boolean = this.size() > cap
       }
     private type Hist[V] = java.util.TreeMap[java.lang.Long, V]
     private val m = lru[(Long, Long, Int, Int), Hist[Template]](maxEntries)
@@ -391,7 +404,8 @@ object NetflowDecoder {
               while (e < off + len && b(e) != 0) e += 1
               e
             }
-            new String(b, off, end - off, StandardCharsets.UTF_8)
+            UTF8String.fromString(
+              new String(b, off, end - off, StandardCharsets.UTF_8))
         }
       }
     }
@@ -425,12 +439,30 @@ object NetflowDecoder {
   private val PhaseFlows = Phase(false, false, true)
 
   /** Decode one UDP payload into flow rows (ts_sec + fields, nulls where
-    * absent). Unknown versions/flowsets are skipped, not fatal. */
+    * absent), string columns as Java Strings. Unknown versions/flowsets
+    * are skipped, not fatal. */
   def decodePacket(payload: Array[Byte], tsSec: Long, srcIp: Long,
                    cache: TemplateCache,
                    entMap: Map[(Long, Int), Int] = defaultEnterpriseMap)
       : Seq[Array[Any]] =
     decodePhase(payload, tsSec, srcIp, cache, entMap, PhaseAll)
+      .map(toExternal)
+
+  private val stringSlots: Array[Int] =
+    outSchema.fields.indices.filter(outSchema(_).dataType == StringType)
+      .toArray
+
+  /** A decoded row with its UTF8String values turned into Strings, in
+    * place: the per-packet view of [[decodePacket]]. */
+  private[sources] def toExternal(row: Array[Any]): Array[Any] = {
+    stringSlots.foreach { i =>
+      row(i) match {
+        case u: UTF8String => row(i) = u.toString
+        case _             => ()
+      }
+    }
+    row
+  }
 
   private def decodePhase(payload: Array[Byte], tsSec: Long, srcIp: Long,
                           cache: TemplateCache,
@@ -533,7 +565,7 @@ object NetflowDecoder {
         }
       } else if (setId >= 256 && (ph.options || ph.flows)) {
         cache.get(srcIp, sourceId, 9, setId, tsSec).foreach { t =>
-          val recLen = t.fields.map(_._2).sum
+          val recLen = t.recLen
           if (recLen > 0 && t.isOptions && ph.options) {
             // options DATA: no flow rows — harvest the exporter's
             // sampling interval (fields 34 SAMPLING_INTERVAL /
@@ -651,13 +683,12 @@ object NetflowDecoder {
               if (isOpt) None
               else cache.getSampling(srcIp, domainId, tsSec)
             var p = off + 4
-            val hasVar = t.fields.exists(_._2 == 65535)
-            val fixedLen = t.fields.map(_._2).filter(_ != 65535).sum
+            // smallest record: every variable-length field takes at
+            // least its 1-byte length prefix
+            val minRecLen = t.fixedLen + t.varFields
             var continue = true
             while (continue && p < off + setLen &&
-                   (off + setLen - p) >= (if (hasVar) t.fields.count(
-                     _._2 == 65535) + fixedLen else fixedLen) &&
-                   fixedLen + (if (hasVar) 1 else 0) > 0) {
+                   (off + setLen - p) >= minRecLen && minRecLen > 0) {
               val row = new Array[Any](outSchema.length)
               row(0) = tsSec
               var q = p
@@ -749,17 +780,15 @@ object NetflowDecoder {
              orderIndependent: Boolean = true,
              bufferByteBudget: Long = 256L << 20)
       : DataFrame = {
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
     val proj = df.select(col(payloadCol), col(tsCol).cast(LongType),
       col(srcIpCol).cast(LongType))
-    proj.mapPartitions { it =>
+    DecodeFlows.frame(proj, outSchema) { it =>
       val cache = new TemplateCache
-      val packets = it.map(r => (r.getAs[Array[Byte]](0), r.getLong(1),
+      val packets = it.map(r => (r.getBinary(0), r.getLong(1),
         r.getLong(2)))
       def singlePass(rest: Iterator[(Array[Byte], Long, Long)]) =
         rest.flatMap { case (p, ts, src) =>
-          decodePacket(p, ts, src, cache, entMap)
-            .map(vals => Row.fromSeq(vals.toSeq))
+          decodePhase(p, ts, src, cache, entMap, PhaseAll)
         }
       if (orderIndependent) {
         // buffer up to the byte budget; only a fully-buffered partition
@@ -791,17 +820,16 @@ object NetflowDecoder {
           }
           buf.iterator.flatMap { case (p, ts, src) =>
             decodePhase(p, ts, src, cache, entMap, PhaseFlows)
-              .map(vals => Row.fromSeq(vals.toSeq))
           }
         }
       } else singlePass(packets)
-    }(enc)
+    }
   }
 
   /** Executor-JVM-wide template caches for STREAMING ingest, keyed by
     * (namespace, input partition id). Real exporters re-announce
     * templates every ~60 s while data flows continuously; a micro-
-    * batch-local cache (what [[decode]] builds inside mapPartitions)
+    * batch-local cache (what [[decode]] builds per partition)
     * would drop every data record arriving between re-announcements.
     * One cache per input partition — reused across micro-batches within
     * the executor process — keeps it lock-uncontended in steady state
@@ -1025,7 +1053,6 @@ object NetflowDecoder {
                    entMap: Map[(Long, Int), Int] = defaultEnterpriseMap,
                    templatesDir: Option[String] = None)
       : DataFrame = {
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
     val proj = df.select(col(payloadCol), col(tsCol).cast(LongType),
       col(srcIpCol).cast(LongType))
     // URI-scheme dirs route through Hadoop FS; the executor-side
@@ -1041,7 +1068,7 @@ object NetflowDecoder {
           new org.apache.hadoop.fs.Path(d).toUri.getScheme != null)
         .map(_ => new org.apache.spark.util.SerializableConfiguration(
           df.sparkSession.sparkContext.hadoopConfiguration))
-    proj.mapPartitions { it =>
+    DecodeFlows.frame(proj, outSchema) { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val cache = streamCache(namespace, pid)
       templatesDir.foreach { dir =>
@@ -1091,10 +1118,10 @@ object NetflowDecoder {
       }
       it.flatMap { r =>
         cache.synchronized {
-          decodePacket(r.getAs[Array[Byte]](0), r.getLong(1),
-            r.getLong(2), cache, entMap)
-        }.map(vals => Row.fromSeq(vals.toSeq))
+          decodePhase(r.getBinary(0), r.getLong(1), r.getLong(2), cache,
+            entMap, PhaseAll)
+        }
       }
-    }(enc)
+    }
   }
 }

@@ -1,10 +1,10 @@
 package graft.sources
 
 import graft.flow.FlowSchema
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** sFlow v5 decoder: XDR datagram → flow samples → raw packet header
   * parse (Ethernet / 802.1Q / IPv4 / IPv6 / TCP / UDP / ICMP) into the
@@ -26,6 +26,35 @@ object SflowDecoder {
       f.name -> (i + 1)
     }.toMap
 
+  // output slots, resolved once rather than by name for every flow
+  private val dstMacSlot = slot("dst_mac")
+  private val srcMacSlot = slot("src_mac")
+  private val srcVlanSlot = slot("src_vlan")
+  private val dstVlanSlot = slot("dst_vlan")
+  private val ipProtocolVersionSlot = slot("ip_protocol_version")
+  private val srcTosSlot = slot("src_tos")
+  private val ipTtlSlot = slot("ip_ttl")
+  private val protocolSlot = slot("protocol")
+  private val fragIdSlot = slot("frag_id")
+  private val ip4SrcAddrSlot = slot("ip4_src_addr")
+  private val ip4DstAddrSlot = slot("ip4_dst_addr")
+  private val ip6SrcAddrSlot = slot("ip6_src_addr")
+  private val ip6DstAddrSlot = slot("ip6_dst_addr")
+  private val l4SrcPortSlot = slot("l4_src_port")
+  private val l4DstPortSlot = slot("l4_dst_port")
+  private val tcpFlagsSlot = slot("tcp_flags")
+  private val icmpTypeSlot = slot("icmp_type")
+  private val dnsNameSlot = slot("dns_name")
+  private val dnsIpsSlot = slot("dns_ips")
+  private val sniSlot = slot("sni")
+  private val inBytesSlot = slot("in_bytes")
+  private val inPktsSlot = slot("in_pkts")
+  private val samplingRateSlot = slot("sampling_rate")
+  private val inputSnmpSlot = slot("input_snmp")
+  private val outputSnmpSlot = slot("output_snmp")
+  private val devIpSlot = slot("dev_ip")
+  private val devIp6Slot = slot("dev_ip6")
+
   private def u16(b: Array[Byte], o: Int): Int =
     ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
   private def u32(b: Array[Byte], o: Int): Long = {
@@ -39,8 +68,8 @@ object SflowDecoder {
   private def parseEthernet(b: Array[Byte], row: Array[Any],
                             dns: Boolean, sni: Boolean): Unit = {
     if (b.length < 14) return
-    row(slot("dst_mac")) = java.util.Arrays.copyOfRange(b, 0, 6)
-    row(slot("src_mac")) = java.util.Arrays.copyOfRange(b, 6, 12)
+    row(dstMacSlot) = java.util.Arrays.copyOfRange(b, 0, 6)
+    row(srcMacSlot) = java.util.Arrays.copyOfRange(b, 6, 12)
     var off = 12
     var ethType = u16(b, off)
     off += 2
@@ -48,8 +77,8 @@ object SflowDecoder {
     var vlanSeen = false
     while ((ethType == 0x8100 || ethType == 0x88a8) && off + 4 <= b.length) {
       val vid = u16(b, off) & 0x0fff
-      if (!vlanSeen) { row(slot("src_vlan")) = vid.toLong; vlanSeen = true }
-      else row(slot("dst_vlan")) = vid.toLong
+      if (!vlanSeen) { row(srcVlanSlot) = vid.toLong; vlanSeen = true }
+      else row(dstVlanSlot) = vid.toLong
       ethType = u16(b, off + 2)
       off += 4
     }
@@ -64,27 +93,27 @@ object SflowDecoder {
                         dns: Boolean, sni: Boolean): Unit = {
     if (off + 20 > b.length) return
     val ihl = (b(off) & 0x0f) * 4
-    row(slot("ip_protocol_version")) = 4L
-    row(slot("src_tos")) = (b(off + 1) & 0xff).toLong
-    row(slot("ip_ttl")) = (b(off + 8) & 0xff).toLong
+    row(ipProtocolVersionSlot) = 4L
+    row(srcTosSlot) = (b(off + 1) & 0xff).toLong
+    row(ipTtlSlot) = (b(off + 8) & 0xff).toLong
     val proto = (b(off + 9) & 0xff).toLong
-    row(slot("protocol")) = proto
-    row(slot("frag_id")) = u16(b, off + 4).toLong
-    row(slot("ip4_src_addr")) = u32(b, off + 12)
-    row(slot("ip4_dst_addr")) = u32(b, off + 16)
+    row(protocolSlot) = proto
+    row(fragIdSlot) = u16(b, off + 4).toLong
+    row(ip4SrcAddrSlot) = u32(b, off + 12)
+    row(ip4DstAddrSlot) = u32(b, off + 16)
     parseL4(b, off + ihl, proto, row, dns, sni)
   }
 
   private def parseIpv6(b: Array[Byte], off: Int, row: Array[Any],
                         dns: Boolean, sni: Boolean): Unit = {
     if (off + 40 > b.length) return
-    row(slot("ip_protocol_version")) = 6L
+    row(ipProtocolVersionSlot) = 6L
     val proto = (b(off + 6) & 0xff).toLong
-    row(slot("protocol")) = proto
-    row(slot("ip_ttl")) = (b(off + 7) & 0xff).toLong
-    row(slot("ip6_src_addr")) = java.util.Arrays.copyOfRange(b, off + 8,
+    row(protocolSlot) = proto
+    row(ipTtlSlot) = (b(off + 7) & 0xff).toLong
+    row(ip6SrcAddrSlot) = java.util.Arrays.copyOfRange(b, off + 8,
       off + 24)
-    row(slot("ip6_dst_addr")) = java.util.Arrays.copyOfRange(b, off + 24,
+    row(ip6DstAddrSlot) = java.util.Arrays.copyOfRange(b, off + 24,
       off + 40)
     parseL4(b, off + 40, proto, row, dns, sni)
   }
@@ -94,23 +123,23 @@ object SflowDecoder {
     proto match {
       case 6 => // TCP
         if (off + 14 <= b.length) {
-          row(slot("l4_src_port")) = u16(b, off).toLong
-          row(slot("l4_dst_port")) = u16(b, off + 2).toLong
-          row(slot("tcp_flags")) = (b(off + 13) & 0xff).toLong
+          row(l4SrcPortSlot) = u16(b, off).toLong
+          row(l4DstPortSlot) = u16(b, off + 2).toLong
+          row(tcpFlagsSlot) = (b(off + 13) & 0xff).toLong
           val dataOff = off + ((b(off + 12) >> 4) & 0x0f) * 4
           if ((dns || sni) && dataOff < b.length)
             parsePayload(b, dataOff, row, dns, sni)
         }
       case 17 => // UDP
         if (off + 4 <= b.length) {
-          row(slot("l4_src_port")) = u16(b, off).toLong
-          row(slot("l4_dst_port")) = u16(b, off + 2).toLong
+          row(l4SrcPortSlot) = u16(b, off).toLong
+          row(l4DstPortSlot) = u16(b, off + 2).toLong
           if ((dns || sni) && off + 8 < b.length)
             parsePayload(b, off + 8, row, dns, sni)
         }
       case 1 | 58 => // ICMP / ICMPv6: type+code packed like the reference
         if (off + 2 <= b.length)
-          row(slot("icmp_type")) =
+          row(icmpTypeSlot) =
             (((b(off) & 0xffL) << 8) | (b(off + 1) & 0xffL))
       case _ => ()
     }
@@ -126,11 +155,11 @@ object SflowDecoder {
                            dns: Boolean, sni: Boolean): Unit = {
     val p = java.util.Arrays.copyOfRange(b, off, b.length)
     if (dns) PayloadParsers.parseDns(p).foreach { case (name, ips) =>
-      row(slot("dns_name")) = name
-      row(slot("dns_ips")) = ips
+      row(dnsNameSlot) = UTF8String.fromString(name)
+      row(dnsIpsSlot) = UTF8String.fromString(ips)
     }
     if (sni) PayloadParsers.parseSni(p).foreach { host =>
-      row(slot("sni")) = host
+      row(sniSlot) = UTF8String.fromString(host)
     }
   }
 
@@ -140,7 +169,13 @@ object SflowDecoder {
     * `payload-parse-dns`/`payload-parse-sni` config (sflow.c:96-112). */
   def decodePacket(b: Array[Byte], tsSec: Long,
                    parseDns: Boolean = false,
-                   parseSni: Boolean = false): Seq[Array[Any]] = {
+                   parseSni: Boolean = false): Seq[Array[Any]] =
+    decodeRows(b, tsSec, parseDns, parseSni).map(NetflowDecoder.toExternal)
+
+  /** [[decodePacket]] with string columns left as Catalyst UTF8Strings:
+    * the rows [[decode]] hands to the plan. */
+  private def decodeRows(b: Array[Byte], tsSec: Long, parseDns: Boolean,
+                         parseSni: Boolean): Seq[Array[Any]] = {
     if (b.length < 28 || u32(b, 0) != 5L) return Nil
     var off = 4
     val addrType = u32(b, off); off += 4
@@ -203,13 +238,13 @@ object SflowDecoder {
               val headerLen = u32(b, q).toInt; q += 4
               val row = new Array[Any](outSchema.length)
               row(0) = tsSec
-              row(slot("in_bytes")) = frameLen
-              row(slot("in_pkts")) = 1L
-              row(slot("sampling_rate")) = samplingRate
-              row(slot("input_snmp")) = input
-              row(slot("output_snmp")) = output
-              row(slot("dev_ip")) = agentV4
-              row(slot("dev_ip6")) = agentV6
+              row(inBytesSlot) = frameLen
+              row(inPktsSlot) = 1L
+              row(samplingRateSlot) = samplingRate
+              row(inputSnmpSlot) = input
+              row(outputSnmpSlot) = output
+              row(devIpSlot) = agentV4
+              row(devIp6Slot) = agentV6
               if (headerProto == 1L && headerLen >= 0 &&
                   q + headerLen <= recEnd)
                 parseEthernet(
@@ -235,14 +270,10 @@ object SflowDecoder {
              tsCol: String = "ts_sec",
              parseDns: Boolean = false,
              parseSni: Boolean = false): DataFrame = {
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
     val proj = df.select(col(payloadCol), col(tsCol).cast(LongType))
-    proj.mapPartitions { it =>
-      it.flatMap { r =>
-        decodePacket(r.getAs[Array[Byte]](0), r.getLong(1),
-            parseDns, parseSni)
-          .map(vals => Row.fromSeq(vals.toSeq))
-      }
-    }(enc)
+    DecodeFlows.frame(proj, outSchema) { it =>
+      it.flatMap(r =>
+        decodeRows(r.getBinary(0), r.getLong(1), parseDns, parseSni))
+    }
   }
 }

@@ -80,6 +80,18 @@ object GraftBridge {
     (classic.Dataset.ofRows(spark, logical), n)
   }
 
+  /** A DataFrame over a logical plan built outside the Dataset API —
+    * how graft.sources.DecodeFlows puts its node on top of a frame. */
+  def ofRows(spark: SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Fresh output attributes for a schema (new expression ids). */
+  def toAttributes(schema: org.apache.spark.sql.types.StructType)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =
+    org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+
   /** Optimize a frame's ANALYZED plan with the session optimizer,
     * without QueryExecution's batch-execution gate — the only way to
     * inspect optimizer placement (e.g. a Filter vs EventTimeWatermark)

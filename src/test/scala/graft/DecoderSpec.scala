@@ -14,6 +14,19 @@ class DecoderSpec extends SparkTest {
   private def fieldIndexOf(name: String): Int =
     NetflowDecoder.outSchema.fieldIndex(name)
 
+  /** The full-width decoded frame holds exactly the `decodePacket` rows
+    * (as multisets, every column: String, Binary and null alike). */
+  private def assertSameRows(decoded: org.apache.spark.sql.DataFrame,
+                             rows: Seq[Array[Any]]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val expected = spark.createDataFrame(
+      rows.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq)).asJava,
+      NetflowDecoder.outSchema)
+    assert(decoded.schema == NetflowDecoder.outSchema)
+    assert(decoded.exceptAll(expected).count() == 0, "rows not decoded")
+    assert(expected.exceptAll(decoded).count() == 0, "rows missing")
+  }
+
   test("NetFlow v9: template + data in one packet") {
     // header: version=9 count=2 uptime unix seq sourceId
     val header = bytes(9, 2, 1000L, 1700000000L, 1L, 42L)
@@ -780,8 +793,11 @@ class DecoderSpec extends SparkTest {
     // the q40/q41 driver pair feeds these exact bytes; each packet is
     // self-contained (template + one data record), so every record decodes
     val cache = new NetflowDecoder.TemplateCache
-    val rows = Queries.v9Packets(64).zipWithIndex.flatMap { case (p, i) =>
-      NetflowDecoder.decodePacket(p, 1700000000L + i, 1L, cache)
+    val pkts = Queries.v9Packets(64).zipWithIndex.map { case (p, i) =>
+      (p, 1700000000L + i, 1L)
+    }
+    val rows = pkts.flatMap { case (p, ts, src) =>
+      NetflowDecoder.decodePacket(p, ts, src, cache)
     }
     assert(rows.length == 64)
     val protos = rows.map(_(fieldIndexOf("protocol"))).groupBy(identity)
@@ -789,6 +805,27 @@ class DecoderSpec extends SparkTest {
     assert(protos == Map(6L -> 32, 17L -> 32))
     assert(rows.map(r => r(fieldIndexOf("in_bytes"))
       .asInstanceOf[Long]).sum == (0 until 64).map(100L + _).sum)
+    import spark.implicits._
+    assertSameRows(NetflowDecoder.decode(
+      pkts.toDF("payload", "ts_sec", "src_ip")), rows)
+    // the same capture through the streaming decoder into a memory sink
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val ns = s"golden-${System.nanoTime()}"
+    val mem = MemoryStream[(Array[Byte], Long, Long)]
+    val q = NetflowDecoder.decodeStream(
+        mem.toDF().toDF("payload", "ts_sec", "src_ip").repartition(1), ns)
+      .writeStream.format("memory").queryName(s"golden${System.nanoTime()}")
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+      .start()
+    try {
+      mem.addData(pkts: _*)
+      q.processAllAvailable()
+      assertSameRows(spark.table(q.name), rows)
+    } finally {
+      q.stop()
+      NetflowDecoder.clearStreamCache(ns)
+    }
   }
 
   test("contract golden: sflowPackets(64) decodes 64 rows with the " +
@@ -810,7 +847,24 @@ class DecoderSpec extends SparkTest {
       assert(f(r, "src_vlan") == vlan, s"vlan $i")
       if ((i / 2) % 2 == 0)
         assert(f(r, "tcp_flags") == 0x18L, s"flags $i")
+      assert(f(r, "src_mac").isInstanceOf[Array[Byte]], s"mac $i")
     }
+    import spark.implicits._
+    val df = Queries.sflowPackets(64).zipWithIndex.map { case (p, i) =>
+      (p, 1700000000L + i)
+    }.toDF("payload", "ts_sec")
+    assertSameRows(SflowDecoder.decode(df), rows)
+    // payload extraction: the dns_name/dns_ips/sni string columns
+    val pay = Queries.sflowPayloadPackets(16).zipWithIndex.map {
+      case (p, i) => (p, 1700000000L + i)
+    }
+    val payRows = pay.flatMap { case (p, ts) =>
+      SflowDecoder.decodePacket(p, ts, parseDns = true, parseSni = true)
+    }
+    assert(payRows.count(r => f(r, "dns_name") != null) == 8)
+    assert(payRows.count(r => f(r, "sni") != null) == 8)
+    assertSameRows(SflowDecoder.decode(pay.toDF("payload", "ts_sec"),
+      parseDns = true, parseSni = true), payRows)
   }
 
   test("contract golden: ipfixPackets(64) decodes 61 data rows — " +
@@ -832,6 +886,13 @@ class DecoderSpec extends SparkTest {
       assert(f(r, "sampling_rate") == (if (i < 34) 10L else 100L),
         s"rate $i")
     }
+    import spark.implicits._
+    // one partition: the template and options packets must reach the
+    // data packets' decoder
+    val df = Queries.ipfixPackets(64).map { case (p, ts) => (p, ts, 1L) }
+      .toDF("payload", "ts_sec", "src_ip").coalesce(1)
+    assertSameRows(NetflowDecoder.decode(df,
+      entMap = Map((9999L, 77) -> 2001)), rows)
   }
 
   test("DataFrame-level decode distributes with partition-local caches") {
@@ -845,6 +906,32 @@ class DecoderSpec extends SparkTest {
     val out = NetflowDecoder.decode(df)
     assert(out.count() == 2)
     assert(out.select("in_bytes").collect().forall(_.getLong(0) == 31337L))
+    // a decoded frame joins with itself (fresh output ids per side)
+    assert(out.join(out, Seq("ts_sec")).count() == 2)
+  }
+
+  test("full-width decode plans keep every whole-stage method within " +
+    "HotSpot's 8,000-byte HugeMethodLimit") {
+    // HotSpot never JIT-compiles a method past the limit, so a plan
+    // holding one (a 66-column RowEncoder serializer compiles to 17,337
+    // bytes) runs every decoded flow through the bytecode interpreter
+    import spark.implicits._
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    // an RDD input keeps the input projection in a whole-stage subtree
+    // (a local relation would fold it away and leave nothing to check)
+    val sc = spark.sparkContext
+    val nf = NetflowDecoder.decode(sc.parallelize(Queries.v9Packets(8)
+      .map(p => (p, 1700000000L, 1L)), 1).toDF("payload", "ts_sec",
+      "src_ip"))
+    val sf = SflowDecoder.decode(sc.parallelize(Queries.sflowPackets(8)
+      .map(p => (p, 1700000000L)), 1).toDF("payload", "ts_sec"))
+    Seq("netflow" -> nf, "sflow" -> sf).foreach { case (name, df) =>
+      val sizes = codegenStringSeq(df.queryExecution.executedPlan)
+        .map(_._3.maxMethodCodeSize)
+      assert(sizes.nonEmpty, s"$name: no whole-stage subtree")
+      assert(sizes.forall(_ <= 8000), s"$name: method sizes $sizes")
+      assert(df.count() == 8, name)
+    }
   }
 }
 
