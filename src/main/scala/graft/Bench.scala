@@ -3,7 +3,6 @@ package graft
 import graft.filter.FilterEnv
 import graft.flow.TestFlowView
 import graft.operators.Fwm
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Benchmark main: runs every contract query on SPARK_GRAFT_SF_DIR and
@@ -18,10 +17,8 @@ import org.apache.spark.sql.functions.col
   * materialized through the noop sink — full computation of every output
   * row, zero write cost.
   *
-  * `events.ts` is nanosecond parquet; `nanosAsLong` is set at session
-  * build time for Spark 4.0 (which rejects NANOS without it) and is a
-  * harmless no-op on >= 4.1 (conf removed; native TIMESTAMP_NTZ read —
-  * TestFlowView adapts to whichever type actually loads).
+  * The session comes from [[Session.local]], the same one [[Verify]]
+  * dumps the oracle results under.
   *
   * Failures are NEVER silent, but they are also never allowed to drown
   * the contract: one line per failure on stderr (the query reports
@@ -31,9 +28,7 @@ import org.apache.spark.sql.functions.col
   * an error flood (BENCH_r10 was lost exactly that way). bench.json
   * additionally carries `query_runs` — every raw sample behind each
   * median — so a one-off GC/page-cache spike is visible as dispersion
-  * instead of masquerading as a regression; [[TimeQueries]] is the
-  * matching ad-hoc control for re-timing a suspect query in driver
-  * order.
+  * instead of masquerading as a regression.
   */
 object Bench {
   /** Dispersion-flag spread limit: max/min over the steady samples. */
@@ -166,16 +161,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // fresh error log per run — stale stacks from a previous run must
@@ -331,7 +317,8 @@ object Bench {
     // first run is warm-up, not dispersion) still spread past
     // SpreadLimit after widening — their medians are unstable in this
     // harness, so a cross-round delta on them is noise until a
-    // driver-order control (TimeQueries) reproduces it
+    // re-timing in run order reproduces it (SCALE.md "r14: q102
+    // driver-order control")
     val dispersionFlagged = rawRuns.collect {
       case (n, vs) if spreadExceeds(steady(vs)) => n }.toSeq
     // cross-round regression flags: within-session dispersion is blind

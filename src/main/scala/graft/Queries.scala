@@ -1696,13 +1696,25 @@ object Queries {
     * to low-MB at bench scale; SPARK_GRAFT_SCRATCH overrides (point it
     * at a disk path for fixture sets that must not consume RAM). */
   private lazy val scratchBase: String =
-    sys.env.get("SPARK_GRAFT_SCRATCH").filter { p =>
-      val f = new java.io.File(p); f.isDirectory && f.canWrite
-    }.orElse {
-      Option(new java.io.File("/dev/shm"))
-        .filter(f => f.isDirectory && f.canWrite)
-        .map(_.getAbsolutePath)
-    }.getOrElse(sys.props("java.io.tmpdir"))
+    scratchBaseFor(sys.env.get("SPARK_GRAFT_SCRATCH"))
+
+  /** [[scratchBase]] for a given override: an override is created if
+    * missing and must then be a writable directory — a bad path fails
+    * here, naming it, instead of silently landing fixtures in RAM. */
+  private[graft] def scratchBaseFor(scratch: Option[String]): String =
+    scratch match {
+      case Some(p) =>
+        val f = new java.io.File(p)
+        f.mkdirs()
+        require(f.isDirectory && f.canWrite,
+          s"SPARK_GRAFT_SCRATCH=$p is not a writable directory")
+        p
+      case None =>
+        Option(new java.io.File("/dev/shm"))
+          .filter(f => f.isDirectory && f.canWrite)
+          .map(_.getAbsolutePath)
+          .getOrElse(sys.props("java.io.tmpdir"))
+    }
 
   /** Per-process scratch dir under [[scratchBase]], recursively deleted
     * at JVM exit (File.deleteOnExit cannot remove non-empty directories
@@ -1718,8 +1730,9 @@ object Queries {
         def del(f: java.io.File): Unit = {
           // NEVER recurse through a symlink: File.listFiles follows
           // directory links, so a spool symlinked at a source table
-          // would delete the TARGET's files (this wiped a ScaleSweep
-          // replica set once). Deleting the link itself is enough.
+          // would delete the TARGET's files (this once wiped a sf1.0
+          // replica set, SCALE.md "r9: sf1.0 scale-slope sweep").
+          // Deleting the link itself is enough.
           if (!java.nio.file.Files.isSymbolicLink(f.toPath))
             Option(f.listFiles()).foreach(_.foreach(del))
           f.delete(); ()
@@ -2688,7 +2701,8 @@ object Queries {
   /** Link (or copy) a source table's parquet part file(s) into `spool`
     * `copies` times — the shared spool builder for the streaming replay
     * oracles. Handles BOTH table shapes: the driver's single files and
-    * Spark-written directories-of-parts (ScaleSweep replicas). Links
+    * Spark-written directories-of-parts (the sf1.0 replicas of
+    * SCALE.md "r9: sf1.0 scale-slope sweep"). Links
     * individual FILES only — a directory symlink once let the spool
     * cleanup hook delete the target's contents, and the file stream
     * source doesn't list through one anyway. @return parts per copy */
@@ -2732,31 +2746,13 @@ object Queries {
     * partitioning never changes WHAT a stateful operator emits, only
     * where keys live. Scoped + restored around the stream run; batch
     * work outside streams keeps the session's setting. Deployments
-    * size this to key cardinality × throughput —
-    * SPARK_GRAFT_STREAM_PARTS overrides (≥ 1) for scale runs. */
+    * size this to key cardinality × throughput. */
   private def withStreamParts[A](s: SparkSession)(body: => A): A = {
-    val n = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(8)
     val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     try body
     finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
-
-  /** Ad-hoc micro-batch breakdown (SPARK_GRAFT_STREAM_DEBUG=1): one
-    * stderr line per progress event — batch id, total batch duration
-    * and the engine's phase durations — so "where do the streaming
-    * oracles' seconds go" is measurable without the (disabled) UI.
-    * Inert unless the env var is set (TimeQueries-style instrument,
-    * never part of the recorded bench). */
-  private def dumpStreamProgress(
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      label: String): Unit =
-    if (sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"STREAMDBG $label batch=${p.batchId} " +
-          s"rows=${p.numInputRows} durationMs=${p.durationMs}")
-      }
 
   private def runStreamToMemory(s: SparkSession, sinkName: String,
       ckptDir: java.io.File, outputMode: String = "append")(
@@ -2770,7 +2766,6 @@ object Queries {
       .start()
     try {
       query.awaitTermination()
-      dumpStreamProgress(query, sinkName)
       require(query.recentProgress.exists(_.numInputRows > 0),
         s"$sinkName must execute through the micro-batch engine " +
           "(no progress with input rows recorded)")
@@ -4022,7 +4017,6 @@ object Queries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        dumpStreamProgress(q, "q109")
         require(q.recentProgress.exists(_.numInputRows > 0),
           "q109 phase must execute through the micro-batch engine")
         scala.jdk.CollectionConverters.CollectionHasAsScala(got)
@@ -4361,7 +4355,7 @@ object Queries {
             i += 1
           }
           snap = got.asScala.toSeq
-        } finally { dumpStreamProgress(q, "q113"); q.stop() }
+        } finally q.stop()
         require(snap.exists(r =>
             r.getString(0) == "quiet" && r.getString(2) == "start"),
           "q113: the silent key's underlimit alert never started — " +
@@ -4980,8 +4974,8 @@ object Queries {
     * signatures, every band agreeing) re-quadratizes the band join at
     * corpus scale exactly like SemDeDup's one-blob cluster, and the
     * cap bounds every bucket's pair work at cap² (measured n²/2 vs
-    * capped in HammingSkewBench; SCALE.md). cap=8 here: the corpus'
-    * largest band bucket holds 4 signatures (pinned by spec), so the
+    * capped; SCALE.md "hammingPairs skew guard"). cap=8 here: the
+    * corpus' largest band bucket holds 4 signatures (pinned by spec), so the
     * guard provably never drops a pair and the brute-force oracle
     * still matches bit-for-bit — recall loss begins only where a
     * bucket exceeds the cap, i.e. where the matches were
@@ -5644,8 +5638,9 @@ object Queries {
       ORDER BY a ASC, b ASC"""))
 
   /** q137: the WIDE (256-bit, 16×16-grid) perceptual aHash — the
-    * higher-entropy signature MediaScaleBench's saturation measurement
-    * calls for (SCALE.md r19: 64-bit aHash band values repeat across
+    * higher-entropy signature the replicated-corpus saturation
+    * measurement calls for (SCALE.md "Wide (256-bit) signature
+    * family": 64-bit aHash band values repeat across
     * genuinely different structured images, so banding saturates at
     * O(10³) images; 4× the bits give maxDist-6 bands ~37 bits wide).
     * Same integer-exact arithmetic as q122's narrow hash (sum-luma
@@ -6139,11 +6134,11 @@ object Queries {
     * images at ~10⁻⁵ per pair, and at a quadratic pair budget CC
     * transitivity turns that into an ~8% survivor shortfall at 18K
     * images; with verify the precision is corpus-size-independent —
-    * MediaScaleBench's verify column lands EXACTLY on the planted
-    * ground truth). The oracle replays the verify arithmetic
-    * bit-for-bit: quantized cell lumas floor(256·cs/cn) (0 for
-    * uncovered cells), per-pair L1 over the 16×16 grid, budget
-    * 8·256. */
+    * the replicated-corpus verify column lands EXACTLY on the planted
+    * ground truth, SCALE.md "The verify stage (q147)"). The oracle
+    * replays the verify arithmetic bit-for-bit: quantized cell lumas
+    * floor(256·cs/cn) (0 for uncovered cells), per-pair L1 over the
+    * 16×16 grid, budget 8·256. */
   private val q147 = Q(
     "q147_media_pipeline_verified",
     (s, dir) => {

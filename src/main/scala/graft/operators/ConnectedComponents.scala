@@ -36,30 +36,19 @@ object ConnectedComponents {
     * produced its input. Identity on data; same eager materialization
     * localCheckpoint always had.
     *
-    * Cost history (ADVICE r19 #4, measured in ScaleDemo `cc`,
-    * SCALE.md r20): the r19 rebuild went through the PUBLIC
-    * `createDataFrame(c.rdd, schema)`, paying an InternalRow→Row→
-    * InternalRow conversion over every edge row every iteration —
-    * measured +24% on a 21-round 2²⁰-node chain and +10% on a
-    * 2M-edge random graph vs plain localCheckpoint. The barrier now
-    * checkpoints at the InternalRow layer
-    * ([[org.apache.spark.sql.GraftBridge.bareLocalCheckpoint]] —
-    * Dataset.localCheckpoint's own internals, minus the LogicalRDD
-    * origin-constraint attachment that caused the Union crash), so
-    * the constraint immunity is conversion-free. `rebuild = false`
-    * (ScaleDemo's measurement control only) keeps the pre-r19 plain
-    * localCheckpoint — it crashes on union-shaped inputs. */
-  /** Barrier plus the row count its materialization job already
+    * The checkpoint is taken at the InternalRow layer
+    * ([[org.apache.spark.sql.GraftBridge.bareLocalCheckpointWithCount]]
+    * — Dataset.localCheckpoint's own internals, minus the LogicalRDD
+    * origin-constraint attachment that caused the Union crash), so the
+    * constraint immunity is conversion-free: the earlier rebuild
+    * through the public `createDataFrame(c.rdd, schema)` cost +24% on
+    * a 21-round 2²⁰-node chain and +10% on a 2M-edge random graph
+    * (SCALE.md "CC barrier: rebuild tax measured, then removed"). It
+    * also returns the row count its materialization job already
     * computed — the convergence loop's count would otherwise be a
     * second job per round over the just-pinned blocks (r22). */
-  private def ckptBarrier(df: DataFrame,
-                          rebuild: Boolean = true): (DataFrame, Long) =
-    if (rebuild)
-      org.apache.spark.sql.GraftBridge.bareLocalCheckpointWithCount(df)
-    else {
-      val c = df.localCheckpoint()
-      (c, c.count())
-    }
+  private def ckptBarrier(df: DataFrame): (DataFrame, Long) =
+    org.apache.spark.sql.GraftBridge.bareLocalCheckpointWithCount(df)
 
   /** Star step shared shape: emit (v, m(u)) for the chosen neighbor set.
     * largeStar: over the SYMMETRIZED edges, m(u) = min(Γ(u) ∪ {u}),
@@ -101,29 +90,17 @@ object ConnectedComponents {
     *         a doc with no candidate pair is its own singleton cluster.
     */
   def run(edges: DataFrame, aCol: String, bCol: String,
-          maxIter: Int = 30): DataFrame =
-    runWithStats(edges, aCol, bCol, maxIter)._1
-
-  /** [[run]] plus the number of star-contraction rounds executed —
-    * the O(log n) claim is measurable (ScaleDemo `cc` mode).
-    * `rebuildBarrier = false` is ScaleDemo's measurement control for
-    * the barrier-rebuild conversion cost (see [[ckptBarrier]]) — NOT
-    * for production use (plain localCheckpoint crashes on
-    * union-shaped edge inputs). */
-  def runWithStats(edges: DataFrame, aCol: String, bCol: String,
-                   maxIter: Int = 30,
-                   rebuildBarrier: Boolean = true): (DataFrame, Int) = {
+          maxIter: Int = 30): DataFrame = {
     var (e, prevCount) = ckptBarrier(edges
       .select(col(aCol).cast("long").as("src"),
         col(bCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("src") =!= col("dst"))
-      .distinct(), rebuildBarrier)
+      .distinct())
     var stable = false
     var it = 0
     while (!stable && it < maxIter) {
-      val (next, nextCount) =
-        ckptBarrier(smallStar(largeStar(e)), rebuildBarrier)
+      val (next, nextCount) = ckptBarrier(smallStar(largeStar(e)))
       // both sides are distinct sets: equal count + empty one-sided
       // difference ⇒ set equality ⇒ fixed point reached
       stable = nextCount == prevCount && next.except(e).isEmpty
@@ -133,9 +110,9 @@ object ConnectedComponents {
     }
     // fixed point is a star forest: every edge is (member, root). The
     // roots themselves appear only on the dst side — union them back.
-    (e.select(col("src").as("id"), col("dst").as("component"))
+    e.select(col("src").as("id"), col("dst").as("component"))
       .union(e.select(col("dst").as("id"), col("dst").as("component")))
-      .distinct(), it)
+      .distinct()
   }
 
   /** Dedup resolution: drop every non-representative cluster member.

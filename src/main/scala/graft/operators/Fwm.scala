@@ -47,7 +47,9 @@ object Fwm {
   /** The scan + aggregate half of [[batch]] — epoch-bucketed groupBy +
     * summed measures, no finishing sort/top-N. This is the part whose
     * cost scales with the data; the finish is aggregate-sized. Exposed
-    * so scan-vs-scan comparisons (SharedFwmBench) time symmetric work.
+    * so scan-vs-scan comparisons time symmetric work (SCALE.md "r15:
+    * shared-scan fwm — baseline column-pruning bias fixed"); perfbench's
+    * layer ladder times it as its aggregate rung.
     *
     * @param tsCol epoch-seconds column (use [[toEpochSec]] for timestamps)
     */

@@ -220,8 +220,9 @@ object Multimodal {
     * wide hash maps ≲1 pixel per cell and DISTINCT images collide
     * within a few bits (the r19 thumbnail-collision floor:
     * wide-signature precision was measured at the corpus's floor, not
-    * the operator's). MediaScaleBench runs dimScale 16 (128–256 ×
-    * 80–240 px) so each grid cell averages ≥40 pixels and the
+    * the operator's). The replicated-corpus measurement ran dimScale
+    * 16 (128–256 × 80–240 px; SCALE.md "MediaScaleBench above the
+    * thumbnail floor") so each grid cell averages ≥40 pixels and the
     * precision reading is the signature family's own. */
   def encodeTestImage(i: Long, dimScale: Int = 1): Array[Byte] = {
     require(dimScale >= 1 && dimScale <= 64,
@@ -983,7 +984,8 @@ object Multimodal {
     * on a finer grid, emitting ceil(grid²/64) packed 64-bit words
     * (grid 16 → a 256-bit signature as 4 longs; cell c = cv·grid+cu
     * sets bit c%64 of word c/64). Why it exists, measured
-    * (MediaScaleBench, SCALE.md): 64-bit aHashes are LOW-ENTROPY on
+    * (SCALE.md "Wide (256-bit) signature family"): 64-bit aHashes are
+    * LOW-ENTROPY on
     * structured corpora — whole band values repeat across genuinely
     * different images, so at corpus scale the banded join's buckets
     * saturate and near-dup matching over-merges (precision collapse)
@@ -1177,8 +1179,9 @@ object Multimodal {
     * skew cap) and differ only in signature entropy, so the pipeline
     * shape must not hard-code one of them.
     *
-    * [[SigWide256]] is the SCALE DEFAULT: MediaScaleBench (SCALE.md)
-    * measured the 64-bit family's band space saturating at O(10³)
+    * [[SigWide256]] is the SCALE DEFAULT: the replicated-corpus runs
+    * (SCALE.md "Wide (256-bit) signature family") measured the 64-bit
+    * family's band space saturating at O(10³)
     * structured images — low-entropy near-matches percolate through
     * the CC closure and over-merge (4,101 survivors vs 10,286 planted
     * truth at 18K images), while the 256-bit family's ~37-bit bands
@@ -1259,8 +1262,8 @@ object Multimodal {
     * different images at a fixed ~10⁻⁵/pair rate, the pair budget is
     * quadratic in corpus size, and CC transitivity amplifies every
     * collision. The verified composition is structurally DIFFERENT
-    * from the unverified one — measured in-round (MediaScaleBench
-    * first cut): naively filtering the hammingEdges output
+    * from the unverified one — measured in-round (SCALE.md "The verify
+    * stage (q147)", first cut): naively filtering the hammingEdges output
     * under-merges, because the edge set is a spanning structure whose
     * connectivity equals all-pairs only if no edge is removed (a
     * byte-identical pair connected THROUGH a pixel-different

@@ -41,18 +41,14 @@ object GraftBridge {
     * barrier's output).
     * Mirrors Dataset.localCheckpoint's own internals (toRdd +
     * defensive copy + RDD.localCheckpoint + eager count) but builds
-    * the result through internalCreateDataFrame, which attaches no
-    * origin stats/constraints — the LogicalRDD constraint carry-over
-    * is exactly what trips Spark's Union constraint rewrite on
-    * union-shaped inputs (ConnectedComponents.ckptBarrier). */
-  def bareLocalCheckpoint(df: DataFrame): DataFrame =
-    bareLocalCheckpointWithCount(df)._1
-
-  /** [[bareLocalCheckpoint]] plus the row count its eager
-    * materialization job already computes — iterative callers
-    * (ConnectedComponents' convergence loop) otherwise pay a second
-    * count job per round over the just-pinned blocks (r22, guide
-    * §1.2: one job per round, not two). */
+    * the LogicalRDD without origin constraints — the constraint
+    * carry-over is exactly what trips Spark's Union constraint
+    * rewrite on union-shaped inputs (ConnectedComponents.ckptBarrier).
+    * Also returns the row count the eager materialization job already
+    * computes — iterative callers (ConnectedComponents' convergence
+    * loop) otherwise pay a second count job per round over the
+    * just-pinned blocks (r22, guide §1.2: one job per round, not
+    * two). */
   def bareLocalCheckpointWithCount(df: DataFrame): (DataFrame, Long) = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val qe = df.queryExecution

@@ -400,7 +400,7 @@ class PropertySpec extends SparkTest {
       Array.fill(rnd.nextInt(200))(rnd.nextInt(256).toByte)
     val valid = Queries.v9Packets(8) ++ Queries.v5Packets(8) ++
       Queries.ipfixPackets(8).map(_._1) ++
-      (0L until 8L).map(Soak.mkPacket)
+      (0L until 8L).map(Wire.mkPacket)
     val cache = new NetflowDecoder.TemplateCache()
     (random ++ prefixed ++ mutations(valid)).foreach { p =>
       NetflowDecoder.decodePacket(p, 1700000000L, 1L, cache)

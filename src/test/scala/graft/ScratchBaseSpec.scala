@@ -1,0 +1,27 @@
+package graft
+
+import java.nio.file.Files
+import org.scalatest.funsuite.AnyFunSuite
+
+/** A SPARK_GRAFT_SCRATCH override is used or rejected, never silently
+  * replaced by the tmpfs fallback. */
+class ScratchBaseSpec extends AnyFunSuite {
+
+  test("scratch override: a regular file fails naming the path; a " +
+    "missing but creatable directory is created and used") {
+    val root = Files.createTempDirectory("graft_scratch")
+    try {
+      val file = Files.createFile(root.resolve("not-a-dir")).toString
+      val e = intercept[IllegalArgumentException](
+        Queries.scratchBaseFor(Some(file)))
+      assert(e.getMessage.contains(file))
+
+      val dir = root.resolve("made/here").toString
+      assert(Queries.scratchBaseFor(Some(dir)) == dir)
+      assert(new java.io.File(dir).isDirectory)
+    } finally {
+      Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+    }
+  }
+}

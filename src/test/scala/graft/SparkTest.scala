@@ -19,15 +19,5 @@ trait SparkTest extends AnyFunSuite {
 }
 
 object SparkTest {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local(2)
 }
