@@ -1502,13 +1502,14 @@ object Queries {
     (s, dir) => {
       // centroids: the deterministic vec_id%100==0 subset (stand-in for
       // an offline k-means table — the operator takes ANY centroid df)
-      import graft.operators.Similarity
+      import graft.operators.Similarity.{IvfF32, IvfLifecycle}
       val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(emb.filter(col("vec_id") =!= 1), "vec_id",
-          "embedding",
-          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          nprobe = 2, emb.filter(col("vec_id") === 1), "embedding", 20)
-        .select(col("vec_id"), round(col("sim"), 6).as("sim_r"))
+      val lists = IvfLifecycle.assign(IvfF32,
+        emb.filter(col("vec_id") =!= 1), "vec_id", "embedding",
+        emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding")
+      IvfLifecycle.search(IvfF32, lists, emb.filter(col("vec_id") === 1),
+          "embedding", nprobe = 2, k = 20)
+        .select(col("id").as("vec_id"), round(col("sim"), 6).as("sim_r"))
     }, {
       def cos(a: String, b: String) =
         s"${OracleSql.dotSql(a, b, 64)} / " +
@@ -1685,7 +1686,8 @@ object Queries {
 
   /** Scratch base for the self-generating harness fixtures (spools,
     * streaming checkpoints, CSV staging): the fastest writable local
-    * volume — tmpfs (/dev/shm) when present, else java.io.tmpdir.
+    * volume — tmpfs (/dev/shm) when present with room, else
+    * java.io.tmpdir.
     * Guide §6: a streaming micro-batch pays offset-log + commit-log +
     * state-checkpoint WRITES per batch; on a disk-backed /tmp those
     * fsync-ish constants were the dominant residual of the streaming
@@ -1695,13 +1697,23 @@ object Queries {
     * sized for recovery, not in this harness path. The fixtures are KB
     * to low-MB at bench scale; SPARK_GRAFT_SCRATCH overrides (point it
     * at a disk path for fixture sets that must not consume RAM). */
-  private lazy val scratchBase: String =
-    scratchBaseFor(sys.env.get("SPARK_GRAFT_SCRATCH"))
+  private lazy val scratchBase: String = {
+    val shm = new java.io.File("/dev/shm")
+    scratchBaseFor(sys.env.get("SPARK_GRAFT_SCRATCH"),
+      if (shm.isDirectory && shm.canWrite) shm.getUsableSpace else 0L)
+  }
 
-  /** [[scratchBase]] for a given override: an override is created if
-    * missing and must then be a writable directory — a bad path fails
-    * here, naming it, instead of silently landing fixtures in RAM. */
-  private[graft] def scratchBaseFor(scratch: Option[String]): String =
+  /** Least usable /dev/shm space for it to be preferred: containers
+    * often cap it at 64 MiB, which the streaming fixtures can fill. */
+  private[graft] val MinShmBytes: Long = 256L << 20
+
+  /** [[scratchBase]] for a given override and usable /dev/shm bytes: an
+    * override is created if missing and must then be a writable
+    * directory — a bad path fails here, naming it, instead of silently
+    * landing fixtures in RAM. Without one, /dev/shm is used only when
+    * it has at least [[MinShmBytes]] free, else java.io.tmpdir. */
+  private[graft] def scratchBaseFor(scratch: Option[String],
+                                    shmUsableBytes: Long): String =
     scratch match {
       case Some(p) =>
         val f = new java.io.File(p)
@@ -1710,10 +1722,8 @@ object Queries {
           s"SPARK_GRAFT_SCRATCH=$p is not a writable directory")
         p
       case None =>
-        Option(new java.io.File("/dev/shm"))
-          .filter(f => f.isDirectory && f.canWrite)
-          .map(_.getAbsolutePath)
-          .getOrElse(sys.props("java.io.tmpdir"))
+        if (shmUsableBytes >= MinShmBytes) "/dev/shm"
+        else sys.props("java.io.tmpdir")
     }
 
   /** Per-process scratch dir under [[scratchBase]], recursively deleted
@@ -2373,16 +2383,19 @@ object Queries {
     "q58_kmeans_ivf",
     (s, dir) => {
       // the production composition: kmeansCentroids trains the coarse
-      // quantizer (integer-exact, q57), ivfTopK searches its inverted
-      // lists — one query, deterministic end to end
+      // quantizer (integer-exact, q57), the IVF search probes its
+      // in-flight inverted lists — one query, deterministic end to end
       import graft.operators.Similarity
+      import Similarity.{IvfF32, IvfLifecycle}
       val emb = t(s, dir, "embeddings")
       val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
         k = 4, iters = 2)
-      Similarity.ivfTopK(emb.filter(col("vec_id") =!= 1), "vec_id",
-          "embedding", cents, "cid", "cv",
-          nprobe = 2, emb.filter(col("vec_id") === 1), "embedding", 20)
-        .select(col("vec_id"), round(col("sim"), 6).as("sim_r"))
+      val lists = IvfLifecycle.assign(IvfF32,
+        emb.filter(col("vec_id") =!= 1), "vec_id", "embedding",
+        cents, "cid", "cv")
+      IvfLifecycle.search(IvfF32, lists, emb.filter(col("vec_id") === 1),
+          "embedding", nprobe = 2, k = 20)
+        .select(col("id").as("vec_id"), round(col("sim"), 6).as("sim_r"))
     }, Some(kmeansIvfOracle))
 
   /** Shared DuckDB oracle for the kmeans→IVF composition — q58 runs it
@@ -2424,6 +2437,7 @@ object Queries {
     "q73_ivf_index",
     (s, dir) => {
       import graft.operators.Similarity
+      import Similarity.{IvfF32, IvfLifecycle, OnDisk}
       val emb = t(s, dir, "embeddings")
       val idxDir = tmpWorkDir(
         s"graft_q73_ivf_${ProcessHandle.current().pid()}_" +
@@ -2436,11 +2450,11 @@ object Queries {
       if (!new java.io.File(idxDir, "lists/_SUCCESS").exists()) {
         val cents = Similarity.kmeansCentroids(emb, "vec_id",
           "embedding", k = 4, iters = 2)
-        Similarity.buildIvfIndex(emb.filter(col("vec_id") =!= 1),
+        IvfLifecycle.build(IvfF32, emb.filter(col("vec_id") =!= 1),
           "vec_id", "embedding", cents, "cid", "cv",
           idxDir.getAbsolutePath)
       }
-      Similarity.searchIvfIndex(s, idxDir.getAbsolutePath,
+      IvfLifecycle.search(IvfF32, OnDisk(idxDir.getAbsolutePath),
           emb.filter(col("vec_id") === 1), "embedding",
           nprobe = 2, k = 20)
         .select(col("id").as("vec_id"), round(col("sim"), 6).as("sim_r"))
@@ -2454,6 +2468,7 @@ object Queries {
     "q76_ivf_batch",
     (s, dir) => {
       import graft.operators.Similarity
+      import Similarity.{IvfF32, IvfLifecycle, OnDisk}
       val emb = t(s, dir, "embeddings")
       val qIds = Seq(1L, 2L, 3L)
       val idxDir = tmpWorkDir(
@@ -2462,12 +2477,12 @@ object Queries {
       if (!new java.io.File(idxDir, "lists/_SUCCESS").exists()) {
         val cents = Similarity.kmeansCentroids(emb, "vec_id",
           "embedding", k = 4, iters = 2)
-        Similarity.buildIvfIndex(
+        IvfLifecycle.build(IvfF32,
           emb.filter(!col("vec_id").isin(qIds: _*)),
           "vec_id", "embedding", cents, "cid", "cv",
           idxDir.getAbsolutePath)
       }
-      Similarity.searchIvfIndexBatch(s, idxDir.getAbsolutePath,
+      IvfLifecycle.searchBatch(IvfF32, OnDisk(idxDir.getAbsolutePath),
           emb.filter(col("vec_id").isin(qIds: _*)), "vec_id",
           "embedding", nprobe = 2, k = 10)
         .select(col("q_id"), col("id").as("vec_id"),
@@ -2612,14 +2627,15 @@ object Queries {
     })
 
   // The incremental-ingest variant of q73: HALF the corpus is indexed
-  // by buildIvfIndex, the other half arrives later through
-  // appendToIvfIndex (assignment via the index's persisted quantizer).
+  // by IvfLifecycle.build, the other half arrives later through
+  // IvfLifecycle.append (assignment via the index's persisted quantizer).
   // Same oracle as q58/q73 — an appended index is defined bit-identical
   // to one built from the union at once.
   private val q79 = Q(
     "q79_ivf_append",
     (s, dir) => {
       import graft.operators.Similarity
+      import Similarity.{IvfF32, IvfLifecycle, OnDisk}
       val emb = t(s, dir, "embeddings")
       val idxDir = tmpWorkDir(
         s"graft_q79_ivfa_${ProcessHandle.current().pid()}_" +
@@ -2631,16 +2647,16 @@ object Queries {
         val cents = Similarity.kmeansCentroids(emb, "vec_id",
           "embedding", k = 4, iters = 2)
         val corpus = emb.filter(col("vec_id") =!= 1)
-        Similarity.buildIvfIndex(
+        IvfLifecycle.build(IvfF32,
           corpus.filter(pmod(col("vec_id"), lit(2)) === 0),
           "vec_id", "embedding", cents, "cid", "cv",
           idxDir.getAbsolutePath)
-        Similarity.appendToIvfIndex(s, idxDir.getAbsolutePath,
+        IvfLifecycle.append(IvfF32, idxDir.getAbsolutePath,
           corpus.filter(pmod(col("vec_id"), lit(2)) =!= 0),
           "vec_id", "embedding")
         new java.io.File(idxDir, "graft_append_done").createNewFile()
       }
-      Similarity.searchIvfIndex(s, idxDir.getAbsolutePath,
+      IvfLifecycle.search(IvfF32, OnDisk(idxDir.getAbsolutePath),
           emb.filter(col("vec_id") === 1), "embedding",
           nprobe = 2, k = 20)
         .select(col("id").as("vec_id"), round(col("sim"), 6).as("sim_r"))
@@ -5215,9 +5231,12 @@ object Queries {
       val corpus = Similarity.quantizeInt8(
         emb.filter(col("vec_id") =!= 1), "vec_id", "embedding")
       val query = Similarity.quantizeInt8(
-        emb.filter(col("vec_id") === 1), "vec_id", "embedding")
-      Similarity.int8TopK(corpus, "vec_id", "pos", "q", query, k = 10)
-        .orderBy(col("dot").desc, col("vec_id").asc)
+          emb.filter(col("vec_id") === 1), "vec_id", "embedding")
+        .withColumnRenamed("vec_id", "q_id")
+      Similarity.int8TopKBatch(corpus, "vec_id", "pos", "q", query,
+          "q_id", k = 10)
+        .select(col("vec_id"), col("dot"))
+        .orderBy(col("dot").desc, col("vec_id").asc).limit(10)
     },
     Some(s"""WITH n AS (SELECT vec_id, embedding,
                sqrt(${OracleSql.dotSql("embedding", "embedding", 64)})
@@ -5289,13 +5308,14 @@ object Queries {
   private val q130 = Q(
     "q130_int8_ivf_topk",
     (s, dir) => {
-      import graft.operators.Similarity
+      import graft.operators.Similarity.{IvfInt8, IvfLifecycle}
       val emb = t(s, dir, "embeddings")
-      Similarity.int8IvfTopK(emb.filter(col("vec_id") =!= 1), "vec_id",
-          "embedding",
-          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          nprobe = 2, emb.filter(col("vec_id") === 1), "embedding",
-          k = 10)
+      val lists = IvfLifecycle.assign(IvfInt8,
+        emb.filter(col("vec_id") =!= 1), "vec_id", "embedding",
+        emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding")
+      IvfLifecycle.search(IvfInt8, lists, emb.filter(col("vec_id") === 1),
+          "embedding", nprobe = 2, k = 10)
+        .select(col("id").as("vec_id"), col("dot"))
         .orderBy(col("dot").desc, col("vec_id").asc)
     },
     Some(int8IvfOracle))
@@ -5413,17 +5433,17 @@ object Queries {
   private val q132 = Q(
     "q132_int8_ivf_index",
     (s, dir) => {
-      import graft.operators.Similarity
+      import graft.operators.Similarity.{IvfInt8, IvfLifecycle, OnDisk}
       val emb = t(s, dir, "embeddings")
       val idxDir = tmpWorkDir(
         s"graft_q132_i8ivf_${ProcessHandle.current().pid()}_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
       if (!new java.io.File(idxDir, "lists/_SUCCESS").exists())
-        Similarity.buildInt8IvfIndex(emb.filter(col("vec_id") =!= 1),
+        IvfLifecycle.build(IvfInt8, emb.filter(col("vec_id") =!= 1),
           "vec_id", "embedding",
           emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
           idxDir.getAbsolutePath)
-      Similarity.searchInt8IvfIndex(s, idxDir.getAbsolutePath,
+      IvfLifecycle.search(IvfInt8, OnDisk(idxDir.getAbsolutePath),
           emb.filter(col("vec_id") === 1), "embedding",
           nprobe = 2, k = 10)
         .select(col("id").as("vec_id"), col("dot"))
@@ -5572,23 +5592,23 @@ object Queries {
     * filter (bounded by |centroids| for ANY panel size), and each
     * list row fans out only to the queries that probed its cid before
     * the map-side-combined integer dot. Each (q_id, id) dot is
-    * bit-identical to a searchInt8IvfIndex loop (spec'd); the oracle
+    * bit-identical to a loop of single searches (spec'd); the oracle
     * replays assignment → per-query probes → quantization → integer
     * dots → per-query top-k. */
   private val q135 = Q(
     "q135_int8_ivf_batch",
     (s, dir) => {
-      import graft.operators.Similarity
+      import graft.operators.Similarity.{IvfInt8, IvfLifecycle, OnDisk}
       val emb = t(s, dir, "embeddings")
       val idxDir = tmpWorkDir(
         s"graft_q135_i8ivfb_${ProcessHandle.current().pid()}_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
       if (!new java.io.File(idxDir, "lists/_SUCCESS").exists())
-        Similarity.buildInt8IvfIndex(emb.filter(col("vec_id") > 3),
+        IvfLifecycle.build(IvfInt8, emb.filter(col("vec_id") > 3),
           "vec_id", "embedding",
           emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
           idxDir.getAbsolutePath)
-      Similarity.searchInt8IvfIndexBatch(s, idxDir.getAbsolutePath,
+      IvfLifecycle.searchBatch(IvfInt8, OnDisk(idxDir.getAbsolutePath),
           emb.filter(col("vec_id") <= 3), "vec_id", "embedding",
           nprobe = 2, k = 5)
         .select(col("q_id"), col("id").as("vec_id"), col("dot"))
@@ -5943,14 +5963,15 @@ object Queries {
   private val q141 = Q(
     "q141_int8_ivf_batch_inflight",
     (s, dir) => {
-      import graft.operators.Similarity
+      import graft.operators.Similarity.{IvfInt8, IvfLifecycle}
       val emb = t(s, dir, "embeddings")
-      Similarity.int8IvfTopKBatch(emb.filter(col("vec_id") > 3),
-          "vec_id", "embedding",
-          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          nprobe = 2, emb.filter(col("vec_id") <= 3), "vec_id",
-          "embedding", k = 5)
-        .select(col("q_id"), col("vec_id"), col("dot"))
+      val lists = IvfLifecycle.assign(IvfInt8,
+        emb.filter(col("vec_id") > 3), "vec_id", "embedding",
+        emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding")
+      IvfLifecycle.searchBatch(IvfInt8, lists,
+          emb.filter(col("vec_id") <= 3), "vec_id", "embedding",
+          nprobe = 2, k = 5)
+        .select(col("q_id"), col("id").as("vec_id"), col("dot"))
         .orderBy(col("q_id").asc, col("dot").desc, col("vec_id").asc)
     },
     Some(int8IvfBatchOracle))
@@ -6026,7 +6047,7 @@ object Queries {
         FROM qs q, cent c) WHERE rn <= 2)""")
 
   /** q145: TWO-LEVEL probe assignment for the in-flight panel search
-    * ([[graft.operators.Similarity.int8IvfSearchBatchTwoLevel]]) —
+    * ([[graft.operators.Similarity.IvfLifecycle.addCoarse]]) —
     * the answer to the flat form's |panel|·|centroids| probe stage
     * (r19 "What's wrong" #2): each CENTROID is assigned once to its
     * nearest coarse cell (query-independent), a query ranks only the
@@ -6040,19 +6061,17 @@ object Queries {
   private val q145 = Q(
     "q145_int8_ivf_two_level",
     (s, dir) => {
-      import graft.operators.Similarity
+      import graft.operators.Similarity.{IvfInt8, IvfLifecycle}
       val emb = t(s, dir, "embeddings")
-      Similarity.int8IvfSearchBatchTwoLevel(
-          Similarity.int8IvfIndex(emb.filter(col("vec_id") > 3),
-            "vec_id", "embedding",
-            emb.filter(col("vec_id") % 100 === 0), "vec_id",
-            "embedding"),
-          "vec_id",
-          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          emb.filter(col("vec_id") % 400 === 0), "vec_id", "embedding",
-          nprobeCoarse = 2, nprobe = 2,
-          emb.filter(col("vec_id") <= 3), "vec_id", "embedding", k = 5)
-        .select(col("q_id"), col("vec_id"), col("dot"))
+      val lists = IvfLifecycle.addCoarse(
+        IvfLifecycle.assign(IvfInt8,
+          emb.filter(col("vec_id") > 3), "vec_id", "embedding",
+          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding"),
+        emb.filter(col("vec_id") % 400 === 0), "vec_id", "embedding")
+      IvfLifecycle.searchBatch(IvfInt8, lists,
+          emb.filter(col("vec_id") <= 3), "vec_id", "embedding",
+          nprobe = 2, k = 5, nprobeCoarse = Some(2))
+        .select(col("q_id"), col("id").as("vec_id"), col("dot"))
         .orderBy(col("q_id").asc, col("dot").desc, col("vec_id").asc)
     },
     Some(int8IvfTwoLevelOracle))
@@ -6096,30 +6115,31 @@ object Queries {
     * probing), completing the {flat, two-level} × {in-flight,
     * persisted} probe matrix: the coarse quantizer and the
     * centroid→cell assignment live IN the index
-    * ([[graft.operators.Similarity.addCoarseLevel]] — the assignment
-    * is query-independent, so build time pays it once for every panel
-    * the index ever serves), and the search's probe-union literal
+    * ([[graft.operators.Similarity.IvfLifecycle.addCoarse]] — the
+    * assignment is query-independent, so build time pays it once for
+    * every panel the index ever serves), and the search's probe-union literal
     * still prunes list partitions at the parquet scan. Ranking
     * defined identical to q145's — one oracle for both. */
   private val q146 = Q(
     "q146_int8_ivf_two_level_idx",
     (s, dir) => {
-      import graft.operators.Similarity
+      import graft.operators.Similarity.{IvfInt8, IvfLifecycle, OnDisk}
       val emb = t(s, dir, "embeddings")
       val idxDir = tmpWorkDir(
         s"graft_q146_i8tl_${ProcessHandle.current().pid()}_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
+      val index = OnDisk(idxDir.getAbsolutePath)
       if (!new java.io.File(idxDir, "lists/_SUCCESS").exists())
-        Similarity.buildInt8IvfIndex(emb.filter(col("vec_id") > 3),
+        IvfLifecycle.build(IvfInt8, emb.filter(col("vec_id") > 3),
           "vec_id", "embedding",
           emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
           idxDir.getAbsolutePath)
       if (!new java.io.File(idxDir, "cellof/_SUCCESS").exists())
-        Similarity.addCoarseLevel(s, idxDir.getAbsolutePath,
+        IvfLifecycle.addCoarse(index,
           emb.filter(col("vec_id") % 400 === 0), "vec_id", "embedding")
-      Similarity.searchInt8IvfIndexBatchTwoLevel(s,
-          idxDir.getAbsolutePath, emb.filter(col("vec_id") <= 3),
-          "vec_id", "embedding", nprobeCoarse = 2, nprobe = 2, k = 5)
+      IvfLifecycle.searchBatch(IvfInt8, index,
+          emb.filter(col("vec_id") <= 3), "vec_id", "embedding",
+          nprobe = 2, k = 5, nprobeCoarse = Some(2))
         .select(col("q_id"), col("id").as("vec_id"), col("dot"))
         .orderBy(col("q_id").asc, col("dot").desc, col("vec_id").asc)
     },
@@ -6310,18 +6330,19 @@ object Queries {
     "q144_int8_refine_search",
     (s, dir) => {
       import graft.operators.Similarity
+      import Similarity.{IvfInt8, IvfLifecycle, OnDisk}
       val emb = t(s, dir, "embeddings")
       val idxDir = tmpWorkDir(
         s"graft_q144_refine_${ProcessHandle.current().pid()}_" +
           dir.replaceAll("[^A-Za-z0-9]", "_"))
       if (!new java.io.File(idxDir, "lists/_SUCCESS").exists())
-        Similarity.buildInt8IvfIndex(emb.filter(col("vec_id") > 3),
+        IvfLifecycle.build(IvfInt8, emb.filter(col("vec_id") > 3),
           "vec_id", "embedding",
           emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
           idxDir.getAbsolutePath)
-      Similarity.IvfLifecycle.searchBatch(Similarity.IvfInt8, s,
-          idxDir.getAbsolutePath, emb.filter(col("vec_id") <= 3),
-          "vec_id", "embedding", nprobe = 2, k = 5,
+      IvfLifecycle.searchBatch(IvfInt8, OnDisk(idxDir.getAbsolutePath),
+          emb.filter(col("vec_id") <= 3), "vec_id", "embedding",
+          nprobe = 2, k = 5,
           refine = Some(Similarity.Refine(overfetch = 16,
             vectors = Some((emb.filter(col("vec_id") > 3), "vec_id",
               "embedding")))))

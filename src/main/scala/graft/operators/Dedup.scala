@@ -670,31 +670,11 @@ object Dedup {
     * stop-word n-gram in a web-scale corpus is quadratic — the standard
     * mitigation drops grams appearing in more than maxDf documents from
     * BOTH the intersection and the set sizes (Jaccard over the pruned
-    * gram sets). Default off: exact semantics, oracle-matched.
-    *
-    * `prefixFilter` (r22, VERDICT r21 #6): PPJoin-class prefix
-    * pruning — RESULT-IDENTICAL at any threshold (spec'd
-    * differentially), but only WORTH turning on at high minBp. Under
-    * any global total order on grams (here: the gram key ascending),
-    * a pair with floor(10000·|A∩B| / |A∪B|) ≥ minBp must share a gram
-    * inside each side's first |S| − ceil(minBp·|S| / 10000) + 1 grams
-    * (Bayardo et al., WWW'07 prefix-filtering principle: the
-    * intersection is ≥ ceil(minBp·|S|/10000) elements of S, and a
-    * longer-than-required prefix is always safe). So only the PREFIX
-    * rows enter the quadratic self-join — at minBp 9500 that is ~5%
-    * of gram rows per side (~1/400th the candidate pairs of a hot
-    * block); at minBp 2000 the prefix is ~80% of the set and the
-    * extra verify join costs more than the pruning saves (measured —
-    * q18's exact path keeps it off). Candidates are then verified
-    * with the full gram sets, so emitted (a, b, j_bp) rows are
-    * bit-identical to the unpruned join. Composes with `maxDf`
-    * (prefixes of the pruned sets) and `exactGrams` (string order
-    * replaces hash order — any total order is valid). */
+    * gram sets). Default off: exact semantics, oracle-matched. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int, blockCol: Option[String],
                         minBp: Long, maxDf: Option[Long] = None,
-                        exactGrams: Boolean = false,
-                        prefixFilter: Boolean = false): DataFrame = {
+                        exactGrams: Boolean = false): DataFrame = {
     // gram identity defaults to the 128-bit (xxhash64,
     // salted-xxhash64) pair — the SpanDedup convention: the distinct
     // exchange and the self-join carry 16 FIXED bytes per gram
@@ -745,53 +725,18 @@ object Dedup {
       case None => gramsAll
     }
     val sizes = grams.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    // the self-join's input: every gram row, or — prefixFilter — only
-    // each document's prefix under the canonical gram order (see
-    // scaladoc; candidates are re-verified on the FULL sets below, so
-    // recall is structural, not probabilistic)
-    val joinSide =
-      if (!prefixFilter) grams
-      else {
-        val w = Window.partitionBy(col("id"))
-          .orderBy(gramKeys.map(col(_).asc): _*)
-        grams
-          .withColumn("__rk", row_number().over(w))
-          .withColumn("__psz",
-            count(lit(1)).over(Window.partitionBy(col("id"))))
-          // prefix length |S| − ceil(minBp·|S|/10000) + 1, exact
-          // integer arithmetic (div floors; +9999 makes it a ceil)
-          .where(col("__rk") <= col("__psz") -
-            expr(s"(($minBp * __psz + 9999) div 10000)") + 1)
-          .drop("__rk", "__psz")
-      }
-    val l = joinSide.select((col("id").as("a") +:
+    val l = grams.select((col("id").as("a") +:
       gramKeys.map(gk => col(gk).as(s"${gk}_a"))) ++
       blockCol.map(c => col(c).as("blk")).toSeq: _*)
-    val r = joinSide.select((col("id").as("b") +:
+    val r = grams.select((col("id").as("b") +:
       gramKeys.map(gk => col(gk).as(s"${gk}_b"))) ++
       blockCol.map(c => col(c).as("blk2")).toSeq: _*)
     val joinCond = gramKeys.map(gk => col(s"${gk}_a") === col(s"${gk}_b"))
       .reduce(_ && _) &&
       blockCol.map(_ => col("blk") === col("blk2")).getOrElse(lit(true)) &&
       (col("a") < col("b"))
-    val inter =
-      if (!prefixFilter)
-        l.join(r, joinCond)
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-      else {
-        // candidates from the prefix join, intersection from the full
-        // gram sets ([[jaccardVerify]]'s shape — Catalyst folds the
-        // ga = gb filter into the second join's keys)
-        val cands = l.join(r, joinCond).select("a", "b").distinct()
-        cands
-          .join(grams.select((col("id").as("a") +:
-            gramKeys.map(gk => col(gk).as(s"${gk}_a"))): _*), "a")
-          .join(grams.select((col("id").as("b") +:
-            gramKeys.map(gk => col(gk).as(s"${gk}_b"))): _*), Seq("b"))
-          .filter(gramKeys.map(gk =>
-            col(s"${gk}_a") === col(s"${gk}_b")).reduce(_ && _))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
-      }
+    val inter = l.join(r, joinCond)
+      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("inter"))
     inter
       .join(sizes.withColumnRenamed("id", "a")
         .withColumnRenamed("sz", "sza"), "a")

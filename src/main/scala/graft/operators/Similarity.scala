@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Embedding similarity search: brute-force cosine top-k baseline and an
   * LSH-bucketed approximate path for scale.
@@ -53,6 +54,15 @@ object Similarity {
   private def cosinePre(a: Column, b: Column, na: Column,
                         nb: Column): Column =
     when(na =!= 0.0 && nb =!= 0.0, dot(a, b) / (na * nb))
+
+  /** The top-n rows of each `q_id` by `score` descending (NULLs last),
+    * ties to the smaller `tie` — the per-query cut every panel search
+    * here ends with. */
+  private def topPerQuery(df: DataFrame, score: String, tie: String,
+                          n: Int): DataFrame =
+    df.withColumn("__rn", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col(score).desc, col(tie).asc)))
+      .filter(col("__rn") <= n).drop("__rn")
 
   /** Brute-force top-k nearest to one query vector. The per-row cosine is
     * embarrassingly parallel; the top-k is a TakeOrdered (no full sort).
@@ -163,71 +173,35 @@ object Similarity {
       col(qVecCol).as("__qv"),
       lshSignature(col(qVecCol), dim, nBits).as("__qsig"),
       norm2(col(qVecCol)).as("__qn")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-    bucketed.join(q, col("__sig") === col("__qsig"))
-      .select(col("q_id"), col(idCol),
-        cosinePre(col(vecCol), col("__qv"),
-          col("__n"), col("__qn")).as("sim"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
+    topPerQuery(bucketed.join(q, col("__sig") === col("__qsig"))
+        .select(col("q_id"), col(idCol),
+          cosinePre(col(vecCol), col("__qv"),
+            col("__n"), col("__qn")).as("sim")),
+      "sim", idCol, k)
   }
 
-  /** IVF top-k: coarse-quantize vectors to their nearest centroid
-    * (broadcast centroid table + window argmax — one small join, no
-    * iteration), probe the query's `nprobe` nearest centroids, search
-    * only those inverted lists. The centroid table is caller-supplied
-    * (k-means offline, or any deterministic subset); candidate count
-    * scales with nprobe/|centroids|, not |data|. */
+  /** The centroid table as the IVF stages read it: (__cid, __cv, __cn),
+    * broadcast, each norm computed once per centroid. */
   private def prepCent(centroids: DataFrame, centIdCol: String,
                        centVecCol: String): DataFrame =
     broadcast(centroids.select(col(centIdCol).as("__cid"),
       col(centVecCol).as("__cv"), norm2(col(centVecCol)).as("__cn")))
 
-  def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
-              centroids: DataFrame, centIdCol: String, centVecCol: String,
-              nprobe: Int, query: DataFrame, queryVecCol: String,
-              k: Int): DataFrame = {
-    val cent = prepCent(centroids, centIdCol, centVecCol)
-    // assignment: argmin over centroids as a partial-aggregated
-    // min(struct(-sim, cid, …)) — the broadcast join fans each vector
-    // out to k rows INSIDE the map task, and the partial aggregate
-    // collapses them back to one row per vector before the shuffle, so
-    // shuffle volume is |vectors|, independent of k. (A window argmin
-    // here would shuffle all n×k rows — a k-fold amplification that
-    // kills the plan at coarse-quantizer scale, k = 4096..65536.)
-    // Negating the cosine turns argmax into struct-min; IEEE negation
-    // is exact and order-reversing, and -0.0 < 0.0 under Spark's total
-    // ordering mirrors the old `cs.desc` tie behavior. Ties on equal
-    // sim go to the smaller __cid, same as before. The row norm is
-    // computed ONCE per vector, not once per (vector, centroid).
-    // A zero-norm centroid (or vector) divides by zero → NULL cosine;
-    // struct-min sorts a NULL first field SMALLEST, which would let a
-    // degenerate centroid win every argmin, so coalesce NULL to +Inf —
-    // the nulls-last semantics the old `cs.desc` ordering had.
-    val assigned = assignToCentroids(df, idCol, vecCol, cent)
-    // probe list: the query's nprobe nearest centroids
-    val probes = broadcast(query.select(col(queryVecCol).as("__qv"),
-        norm2(col(queryVecCol)).as("__qn"))
-      .join(cent)
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .orderBy(col("__cs").desc, col("__cid").asc)
-      .limit(nprobe)
-      .select(col("__cid"), col("__qv"), col("__qn")))
-    assigned.join(probes, "__cid")
-      .select(col(idCol),
-        cosinePre(col(vecCol), col("__qv"),
-          col("__n"), col("__qn")).as("sim"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** The IVF assignment step shared by [[ivfTopK]] (in-flight) and
-    * [[buildIvfIndex]] (persisted): one row per vector with its nearest
-    * centroid, shuffle volume |vectors| (see the argmin commentary
-    * above). Returns (idCol, vecCol, __n, __cid). */
+  /** Nearest-centroid assignment by cosine, ties to the smaller cid —
+    * the one rule the IVF lists, the coarse cell table and
+    * [[semanticDedup]] share. Returns (idCol, vecCol, __n, __cid).
+    *
+    * Argmin as a partial-aggregated min(struct(-sim, cid, …)): the
+    * broadcast join fans each vector out to k rows INSIDE the map task,
+    * and the partial aggregate collapses them back to one row per vector
+    * before the shuffle, so shuffle volume is |vectors|, independent of
+    * k (a window argmin would shuffle all n×k rows — a k-fold
+    * amplification that kills the plan at k = 4096..65536). Negating the
+    * cosine turns argmax into struct-min; IEEE negation is exact and
+    * order-reversing. The row norm is computed ONCE per vector. A
+    * zero-norm centroid (or vector) yields a NULL cosine, which
+    * struct-min would sort SMALLEST and let win every argmin, so NULL
+    * coalesces to +Inf (nulls-last). */
   private def assignToCentroids(df: DataFrame, idCol: String,
                                 vecCol: String,
                                 cent: DataFrame): DataFrame =
@@ -242,209 +216,31 @@ object Similarity {
         col(vecCol).as("__v"), col("__n").as("__vn"))).as("m"))
       .select(col(idCol), col("m.__v").as(vecCol),
         col("m.__vn").as("__n"), col("m.__cid").as("__cid"))
+  /** Σ (a_i − b_i)² over long arrays, codegen'd — the exact integer
+    * distance of k-means training and PQ. */
+  private def sqDist(a: Column, b: Column): Column = GraftBridge.toColumn(
+    graft.functions.VecSqDistLongExpr(
+      GraftBridge.toExpression(a), GraftBridge.toExpression(b)))
 
-  /** Persist an IVF index: `dir/centroids` (cid, cv) and `dir/lists`
-    * — the assignment output written PARTITIONED BY centroid id, so the
-    * inverted lists are physical parquet partitions. Training and the
-    * corpus-wide assignment pass (the expensive parts at 100 TB) run
-    * once; every [[searchIvfIndex]] after that reads only its probes'
-    * partitions (file-level pruning — nprobe/k of the data). */
-  def buildIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-                    centroids: DataFrame, centIdCol: String,
-                    centVecCol: String, dir: String): Unit = {
-    centroids.select(col(centIdCol).as("cid"), col(centVecCol).as("cv"))
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    assignToCentroids(df, idCol, vecCol,
-        prepCent(centroids, centIdCol, centVecCol))
-      .select(col(idCol).as("id"), col(vecCol).as("vec"),
-        col("__n").as("norm"), col("__cid").as("cid"))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$dir/lists")
-  }
+  /** Element-wise floor(x·scale) as longs — the one quantization every
+    * integer-exact trainer and its DuckDB replay share. */
+  private def floorScaled(v: Column, scale: Long): Column =
+    transform(v, x => floor(x * lit(scale.toDouble)).cast(LongType))
 
-  /** Incrementally extend a persisted IVF index with newly-ingested
-    * vectors — the continuous-ingestion half of the index lifecycle
-    * (at 100 TB the corpus never stops growing; re-running
-    * [[buildIvfIndex]]'s corpus-wide assignment per ingest batch
-    * would be quadratic over the index's life). Assignment reads the
-    * index's OWN persisted quantizer (`dir/centroids`), so new rows
-    * are placed by exactly the formula the build used, and land as
-    * appended parquet files under the same `cid=` partitions: a
-    * search after any number of appends is bit-identical to one over
-    * an index built from the union at once (q79 oracle; spec'd).
-    * The quantizer is NOT retrained — the standard IVF trade: cheap
-    * ingest, recall drifts if the data distribution moves, rebuild
-    * when it does. Caller contract: ids must be new to the index (a
-    * re-appended id simply appears twice in search results, like any
-    * duplicate row — route through [[Dedup.exact]] upstream if the
-    * feed can re-deliver); each call adds one file per touched
-    * partition, so compact lists periodically under high-frequency
-    * small appends. The append is a blind parquet write — NOT
-    * idempotent — so a streaming-ingest pathway (foreachBatch) must
-    * be exactly-once: skip replayed batchIds, or periodically rewrite
-    * the lists deduplicated by id (see [[appendToInt8IvfIndex]],
-    * where a replayed partial write corrupts scores rather than
-    * merely duplicating a result row). */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, df: DataFrame, idCol: String,
-                       vecCol: String): Unit =
-    assignToCentroids(df, idCol, vecCol,
-        prepCent(spark.read.parquet(s"$dir/centroids"), "cid", "cv"))
-      .select(col(idCol).as("id"), col(vecCol).as("vec"),
-        col("__n").as("norm"), col("__cid").as("cid"))
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$dir/lists")
+  /** (id, v): `vecCol` quantized by [[floorScaled]]. */
+  private def quantized(df: DataFrame, idCol: String, vecCol: String,
+                        scale: Long): DataFrame =
+    df.select(col(idCol).as("id"), floorScaled(col(vecCol), scale).as("v"))
 
-  /** Compact a persisted IVF index's inverted lists: each
-    * [[appendToIvfIndex]] call leaves one more parquet file per
-    * touched `cid=` partition, and search latency follows file count
-    * (open + footer per file), so a high-frequency append cadence
-    * needs periodic compaction. Rewrites every list clustered on cid
-    * — one task owns all of a cid's rows, so each partition comes out
-    * as ONE file — into a sibling directory, then swaps it in via two
-    * renames (`lists`→`lists_old`, `lists_compacting`→`lists`, then
-    * delete `lists_old`): at no point is there ZERO copies on disk, so
-    * a crash mid-swap is recoverable by renaming whichever copy
-    * survives back to `lists` (never delete-then-rename, whose crash
-    * window destroys the index). Row content is untouched: searches
-    * return bit-identical results before and after (spec'd). Run it
-    * OFFLINE — a concurrent [[appendToIvfIndex]] landing between the
-    * compaction's read and the swap is silently lost with the old
-    * directory; searches racing the swap instant can transiently fail
-    * and should retry. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val lists = new org.apache.hadoop.fs.Path(s"$dir/lists")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/lists_compacting")
-    val old = new org.apache.hadoop.fs.Path(s"$dir/lists_old")
-    val fs = lists.getFileSystem(conf)
-    if (fs.exists(old)) fs.delete(old, true) // prior-crash leftover
-    spark.read.parquet(lists.toString)
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(tmp.toString)
-    if (!fs.rename(lists, old))
-      sys.error(s"compaction swap failed moving $lists aside")
-    if (!fs.rename(tmp, lists))
-      sys.error(s"compaction swap failed installing $tmp; previous " +
-        s"lists preserved at $old — rename it back to recover")
-    fs.delete(old, true)
-  }
-
-  /** Search a persisted IVF index (single query vector, like
-    * [[ivfTopK]]). Probe selection collects ≤ nprobe rows — bounded by
-    * construction — so the list filter is LITERAL and parquet partition
-    * pruning skips every non-probed inverted list on disk. Row norms
-    * come from the index (computed once at build), so the cosine is
-    * bit-identical to the in-flight path. Returns (id, sim). */
-  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, query: DataFrame, queryVecCol: String,
-                     nprobe: Int, k: Int): DataFrame = {
-    val cent = prepCent(spark.read.parquet(s"$dir/centroids"),
-      "cid", "cv")
-    // single-query contract (like ivfTopK's practical use): with
-    // multiple rows, probe selection would mix centroids chosen for
-    // different vectors — silently wrong, so reject. This collect is
-    // the ONLY execution of the caller's query plan; everything below
-    // works from the collected row, with the vector's ELEMENT TYPE
-    // preserved by rebuilding a one-row frame under the original
-    // schema (a typedlit[Seq[Float]] here would corrupt double- or
-    // integer-typed embeddings).
-    val qProj = query.select(col(queryVecCol).as("__qv"))
-    val qRows = qProj.limit(2).collect()
-    require(qRows.length == 1,
-      s"searchIvfIndex expects exactly one query row, got " +
-        s"${if (qRows.isEmpty) "none" else "several"}")
-    val q1 = broadcast(spark.createDataFrame(
-        java.util.Collections.singletonList(qRows.head), qProj.schema)
-      .withColumn("__qn", norm2(col("__qv"))))
-    val probes = q1.join(cent)
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .orderBy(col("__cs").desc, col("__cid").asc)
-      .limit(nprobe)
-      .select(col("__cid"), col("__qv"), col("__qn"))
-    val probeRows = probes.collect() // bounded: ≤ nprobe rows
-    require(probeRows.nonEmpty, "empty centroid table")
-    val cids = probeRows.map(_.get(0)).toSeq
-    spark.read.parquet(s"$dir/lists")
-      .filter(col("cid").isin(cids: _*))
-      .join(broadcast(probes.withColumnRenamed("__cid", "cid")), "cid")
-      .select(col("id"),
-        cosinePre(col("vec"), col("__qv"), col("norm"), col("__qn"))
-          .as("sim"))
-      .orderBy(col("sim").desc, col("id").asc)
-      .limit(k)
-  }
-
-  /** Batch search over a persisted IVF index — the [[annTopKBatch]]
-    * shape on the [[searchIvfIndex]] storage: per-query probe
-    * selection is a window top-nprobe over the broadcast centroid
-    * table (stays distributed — query vectors are never collected),
-    * and the probe UNION is collected as the literal partition filter.
-    * That collect is bounded by |centroids| distinct ids regardless of
-    * batch size, so the literal-filter → parquet-partition-pruning
-    * property of the single-query path survives arbitrarily large
-    * query sets. Cosines reuse the index's stored norms, so each
-    * (q_id, id) score is bit-identical to a per-query loop of
-    * [[searchIvfIndex]]. Returns (q_id, id, sim), top-k per query. */
-  def searchIvfIndexBatch(spark: org.apache.spark.sql.SparkSession,
-                          dir: String, queries: DataFrame, qIdCol: String,
-                          qVecCol: String, nprobe: Int,
-                          k: Int): DataFrame = {
-    val cent = prepCent(spark.read.parquet(s"$dir/centroids"),
-      "cid", "cv")
-    val q = queries.select(col(qIdCol).as("q_id"),
-      col(qVecCol).as("__qv"), norm2(col(qVecCol)).as("__qn"))
-    val pw = Window.partitionBy(col("q_id"))
-      .orderBy(col("__cs").desc, col("__cid").asc)
-    val probes = q.join(cent)
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .withColumn("__rn", row_number().over(pw))
-      .filter(col("__rn") <= nprobe)
-      .select(col("q_id"), col("__cid").as("cid"), col("__qv"),
-        col("__qn"))
-      // materialize ONCE (bounded: |batch| × nprobe rows). The probe
-      // plan is consumed three times — the cids collect, the broadcast
-      // join side, and the pruning subquery — and re-executing it
-      // would re-read centroids 3× AND silently drop candidates if the
-      // caller's queries frame is nondeterministic (sample/limit): a
-      // cid probed in one execution but absent from another's literal
-      // filter loses its whole list partition.
-      .localCheckpoint()
-    val cids = probes.select(col("cid")).distinct()
-      .collect().map(_.get(0)).toSeq
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("id").asc)
-    val lists = spark.read.parquet(s"$dir/lists")
-    // empty batch (or empty centroid table) → empty result, the
-    // natural N=0 of a batch API — not an error like the single-query
-    // path's one-row contract
-    if (cids.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("q_id",
-            q.schema("q_id").dataType),
-          org.apache.spark.sql.types.StructField("id",
-            lists.schema("id").dataType),
-          org.apache.spark.sql.types.StructField("sim",
-            org.apache.spark.sql.types.DoubleType))))
-    lists
-      .filter(col("cid").isin(cids: _*))
-      .join(broadcast(probes), "cid")
-      .select(col("q_id"), col("id"),
-        cosinePre(col("vec"), col("__qv"), col("norm"), col("__qn"))
-          .as("sim"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-  }
+  /** One (sub, sv) struct per PQ subspace j — positions
+    * [j·sub, (j+1)·sub) of `v` — to be exploded. */
+  private def subspaces(v: Column, m: Int, sub: Int): Column =
+    explode(array((0 until m).map(j =>
+      struct(lit(j).cast(LongType).as("sub"),
+        slice(v, j * sub + 1, sub).as("sv"))): _*))
 
   /** Distributed k-means (Lloyd) over integer-quantized vectors — the
-    * trainer that produces [[ivfTopK]]'s centroid table.
+    * trainer that produces an IVF centroid table ([[IvfLifecycle]]).
     *
     * Every step is EXACT integer math, which makes the whole training
     * run deterministic and engine-portable (the DuckDB oracle replays
@@ -471,7 +267,6 @@ object Similarity {
   def kmeansQuantized(df: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int,
                       scale: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     kmeansArrays(df, idCol, vecCol, k, iters, scale)
       .select(col("cid"), posexplode(col("cv")).as(Seq("pos0", "cx")))
       .select(col("cid"), (col("pos0") + 1).cast(LongType).as("pos"),
@@ -479,7 +274,7 @@ object Similarity {
   }
 
   /** [[kmeansQuantized]]'s centroids dequantized to double arrays —
-    * drop-in centroid table for [[ivfTopK]] (cid, cv). */
+    * drop-in centroid table for [[IvfLifecycle]] (cid, cv). */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
                       k: Int, iters: Int,
                       scale: Long = 1000000L): DataFrame =
@@ -490,10 +285,7 @@ object Similarity {
   private def kmeansArrays(df: DataFrame, idCol: String, vecCol: String,
                            k: Int, iters: Int,
                            scale: Long): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val vq = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => floor(x * lit(scale.toDouble))
-        .cast(LongType)).as("v"))
+    val vq = quantized(df, idCol, vecCol, scale)
     val wSeed = Window.orderBy(col("__h").asc, col("id").asc)
     var cents = vq
       .withColumn("__h", md5(col("id").cast("string")))
@@ -504,10 +296,7 @@ object Similarity {
       // codegen'd integer distance (VecSqDistLongExpr) — this runs k
       // times per vector per iteration, the training hot loop
       val asg = vq.join(broadcast(cents))
-        .withColumn("dist", GraftBridge.toColumn(
-          graft.functions.VecSqDistLongExpr(
-            GraftBridge.toExpression(col("v")),
-            GraftBridge.toExpression(col("cv")))))
+        .withColumn("dist", sqDist(col("v"), col("cv")))
         .groupBy(col("id"))
         .agg(min(struct(col("dist"), col("cid"), col("v"))).as("m"))
         .select(col("m.cid").as("cid"), col("m.v").as("v"))
@@ -559,7 +348,6 @@ object Similarity {
                        dim: Int, m: Int, k: Int, iters: Int,
                        scale: Long = 1000000L): DataFrame = {
     require(dim % m == 0, s"dim $dim must split into $m subspaces")
-    import org.apache.spark.sql.types.LongType
     val sub = dim / m
     // ONE keyed Lloyd loop over all m subspaces instead of m
     // independent loops (r21): the per-subspace recurrences are
@@ -574,13 +362,8 @@ object Similarity {
     // floor-div means never mix subspaces (every aggregation is keyed
     // by sub) — the q89/q90/q110 oracles replay the training
     // bit-for-bit and stay green across this rewrite.
-    val vq = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => floor(x * lit(scale.toDouble))
-        .cast(LongType)).as("v"))
-    val slices = vq.select(col("id"),
-      explode(array((0 until m).map(j =>
-        struct(lit(j).cast(LongType).as("sub"),
-          slice(col("v"), j * sub + 1, sub).as("sv"))): _*)).as("s"))
+    val vq = quantized(df, idCol, vecCol, scale)
+    val slices = vq.select(col("id"), subspaces(col("v"), m, sub).as("s"))
       .select(col("s.sub").as("sub"), col("id"), col("s.sv").as("sv"))
     val wSeed = Window.orderBy(col("__h").asc, col("id").asc)
     val seedIds = vq
@@ -591,12 +374,9 @@ object Similarity {
     var cents = slices.join(broadcast(seedIds), Seq("id"))
       .select(col("sub"), col("cid"), col("sv").as("cv"))
       .localCheckpoint(eager = false)
-    def sq(a: Column, b: Column) = GraftBridge.toColumn(
-      graft.functions.VecSqDistLongExpr(
-        GraftBridge.toExpression(a), GraftBridge.toExpression(b)))
     for (_ <- 0 until iters) {
       val asg = slices.join(broadcast(cents), Seq("sub"))
-        .withColumn("dist", sq(col("sv"), col("cv")))
+        .withColumn("dist", sqDist(col("sv"), col("cv")))
         .groupBy(col("sub"), col("id"))
         .agg(min(struct(col("dist"), col("cid"), col("sv"))).as("m"))
         .select(col("sub"), col("m.cid").as("cid"), col("m.sv").as("sv"))
@@ -629,21 +409,12 @@ object Similarity {
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebook: DataFrame, dim: Int, m: Int,
                scale: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     val sub = dim / m
-    val vq = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => floor(x * lit(scale.toDouble))
-        .cast(LongType)).as("v"))
-    val slices = vq.select(col("id"),
-      explode(array((0 until m).map(j =>
-        struct(lit(j).cast(LongType).as("sub"),
-          slice(col("v"), j * sub + 1, sub).as("sv"))): _*)).as("s"))
+    val vq = quantized(df, idCol, vecCol, scale)
+    val slices = vq.select(col("id"), subspaces(col("v"), m, sub).as("s"))
       .select(col("id"), col("s.sub").as("sub"), col("s.sv").as("sv"))
     slices.join(broadcast(codebook), Seq("sub"))
-      .withColumn("dist", GraftBridge.toColumn(
-        graft.functions.VecSqDistLongExpr(
-          GraftBridge.toExpression(col("sv")),
-          GraftBridge.toExpression(col("cv")))))
+      .withColumn("dist", sqDist(col("sv"), col("cv")))
       .groupBy(col("id"), col("sub"))
       .agg(min(struct(col("dist"), col("cid"))).as("m"))
       .groupBy(col("id"))
@@ -675,20 +446,12 @@ object Similarity {
                              codebook: DataFrame, queryId: Long,
                              dim: Int, m: Int,
                              scale: Long): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     val sub = dim / m
     val q = queryDf.filter(col(idCol) === queryId)
-      .select(explode(array((0 until m).map(j =>
-        struct(lit(j).cast(LongType).as("sub"),
-          transform(slice(col(vecCol), j * sub + 1, sub),
-            x => floor(x * lit(scale.toDouble)).cast(LongType))
-            .as("qv"))): _*)).as("s"))
-      .select(col("s.sub").as("sub"), col("s.qv").as("qv"))
+      .select(subspaces(floorScaled(col(vecCol), scale), m, sub).as("s"))
+      .select(col("s.sub").as("sub"), col("s.sv").as("qv"))
     val table = codebook.join(broadcast(q), Seq("sub"))
-      .withColumn("d", GraftBridge.toColumn(
-        graft.functions.VecSqDistLongExpr(
-          GraftBridge.toExpression(col("qv")),
-          GraftBridge.toExpression(col("cv")))))
+      .withColumn("d", sqDist(col("qv"), col("cv")))
       .select(col("sub"), col("cid"), col("d"))
     pqEncode(candidates, idCol, vecCol, codebook, dim, m, scale)
       .select(col("id"), posexplode(col("codes")).as(Seq("pos", "code")))
@@ -701,37 +464,31 @@ object Similarity {
 
   /** IVF-PQ: the two corpus-scale halves composed. A coarse integer
     * k-means partitions the corpus into inverted lists (assignment =
-    * broadcast argmin, shuffle |vectors| — same shape as [[ivfTopK]]'s
-    * commentary); the query probes its `nprobe` nearest coarse
+    * broadcast argmin, shuffle |vectors| — the IVF assignment's
+    * shape); the query probes its `nprobe` nearest coarse
     * centroids; only vectors in the probed lists are ADC-scored
     * against the PQ codebook. Codes are trained on raw vectors (not
     * residuals — a documented simplification: residual PQ needs
     * per-list or shared-residual codebooks; raw-vector PQ keeps every
     * stage bit-replayable by the q90 oracle). At deployment the
-    * assignment and codes are precomputed once (cf. buildIvfIndex);
+    * assignment and codes are precomputed once (cf. IvfLifecycle.build);
     * the per-query cost is nprobe list scans of m-int codes. */
   def ivfPqSearch(df: DataFrame, idCol: String, vecCol: String,
                   coarseK: Int, coarseIters: Int, m: Int, pqK: Int,
                   pqIters: Int, nprobe: Int, queryId: Long, dim: Int,
                   topK: Int, scale: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     val coarse = kmeansArrays(df, idCol, vecCol, coarseK, coarseIters,
       scale)
-    val vq = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => floor(x * lit(scale.toDouble))
-        .cast(LongType)).as("v"))
-    def sq(a: Column, b: Column) = GraftBridge.toColumn(
-      graft.functions.VecSqDistLongExpr(
-        GraftBridge.toExpression(a), GraftBridge.toExpression(b)))
+    val vq = quantized(df, idCol, vecCol, scale)
     val assigned = vq.join(broadcast(coarse))
-      .withColumn("dist", sq(col("v"), col("cv")))
+      .withColumn("dist", sqDist(col("v"), col("cv")))
       .groupBy(col("id"))
       .agg(min(struct(col("dist"), col("cid"))).as("a"))
       .select(col("id"), col("a.cid").as("ccid"))
     val probes = broadcast(
       coarse.join(broadcast(vq.filter(col("id") === queryId)
           .select(col("v").as("qv"))))
-        .withColumn("dist", sq(col("qv"), col("cv")))
+        .withColumn("dist", sqDist(col("qv"), col("cv")))
         .orderBy(col("dist").asc, col("cid").asc)
         .limit(nprobe)
         .select(col("cid").as("ccid")))
@@ -773,18 +530,12 @@ object Similarity {
                           pqK: Int, pqIters: Int, nprobe: Int,
                           queryId: Long, dim: Int, topK: Int,
                           scale: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     val coarse = kmeansArrays(df, idCol, vecCol, coarseK, coarseIters,
       scale) // (cid, cv: array<long>)
-    val vq = df.select(col(idCol).as("id"),
-      transform(col(vecCol), x => floor(x * lit(scale.toDouble))
-        .cast(LongType)).as("v"))
-    def sq(a: Column, b: Column) = GraftBridge.toColumn(
-      graft.functions.VecSqDistLongExpr(
-        GraftBridge.toExpression(a), GraftBridge.toExpression(b)))
+    val vq = quantized(df, idCol, vecCol, scale)
     // coarse assignment, keeping the vector for the residual
     val assigned = vq.join(broadcast(coarse))
-      .withColumn("dist", sq(col("v"), col("cv")))
+      .withColumn("dist", sqDist(col("v"), col("cv")))
       .groupBy(col("id"))
       .agg(min(struct(col("dist"), col("cid"), col("v"))).as("a"))
       .select(col("id"), col("a.cid").as("ccid"), col("a.v").as("v"))
@@ -792,7 +543,7 @@ object Similarity {
     // and the probed-list candidate prune — without it the coarse
     // assignment join + argmin aggregation re-runs for each consumer.
     // At deployment this is the materialized assignment table
-    // (buildIvfIndex's artifact); same eager-on-first-use tradeoff as
+    // (IvfLifecycle.build's artifact); same eager-on-first-use tradeoff as
     // kmeansArrays' iteration checkpoint.
     val resid = assigned.join(broadcast(coarse),
         col("ccid") === col("cid"))
@@ -809,21 +560,18 @@ object Similarity {
     val qv = vq.filter(col("id") === queryId).select(col("v").as("qv"))
     val probes = broadcast(
       coarse.join(broadcast(qv))
-        .withColumn("dist", sq(col("qv"), col("cv")))
+        .withColumn("dist", sqDist(col("qv"), col("cv")))
         .orderBy(col("dist").asc, col("cid").asc)
         .limit(nprobe)
         .select(col("cid").as("pcid"), col("cv").as("pcv")))
     val sub = dim / m
     val qres = probes.join(broadcast(qv))
-      .select(col("pcid"),
-        explode(array((0 until m).map(j =>
-          struct(lit(j).cast(LongType).as("sub"),
-            slice(zip_with(col("qv"), col("pcv"), (x, c) => x - c),
-              j * sub + 1, sub).as("qr"))): _*)).as("s"))
-      .select(col("pcid"), col("s.sub").as("sub"), col("s.qr").as("qr"))
+      .select(col("pcid"), subspaces(zip_with(col("qv"), col("pcv"),
+        (x, c) => x - c), m, sub).as("s"))
+      .select(col("pcid"), col("s.sub").as("sub"), col("s.sv").as("qr"))
     // per-list ADC tables: nprobe·m·pqK entries, broadcast
     val table = book.join(broadcast(qres), Seq("sub"))
-      .withColumn("d", sq(col("qr"), col("cv")))
+      .withColumn("d", sqDist(col("qr"), col("cv")))
       .select(col("pcid"), col("sub"), col("cid"), col("d"))
     // candidates: the probed lists' residuals, PQ-encoded
     val cand = resid.join(probes.select(col("pcid")),
@@ -867,622 +615,77 @@ object Similarity {
           floor(col("__x").cast("double") * 127 / col("__qin") + 0.5)
             .cast("long")).as("q")): _*)
 
-  /** Top-k search DIRECTLY over the int8-quantized form
-    * [[quantizeInt8]] emits — the read side of the 4×-smaller index: a
-    * pure INTEGER dot product Σ q_i·p_i ranks candidates (for
-    * unit-normalized quantized vectors the integer dot is a monotone
-    * ~cosine surrogate within quantization error), exact and
-    * engine-replayable, no float in the plan. One broadcast of the
-    * quantized query + one map-side-combined per-id sum + TakeOrdered:
-    * the corpus side never shuffles more than (id, partial-dot) rows.
-    * Zero-norm rows ([[quantizeInt8]] emits NULL q) never rank.
+  /** Top-k per query by the pure INTEGER dot Σ q_i·p_i over
+    * [[quantizeInt8]] rows — the read side of the 4×-smaller storage
+    * form: exact, engine-replayable, no float in the plan (for
+    * unit-normalized vectors the integer dot is a monotone ~cosine
+    * surrogate within quantization error). `queries` is quantizeInt8
+    * output keyed by `qIdCol`; one query is a panel of one. Returns
+    * (q_id, idCol, dot); zero-norm rows (NULL q) never rank.
     *
-    * The query frame must hold exactly ONE vector: [[quantizeInt8]]
-    * emits per-(vec_id, pos) rows, and this ranker sums Σ q_i·p_i per
-    * corpus id — two query vectors' rows would silently mix into one
-    * meaningless ranking. Guarded on the (tiny, broadcast) query
-    * side: a duplicate `posCol` value — the signature of a
-    * multi-vector or malformed frame — fails the plan at execution
-    * with assert_true instead of returning garbage. */
-  def int8TopK(qdf: DataFrame, idCol: String, posCol: String,
-               qCol: String, query: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k=$k out of [1,∞)")
-    val q = broadcast(query.where(col(qCol).isNotNull)
-      .groupBy(col(posCol).as("__qp"))
-      .agg(max(col(qCol)).as("__q0"), count(lit(1)).as("__c"))
-      .select(col("__qp"),
-        (col("__q0") + coalesce(
-          assert_true(col("__c") === 1,
-            lit("int8TopK: query frame holds more than one vector " +
-              "(duplicate pos) — pass a single quantized query"))
-            .cast("long"), lit(0L))).as("__qq")))
-    qdf.where(col(qCol).isNotNull)
-      .join(q, col(posCol) === col("__qp"))
-      .groupBy(col(idCol))
-      .agg(sum(col(qCol) * col("__qq")).as("dot"))
-      .orderBy(col("dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Batched [[int8TopK]]: rank the quantized corpus against a PANEL
-    * of quantized queries at once — the [[annTopKBatch]] /
-    * [[searchIvfIndexBatch]] shape for the int8 form, and the proper
-    * home for a multi-vector query frame (the single-query ranker
-    * rejects one by design). `queries` is [[quantizeInt8]] output
-    * KEYED by its own id column; output (q_id, idCol, dot), top-k per
-    * query by the integer dot.
+    * A `q_id` column on `qdf` makes each corpus row a candidate for
+    * that query only — the pruned lists an IVF search hands in — and the
+    * join then keys on (q_id, pos); without one every row is a candidate
+    * for every query. A duplicated (q_id, pos) in the panel — two
+    * vectors under one q_id — would silently mix into one garbage
+    * ranking, so it fails the plan via assert_true.
     *
-    * Scale shape: the panel broadcasts (quantized queries are
-    * dim+ε bytes each); the corpus-side join fans each (id, pos, q)
-    * row out to |panel| rows INSIDE the map task and the partial
-    * aggregate collapses them to one (q_id, id) row per pair before
-    * the shuffle — so the exchange carries |panel|·|corpus| partial
-    * dots, and the per-query window rank is the same bounded
-    * top-k-per-group cut annTopKBatch takes. Exact ranking with no
-    * pruning: bound the panel size, or go through
-    * [[searchInt8IvfIndexBatch]] when the corpus side must be pruned
-    * too — the panel shape over the persisted index, one plan, no
-    * driver loop. */
+    * Scale shape: the panel broadcasts (dim+ε bytes per query); the
+    * corpus-side join fans out INSIDE the map task and the partial
+    * aggregate collapses it to one (q_id, id) row per pair before the
+    * shuffle; the per-query window cut is a bounded top-k. Unpruned,
+    * the exchange carries |panel|·|corpus| partial dots: bound the
+    * panel, or prune through [[IvfLifecycle.searchBatch]]. */
   def int8TopKBatch(qdf: DataFrame, idCol: String, posCol: String,
                     qCol: String, queries: DataFrame, qIdCol: String,
                     k: Int): DataFrame = {
     require(k >= 1, s"k=$k out of [1,∞)")
-    // same malformed-frame guard as [[int8TopK]], per panel member: a
-    // duplicated (q_id, pos) — two vectors sharing a q_id — would
-    // silently mix into one garbage ranking, so fail the plan instead
     val q = broadcast(queries.where(col(qCol).isNotNull)
-      .groupBy(col(qIdCol).as("q_id"), col(posCol).as("__qp"))
+      .groupBy(col(qIdCol).as("__pq"), col(posCol).as("__qp"))
       .agg(max(col(qCol)).as("__q0"), count(lit(1)).as("__c"))
-      .select(col("q_id"), col("__qp"),
+      .select(col("__pq"), col("__qp"),
         (col("__q0") + coalesce(
           assert_true(col("__c") === 1,
             lit("int8TopKBatch: panel holds more than one vector per " +
               "q_id (duplicate (q_id, pos)) — ids must be unique"))
             .cast("long"), lit(0L))).as("__qq")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"))
-      .orderBy(col("dot").desc, col(idCol).asc)
-    qdf.where(col(qCol).isNotNull)
-      .join(q, col(posCol) === col("__qp"))
-      .groupBy(col("q_id"), col(idCol))
-      .agg(sum(col(qCol) * col("__qq")).as("dot"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
+    val pruned = qdf.columns.contains("q_id")
+    val onPos = col(posCol) === col("__qp")
+    topPerQuery(qdf.where(col(qCol).isNotNull)
+        .join(q, if (pruned) onPos && col("q_id") === col("__pq") else onPos)
+        .groupBy(if (pruned) col("q_id") else col("__pq").as("q_id"),
+          col(idCol))
+        .agg(sum(col(qCol) * col("__qq")).as("dot")),
+      "dot", idCol, k)
   }
 
-  /** IVF search over an INT8 index — [[ivfTopK]]'s pruning composed
-    * with [[quantizeInt8]]'s storage form, the full corpus-scale
-    * story in one plan: the inverted lists hold int8 rows (4× smaller
-    * than f32 — at 100 TB of embeddings the index is 25 TB), the
-    * coarse quantizer prunes to `nprobe` lists (the scan reads
-    * nprobe/k of the index), and the probed candidates rank by
-    * [[int8TopK]]'s pure integer dot (no float decode of the lists,
-    * ever). Exact and engine-replayable end to end: assignment is the
-    * same argmin-cosine rule as [[ivfTopK]] (one oracle replay for
-    * both), quantization and ranking are integer-exact.
-    *
-    * Plan shape: centroids broadcast twice (assignment fan-out is
-    * collapsed map-side before any shuffle; probe list is an
-    * nprobe-row broadcast), the int8 lists shuffle ONCE on the
-    * semi-join's cid, and the ranking's per-id partial sums combine
-    * map-side — candidate-side traffic is (id, partial-dot) rows.
-    * `query` must hold exactly one vector ([[int8TopK]]'s guard
-    * applies). Returns (idCol, dot), dot descending, k rows. */
-  def int8IvfTopK(df: DataFrame, idCol: String, vecCol: String,
-                  centroids: DataFrame, centIdCol: String,
-                  centVecCol: String, nprobe: Int,
-                  query: DataFrame, queryVecCol: String,
-                  k: Int): DataFrame =
-    int8IvfSearch(
-      int8IvfIndex(df, idCol, vecCol, centroids, centIdCol, centVecCol),
-      idCol, centroids, centIdCol, centVecCol, nprobe,
-      query, queryVecCol, k)
-
-  /** Build the int8 IVF index — the PERSISTED artifact of the
-    * [[int8IvfTopK]] composition (write it as parquet partitioned by
-    * `cid`, the q73 ivf-index pattern, and every later search prunes
-    * to nprobe partitions at the SCAN): (cid, idCol, pos, q) rows,
-    * dim+ε bytes per vector vs f32's 4·dim. Assignment is
-    * [[ivfTopK]]'s argmin-cosine rule; quantization is
-    * [[quantizeInt8]], carried through the assignment so nothing
-    * joins back onto 64×n exploded rows. */
-  def int8IvfIndex(df: DataFrame, idCol: String, vecCol: String,
-                   centroids: DataFrame, centIdCol: String,
-                   centVecCol: String): DataFrame = {
-    val cent = prepCent(centroids, centIdCol, centVecCol)
-    val asg = assignToCentroids(df.select(col(idCol), col(vecCol)),
-      idCol, vecCol, cent)
-    // assignment already computed each vector's norm (__n) — reuse it
-    // instead of paying a second Σx² per row on the build path
-    quantizeInt8(asg, idCol, vecCol, carryCols = Seq("__cid"),
-        normCol = Some("__n"))
-      .withColumnRenamed("__cid", "cid")
-  }
-
-  /** Search an [[int8IvfIndex]]: prune to the query's nprobe nearest
-    * lists (broadcast of nprobe rows), rank the probed candidates by
-    * [[int8TopK]]'s pure integer dot. Train-once/index-once/
-    * search-many: this side touches only the index — no f32 corpus
-    * access, no re-quantization per query. */
-  def int8IvfSearch(lists: DataFrame, idCol: String,
-                    centroids: DataFrame, centIdCol: String,
-                    centVecCol: String, nprobe: Int,
-                    query: DataFrame, queryVecCol: String,
-                    k: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe=$nprobe out of [1,∞)")
-    val cent = prepCent(centroids, centIdCol, centVecCol)
-    val probes = broadcast(query
-      .select(col(queryVecCol).as("__qv"),
-        norm2(col(queryVecCol)).as("__qn"))
-      .join(cent)
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .orderBy(col("__cs").desc, col("__cid").asc)
-      .limit(nprobe)
-      .select(col("__cid").as("cid")))
-    val cand = lists.join(probes, Seq("cid"), "left_semi")
-    int8TopK(cand, idCol, "pos", "q",
-      quantizeInt8(query.select(col(queryVecCol).as("__qv"))
-        .withColumn("__qid", lit(0L)), "__qid", "__qv"),
-      k)
-  }
-
-  /** Batched [[int8IvfSearch]] — the in-flight half of the panel
-    * matrix ([[searchInt8IvfIndexBatch]] is the persisted half; q130/
-    * q132's relation, for panels): rank a query PANEL against
-    * in-flight int8 lists with IVF pruning and NO driver action
-    * anywhere — fully lazy, streaming-composable. Per-query probe
-    * lists come from a window top-nprobe over the broadcast centroid
-    * table; the (q_id, cid) probe pairs broadcast and their INNER
-    * join against the lists IS the prune (a list row in an unprobed
-    * cid matches nothing — no literal filter needed off-disk, no
-    * probe collect, the one plan-shape difference from the persisted
-    * form); the quantized panel broadcasts with [[int8TopKBatch]]'s
-    * duplicate-(q_id, pos) guard; per-(q_id, id) integer dots combine
-    * map-side. Returns (q_id, idCol, dot), top-k per query.
-    *
-    * PANEL-SIZE BOUND: the quantized panel and the (q_id, cid) probe
-    * table are hint-broadcast — the whole point of the batch form is
-    * that every list row sees only its probing queries without a
-    * shuffle, and that requires the panel on every executor. At
-    * dim 64 a panel row is ~70 bytes quantized (+ nprobe 16-byte
-    * probe pairs), so the practical ceiling is a few million queries
-    * against the default 8 GB broadcast limit and driver heap — a
-    * PANEL, not a second corpus. Joining corpus-against-corpus is a
-    * different operator (block both sides: [[nearDupPairs]] /
-    * [[semanticDedup]]); feeding one through this API would OOM the
-    * driver by design, not by accident. */
-  def int8IvfSearchBatch(lists: DataFrame, idCol: String,
-                         centroids: DataFrame, centIdCol: String,
-                         centVecCol: String, nprobe: Int,
-                         queries: DataFrame, qIdCol: String,
-                         qVecCol: String, k: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe=$nprobe out of [1,∞)")
-    require(k >= 1, s"k=$k out of [1,∞)")
-    val cent = prepCent(centroids, centIdCol, centVecCol)
-    val q = queries.select(col(qIdCol).as("q_id"),
-      col(qVecCol).as("__qv"))
-    val pw = Window.partitionBy(col("q_id"))
-      .orderBy(col("__cs").desc, col("__cid").asc)
-    val probes = q
-      .withColumn("__qn", norm2(col("__qv")))
-      .join(cent)
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .withColumn("__rn", row_number().over(pw))
-      .filter(col("__rn") <= nprobe)
-      .select(col("q_id"), col("__cid").as("cid"))
-    int8PanelRank(lists, idCol, probes, q, k)
-  }
-
-  /** Shared downstream of the in-flight panel searches: broadcast the
-    * quantized panel + the (q_id, cid) probe pairs, inner-join-prune
-    * the lists, map-side-collapse the integer dots, window top-k per
-    * query. `q` = (q_id, __qv); `probes` = (q_id, cid). */
-  private def int8PanelRank(lists: DataFrame, idCol: String,
-                            probes: DataFrame, q: DataFrame,
-                            k: Int): DataFrame = {
-    val panel = broadcast(quantizeInt8(q, "q_id", "__qv")
-      .where(col("q").isNotNull)
-      .groupBy(col("q_id").as("__pq"), col("pos").as("__qp"))
-      .agg(max(col("q")).as("__q0"), count(lit(1)).as("__c"))
-      .select(col("__pq"), col("__qp"),
-        (col("__q0") + coalesce(
-          assert_true(col("__c") === 1,
-            lit("int8IvfSearchBatch: panel holds more than one " +
-              "vector per q_id (duplicate (q_id, pos)) — ids must " +
-              "be unique"))
-            .cast("long"), lit(0L))).as("__qq")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("dot").desc, col(idCol).asc)
-    lists
-      .where(col("q").isNotNull)
-      .join(broadcast(probes), "cid")
-      .join(panel,
-        col("q_id") === col("__pq") && col("pos") === col("__qp"))
-      .groupBy(col("q_id"), col(idCol))
-      .agg(sum(col("q") * col("__qq")).as("dot"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-  }
-
-  /** TWO-LEVEL probe assignment for the in-flight panel search — the
-    * answer to the flat form's one remaining scale wall: [[
-    * int8IvfSearchBatch]] scores every query against EVERY centroid
-    * before its window cut (|panel|·|centroids| rows), which is right
-    * up to ~2¹⁶ lists but dominates the plan at web-index scale
-    * (2²⁰ lists × a 10⁶ panel = 10¹² probe rows). The standard fix
-    * (IMI/two-level IVF): quantize the CENTROID SET itself through a
-    * coarse quantizer — each centroid is assigned once to its nearest
-    * coarse cell (query-independent: |centroids|·|coarse| rows, reuse
-    * it across panels), a query scores only the |coarse| ≈
-    * √|centroids| cells (top-`nprobeCoarse` by the same cosine), and
-    * the final top-`nprobe` centroid selection ranks only the
-    * centroids INSIDE the probed cells (≈ nprobeCoarse·|centroids|/
-    * |coarse| rows per query). Probe-stage cost per query drops from
-    * |centroids| to |coarse| + nprobeCoarse·|centroids|/|coarse| —
-    * at 2²⁰ lists with 2¹⁰ coarse cells, ~3·10³ vs 10⁶.
-    *
-    * APPROXIMATE by design: a true top-nprobe centroid hiding in an
-    * unprobed coarse cell is missed (the classic IVF recall trade one
-    * level up); raise `nprobeCoarse` to trade cost for probe recall.
-    * Downstream is [[int8PanelRank]] — identical pruning, dots and
-    * ranking; results equal the flat form whenever the two-level
-    * selection picks the same probes (spec'd: exhaustive nprobeCoarse
-    * ≡ flat). */
-  def int8IvfSearchBatchTwoLevel(lists: DataFrame, idCol: String,
-                                 centroids: DataFrame,
-                                 centIdCol: String, centVecCol: String,
-                                 coarse: DataFrame, coarseIdCol: String,
-                                 coarseVecCol: String,
-                                 nprobeCoarse: Int, nprobe: Int,
-                                 queries: DataFrame, qIdCol: String,
-                                 qVecCol: String, k: Int): DataFrame = {
-    require(nprobeCoarse >= 1,
-      s"nprobeCoarse=$nprobeCoarse out of [1,∞)")
-    require(nprobe >= 1, s"nprobe=$nprobe out of [1,∞)")
-    require(k >= 1, s"k=$k out of [1,∞)")
-    // an empty coarse set would make qcells an empty join and every
-    // query silently return zero rows — fail fast like the nprobe/k
-    // requires (ADVICE r20). The √|centroids|-sized projection is
-    // lazily checkpointed FIRST so the guard's job is also the frame
-    // every downstream join reads: an uncached expensive coarse
-    // derivation is computed once, not once for the guard and again
-    // per consumer (ADVICE r21).
-    val coSlim = coarse.select(col(coarseIdCol).as("__cid"),
-      col(coarseVecCol).as("__cv")).localCheckpoint(false)
-    require(!coSlim.isEmpty,
-      "int8IvfSearchBatchTwoLevel: empty coarse set")
-    val co = prepCent(coSlim, "__cid", "__cv")
-    val q = queries.select(col(qIdCol).as("q_id"),
-      col(qVecCol).as("__qv"))
-    // level 0 (query-independent): every centroid → its nearest
-    // coarse cell, via the same map-side-collapsed argmin the corpus
-    // assignment uses (a window here would SHUFFLE the full
-    // |centroids|·|coarse| cross product; the struct-min collapses it
-    // to |centroids| rows before the exchange). Ties on equal cosine
-    // go to the smaller cell id — identical to the flat form's
-    // ordering, so the oracle replays it as a window.
-    val cellOf = assignToCentroids(
-        centroids.select(col(centIdCol).as("__pcid"),
-          col(centVecCol).as("__pcv")), "__pcid", "__pcv", co)
-      .select(col("__pcid"), col("__pcv"), col("__n").as("__pcn"),
-        col("__cid").as("__gid"))
-    // level 1: per query, top-nprobeCoarse coarse cells (window over
-    // |panel|·|coarse| rows — |coarse| ≈ √|centroids| is exactly the
-    // factor this form exists to shrink)
-    val gw = Window.partitionBy(col("q_id"))
-      .orderBy(col("__gs").desc, col("__cid").asc)
-    val qcells = q
-      .withColumn("__qn", norm2(col("__qv")))
-      .join(co)
-      .withColumn("__gs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .withColumn("__rn", row_number().over(gw))
-      .filter(col("__rn") <= nprobeCoarse)
-      .select(col("q_id"), col("__qv"), col("__qn"),
-        col("__cid").as("__gid"))
-    // level 2: rank only the centroids inside the probed cells
-    val pw = Window.partitionBy(col("q_id"))
-      .orderBy(col("__cs").desc, col("__pcid").asc)
-    val probes = qcells
-      .join(cellOf, "__gid")
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("__pcv"), col("__qn"), col("__pcn")))
-      .withColumn("__rn", row_number().over(pw))
-      .filter(col("__rn") <= nprobe)
-      .select(col("q_id"), col("__pcid").as("cid"))
-    int8PanelRank(lists, idCol, probes, q, k)
-  }
-
-  /** [[int8IvfTopK]]'s panel form: build the in-flight int8 index and
-    * run [[int8IvfSearchBatch]] over it — one lazy plan from raw
-    * vectors to per-query top-k. */
-  def int8IvfTopKBatch(df: DataFrame, idCol: String, vecCol: String,
-                       centroids: DataFrame, centIdCol: String,
-                       centVecCol: String, nprobe: Int,
-                       queries: DataFrame, qIdCol: String,
-                       qVecCol: String, k: Int): DataFrame =
-    int8IvfSearchBatch(
-      int8IvfIndex(df, idCol, vecCol, centroids, centIdCol,
-        centVecCol),
-      idCol, centroids, centIdCol, centVecCol, nprobe,
-      queries, qIdCol, qVecCol, k)
-
-  /** Persist an [[int8IvfIndex]] as the on-disk artifact (centroids +
-    * int8 lists partitioned by `cid`): the int8 rendition of
-    * [[buildIvfIndex]], 4× smaller on disk, and a search's
-    * `cid IN (probes)` filter prunes whole partitions at the parquet
-    * SCAN — the probed fraction is the only data read. */
-  def buildInt8IvfIndex(df: DataFrame, idCol: String, vecCol: String,
-                        centroids: DataFrame, centIdCol: String,
-                        centVecCol: String, dir: String): Unit = {
-    centroids.select(col(centIdCol).as("cid"), col(centVecCol).as("cv"))
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    int8IvfIndex(df, idCol, vecCol, centroids, centIdCol, centVecCol)
-      .select(col(idCol).as("id"), col("pos"), col("q"), col("cid"))
-      .write.mode("overwrite").partitionBy("cid")
-      .parquet(s"$dir/lists")
-  }
-
-  /** Incrementally extend a persisted int8 IVF index — the
-    * continuous-ingestion half of the int8 lifecycle, with
-    * [[appendToIvfIndex]]'s exact contract (assignment by the index's
-    * OWN persisted quantizer, appended files under the same `cid=`
-    * partitions, search-after-append ≡ search over a union-built
-    * index — spec'd; quantizer not retrained; ids must be new;
-    * compact under high-frequency small appends).
-    *
-    * STREAMING-INGEST EXACTLY-ONCE: this is a blind parquet append —
-    * NOT idempotent. Under an at-least-once foreachBatch, a retry
-    * after a partial write duplicates (id, pos) rows, and
-    * [[int8TopK]]'s per-id sum then silently double-counts those ids'
-    * dots (a duplicated f32 row at worst duplicates a result row; a
-    * duplicated int8 row CORRUPTS the score). The ingest pathway must
-    * be exactly-once: track committed batchIds beside the index and
-    * skip replays in foreachBatch, or periodically rewrite the lists
-    * deduplicated by (id, pos) — e.g. at the [[compactIvfIndex]]
-    * cadence. */
-  def appendToInt8IvfIndex(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, df: DataFrame, idCol: String,
-                           vecCol: String): Unit =
-    int8IvfIndex(df, idCol, vecCol,
-        spark.read.parquet(s"$dir/centroids"), "cid", "cv")
-      .select(col(idCol).as("id"), col("pos"), col("q"), col("cid"))
-      .write.mode("append").partitionBy("cid")
-      .parquet(s"$dir/lists")
-
-  /** Search a [[buildInt8IvfIndex]] artifact — [[searchIvfIndex]]'s
-    * contract (single query row, probe list collected driver-side,
-    * ≤ nprobe rows) over the int8 lists: partition pruning at the
-    * scan + [[int8TopK]]'s integer ranking. Returns (id, dot). */
-  def searchInt8IvfIndex(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, query: DataFrame,
-                         queryVecCol: String, nprobe: Int,
-                         k: Int): DataFrame = {
-    val cent = prepCent(spark.read.parquet(s"$dir/centroids"),
-      "cid", "cv")
-    val qProj = query.select(col(queryVecCol).as("__qv"))
-    val qRows = qProj.limit(2).collect()
-    require(qRows.length == 1,
-      s"searchInt8IvfIndex expects exactly one query row, got " +
-        s"${if (qRows.isEmpty) "none" else "several"}")
-    val q1 = broadcast(spark.createDataFrame(
-        java.util.Collections.singletonList(qRows.head), qProj.schema)
-      .withColumn("__qn", norm2(col("__qv"))))
-    val probeRows = q1.join(cent)
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .orderBy(col("__cs").desc, col("__cid").asc)
-      .limit(nprobe)
-      .select(col("__cid")).collect() // bounded: ≤ nprobe rows
-    require(probeRows.nonEmpty, "empty centroid table")
-    val cids = probeRows.map(_.get(0)).toSeq
-    int8TopK(
-      spark.read.parquet(s"$dir/lists")
-        .filter(col("cid").isin(cids: _*)),
-      "id", "pos", "q",
-      quantizeInt8(q1.select(col("__qv"))
-        .withColumn("__qid", lit(0L)), "__qid", "__qv"),
-      k)
-  }
-
-  /** Batch search over a persisted [[buildInt8IvfIndex]] artifact —
-    * [[searchIvfIndexBatch]]'s shape on the int8 storage, replacing
-    * the per-query [[searchInt8IvfIndex]] driver loop for a PANEL:
-    * per-query probe lists come from a window top-nprobe over the
-    * broadcast centroid table (the panel is never collected), the
-    * probe UNION is collected as the literal `cid` partition filter
-    * (bounded by |centroids| distinct ids regardless of panel size,
-    * so parquet partition pruning survives arbitrarily large panels),
-    * and the probed candidates rank by [[int8TopKBatch]]'s pure
-    * integer dot — each list row fans out ONLY to the queries that
-    * probed its cid (a broadcast of |panel|·nprobe (q_id, cid) pairs,
-    * not the all-pairs panel join), and the per-(q_id, id) partial
-    * sums combine map-side before the one shuffle. Each (q_id, id)
-    * dot is bit-identical to a [[searchInt8IvfIndex]] loop (spec'd).
-    * Returns (q_id, id, dot), top-k per query by the integer dot.
-    * Panel-size bound: the panel and probe broadcasts cap practical
-    * panel size at a few million queries (~70 bytes/row at dim 64) —
-    * see [[int8IvfSearchBatch]]'s PANEL-SIZE BOUND note; this API is
-    * for panels, never a second corpus. */
-  def searchInt8IvfIndexBatch(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, queries: DataFrame,
-                              qIdCol: String, qVecCol: String,
-                              nprobe: Int, k: Int): DataFrame = {
-    require(nprobe >= 1, s"nprobe=$nprobe out of [1,∞)")
-    require(k >= 1, s"k=$k out of [1,∞)")
-    val cent = prepCent(spark.read.parquet(s"$dir/centroids"),
-      "cid", "cv")
-    val q = queries.select(col(qIdCol).as("q_id"),
-      col(qVecCol).as("__qv"))
-    val pw = Window.partitionBy(col("q_id"))
-      .orderBy(col("__cs").desc, col("__cid").asc)
-    val probes = q
-      .withColumn("__qn", norm2(col("__qv")))
-      .join(cent)
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .withColumn("__rn", row_number().over(pw))
-      .filter(col("__rn") <= nprobe)
-      .select(col("q_id"), col("__cid").as("cid"))
-    int8PersistedPanelRank(spark, dir, probes, q, k)
-  }
-
-  /** Shared downstream of the persisted panel searches: checkpoint
-    * the (q_id, cid) probe pairs, collect the probe UNION as the
-    * literal `cid` partition filter, broadcast the quantized panel,
-    * rank the probed lists map-side. `probes` must be bounded by
-    * |panel|·nprobe rows. */
-  private def int8PersistedPanelRank(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      probes0: DataFrame, q: DataFrame, k: Int): DataFrame = {
-    // materialize ONCE (bounded: |panel| × nprobe rows) — the
-    // searchIvfIndexBatch rationale: the probe plan feeds both the
-    // cids collect and the candidate join, and re-executing it over
-    // a nondeterministic panel would let a probed cid vanish from
-    // the literal filter, silently dropping its whole list
-    val probes = probes0.localCheckpoint()
-    val cids = probes.select(col("cid")).distinct()
-      .collect().map(_.get(0)).toSeq
-    val lists = spark.read.parquet(s"$dir/lists")
-    // quantized panel, keyed by q_id — with int8TopKBatch's
-    // malformed-frame guard: a duplicate (q_id, pos) means two
-    // vectors share a q_id and their dots would silently mix
-    val panel = broadcast(quantizeInt8(q, "q_id", "__qv")
-      .where(col("q").isNotNull)
-      .groupBy(col("q_id").as("__pq"), col("pos").as("__qp"))
-      .agg(max(col("q")).as("__q0"), count(lit(1)).as("__c"))
-      .select(col("__pq"), col("__qp"),
-        (col("__q0") + coalesce(
-          assert_true(col("__c") === 1,
-            lit("searchInt8IvfIndexBatch: panel holds more than one " +
-              "vector per q_id (duplicate (q_id, pos)) — ids must " +
-              "be unique"))
-            .cast("long"), lit(0L))).as("__qq")))
-    // empty panel (or empty centroid table) → empty result, the
-    // natural N=0 of a batch API
-    if (cids.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("q_id",
-            q.schema("q_id").dataType),
-          org.apache.spark.sql.types.StructField("id",
-            lists.schema("id").dataType),
-          org.apache.spark.sql.types.StructField("dot",
-            org.apache.spark.sql.types.LongType))))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("dot").desc, col("id").asc)
-    lists
-      .filter(col("cid").isin(cids: _*))
-      .where(col("q").isNotNull)
-      .join(broadcast(probes), "cid")
-      .join(panel,
-        col("q_id") === col("__pq") && col("pos") === col("__qp"))
-      .groupBy(col("q_id"), col("id"))
-      .agg(sum(col("q") * col("__qq")).as("dot"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
-  }
-
-  /** Attach a COARSE LEVEL to a persisted int8 IVF index — the
-    * build-time half of [[searchInt8IvfIndexBatchTwoLevel]]: persists
-    * `dir/coarse` (gid, gv — the coarse quantizer over the CENTROID
-    * set) and `dir/cellof` (cid, gid — every centroid assigned once
-    * to its nearest cell, the same map-side-collapsed argmin the
-    * corpus assignment uses). The assignment is query-independent, so
-    * computing it at build time amortizes it across every panel the
-    * index ever serves; re-run after appends only if the centroid set
-    * itself changed (appends reuse the stored quantizer, so normally
-    * it has not). Idempotent overwrite. */
-  def addCoarseLevel(spark: org.apache.spark.sql.SparkSession,
-                     dir: String, coarse: DataFrame, gIdCol: String,
-                     gVecCol: String): Unit = {
-    // a coarse artifact written from an empty frame would make every
-    // later two-level search silently return zero rows — reject at
-    // write time (ADVICE r20). Lazily checkpoint the projection first
-    // so the guard and the write share ONE evaluation of the coarse
-    // lineage instead of paying it twice (ADVICE r21).
-    val coSlim = coarse.select(col(gIdCol).as("gid"),
-      col(gVecCol).as("gv")).localCheckpoint(false)
-    require(!coSlim.isEmpty, "addCoarseLevel: empty coarse set")
-    coSlim.write.mode("overwrite").parquet(s"$dir/coarse")
-    val co = prepCent(spark.read.parquet(s"$dir/coarse"), "gid", "gv")
-    assignToCentroids(
-        spark.read.parquet(s"$dir/centroids")
-          .select(col("cid"), col("cv")), "cid", "cv", co)
-      .select(col("cid"), col("__cid").as("gid"))
-      .write.mode("overwrite").parquet(s"$dir/cellof")
-  }
-
-  /** TWO-LEVEL batch search over a persisted int8 IVF index —
-    * [[int8IvfSearchBatchTwoLevel]]'s artifact form, completing the
-    * {flat, two-level} × {in-flight, persisted} probe matrix: the
-    * per-query probe stage costs |coarse| + nprobeCoarse·|centroids|/
-    * |coarse| instead of the flat form's |centroids| (the wall at
-    * 2²⁰-list web indexes), with the centroid→cell assignment READ
-    * from the artifact ([[addCoarseLevel]] — computed once at build,
-    * never per panel). Downstream is [[searchInt8IvfIndexBatch]]'s
-    * verbatim: probe-union literal partition filter (still bounded by
-    * |centroids| for any panel size), broadcast panel, map-side
-    * integer dots. Same approximation contract as the in-flight form
-    * (a top centroid in an unprobed cell is missed); results are
-    * DEFINED identical to [[int8IvfSearchBatchTwoLevel]] over the
-    * same index (spec'd). */
-  def searchInt8IvfIndexBatchTwoLevel(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      nprobeCoarse: Int, nprobe: Int, k: Int): DataFrame = {
-    require(nprobeCoarse >= 1,
-      s"nprobeCoarse=$nprobeCoarse out of [1,∞)")
-    require(nprobe >= 1, s"nprobe=$nprobe out of [1,∞)")
-    require(k >= 1, s"k=$k out of [1,∞)")
-    val co = prepCent(spark.read.parquet(s"$dir/coarse"), "gid", "gv")
-    val cent = spark.read.parquet(s"$dir/centroids")
-    val cellOf = spark.read.parquet(s"$dir/cellof")
-      .select(col("cid"), col("gid").as("__gid"))
-      .join(cent.select(col("cid"), col("cv"),
-        norm2(col("cv")).as("__pcn")), "cid")
-    val q = queries.select(col(qIdCol).as("q_id"),
-      col(qVecCol).as("__qv"))
-    val gw = Window.partitionBy(col("q_id"))
-      .orderBy(col("__gs").desc, col("__cid").asc)
-    val qcells = q
-      .withColumn("__qn", norm2(col("__qv")))
-      .join(co)
-      .withColumn("__gs",
-        cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn")))
-      .withColumn("__rn", row_number().over(gw))
-      .filter(col("__rn") <= nprobeCoarse)
-      .select(col("q_id"), col("__qv"), col("__qn"),
-        col("__cid").as("__gid"))
-    val pw = Window.partitionBy(col("q_id"))
-      .orderBy(col("__cs").desc, col("cid").asc)
-    val probes = qcells
-      .join(cellOf, "__gid")
-      .withColumn("__cs",
-        cosinePre(col("__qv"), col("cv"), col("__qn"), col("__pcn")))
-      .withColumn("__rn", row_number().over(pw))
-      .filter(col("__rn") <= nprobe)
-      .select(col("q_id"), col("cid"))
-    int8PersistedPanelRank(spark, dir, probes, q, k)
-  }
-
-  /** Storage form of a persisted IVF index — the ONE parameter the
-    * two write paths differ by. F32 lists hold (id, vec, norm) rows
-    * and search returns (id, sim: Double) cosines; Int8 lists hold
-    * quantized (id, pos, q) rows (4× smaller) and search returns
-    * (id, dot: Long) integer dots. Everything else — directory
-    * layout (`dir/centroids` + `dir/lists` partitioned by cid),
-    * assignment rule, append contract, compaction, probe-literal
-    * partition pruning — is shared. */
+  /** Storage form of an IVF index's lists. F32 lists hold
+    * (id, vec, norm) rows and rank by cosine (`sim: Double`); Int8 lists
+    * hold quantized (id, pos, q) rows (4× smaller) and rank by the
+    * integer dot (`dot: Long`). Everything else — assignment rule,
+    * directory layout, append contract, compaction, probing — is
+    * shared. */
   sealed trait IvfForm
   case object IvfF32 extends IvfForm
   case object IvfInt8 extends IvfForm
+
+  /** Where a search reads its inverted lists. Both sources hold the
+    * lists in one row schema — f32 (id, vec, norm, cid), int8
+    * (id, pos, q, cid) — and centroids as (cid, cv), so they differ
+    * only in the prune step of [[IvfLifecycle.searchBatch]]. */
+  sealed trait IvfSource
+
+  /** Lists computed inside the plan by [[IvfLifecycle.assign]], nothing
+    * written; `coarse` is the (gid, gv) level [[IvfLifecycle.addCoarse]]
+    * attaches. */
+  final case class InFlight(lists: DataFrame, centroids: DataFrame,
+                            coarse: Option[DataFrame] = None)
+      extends IvfSource
+
+  /** An index directory written by [[IvfLifecycle.build]]: `centroids`
+    * (cid, cv) and `lists` partitioned by cid, plus `coarse` (gid, gv)
+    * and `cellof` (cid, gid) after [[IvfLifecycle.addCoarse]]. */
+  final case class OnDisk(dir: String) extends IvfSource
 
   /** Over-fetch + exact-re-rank search option — the MEASURED
     * compensation for int8 thin-margin rank inversions (SCALE.md
@@ -1490,37 +693,29 @@ object Similarity {
     * have thin cosine margins, 0.96 vs 1.00 at exhaustive probing;
     * over-fetching 3k+1 by the integer dot and exactly re-ranking
     * that short list against the f32 vectors recovers the f32 curve
-    * at every nprobe), exposed as an operator option instead of a
-    * hand-built re-join.
+    * at every nprobe).
     *
-    * `overfetch` = how many candidates the integer ranking keeps per
+    * `overfetch` = how many candidates the coarse ranking keeps per
     * query before the exact re-rank (the measured sweet spot is
     * 3k+1). `vectors` = the exact f32 source (frame, idCol, vecCol);
     * None defaults to the index's OWN stored vectors — valid for the
-    * f32 form (its lists hold them), an error for int8 (its lists
-    * are quantized, so the caller must hand the f32 corpus in). The
-    * re-rank touches ≤ |panel|·overfetch vector rows — its cost is
-    * independent of corpus size (one scan of `vectors` pruned
-    * map-side by the broadcast candidate list; no shuffle of the
-    * corpus). */
+    * f32 form, an error for int8 (its lists are quantized, so the
+    * caller must hand the f32 corpus in). */
   final case class Refine(
       overfetch: Int,
       vectors: Option[(DataFrame, String, String)] = None)
 
   /** Exact-cosine re-rank of per-query candidate lists — [[Refine]]'s
-    * engine, usable standalone over ANY candidate frame (in-flight
-    * int8 searches, PQ shortlists): keep the top-k of each query's
-    * candidates by exact f32 cosine against `vectors`. `cands` must
-    * carry (`candQIdCol`, `candIdCol`); extra columns (the integer
-    * dot) are dropped — the re-rank REPLACES the coarse score.
-    * Returns (q_id, candIdCol, sim), top-k per query, sim the exact
-    * cosine.
+    * engine, usable standalone over ANY candidate frame: keep the top-k
+    * of each query's candidates by exact f32 cosine against `vectors`.
+    * `cands` must carry (`candQIdCol`, `candIdCol`); extra columns (the
+    * integer dot) are dropped — the re-rank REPLACES the coarse score.
+    * Returns (q_id, candIdCol, sim).
     *
     * Scale shape: the candidate list broadcasts (bounded by
-    * |panel|·overfetch — the panel contract), so the `vectors` scan
-    * prunes map-side in ONE pass with no corpus shuffle; the query
-    * panel broadcasts (same bound as every panel search here); the
-    * per-query window ranks ≤ overfetch rows per query. */
+    * |panel|·overfetch), so the `vectors` scan prunes map-side in ONE
+    * pass with no corpus shuffle; the per-query window ranks
+    * ≤ overfetch rows per query. */
   def refineTopK(cands: DataFrame, candIdCol: String,
                  queries: DataFrame, qIdCol: String, qVecCol: String,
                  vectors: DataFrame, vecIdCol: String, vecCol: String,
@@ -1532,203 +727,319 @@ object Similarity {
       col(vecCol).as("__rvv"), norm2(col(vecCol)).as("__rvn"))
     val q = queries.select(col(qIdCol).as("__rqid"),
       col(qVecCol).as("__rqv"), norm2(col(qVecCol)).as("__rqn"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col(candIdCol).asc)
-    v.join(broadcast(c), col("__rvid") === col("__rcid"))
-      .join(broadcast(q), col("q_id") === col("__rqid"))
-      .select(col("q_id"), col("__rvid").as(candIdCol),
-        cosinePre(col("__rvv"), col("__rqv"), col("__rvn"),
-          col("__rqn")).as("sim"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= k)
-      .drop("__rn")
+    topPerQuery(v.join(broadcast(c), col("__rvid") === col("__rcid"))
+        .join(broadcast(q), col("q_id") === col("__rqid"))
+        .select(col("q_id"), col("__rvid").as(candIdCol),
+          cosinePre(col("__rvv"), col("__rqv"), col("__rvn"),
+            col("__rqn")).as("sim")),
+      "sim", candIdCol, k)
   }
 
-  /** One lifecycle API over both persisted-IVF storage forms — the
-    * facade that keeps the f32 and int8 families from drifting: every
-    * verb dispatches on [[IvfForm]] to the SAME implementations the
-    * standalone entry points use (zero behavior change; the
-    * parameterized spec matrix runs build/append/compact/search/
-    * searchBatch/streaming-ingest against both forms through this
-    * object). Compaction is schema-agnostic and therefore form-free.
+  /** The IVF (inverted-file) index over both storage forms and both list
+    * sources. Every vector is assigned to its nearest centroid by cosine
+    * (ties to the smaller cid); a search is one pipeline —
+    *  - probe: each query's top-`nprobe` centroids by cosine, flat or
+    *    through a coarse cell table ([[addCoarse]]);
+    *  - prune: keep only the probed lists. In-flight lists inner-join
+    *    the broadcast (q_id, cid) probe pairs — fully lazy, nothing
+    *    collected. On-disk lists filter `cid` with the collected probe
+    *    union as a LITERAL, so parquet skips every unprobed partition
+    *    (the union is bounded by |centroids| for any panel size);
+    *  - rank: f32 by exact cosine against the stored norm, int8 by the
+    *    integer dot of [[int8TopKBatch]]; top-k per query, ties to the
+    *    smaller id.
+    * A (q_id, id) score is identical whichever source holds the lists
+    * and whether the query runs alone or in a panel (spec'd; the
+    * in-flight/on-disk query pairs share DuckDB oracles).
     *
-    * @see [[buildIvfIndex]]/[[buildInt8IvfIndex]],
-    *      [[appendToIvfIndex]]/[[appendToInt8IvfIndex]] (including
-    *      the streaming-ingest exactly-once contract),
-    *      [[searchIvfIndex]]/[[searchInt8IvfIndex]],
-    *      [[searchIvfIndexBatch]]/[[searchInt8IvfIndexBatch]]. */
+    * PANEL-SIZE BOUND: the query panel and the (q_id, cid) probe pairs
+    * are broadcast, so a panel is at most a few million queries (~70
+    * bytes per int8 query at dim 64) — never a second corpus; join
+    * corpus against corpus with [[nearDupPairs]] / [[semanticDedup]]. */
   object IvfLifecycle {
+    import org.apache.spark.sql.SparkSession
+
+    /** In-flight lists: `df` assigned to `centroids` (and quantized, for
+      * int8) inside the plan. Lazy; nothing is written. */
+    def assign(form: IvfForm, df: DataFrame, idCol: String,
+               vecCol: String, centroids: DataFrame, centIdCol: String,
+               centVecCol: String): InFlight = {
+      val cents = centroids.select(col(centIdCol).as("cid"),
+        col(centVecCol).as("cv"))
+      InFlight(listRows(form, df, idCol, vecCol, cents), cents)
+    }
+
+    /** Persist an index under `dir`: the centroids, then the assignment
+      * output written PARTITIONED BY cid, so the inverted lists are
+      * physical parquet partitions and a search reads only its probes'
+      * partitions. Training and the corpus-wide assignment run once;
+      * the lists are placed by the written centroids, as [[append]]
+      * places later rows. */
     def build(form: IvfForm, df: DataFrame, idCol: String,
               vecCol: String, centroids: DataFrame, centIdCol: String,
-              centVecCol: String, dir: String): Unit = form match {
-      case IvfF32 => buildIvfIndex(df, idCol, vecCol, centroids,
-        centIdCol, centVecCol, dir)
-      case IvfInt8 => buildInt8IvfIndex(df, idCol, vecCol, centroids,
-        centIdCol, centVecCol, dir)
+              centVecCol: String, dir: String): Unit = {
+      centroids.select(col(centIdCol).as("cid"), col(centVecCol).as("cv"))
+        .write.mode("overwrite").parquet(s"$dir/centroids")
+      ingest(form, dir, df, idCol, vecCol)
+        .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/lists")
     }
 
-    def append(form: IvfForm, spark: org.apache.spark.sql.SparkSession,
-               dir: String, df: DataFrame, idCol: String,
-               vecCol: String): Unit = form match {
-      case IvfF32 => appendToIvfIndex(spark, dir, df, idCol, vecCol)
-      case IvfInt8 => appendToInt8IvfIndex(spark, dir, df, idCol,
-        vecCol)
+    /** Extend a persisted index with newly-ingested vectors, placed by
+      * the index's OWN stored centroids and appended under the same
+      * `cid=` partitions: a search after any number of appends equals
+      * one over an index built from the union at once (q79; spec'd).
+      * The quantizer is NOT retrained — cheap ingest, recall drifts if
+      * the data distribution moves; rebuild when it does. Ids must be
+      * new to the index. Each call adds one file per touched partition,
+      * so [[compact]] under high-frequency small appends.
+      *
+      * This is a blind parquet append — NOT idempotent. A replayed
+      * partial write duplicates rows: a duplicated f32 row duplicates a
+      * result row, a duplicated int8 (id, pos) row double-counts that
+      * id's dot and CORRUPTS its score. A streaming feed that can
+      * replay a batch must go through [[ingestBatch]] /
+      * [[streamIngest]] instead. */
+    def append(form: IvfForm, dir: String, df: DataFrame, idCol: String,
+               vecCol: String): Unit =
+      ingest(form, dir, df, idCol, vecCol)
+        .write.mode("append").partitionBy("cid").parquet(s"$dir/lists")
+
+    /** Compact a persisted index's lists: each [[append]] leaves one
+      * more parquet file per touched `cid=` partition, and search
+      * latency follows file count (open + footer per file). Rewrites
+      * every list clustered on cid — one file per partition — into a
+      * sibling directory, then swaps it in via two renames
+      * (`lists`→`lists_old`, `lists_compacting`→`lists`, then delete
+      * `lists_old`): at no point are there ZERO copies on disk, so a
+      * crash mid-swap is recoverable by renaming whichever copy survives
+      * back to `lists`. Row content is untouched: searches are
+      * bit-identical before and after (spec'd). Form-free. Run it
+      * OFFLINE — an [[append]] landing between the compaction's read and
+      * the swap is lost with the old directory; searches racing the swap
+      * can transiently fail and should retry. */
+    def compact(spark: SparkSession, dir: String): Unit = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val lists = new org.apache.hadoop.fs.Path(s"$dir/lists")
+      val tmp = new org.apache.hadoop.fs.Path(s"$dir/lists_compacting")
+      val old = new org.apache.hadoop.fs.Path(s"$dir/lists_old")
+      val fs = lists.getFileSystem(conf)
+      if (fs.exists(old)) fs.delete(old, true) // prior-crash leftover
+      spark.read.parquet(lists.toString)
+        .repartition(col("cid"))
+        .write.mode("overwrite").partitionBy("cid")
+        .parquet(tmp.toString)
+      if (!fs.rename(lists, old))
+        sys.error(s"compaction swap failed moving $lists aside")
+      if (!fs.rename(tmp, lists))
+        sys.error(s"compaction swap failed installing $tmp; previous " +
+          s"lists preserved at $old — rename it back to recover")
+      fs.delete(old, true)
     }
 
-    /** Form-free: rewrites whatever row schema the lists hold. */
-    def compact(spark: org.apache.spark.sql.SparkSession,
-                dir: String): Unit = compactIvfIndex(spark, dir)
-
-    /** Resolve a [[Refine]]'s exact-vector source: explicit frame if
-      * given; the f32 index's own stored lists otherwise; an ERROR
-      * for int8 with no explicit source (its lists are quantized —
-      * there is nothing exact to re-rank against). */
-    private def exactVectors(form: IvfForm,
-                             spark: org.apache.spark.sql.SparkSession,
-                             dir: String, r: Refine)
-        : (DataFrame, String, String) = r.vectors match {
-      case Some(v) => v
-      case None => form match {
-        case IvfF32 => (spark.read.parquet(s"$dir/lists"), "id", "vec")
-        case IvfInt8 => throw new IllegalArgumentException(
-          "Refine on an int8 index needs Refine.vectors: the index " +
-            "stores quantized rows only, so the exact re-rank must " +
-            "be handed the f32 corpus (frame, idCol, vecCol)")
+    /** Attach a coarse level for two-level probing: a quantizer over the
+      * CENTROID set. Each centroid is assigned once to its nearest
+      * coarse cell (query-independent), so a query scores only the
+      * ~√|centroids| cells and then only the centroids inside its top
+      * `nprobeCoarse` cells: probe cost |coarse| + nprobeCoarse·
+      * |centroids|/|coarse| instead of |centroids| (at 2²⁰ lists with
+      * 2¹⁰ cells, ~3·10³ vs 10⁶ per query). APPROXIMATE by design — a
+      * true top centroid in an unprobed cell is missed; exhaustive
+      * `nprobeCoarse` equals flat probing (spec'd).
+      *
+      * The coarse set is small, so it is collected once into a local
+      * frame: an empty set fails here instead of every later search
+      * silently returning nothing, and in-flight searches pin no
+      * checkpoint. On disk the level is written as `dir/coarse` plus the
+      * cell assignment `dir/cellof` (idempotent overwrite; appends reuse
+      * the stored centroids, so it stays valid). Returns `src` with the
+      * level attached. */
+    def addCoarse(src: IvfSource, coarse: DataFrame, gIdCol: String,
+                  gVecCol: String): IvfSource = {
+      val co = coarse.select(col(gIdCol).as("gid"), col(gVecCol).as("gv"))
+      val rows = co.collect()
+      require(rows.nonEmpty, "addCoarse: empty coarse set")
+      val spark = coarse.sparkSession
+      val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+        co.schema)
+      src match {
+        case s: InFlight => s.copy(coarse = Some(local))
+        case OnDisk(dir) =>
+          local.write.mode("overwrite").parquet(s"$dir/coarse")
+          cellOf(local, spark.read.parquet(s"$dir/centroids"))
+            .write.mode("overwrite").parquet(s"$dir/cellof")
+          src
       }
     }
 
-    /** Single-query search. Score column: `sim` (F32) / `dot`
-      * (Int8) — with `refine`, ALWAYS `sim` (the exact f32 cosine of
-      * the re-ranked short list; see [[Refine]]). */
-    def search(form: IvfForm, spark: org.apache.spark.sql.SparkSession,
-               dir: String, query: DataFrame, queryVecCol: String,
-               nprobe: Int, k: Int,
-               refine: Option[Refine] = None): DataFrame =
+    /** Single-query search: a panel of one. `query` must hold exactly
+      * one row — it is collected, and several rows would otherwise mix
+      * centroids probed for different vectors. Returns (id, score)
+      * ordered by score desc, then id asc; the score is `sim` (f32, or
+      * any form with `refine`) or `dot` (int8). */
+    def search(form: IvfForm, src: IvfSource, query: DataFrame,
+               queryVecCol: String, nprobe: Int, k: Int,
+               refine: Option[Refine] = None): DataFrame = {
+      val qv = query.select(col(queryVecCol).as("__qv"))
+      val rows = qv.limit(2).collect()
+      require(rows.length == 1, "search expects exactly one query row, " +
+        s"got ${if (rows.isEmpty) "none" else "several"}")
+      // rebuilt under the original schema, so the vector's element type
+      // survives (a typedlit[Seq[Float]] would corrupt double embeddings)
+      val one = query.sparkSession.createDataFrame(
+          java.util.Collections.singletonList(rows.head), qv.schema)
+        .withColumn("q_id", lit(0L))
+      val res = searchBatch(form, src, one, "q_id", "__qv", nprobe, k,
+        refine)
+      val score = res.columns.last
+      // the limit is a no-op on ≤ k rows, but plans a TakeOrdered
+      // instead of a range-partitioned global sort
+      res.select(col("id"), col(score))
+        .orderBy(col(score).desc, col("id").asc).limit(k)
+    }
+
+    /** Panel search: top-k per query in one plan. Returns
+      * (q_id, id, score) — `sim` for f32, `dot` for int8, and with
+      * `refine` always `sim`, the exact f32 cosine of the re-ranked
+      * over-fetched short list. `nprobeCoarse` = Some(n) probes two-level
+      * through the source's [[addCoarse]] level; None probes flat. An
+      * empty panel yields an empty result, not an error. */
+    def searchBatch(form: IvfForm, src: IvfSource, queries: DataFrame,
+                    qIdCol: String, qVecCol: String, nprobe: Int, k: Int,
+                    refine: Option[Refine] = None,
+                    nprobeCoarse: Option[Int] = None): DataFrame =
       refine match {
-        case None => form match {
-          case IvfF32 => searchIvfIndex(spark, dir, query, queryVecCol,
-            nprobe, k)
-          case IvfInt8 => searchInt8IvfIndex(spark, dir, query,
-            queryVecCol, nprobe, k)
-        }
         case Some(r) =>
           require(r.overfetch >= k,
             s"overfetch=${r.overfetch} must be >= k=$k")
-          val cands = search(form, spark, dir, query, queryVecCol,
-            nprobe, r.overfetch)
-          val (vdf, vid, vvec) = exactVectors(form, spark, dir, r)
-          refineTopK(
-              cands.withColumn("__rq", lit(0L)), "id",
-              query.select(lit(0L).as("__rqk"),
-                col(queryVecCol).as("__rqv")),
-              "__rqk", "__rqv", vdf, vid, vvec, k,
-              candQIdCol = "__rq")
-            .select(col("id"), col("sim"))
-            .orderBy(col("sim").desc, col("id").asc)
+          val (vdf, vid, vvec) = exactVectors(form, src, r,
+            queries.sparkSession)
+          refineTopK(searchBatch(form, src, queries, qIdCol, qVecCol,
+              nprobe, r.overfetch, None, nprobeCoarse),
+            "id", queries, qIdCol, qVecCol, vdf, vid, vvec, k)
+        case None =>
+          require(nprobe >= 1, s"nprobe=$nprobe out of [1,∞)")
+          require(k >= 1, s"k=$k out of [1,∞)")
+          val spark = queries.sparkSession
+          val q = queries.select(col(qIdCol).as("q_id"),
+            col(qVecCol).as("__qv"))
+          rank(form, prune(spark, src,
+            probe(spark, src, q, nprobe, nprobeCoarse)), q, k)
       }
 
-    /** Panel search, top-k per q_id — no driver loop either form.
-      * With `refine`, the score column is the exact f32 cosine `sim`
-      * of the re-ranked short list (see [[Refine]]). */
-    def searchBatch(form: IvfForm,
-                    spark: org.apache.spark.sql.SparkSession,
-                    dir: String, queries: DataFrame, qIdCol: String,
-                    qVecCol: String, nprobe: Int, k: Int,
-                    refine: Option[Refine] = None): DataFrame =
-      refine match {
-        case None => form match {
-          case IvfF32 => searchIvfIndexBatch(spark, dir, queries,
-            qIdCol, qVecCol, nprobe, k)
-          case IvfInt8 => searchInt8IvfIndexBatch(spark, dir, queries,
-            qIdCol, qVecCol, nprobe, k)
-        }
-        case Some(r) =>
-          require(r.overfetch >= k,
-            s"overfetch=${r.overfetch} must be >= k=$k")
-          val cands = searchBatch(form, spark, dir, queries, qIdCol,
-            qVecCol, nprobe, r.overfetch)
-          val (vdf, vid, vvec) = exactVectors(form, spark, dir, r)
-          refineTopK(cands, "id", queries, qIdCol, qVecCol,
-            vdf, vid, vvec, k)
+    /** (q_id, cid): each query's top-`nprobe` centroids by cosine, ties
+      * to the smaller cid — over all centroids (flat), or over those
+      * inside the query's top-`nc` coarse cells (two-level). */
+    private def probe(spark: SparkSession, src: IvfSource, q: DataFrame,
+                      nprobe: Int, nprobeCoarse: Option[Int]): DataFrame = {
+      def top(pairs: DataFrame, n: Int) = topPerQuery(
+        pairs.withColumn("__cs",
+          cosinePre(col("__qv"), col("__cv"), col("__qn"), col("__cn"))),
+        "__cs", "__cid", n)
+      val qn = q.withColumn("__qn", norm2(col("__qv")))
+      val cent = prepCent(src match {
+        case s: InFlight => s.centroids
+        case OnDisk(dir) => spark.read.parquet(s"$dir/centroids")
+      }, "cid", "cv")
+      val pairs = nprobeCoarse match {
+        case None => qn.join(cent)
+        case Some(nc) =>
+          require(nc >= 1, s"nprobeCoarse=$nc out of [1,∞)")
+          val (co, cells) = src match {
+            case InFlight(_, cents, Some(co)) => (co, cellOf(co, cents))
+            case OnDisk(dir) => (spark.read.parquet(s"$dir/coarse"),
+              spark.read.parquet(s"$dir/cellof"))
+            case _ => throw new IllegalArgumentException(
+              "two-level search needs a coarse level: call addCoarse")
+          }
+          top(qn.join(prepCent(co, "gid", "gv")), nc)
+            .select(col("q_id"), col("__qv"), col("__qn"),
+              col("__cid").as("gid"))
+            .join(cells, "gid")
+            .join(cent, col("cid") === col("__cid"))
       }
-
-    /** Attach the coarse level to a persisted index
-      * ([[addCoarseLevel]]). Int8-only for now — the two-level probe
-      * path exists for web-index list counts, where int8 is the
-      * storage you would be running (the f32 lists are 4× the bytes
-      * before the probe stage even matters); an F32 form fails fast
-      * here rather than silently probing flat. */
-    def addCoarse(form: IvfForm,
-                  spark: org.apache.spark.sql.SparkSession,
-                  dir: String, coarse: DataFrame, gIdCol: String,
-                  gVecCol: String): Unit = form match {
-      case IvfInt8 => addCoarseLevel(spark, dir, coarse, gIdCol,
-        gVecCol)
-      case IvfF32 => throw new IllegalArgumentException(
-        "two-level probing is implemented for the int8 form (the " +
-          "storage used at the list counts where the probe stage " +
-          "dominates); build the index as IvfInt8")
+      top(pairs, nprobe).select(col("q_id"), col("__cid").as("cid"))
     }
 
-    /** Two-level panel search over a [[addCoarse]]-equipped index
-      * ([[searchInt8IvfIndexBatchTwoLevel]]) — probe cost |coarse| +
-      * nprobeCoarse·|centroids|/|coarse| per query instead of
-      * [[searchBatch]]'s |centroids|. `refine` composes exactly as on
-      * [[searchBatch]] (over-fetch by the integer dot, exact f32
-      * re-rank; score column becomes `sim`). */
-    def searchBatchTwoLevel(form: IvfForm,
-                            spark: org.apache.spark.sql.SparkSession,
-                            dir: String, queries: DataFrame,
-                            qIdCol: String, qVecCol: String,
-                            nprobeCoarse: Int, nprobe: Int, k: Int,
-                            refine: Option[Refine] = None): DataFrame =
-      form match {
-        case IvfInt8 => refine match {
-          case None => searchInt8IvfIndexBatchTwoLevel(spark, dir,
-            queries, qIdCol, qVecCol, nprobeCoarse, nprobe, k)
-          case Some(r) =>
-            require(r.overfetch >= k,
-              s"overfetch=${r.overfetch} must be >= k=$k")
-            val cands = searchInt8IvfIndexBatchTwoLevel(spark, dir,
-              queries, qIdCol, qVecCol, nprobeCoarse, nprobe,
-              r.overfetch)
-            val (vdf, vid, vvec) = exactVectors(form, spark, dir, r)
-            refineTopK(cands, "id", queries, qIdCol, qVecCol,
-              vdf, vid, vvec, k)
-        }
-        case IvfF32 => throw new IllegalArgumentException(
-          "two-level probing is implemented for the int8 form; " +
-            "build the index as IvfInt8")
-      }
+    /** The probed lists, each row tagged with the q_id that probed it. */
+    private def prune(spark: SparkSession, src: IvfSource,
+                      probes: DataFrame): DataFrame = src match {
+      case s: InFlight => s.lists.join(broadcast(probes), "cid")
+      case OnDisk(dir) =>
+        // materialize ONCE (bounded: |panel| × nprobe rows): the probes
+        // feed both the cid collect and the join, and re-executing them
+        // over a nondeterministic panel (sample/limit) could probe a cid
+        // missing from the literal filter, silently dropping its list
+        val p = probes.localCheckpoint()
+        val cids = p.select(col("cid")).distinct().collect().map(_.get(0))
+        spark.read.parquet(s"$dir/lists")
+          .filter(col("cid").isin(cids.toSeq: _*))
+          .join(broadcast(p), "cid")
+    }
 
-    /** The append transform (assignment by the index's OWN persisted
-      * quantizer) WITHOUT the write — shared by [[append]]'s blind
-      * parquet append and [[ingestBatch]]'s staged exactly-once
-      * promote, so the two ingest pathways cannot drift on placement
-      * or quantization. */
-    private def ingestRows(form: IvfForm,
-                           spark: org.apache.spark.sql.SparkSession,
-                           dir: String, df: DataFrame, idCol: String,
-                           vecCol: String): DataFrame = form match {
+    private def rank(form: IvfForm, pruned: DataFrame, q: DataFrame,
+                     k: Int): DataFrame = form match {
       case IvfF32 =>
-        assignToCentroids(df, idCol, vecCol,
-            prepCent(spark.read.parquet(s"$dir/centroids"),
-              "cid", "cv"))
-          .select(col(idCol).as("id"), col(vecCol).as("vec"),
-            col("__n").as("norm"), col("__cid").as("cid"))
+        topPerQuery(pruned
+            .join(broadcast(q.withColumn("__qn", norm2(col("__qv")))),
+              "q_id")
+            .select(col("q_id"), col("id"), cosinePre(col("vec"),
+              col("__qv"), col("norm"), col("__qn")).as("sim")),
+          "sim", "id", k)
       case IvfInt8 =>
-        int8IvfIndex(df, idCol, vecCol,
-            spark.read.parquet(s"$dir/centroids"), "cid", "cv")
-          .select(col(idCol).as("id"), col("pos"), col("q"),
-            col("cid"))
+        int8TopKBatch(pruned, "id", "pos", "q",
+          quantizeInt8(q, "q_id", "__qv"), "q_id", k)
     }
 
+    /** (cid, gid): every centroid's nearest coarse cell. */
+    private def cellOf(coarse: DataFrame, cents: DataFrame): DataFrame =
+      assignToCentroids(cents, "cid", "cv", prepCent(coarse, "gid", "gv"))
+        .select(col("cid"), col("__cid").as("gid"))
+
+    /** List rows in the index schema for `df` placed by `cents`
+      * (cid, cv); the int8 form reuses the assignment's norm. */
+    private def listRows(form: IvfForm, df: DataFrame, idCol: String,
+                         vecCol: String, cents: DataFrame): DataFrame = {
+      val asg = assignToCentroids(
+        df.select(col(idCol).as("id"), col(vecCol).as("vec")),
+        "id", "vec", prepCent(cents, "cid", "cv"))
+      form match {
+        case IvfF32 => asg.select(col("id"), col("vec"),
+          col("__n").as("norm"), col("__cid").as("cid"))
+        case IvfInt8 => quantizeInt8(asg, "id", "vec",
+            carryCols = Seq("__cid"), normCol = Some("__n"))
+          .select(col("id"), col("pos"), col("q"), col("__cid").as("cid"))
+      }
+    }
+
+    /** [[listRows]] placed by the index's own stored centroids — shared
+      * by [[build]], [[append]] and [[ingestBatch]], so the ingest paths
+      * cannot drift on placement or quantization. */
+    private def ingest(form: IvfForm, dir: String, df: DataFrame,
+                       idCol: String, vecCol: String): DataFrame =
+      listRows(form, df, idCol, vecCol,
+        df.sparkSession.read.parquet(s"$dir/centroids"))
+
+    /** A [[Refine]]'s exact-vector source: the explicit frame if given;
+      * the f32 lists' own vectors otherwise; an ERROR for int8 with no
+      * explicit source (its lists hold nothing exact). */
+    private def exactVectors(form: IvfForm, src: IvfSource, r: Refine,
+                             spark: SparkSession)
+        : (DataFrame, String, String) = (r.vectors, form, src) match {
+      case (Some(v), _, _) => v
+      case (None, IvfF32, s: InFlight) => (s.lists, "id", "vec")
+      case (None, IvfF32, OnDisk(dir)) =>
+        (spark.read.parquet(s"$dir/lists"), "id", "vec")
+      case (None, IvfInt8, _) => throw new IllegalArgumentException(
+        "Refine on an int8 index needs Refine.vectors: the index " +
+          "stores quantized rows only, so the exact re-rank must " +
+          "be handed the f32 corpus (frame, idCol, vecCol)")
+    }
     /** EXACTLY-ONCE ingest of one micro-batch — the helper the
-      * [[appendToInt8IvfIndex]] contract demands instead of merely
-      * documenting (an at-least-once foreachBatch replay through the
-      * blind append duplicates (id, pos) rows, and the int8 per-id
-      * dot then silently DOUBLE-COUNTS — corrupted scores, not just
-      * duplicate result rows). A committed-batchId ledger lives
+      * [[append]] contract demands instead of merely documenting (an
+      * at-least-once foreachBatch replay through the blind append
+      * duplicates (id, pos) rows, and the int8 per-id dot then silently
+      * DOUBLE-COUNTS — corrupted scores, not just duplicate result
+      * rows). A committed-batchId ledger lives
       * beside the index (`dir/_ingest/committed-<batchId>`, the
       * durable-marker shape of the reference's failed-export retry
       * dir, STEP-BY-STEP.md:446-459), and the append itself is a
@@ -1768,7 +1079,7 @@ object Similarity {
         if (fs.exists(staged)) fs.delete(staged, true) // crashed after
         return false                                   // marker: sweep
       }
-      ingestRows(form, spark, dir, batch, idCol, vecCol)
+      ingest(form, dir, batch, idCol, vecCol)
         .write.mode("overwrite").partitionBy("cid")
         .parquet(staged.toString)
       val lists = new Path(s"$dir/lists")
@@ -1888,7 +1199,7 @@ object Similarity {
                     maxCompare: Int = Int.MaxValue): DataFrame = {
     require(maxCompare >= 1, s"maxCompare=$maxCompare out of [1,∞)")
     val cents = kmeansCentroids(df, idCol, vecCol, k, iters, scale)
-    // same assignment semantic as ivfTopK: nearest centroid by cosine,
+    // same assignment semantic as the IVF lists: nearest centroid by cosine,
     // ties to the smaller cid — one integer-exact trainer, one
     // assignment rule everywhere (and one oracle replay for both)
     val asg = assignToCentroids(df.select(col(idCol), col(vecCol)),

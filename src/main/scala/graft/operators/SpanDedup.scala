@@ -131,8 +131,7 @@ object SpanDedup {
   private def markedStarts(df: DataFrame, idCol: String, textCol: String,
                            minTokens: Int, keepFirst: Boolean,
                            exactGrams: Boolean,
-                           idRange: Option[(Long, Long)],
-                           materializeOcc: Boolean): DataFrame = {
+                           idRange: Option[(Long, Long)]): DataFrame = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val integralId = df.schema(idCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType => true
@@ -168,17 +167,7 @@ object SpanDedup {
       case None => struct(col(idCol), col("pos"))
     }
     val key = gramKeyCols(exactGrams)
-    // `occ` feeds the gram aggregation AND the join back — the join
-    // side re-runs the tokenize+explode when the aggregated side does
-    // not broadcast (fine at bench scale where it does; a real re-run
-    // cost at corpus scale). materializeOcc lazily checkpoints the
-    // occurrence table once for both consumers — opt-IN because occ is
-    // CORPUS-SIZED (one ~32-byte row per token window): the deployment
-    // form is the parquet write/read between the explode pass and the
-    // mark join, and pinning that in executor storage is a capacity
-    // decision the caller must make (VERDICT r21 #7).
-    val occ0 = g.withColumn("__k", occKey)
-    val occ = if (materializeOcc) occ0.localCheckpoint(false) else occ0
+    val occ = g.withColumn("__k", occKey)
     val firsts = occ.groupBy(key.map(col): _*).agg(
       count(lit(1)).as("__c"),
       min(col("__k")).as("__first"))
@@ -215,22 +204,17 @@ object SpanDedup {
     * key for the raw token string (see object doc). `idRange` is the
     * known (min, max) id bounds — pass it to skip the plan-build
     * min/max precheck job (an extra id-only corpus pass at 100 TB);
-    * ids outside it raise at execution. `materializeOcc` (opt-in)
-    * lazily checkpoints the corpus-sized window-occurrence table so
-    * the mark join's probe side never re-runs the tokenize+explode —
-    * for deployments whose aggregated gram side outgrows a broadcast;
-    * identical output either way (knob spec'd). */
+    * ids outside it raise at execution. */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
                      minTokens: Int, keepFirst: Boolean = true,
                      exactGrams: Boolean = false,
-                     idRange: Option[(Long, Long)] = None,
-                     materializeOcc: Boolean = false): DataFrame = {
+                     idRange: Option[(Long, Long)] = None): DataFrame = {
     require(minTokens >= 2, s"minTokens=$minTokens out of [2,∞)")
     require(idRange.forall { case (lo, hi) => lo <= hi },
       s"idRange=$idRange must be (min, max) with min <= max")
     mergeIslands(
       markedStarts(df, idCol, textCol, minTokens, keepFirst, exactGrams,
-        idRange, materializeOcc)
+        idRange)
         .select(col(idCol), col("pos").as("__s"),
           (col("pos") + minTokens - 1).as("__e")),
       idCol)
@@ -298,11 +282,10 @@ object SpanDedup {
   def removeSpans(df: DataFrame, idCol: String, textCol: String,
                   minTokens: Int, keepFirst: Boolean = true,
                   exactGrams: Boolean = false,
-                  idRange: Option[(Long, Long)] = None,
-                  materializeOcc: Boolean = false): DataFrame =
+                  idRange: Option[(Long, Long)] = None): DataFrame =
     cutSpans(df, idCol, textCol,
       duplicateSpans(df, idCol, textCol, minTokens, keepFirst,
-        exactGrams, idRange, materializeOcc))
+        exactGrams, idRange))
 
   /** [[contaminationSpans]] cut back out of the corpus (see
     * [[removeSpans]] for the cut's shape). */

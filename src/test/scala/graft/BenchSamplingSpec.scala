@@ -148,4 +148,20 @@ class BenchSamplingSpec extends AnyFunSuite {
     assert(Bench.parsePrevQueries("""{"queries":[1,2]}""").isEmpty)
     assert(Bench.parsePrevQueries("""{"value":3}""").isEmpty)
   }
+
+  test("contractLine: 150 queries fit the 2,000-char tail and parse") {
+    val results = (1 to 150).map(i => f"q$i%02d_synthetic" -> 9.999)
+    val total = math.rint(results.map(_._2).sum * 1000) / 1000
+    val line = Bench.contractLine(total, results.size, 4, 0.0, results)
+    assert(line.length <= 1900, s"${line.length} chars")
+    val root = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(line)
+    assert(root.get("total_sec").asDouble() == 1499.85)
+    assert(root.get("n_queries").asInt() == 150)
+    assert(root.get("cpus").asInt() == 4)
+    assert(root.get("flagship_scaled_flows_per_sec").isNumber)
+    val q = root.get("q")
+    assert(q.size() == 150)
+    assert(q.get("01").asDouble() == 9.999 && q.get("150").asDouble() == 9.999)
+  }
 }

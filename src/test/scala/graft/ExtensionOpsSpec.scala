@@ -219,55 +219,6 @@ class ExtensionOpsSpec extends SparkTest {
     assert(capped == Set((1L, 2L)), s"got $capped")
   }
 
-  test("ngramJaccardPairs prefixFilter is result-identical at any " +
-    "threshold (PPJoin prefix-filtering principle, r22)") {
-    // pseudo-random corpus with real near-dup structure: clusters of
-    // small perturbations (high-J pairs), cross-cluster noise (low-J),
-    // plus exact duplicates (j_bp = 10000 — the prefix must catch the
-    // boundary case inter = union)
-    val words = Seq("a", "b", "c", "d", "e", "f", "g", "h", "i", "j")
-    val rows = (1L to 60L).map { i =>
-      val base = (0 until 14)
-        .map(j => words((((i % 6) * 7 + j * 13) % words.size).toInt))
-      val mut = if (i % 3 == 0) base.updated((i % 14).toInt,
-        words(((i * 11) % words.size).toInt)) else base
-      i -> mut.mkString(" ")
-    }
-    val df = docs(rows: _*)
-    def runs(minBp: Long, blockOf: Option[String], maxDf: Option[Long],
-             exact: Boolean): (Set[(Long, Long, Long)],
-                               Set[(Long, Long, Long)]) = {
-      val base = blockOf.map(c => df.withColumn(c,
-        (col("doc_id") % 2).cast("string"))).getOrElse(df)
-      def run(pf: Boolean) = Dedup.ngramJaccardPairs(base, "doc_id",
-          "text", 2, blockOf, minBp, maxDf, exactGrams = exact,
-          prefixFilter = pf)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      (run(false), run(true))
-    }
-    // the intended regime (high minBp), the q18 regime (low minBp),
-    // admit-everything (minBp 0 → prefix = whole set, degenerate),
-    // and composition with block / maxDf / exactGrams
-    for ((bp, blk, cap, ex) <- Seq(
-        (9000L, None, None, false),
-        (5000L, None, None, false),
-        (2000L, None, None, false),
-        (0L, None, None, false),
-        (9000L, Some("blk"), None, false),
-        (5000L, None, Some(10L), false),
-        (9000L, None, None, true))) {
-      val (off, on) = runs(bp, blk, cap, ex)
-      assert(on == off,
-        s"prefixFilter diverged at minBp=$bp block=$blk maxDf=$cap " +
-          s"exactGrams=$ex: ${on.diff(off)} extra, ${off.diff(on)} lost")
-    }
-    // the fixture must actually exercise both regimes
-    val (all, _) = runs(5000L, None, None, false)
-    assert(all.exists(_._3 >= 9000L) && all.exists(_._3 < 9000L),
-      s"fixture too uniform: $all")
-  }
-
   test("jaccardVerify matches ngramJaccardPairs on candidate pairs") {
     import graft.operators.Dedup
     import spark.implicits._
@@ -348,8 +299,8 @@ class ExtensionOpsSpec extends SparkTest {
     assert(ann.nonEmpty && ann(0).getLong(0) == 2L)
   }
 
-  test("annTopKBatch matches per-query annTopK; ivfTopK finds the " +
-    "brute-force nearest when its cluster is probed") {
+  test("annTopKBatch matches per-query annTopK; IVF search finds the " +
+    "probed nearest") {
     import graft.operators.Similarity
     import spark.implicits._
     // deterministic synthetic vectors, 8-dim
@@ -373,15 +324,17 @@ class ExtensionOpsSpec extends SparkTest {
     val centroids = (10L until 60L by 20L).map(i => (i, vec(i)))
       .toDF("vec_id", "embedding")
     val q = queries.filter(col("vec_id") === 0L)
-    val ivfAll = Similarity.ivfTopK(data, "vec_id", "embedding",
-        centroids, "vec_id", "embedding", nprobe = 3, q, "embedding", 3)
+    val lists = Similarity.IvfLifecycle.assign(Similarity.IvfF32, data,
+      "vec_id", "embedding", centroids, "vec_id", "embedding")
+    val ivfAll = Similarity.IvfLifecycle.search(Similarity.IvfF32, lists,
+        q, "embedding", nprobe = 3, k = 3)
       .collect().map(_.getLong(0)).toSeq
     val brute = Similarity.topK(data, "vec_id", "embedding",
         q, "embedding", 3).collect().map(_.getLong(0)).toSeq
     assert(ivfAll == brute)
     // nprobe=1 returns a subset of one inverted list, still k-capped
-    val ivf1 = Similarity.ivfTopK(data, "vec_id", "embedding",
-        centroids, "vec_id", "embedding", nprobe = 1, q, "embedding", 3)
+    val ivf1 = Similarity.IvfLifecycle.search(Similarity.IvfF32, lists,
+        q, "embedding", nprobe = 1, k = 3)
       .collect().map(_.getLong(0)).toSeq
     assert(ivf1.nonEmpty && ivf1.size <= 3)
     assert(ivf1.toSet.subsetOf((10L until 60L).toSet))
@@ -403,8 +356,8 @@ class ExtensionOpsSpec extends SparkTest {
     assert(r.getLong(0) != 0L)
   }
 
-  test("ivfTopK: a zero-norm centroid never wins the argmin (NULL " +
-    "cosine coalesces to nulls-last)") {
+  test("IVF assign: a zero-norm centroid never wins the argmin (NULL " +
+    "is last)") {
     import graft.operators.Similarity
     import spark.implicits._
     def vec(id: Long): Array[Float] =
@@ -421,8 +374,10 @@ class ExtensionOpsSpec extends SparkTest {
     // sorts last in the probe ranking, NULL sim). If the zero centroid
     // had absorbed the corpus, the probed lists would be empty; with
     // the fix this degenerates to exact search.
-    val ivfAll = Similarity.ivfTopK(data, "vec_id", "embedding",
-        centroids, "vec_id", "embedding", nprobe = 3, q, "embedding", 3)
+    val ivfAll = Similarity.IvfLifecycle.search(Similarity.IvfF32,
+        Similarity.IvfLifecycle.assign(Similarity.IvfF32, data, "vec_id",
+          "embedding", centroids, "vec_id", "embedding"),
+        q, "embedding", nprobe = 3, k = 3)
       .collect().map(_.getLong(0)).toSeq
     val brute = Similarity.topK(data, "vec_id", "embedding",
         q, "embedding", 3).collect().map(_.getLong(0)).toSeq
@@ -707,7 +662,7 @@ class ExtensionOpsSpec extends SparkTest {
   test("persisted IVF index: search equals the in-flight path, probes " +
     "prune to their partitions on disk") {
     import graft.operators.Similarity
-    import spark.implicits._
+    import Similarity.{IvfF32, IvfLifecycle, OnDisk}
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
       k = 4, iters = 2)
@@ -715,20 +670,21 @@ class ExtensionOpsSpec extends SparkTest {
     dir.deleteOnExit()
     val data = emb.filter(col("vec_id") =!= 1)
     val query = emb.filter(col("vec_id") === 1)
-    Similarity.buildIvfIndex(data, "vec_id", "embedding", cents,
+    IvfLifecycle.build(IvfF32, data, "vec_id", "embedding", cents,
       "cid", "cv", dir.getAbsolutePath)
     // inverted lists are physical partitions
     val listDirs = new java.io.File(dir, "lists").listFiles()
       .filter(_.getName.startsWith("cid=")).map(_.getName).sorted
     assert(listDirs.nonEmpty && listDirs.forall(_.matches("cid=\\d+")))
-    val viaIndex = Similarity.searchIvfIndex(spark, dir.getAbsolutePath,
+    val viaIndex = IvfLifecycle.search(IvfF32, OnDisk(dir.getAbsolutePath),
       query, "embedding", nprobe = 2, k = 10)
     // probe filter reaches the scan as a partition filter (pruning)
     val plan = viaIndex.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cid"),
       s"no partition pruning:\n$plan")
-    val live = Similarity.ivfTopK(data, "vec_id", "embedding", cents,
-      "cid", "cv", nprobe = 2, query, "embedding", 10)
+    val live = IvfLifecycle.search(IvfF32, IvfLifecycle.assign(IvfF32,
+        data, "vec_id", "embedding", cents, "cid", "cv"),
+      query, "embedding", nprobe = 2, k = 10)
     val a = viaIndex.collect().map(r => (r.getLong(0), r.getDouble(1)))
     val b = live.collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(a.toSeq == b.toSeq, s"index=$a live=$b")
@@ -737,6 +693,7 @@ class ExtensionOpsSpec extends SparkTest {
   test("in-flight int8 IVF panel search equals the persisted batch " +
     "(and hence the per-query loop); N=0 panel is empty, not an error") {
     import graft.operators.Similarity
+    import Similarity.{IvfInt8, IvfLifecycle, OnDisk}
     val emb = spark.read.parquet(
       "/root/testdata/sf0.001/embeddings.parquet")
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
@@ -746,29 +703,30 @@ class ExtensionOpsSpec extends SparkTest {
     val panel = emb.filter(col("vec_id").isin(qIds: _*))
     val dir = java.nio.file.Files.createTempDirectory("i8ivfifb").toFile
     dir.deleteOnExit()
-    Similarity.buildInt8IvfIndex(data, "vec_id", "embedding", cents,
+    IvfLifecycle.build(IvfInt8, data, "vec_id", "embedding", cents,
       "cid", "cv", dir.getAbsolutePath)
+    val lists = IvfLifecycle.assign(IvfInt8, data, "vec_id", "embedding",
+      cents, "cid", "cv")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, -t._3, t._2)).toSeq
-    val inflight = rows(Similarity.int8IvfTopKBatch(data, "vec_id",
-      "embedding", cents, "cid", "cv", nprobe = 2, panel, "vec_id",
-      "embedding", k = 10))
-    val persisted = rows(Similarity.searchInt8IvfIndexBatch(spark,
-      dir.getAbsolutePath, panel, "vec_id", "embedding",
-      nprobe = 2, k = 10).select(col("q_id"), col("id"), col("dot")))
+    val inflight = rows(IvfLifecycle.searchBatch(IvfInt8, lists, panel,
+      "vec_id", "embedding", nprobe = 2, k = 10))
+    val persisted = rows(IvfLifecycle.searchBatch(IvfInt8,
+      OnDisk(dir.getAbsolutePath), panel, "vec_id", "embedding",
+      nprobe = 2, k = 10))
     assert(inflight == persisted,
       s"inflight=$inflight persisted=$persisted")
     assert(inflight.nonEmpty)
-    val none = Similarity.int8IvfTopKBatch(data, "vec_id", "embedding",
-      cents, "cid", "cv", nprobe = 2, emb.filter(lit(false)),
-      "vec_id", "embedding", k = 10)
+    val none = IvfLifecycle.searchBatch(IvfInt8, lists,
+      emb.filter(lit(false)), "vec_id", "embedding", nprobe = 2, k = 10)
     assert(none.count() == 0)
   }
 
   test("two-level panel probing: exhaustive coarse probing equals the " +
     "flat batch search; coarse=centroids is the identity") {
     import graft.operators.Similarity
+    import Similarity.{IvfInt8, IvfLifecycle, OnDisk}
     val emb = spark.read.parquet(
       "/root/testdata/sf0.001/embeddings.parquet")
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
@@ -779,39 +737,34 @@ class ExtensionOpsSpec extends SparkTest {
     val qIds = Seq(1L, 2L, 3L)
     val data = emb.filter(!col("vec_id").isin(qIds: _*))
     val panel = emb.filter(col("vec_id").isin(qIds: _*))
-    val lists = Similarity.int8IvfIndex(data, "vec_id", "embedding",
-      cents, "cid", "cv").localCheckpoint()
+    val lists = IvfLifecycle.assign(IvfInt8, data, "vec_id", "embedding",
+      cents, "cid", "cv")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, -t._3, t._2)).toSeq
-    val flat = rows(Similarity.int8IvfSearchBatch(lists, "vec_id",
-      cents, "cid", "cv", nprobe = 2, panel, "vec_id", "embedding",
-      k = 10))
+    def twoLevel(src: Similarity.IvfSource, nprobeCoarse: Int) =
+      IvfLifecycle.searchBatch(IvfInt8, src, panel, "vec_id",
+        "embedding", nprobe = 2, k = 10,
+        nprobeCoarse = Some(nprobeCoarse))
+    val flat = rows(IvfLifecycle.searchBatch(IvfInt8, lists, panel,
+      "vec_id", "embedding", nprobe = 2, k = 10))
     assert(flat.nonEmpty)
+    val withCoarse = IvfLifecycle.addCoarse(lists, coarse, "gid", "gv")
     // exhaustive coarse probing (nprobeCoarse = |coarse|): every cell
     // probed → level-2 ranks ALL centroids → probes ≡ flat's
-    val exhaustive = rows(Similarity.int8IvfSearchBatchTwoLevel(lists,
-      "vec_id", cents, "cid", "cv", coarse, "gid", "gv",
-      nprobeCoarse = 3, nprobe = 2, panel, "vec_id", "embedding",
-      k = 10))
+    val exhaustive = rows(twoLevel(withCoarse, 3))
     assert(exhaustive == flat, s"exhaustive=$exhaustive flat=$flat")
     // coarse = the centroid set itself: each centroid is its own
     // nearest cell (cos = 1, min-id tie-break can't lose to a
     // distinct vector), so probing nprobeCoarse = nprobe cells IS
     // probing the top-nprobe centroids — identical to flat again
-    val identity = rows(Similarity.int8IvfSearchBatchTwoLevel(lists,
-      "vec_id", cents, "cid", "cv",
-      cents.select(col("cid").as("gid"), col("cv").as("gv")),
-      "gid", "gv", nprobeCoarse = 2, nprobe = 2, panel, "vec_id",
-      "embedding", k = 10))
+    val identity = rows(twoLevel(IvfLifecycle.addCoarse(lists, cents,
+      "cid", "cv"), 2))
     assert(identity == flat, s"identity=$identity flat=$flat")
     // restrictive coarse probing stays a VALID per-query top-k over a
     // probe subset: per query at most k rows, each (q_id, id) dot
     // matching the flat form's dot for ids both returned
-    val narrow = rows(Similarity.int8IvfSearchBatchTwoLevel(lists,
-      "vec_id", cents, "cid", "cv", coarse, "gid", "gv",
-      nprobeCoarse = 1, nprobe = 2, panel, "vec_id", "embedding",
-      k = 10))
+    val narrow = rows(twoLevel(withCoarse, 1))
     val flatDots = flat.map(t => (t._1, t._2) -> t._3).toMap
     narrow.foreach { case (q, id, dot) =>
       flatDots.get((q, id)).foreach(fd => assert(fd == dot,
@@ -825,23 +778,21 @@ class ExtensionOpsSpec extends SparkTest {
     // partitions at the parquet scan
     val dir = java.nio.file.Files.createTempDirectory("i8tl").toFile
     dir.deleteOnExit()
-    Similarity.buildInt8IvfIndex(data, "vec_id", "embedding", cents,
+    IvfLifecycle.build(IvfInt8, data, "vec_id", "embedding", cents,
       "cid", "cv", dir.getAbsolutePath)
-    Similarity.addCoarseLevel(spark, dir.getAbsolutePath, coarse,
-      "gid", "gv")
-    val viaIndex = Similarity.searchInt8IvfIndexBatchTwoLevel(spark,
-      dir.getAbsolutePath, panel, "vec_id", "embedding",
-      nprobeCoarse = 1, nprobe = 2, k = 10)
+    val viaIndex = twoLevel(IvfLifecycle.addCoarse(
+      OnDisk(dir.getAbsolutePath), coarse, "gid", "gv"), 1)
     val plan = viaIndex.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cid"),
       s"no partition pruning:\n$plan")
-    assert(rows(viaIndex.select(col("q_id"), col("id"), col("dot")))
-      == narrow, "persisted two-level drifted from in-flight")
+    assert(rows(viaIndex) == narrow,
+      "persisted two-level drifted from in-flight")
   }
 
-  test("persisted int8 IVF index: search equals the in-flight " +
-    "int8IvfTopK, probes prune to their partitions on disk") {
+  test("persisted int8 IVF index: search equals in-flight, probes " +
+    "prune on disk") {
     import graft.operators.Similarity
+    import Similarity.{IvfInt8, IvfLifecycle, OnDisk}
     val emb = spark.read.parquet(
       "/root/testdata/sf0.001/embeddings.parquet")
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
@@ -850,18 +801,19 @@ class ExtensionOpsSpec extends SparkTest {
     dir.deleteOnExit()
     val data = emb.filter(col("vec_id") =!= 1)
     val query = emb.filter(col("vec_id") === 1)
-    Similarity.buildInt8IvfIndex(data, "vec_id", "embedding", cents,
+    IvfLifecycle.build(IvfInt8, data, "vec_id", "embedding", cents,
       "cid", "cv", dir.getAbsolutePath)
     val listDirs = new java.io.File(dir, "lists").listFiles()
       .filter(_.getName.startsWith("cid=")).map(_.getName).sorted
     assert(listDirs.nonEmpty && listDirs.forall(_.matches("cid=\\d+")))
-    val viaIndex = Similarity.searchInt8IvfIndex(spark,
-      dir.getAbsolutePath, query, "embedding", nprobe = 2, k = 10)
+    val viaIndex = IvfLifecycle.search(IvfInt8,
+      OnDisk(dir.getAbsolutePath), query, "embedding", nprobe = 2, k = 10)
     val plan = viaIndex.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cid"),
       s"no partition pruning:\n$plan")
-    val live = Similarity.int8IvfTopK(data, "vec_id", "embedding",
-      cents, "cid", "cv", nprobe = 2, query, "embedding", 10)
+    val live = IvfLifecycle.search(IvfInt8, IvfLifecycle.assign(IvfInt8,
+        data, "vec_id", "embedding", cents, "cid", "cv"),
+      query, "embedding", nprobe = 2, k = 10)
     val a = viaIndex.collect().map(r => (r.getLong(0), r.getLong(1)))
     val b = live.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(a.toSeq == b.toSeq, s"index=${a.toSeq} live=${b.toSeq}")
@@ -1146,8 +1098,8 @@ class ExtensionOpsSpec extends SparkTest {
     assert(kept == Seq(1L, 2L, 3L), s"kept $kept")
   }
 
-  test("int8TopK: integer ranking recovers the float-cosine top-1 and " +
-    "overlaps the exact top-10; zero-norm rows never rank") {
+  test("int8TopKBatch: integer ranking recovers the float-cosine top-1 " +
+    "and top-10; zero-norm never ranks") {
     import graft.operators.Similarity
     import spark.implicits._
     val emb = spark.read.parquet(
@@ -1159,8 +1111,12 @@ class ExtensionOpsSpec extends SparkTest {
       .collect().map(_.getLong(0)).toSeq
     val qc = Similarity.quantizeInt8(data, "vec_id", "embedding")
     val qq = Similarity.quantizeInt8(queryF, "vec_id", "embedding")
-    val quant = Similarity.int8TopK(qc, "vec_id", "pos", "q", qq, 10)
-      .collect().map(_.getLong(0)).toSeq
+      .withColumnRenamed("vec_id", "q_id")
+    def ranked(corpus: org.apache.spark.sql.DataFrame, k: Int) =
+      Similarity.int8TopKBatch(corpus, "vec_id", "pos", "q", qq, "q_id", k)
+        .orderBy(col("dot").desc, col("vec_id").asc)
+        .collect().map(_.getLong(1)).toSeq
+    val quant = ranked(qc, 10)
     assert(quant.head == exact.head,
       s"top-1 drifted: float ${exact.head} vs int8 ${quant.head}")
     val overlap = quant.toSet.intersect(exact.toSet).size
@@ -1171,13 +1127,11 @@ class ExtensionOpsSpec extends SparkTest {
       .unionByName(Seq((999999L, Array.fill(64)(0f)))
         .toDF("vec_id", "embedding"))
     val qz = Similarity.quantizeInt8(withZero, "vec_id", "embedding")
-    val ranked = Similarity.int8TopK(qz, "vec_id", "pos", "q", qq, 1000)
-      .collect().map(_.getLong(0)).toSet
-    assert(!ranked.contains(999999L))
+    assert(!ranked(qz, 1000).contains(999999L))
   }
 
-  test("int8TopK: a multi-vector query frame fails the plan instead " +
-    "of silently mixing rankings; single-vector passes the guard") {
+  test("int8TopKBatch: two vectors under one q_id fail the plan; one " +
+    "vector passes the guard") {
     import graft.operators.Similarity
     val emb = spark.read.parquet(
       "/root/testdata/sf0.001/embeddings.parquet")
@@ -1186,22 +1140,23 @@ class ExtensionOpsSpec extends SparkTest {
     val twoQueries = Similarity.quantizeInt8(
       emb.filter(col("vec_id") <= 2), "vec_id", "embedding")
     val ex = intercept[Exception] {
-      Similarity.int8TopK(corpus, "vec_id", "pos", "q",
-        twoQueries, 5).collect()
+      Similarity.int8TopKBatch(corpus, "vec_id", "pos", "q",
+        twoQueries.withColumn("q_id", lit(0L)), "q_id", 5).collect()
     }
     assert(ex.getMessage.contains("more than one vector") ||
       Option(ex.getCause).exists(
         _.getMessage.contains("more than one vector")),
       s"wrong failure: $ex")
     // the guard is transparent for a well-formed single query
-    val one = Similarity.int8TopK(corpus, "vec_id", "pos", "q",
+    val one = Similarity.int8TopKBatch(corpus, "vec_id", "pos", "q",
       Similarity.quantizeInt8(emb.filter(col("vec_id") === 1),
-        "vec_id", "embedding"), 5).collect()
+        "vec_id", "embedding").withColumn("q_id", lit(0L)),
+      "q_id", 5).collect()
     assert(one.length == 5)
   }
 
-  test("int8TopKBatch: a singleton panel reproduces int8TopK exactly; " +
-    "a 3-query panel ranks each query independently") {
+  test("int8TopKBatch: a singleton panel equals its slice of a 3-query " +
+    "panel") {
     import graft.operators.Similarity
     val emb = spark.read.parquet(
       "/root/testdata/sf0.001/embeddings.parquet")
@@ -1210,9 +1165,11 @@ class ExtensionOpsSpec extends SparkTest {
     def panel(ids: Long*) = Similarity.quantizeInt8(
         emb.filter(col("vec_id").isin(ids: _*)), "vec_id", "embedding")
       .withColumnRenamed("vec_id", "q_id")
-    val single = Similarity.int8TopK(corpus, "vec_id", "pos", "q",
-        panel(1L).drop("q_id"), 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val single = Similarity.int8TopKBatch(corpus, "vec_id", "pos", "q",
+        panel(1L), "q_id", 5)
+      .orderBy(col("dot").desc, col("vec_id").asc)
+      .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
+    assert(single.length == 5)
     val batch = Similarity.int8TopKBatch(corpus, "vec_id", "pos", "q",
         panel(1L, 2L, 3L), "q_id", 5)
       .collect()

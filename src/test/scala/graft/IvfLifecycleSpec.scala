@@ -1,16 +1,16 @@
 package graft
 
 import graft.operators.Similarity
-import graft.operators.Similarity.{IvfF32, IvfForm, IvfInt8}
+import graft.operators.Similarity.{InFlight, IvfF32, IvfForm, IvfInt8,
+  IvfLifecycle, IvfSource, OnDisk}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The persisted-IVF lifecycle matrix: ONE parameterized suite runs
-  * build / append / compact / single search / batch search /
-  * streaming ingest against BOTH storage forms through the
-  * [[Similarity.IvfLifecycle]] facade, so the f32 and int8 families
-  * cannot drift — a contract change that lands in only one form fails
-  * the other form's row of the same test. (Supersedes the per-form
-  * copies these assertions first shipped as.) */
+/** The IVF lifecycle matrix: ONE parameterized suite runs build /
+  * append / compact / search / searchBatch / streaming ingest against
+  * BOTH storage forms, and the search contracts against both list
+  * sources (in-flight, on-disk), so no cell of the {f32, int8} ×
+  * {in-flight, on-disk} matrix can drift from the others. */
 class IvfLifecycleSpec extends SparkTest {
 
   private def emb = spark.read.parquet(
@@ -18,6 +18,11 @@ class IvfLifecycleSpec extends SparkTest {
 
   private lazy val cents = Similarity.kmeansCentroids(
     emb, "vec_id", "embedding", k = 4, iters = 2).localCheckpoint()
+
+  /** A 2-cell coarse level over [[cents]]. */
+  private lazy val coarse = Similarity.kmeansCentroids(
+      emb, "vec_id", "embedding", k = 2, iters = 2)
+    .select(col("cid").as("gid"), col("cv").as("gv")).localCheckpoint()
 
   private def tmp(prefix: String): java.io.File = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
@@ -27,18 +32,76 @@ class IvfLifecycleSpec extends SparkTest {
 
   /** Collected (id, score) rows — score stays `Any` so one comparator
     * serves f32 (Double sim) and int8 (Long dot). */
-  private def search(form: IvfForm, dir: java.io.File,
-                     query: org.apache.spark.sql.DataFrame)
+  private def search(form: IvfForm, src: IvfSource, query: DataFrame)
       : Seq[(Long, Any)] =
-    Similarity.IvfLifecycle.search(form, spark, dir.getAbsolutePath,
-        query, "embedding", nprobe = 2, k = 10)
+    IvfLifecycle.search(form, src, query, "embedding", nprobe = 2,
+        k = 10)
       .collect().map(r => (r.getLong(0), r.get(1))).toSeq
+
+  private def search(form: IvfForm, dir: java.io.File,
+                     query: DataFrame): Seq[(Long, Any)] =
+    search(form, OnDisk(dir.getAbsolutePath), query)
+
+  /** Collected (q_id, id, score) rows, sorted by (q_id, id). */
+  private def panelRows(df: DataFrame): Seq[(Long, Long, Any)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2)))
+      .sortBy(t => (t._1, t._2)).toSeq
 
   private def filesPerPart(base: java.io.File): Map[String, Int] =
     new java.io.File(base, "lists").listFiles()
       .filter(_.getName.startsWith("cid=")).map(d =>
         d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
       .toMap
+
+  /** `data` as a list source of the named kind, with [[coarse]]
+    * attached. */
+  private def source(form: IvfForm, kind: String,
+                     data: DataFrame): IvfSource = {
+    val src = kind match {
+      case "in-flight" => IvfLifecycle.assign(form, data, "vec_id",
+        "embedding", cents, "cid", "cv")
+      case "on-disk" =>
+        val dir = tmp(s"ivf${form}src")
+        IvfLifecycle.build(form, data, "vec_id", "embedding", cents,
+          "cid", "cv", dir.getAbsolutePath)
+        OnDisk(dir.getAbsolutePath)
+    }
+    IvfLifecycle.addCoarse(src, coarse, "gid", "gv")
+  }
+
+  for (form <- Seq[IvfForm](IvfF32, IvfInt8);
+       kind <- Seq("in-flight", "on-disk")) {
+    test(s"$form/$kind: panel == single-search loop; exhaustive " +
+      "two-level == flat") {
+      val qIds = Seq(1L, 2L, 3L)
+      val src = source(form, kind,
+        emb.filter(!col("vec_id").isin(qIds: _*)))
+      val panel = emb.filter(col("vec_id").isin(qIds: _*))
+      val flat = panelRows(IvfLifecycle.searchBatch(form, src, panel,
+        "vec_id", "embedding", nprobe = 2, k = 10))
+      val loop = qIds.flatMap { qid =>
+        search(form, src, emb.filter(col("vec_id") === qid))
+          .map { case (id, s) => (qid, id, s) }
+      }.sortBy(t => (t._1, t._2))
+      assert(flat.nonEmpty && flat == loop, s"panel=$flat loop=$loop")
+      // every coarse cell probed → level 2 ranks ALL centroids
+      val exhaustive = panelRows(IvfLifecycle.searchBatch(form, src,
+        panel, "vec_id", "embedding", nprobe = 2, k = 10,
+        nprobeCoarse = Some(2)))
+      assert(exhaustive == flat, s"exhaustive=$exhaustive flat=$flat")
+      // N=0 panel is the natural empty result, not an error
+      val none = IvfLifecycle.searchBatch(form, src, emb.filter(lit(false)),
+        "vec_id", "embedding", nprobe = 2, k = 10)
+      assert(none.columns.take(2).toSeq == Seq("q_id", "id") &&
+        none.count() == 0)
+      // a single search takes exactly one query row
+      for (q <- Seq(panel, emb.filter(lit(false)))) {
+        val e = intercept[IllegalArgumentException](
+          search(form, src, q))
+        assert(e.getMessage.contains("exactly one query row"))
+      }
+    }
+  }
 
   for (form <- Seq[IvfForm](IvfF32, IvfInt8)) {
 
@@ -48,20 +111,20 @@ class IvfLifecycleSpec extends SparkTest {
       val data = emb.filter(col("vec_id") =!= 1)
       val full = tmp(s"ivf${form}full")
       val inc = tmp(s"ivf${form}inc")
-      Similarity.IvfLifecycle.build(form, data, "vec_id", "embedding",
+      IvfLifecycle.build(form, data, "vec_id", "embedding",
         cents, "cid", "cv", full.getAbsolutePath)
-      Similarity.IvfLifecycle.build(form,
+      IvfLifecycle.build(form,
         data.filter(pmod(col("vec_id"), lit(2)) === 0),
         "vec_id", "embedding", cents, "cid", "cv", inc.getAbsolutePath)
-      Similarity.IvfLifecycle.append(form, spark, inc.getAbsolutePath,
+      IvfLifecycle.append(form, inc.getAbsolutePath,
         data.filter(pmod(col("vec_id"), lit(2)) =!= 0),
         "vec_id", "embedding")
       // inverted lists are physical partitions
       val listDirs = new java.io.File(inc, "lists").listFiles()
         .filter(_.getName.startsWith("cid=")).map(_.getName).sorted
       assert(listDirs.nonEmpty && listDirs.forall(_.matches("cid=\\d+")))
-      val viaInc = Similarity.IvfLifecycle.search(form, spark,
-        inc.getAbsolutePath, query, "embedding", nprobe = 2, k = 10)
+      val viaInc = IvfLifecycle.search(form, OnDisk(inc.getAbsolutePath),
+        query, "embedding", nprobe = 2, k = 10)
       // append must not break the probe-literal partition pruning
       val plan = viaInc.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("cid"),
@@ -74,7 +137,7 @@ class IvfLifecycleSpec extends SparkTest {
       // every partition is ONE file and search is bit-identical
       assert(filesPerPart(inc).values.exists(_ > 1),
         s"append should leave multiple files: ${filesPerPart(inc)}")
-      Similarity.IvfLifecycle.compact(spark, inc.getAbsolutePath)
+      IvfLifecycle.compact(spark, inc.getAbsolutePath)
       val after = filesPerPart(inc)
       assert(after.nonEmpty && after.values.forall(_ == 1),
         s"compaction must leave one file per list: $after")
@@ -87,27 +150,23 @@ class IvfLifecycleSpec extends SparkTest {
       val dir = tmp(s"ivf${form}batch")
       val qIds = Seq(1L, 2L, 3L)
       val data = emb.filter(!col("vec_id").isin(qIds: _*))
-      Similarity.IvfLifecycle.build(form, data, "vec_id", "embedding",
+      IvfLifecycle.build(form, data, "vec_id", "embedding",
         cents, "cid", "cv", dir.getAbsolutePath)
-      val batch = Similarity.IvfLifecycle.searchBatch(form, spark,
-        dir.getAbsolutePath, emb.filter(col("vec_id").isin(qIds: _*)),
+      val batch = IvfLifecycle.searchBatch(form, OnDisk(dir.getAbsolutePath),
+        emb.filter(col("vec_id").isin(qIds: _*)),
         "vec_id", "embedding", nprobe = 2, k = 10)
       val plan = batch.queryExecution.executedPlan.toString
       assert(plan.contains("PartitionFilters") && plan.contains("cid"),
         s"no partition pruning:\n$plan")
-      def key(t: (Long, Long, Any)) = (t._1, t._2)
-      val got = batch.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.get(2)))
-        .sortBy(key).toSeq
+      val got = panelRows(batch)
       val want = qIds.flatMap { qid =>
         search(form, dir, emb.filter(col("vec_id") === qid))
           .map { case (id, s) => (qid, id, s) }
-      }.sortBy(key)
+      }.sortBy(t => (t._1, t._2))
       assert(got == want, s"batch=$got loop=$want")
       // N=0 panel is the natural empty result, not an error
-      val none = Similarity.IvfLifecycle.searchBatch(form, spark,
-        dir.getAbsolutePath, emb.filter(lit(false)), "vec_id",
-        "embedding", nprobe = 2, k = 10)
+      val none = IvfLifecycle.searchBatch(form, OnDisk(dir.getAbsolutePath),
+        emb.filter(lit(false)), "vec_id", "embedding", nprobe = 2, k = 10)
       assert(none.columns.take(2).toSeq == Seq("q_id", "id") &&
         none.count() == 0)
     }
@@ -117,7 +176,7 @@ class IvfLifecycleSpec extends SparkTest {
       // the continuous-ingestion deployment shape: an embedding feed
       // appended to the live index per micro-batch through the stored
       // quantizer — no corpus-wide re-assignment, no index rebuild.
-      // (Exactly-once contract: see appendToInt8IvfIndex's scaladoc —
+      // (Exactly-once contract: see IvfLifecycle.append's scaladoc —
       // MemoryStream + processAllAvailable gives it here.)
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx = spark.sqlContext
@@ -126,10 +185,10 @@ class IvfLifecycleSpec extends SparkTest {
       val data = emb.filter(col("vec_id") =!= 1)
       val full = tmp(s"ivf${form}sfull")
       val inc = tmp(s"ivf${form}sinc")
-      Similarity.IvfLifecycle.build(form, data, "vec_id", "embedding",
+      IvfLifecycle.build(form, data, "vec_id", "embedding",
         cents, "cid", "cv", full.getAbsolutePath)
       // seed the streaming index with the first half...
-      Similarity.IvfLifecycle.build(form,
+      IvfLifecycle.build(form,
         data.filter(pmod(col("vec_id"), lit(2)) === 0),
         "vec_id", "embedding", cents, "cid", "cv", inc.getAbsolutePath)
       // ...and stream the second half in, two micro-batches
@@ -141,9 +200,9 @@ class IvfLifecycleSpec extends SparkTest {
         .outputMode("append")
         .option("checkpointLocation", java.nio.file.Files
           .createTempDirectory(s"ivf${form}ckpt").toString)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          Similarity.IvfLifecycle.append(form, spark,
-            inc.getAbsolutePath, b, "vec_id", "embedding"); ()
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          IvfLifecycle.append(form, inc.getAbsolutePath, b, "vec_id",
+            "embedding"); ()
         }
         .start()
       try {
@@ -159,14 +218,14 @@ class IvfLifecycleSpec extends SparkTest {
     test(s"$form: refine = over-fetch by the coarse score + exact " +
       "f32 re-rank of exactly that candidate set") {
       val dir = tmp(s"ivf${form}refine")
+      val idx = OnDisk(dir.getAbsolutePath)
       val qIds = Seq(1L, 2L, 3L)
       val data = emb.filter(!col("vec_id").isin(qIds: _*))
       val panel = emb.filter(col("vec_id").isin(qIds: _*))
-      Similarity.IvfLifecycle.build(form, data, "vec_id", "embedding",
+      IvfLifecycle.build(form, data, "vec_id", "embedding",
         cents, "cid", "cv", dir.getAbsolutePath)
-      val refined = Similarity.IvfLifecycle.searchBatch(form, spark,
-          dir.getAbsolutePath, panel, "vec_id", "embedding",
-          nprobe = 2, k = 3,
+      val refined = IvfLifecycle.searchBatch(form, idx, panel, "vec_id",
+          "embedding", nprobe = 2, k = 3,
           refine = Some(Similarity.Refine(overfetch = 7,
             vectors = Some((data, "vec_id", "embedding")))))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -174,8 +233,7 @@ class IvfLifecycleSpec extends SparkTest {
       // the contract, by hand: the same search's top-7 candidate set,
       // re-ranked by exact f32 cosine, cut to 3
       val want = qIds.map { qid =>
-        val cands = Similarity.IvfLifecycle.searchBatch(form, spark,
-            dir.getAbsolutePath,
+        val cands = IvfLifecycle.searchBatch(form, idx,
             emb.filter(col("vec_id") === qid), "vec_id", "embedding",
             nprobe = 2, k = 7)
           .collect().map(_.getLong(1)).toSeq
@@ -187,34 +245,33 @@ class IvfLifecycleSpec extends SparkTest {
       }.toMap
       assert(refined == want, s"refined=$refined want=$want")
       // single-query form agrees with the batch form
-      val single = Similarity.IvfLifecycle.search(form, spark,
-          dir.getAbsolutePath, emb.filter(col("vec_id") === 1),
-          "embedding", nprobe = 2, k = 3,
+      val single = IvfLifecycle.search(form, idx,
+          emb.filter(col("vec_id") === 1), "embedding", nprobe = 2, k = 3,
           refine = Some(Similarity.Refine(overfetch = 7,
             vectors = Some((data, "vec_id", "embedding")))))
         .collect().map(_.getLong(0)).toSet
       assert(single == want(1L), s"single=$single want=${want(1L)}")
       form match {
-        case Similarity.IvfF32 =>
+        case IvfF32 =>
           // f32 defaults to the index's own stored vectors — and since
           // the plain f32 search ALREADY ranks by exact cosine,
           // refining it is an identity on the top-k
-          val plain = Similarity.IvfLifecycle.search(form, spark,
-              dir.getAbsolutePath, emb.filter(col("vec_id") === 1),
-              "embedding", nprobe = 2, k = 3)
+          val plain = IvfLifecycle.search(form, idx,
+              emb.filter(col("vec_id") === 1), "embedding",
+              nprobe = 2, k = 3)
             .collect().map(_.getLong(0)).toSeq
-          val refl = Similarity.IvfLifecycle.search(form, spark,
-              dir.getAbsolutePath, emb.filter(col("vec_id") === 1),
-              "embedding", nprobe = 2, k = 3,
+          val refl = IvfLifecycle.search(form, idx,
+              emb.filter(col("vec_id") === 1), "embedding",
+              nprobe = 2, k = 3,
               refine = Some(Similarity.Refine(overfetch = 7)))
             .collect().map(_.getLong(0)).toSeq
           assert(refl == plain, s"refined-f32=$refl plain=$plain")
-        case Similarity.IvfInt8 =>
+        case IvfInt8 =>
           // int8 lists are quantized: no default exact source exists
           assertThrows[IllegalArgumentException] {
-            Similarity.IvfLifecycle.search(form, spark,
-              dir.getAbsolutePath, emb.filter(col("vec_id") === 1),
-              "embedding", nprobe = 2, k = 3,
+            IvfLifecycle.search(form, idx,
+              emb.filter(col("vec_id") === 1), "embedding",
+              nprobe = 2, k = 3,
               refine = Some(Similarity.Refine(overfetch = 7)))
           }
       }
@@ -230,19 +287,19 @@ class IvfLifecycleSpec extends SparkTest {
       val h1 = arriving.filter(pmod(col("vec_id"), lit(4)) === 1)
       val h2 = arriving.filter(pmod(col("vec_id"), lit(4)) === 3)
       val full = tmp(s"ivf${form}xofull")
-      Similarity.IvfLifecycle.build(form, data, "vec_id", "embedding",
+      IvfLifecycle.build(form, data, "vec_id", "embedding",
         cents, "cid", "cv", full.getAbsolutePath)
 
       // ledgered path: batch 0 delivered TWICE (at-least-once replay)
       val inc = tmp(s"ivf${form}xoinc")
-      Similarity.IvfLifecycle.build(form, seed, "vec_id", "embedding",
+      IvfLifecycle.build(form, seed, "vec_id", "embedding",
         cents, "cid", "cv", inc.getAbsolutePath)
-      assert(Similarity.IvfLifecycle.ingestBatch(form, spark,
+      assert(IvfLifecycle.ingestBatch(form, spark,
         inc.getAbsolutePath, h1, 0L, "vec_id", "embedding"))
-      assert(!Similarity.IvfLifecycle.ingestBatch(form, spark,
+      assert(!IvfLifecycle.ingestBatch(form, spark,
         inc.getAbsolutePath, h1, 0L, "vec_id", "embedding"),
         "replayed batchId must be skipped")
-      assert(Similarity.IvfLifecycle.ingestBatch(form, spark,
+      assert(IvfLifecycle.ingestBatch(form, spark,
         inc.getAbsolutePath, h2, 1L, "vec_id", "embedding"))
       assert(search(form, inc, query) == search(form, full, query),
         s"ledgered=${search(form, inc, query)} " +
@@ -258,14 +315,14 @@ class IvfLifecycleSpec extends SparkTest {
       // FOR; if this ever passes, the exactly-once test above proves
       // nothing)
       val blind = tmp(s"ivf${form}xoblind")
-      Similarity.IvfLifecycle.build(form, seed, "vec_id", "embedding",
+      IvfLifecycle.build(form, seed, "vec_id", "embedding",
         cents, "cid", "cv", blind.getAbsolutePath)
-      Similarity.IvfLifecycle.append(form, spark,
-        blind.getAbsolutePath, h1, "vec_id", "embedding")
-      Similarity.IvfLifecycle.append(form, spark,
-        blind.getAbsolutePath, h1, "vec_id", "embedding") // the replay
-      Similarity.IvfLifecycle.append(form, spark,
-        blind.getAbsolutePath, h2, "vec_id", "embedding")
+      IvfLifecycle.append(form, blind.getAbsolutePath, h1, "vec_id",
+        "embedding")
+      IvfLifecycle.append(form, blind.getAbsolutePath, h1, "vec_id",
+        "embedding") // the replay
+      IvfLifecycle.append(form, blind.getAbsolutePath, h2, "vec_id",
+        "embedding")
       assert(search(form, blind, query) != search(form, full, query),
         "blind-append replay should corrupt the search — the ledger " +
           "would be dead weight otherwise")
@@ -279,17 +336,17 @@ class IvfLifecycleSpec extends SparkTest {
       val batch = data.filter(pmod(col("vec_id"), lit(2)) =!= 0)
       val full = tmp(s"ivf${form}crfull")
       val inc = tmp(s"ivf${form}crinc")
-      Similarity.IvfLifecycle.build(form, data, "vec_id", "embedding",
+      IvfLifecycle.build(form, data, "vec_id", "embedding",
         cents, "cid", "cv", full.getAbsolutePath)
-      Similarity.IvfLifecycle.build(form, seed, "vec_id", "embedding",
+      IvfLifecycle.build(form, seed, "vec_id", "embedding",
         cents, "cid", "cv", inc.getAbsolutePath)
-      assert(Similarity.IvfLifecycle.ingestBatch(form, spark,
+      assert(IvfLifecycle.ingestBatch(form, spark,
         inc.getAbsolutePath, batch, 7L, "vec_id", "embedding"))
       // simulate the crash window: promote completed (files live under
       // lists/), marker never written — the replay must re-apply to
       // the SAME deterministic names, never double
       assert(new java.io.File(inc, "_ingest/committed-7").delete())
-      assert(Similarity.IvfLifecycle.ingestBatch(form, spark,
+      assert(IvfLifecycle.ingestBatch(form, spark,
         inc.getAbsolutePath, batch, 7L, "vec_id", "embedding"),
         "replay across the crash window must re-apply")
       assert(search(form, inc, query) == search(form, full, query),
@@ -298,50 +355,54 @@ class IvfLifecycleSpec extends SparkTest {
     }
   }
 
-  test("two-level verbs: facade routes to the standalone operators " +
-    "(int8); refine composes; F32 fails fast instead of probing flat") {
+  test("two-level: refine composes for both forms; an empty coarse " +
+    "set fails; no coarse level fails") {
     val qIds = Seq(1L, 2L)
     val data = emb.filter(!col("vec_id").isin(qIds: _*))
     val panel = emb.filter(col("vec_id").isin(qIds: _*))
-    val coarse = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
-        k = 2, iters = 2)
-      .select(col("cid").as("gid"), col("cv").as("gv"))
-      .localCheckpoint()
-    val dir = tmp("ivf2lf")
-    Similarity.IvfLifecycle.build(IvfInt8, data, "vec_id", "embedding",
-      cents, "cid", "cv", dir.getAbsolutePath)
-    Similarity.IvfLifecycle.addCoarse(IvfInt8, spark,
-      dir.getAbsolutePath, coarse, "gid", "gv")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.get(2))).toSeq
-    val viaFacade = rows(Similarity.IvfLifecycle.searchBatchTwoLevel(
-      IvfInt8, spark, dir.getAbsolutePath, panel, "vec_id",
-      "embedding", nprobeCoarse = 1, nprobe = 2, k = 5))
-    val standalone = rows(Similarity.searchInt8IvfIndexBatchTwoLevel(
-      spark, dir.getAbsolutePath, panel, "vec_id", "embedding",
-      nprobeCoarse = 1, nprobe = 2, k = 5)
-      .select(col("q_id"), col("id"), col("dot")))
-    assert(viaFacade == standalone)
-    // refine: the re-ranked short list carries the exact cosine and
-    // stays within the over-fetched candidate set
-    val refined = Similarity.IvfLifecycle.searchBatchTwoLevel(IvfInt8,
-      spark, dir.getAbsolutePath, panel, "vec_id", "embedding",
-      nprobeCoarse = 1, nprobe = 2, k = 3,
-      refine = Some(Similarity.Refine(overfetch = 5,
-        vectors = Some((data, "vec_id", "embedding")))))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val candSet = standalone.map(t => (t._1, t._2)).toSet
-    assert(refined.nonEmpty &&
-      refined.forall(t => candSet.contains((t._1, t._2))),
-      s"refined=$refined not within candidates $candSet")
-    assert(refined.groupBy(_._1).values.forall(_.size <= 3))
-    intercept[IllegalArgumentException] {
-      Similarity.IvfLifecycle.addCoarse(IvfF32, spark,
-        dir.getAbsolutePath, coarse, "gid", "gv")
+    for (form <- Seq[IvfForm](IvfF32, IvfInt8)) {
+      val src = source(form, "on-disk", data)
+      val cands = panelRows(IvfLifecycle.searchBatch(form, src, panel,
+          "vec_id", "embedding", nprobe = 2, k = 5,
+          nprobeCoarse = Some(1)))
+        .map(t => (t._1, t._2)).toSet
+      // the re-ranked short list carries the exact cosine and stays
+      // within the over-fetched candidate set
+      val refined = IvfLifecycle.searchBatch(form, src, panel, "vec_id",
+          "embedding", nprobe = 2, k = 3,
+          refine = Some(Similarity.Refine(overfetch = 5,
+            vectors = Some((data, "vec_id", "embedding")))),
+          nprobeCoarse = Some(1))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(refined.nonEmpty &&
+        refined.forall(t => cands.contains((t._1, t._2))),
+        s"$form: refined=${refined.toSeq} not within candidates $cands")
+      assert(refined.groupBy(_._1).values.forall(_.length <= 3))
     }
-    intercept[IllegalArgumentException] {
-      Similarity.IvfLifecycle.searchBatchTwoLevel(IvfF32, spark,
-        dir.getAbsolutePath, panel, "vec_id", "embedding", 1, 2, 5)
-    }
+    val e = intercept[IllegalArgumentException](
+      IvfLifecycle.addCoarse(OnDisk(tmp("ivfnocoarse").getAbsolutePath),
+        coarse.filter(lit(false)), "gid", "gv"))
+    assert(e.getMessage.contains("empty coarse set"))
+    intercept[IllegalArgumentException](
+      IvfLifecycle.searchBatch(IvfInt8, IvfLifecycle.assign(IvfInt8, data,
+        "vec_id", "embedding", cents, "cid", "cv"), panel, "vec_id",
+        "embedding", nprobe = 2, k = 5, nprobeCoarse = Some(1)))
+  }
+
+  test("in-flight two-level searches pin no checkpoint") {
+    val qIds = Seq(1L, 2L, 3L)
+    val src = source(IvfInt8, "in-flight",
+      emb.filter(!col("vec_id").isin(qIds: _*)))
+    val panel = emb.filter(col("vec_id").isin(qIds: _*))
+    assert(src.isInstanceOf[InFlight])
+    // ids, not the size: the registry holds weak references, so an
+    // earlier spec's checkpoint may be collected mid-test
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet
+    val before = pinned
+    for (nc <- Seq(1, 2, 1))
+      assert(IvfLifecycle.searchBatch(IvfInt8, src, panel, "vec_id",
+        "embedding", nprobe = 2, k = 5, nprobeCoarse = Some(nc))
+        .collect().nonEmpty)
+    assert((pinned -- before).isEmpty, s"pinned ${pinned -- before}")
   }
 }

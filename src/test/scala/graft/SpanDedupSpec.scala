@@ -30,29 +30,6 @@ class SpanDedupSpec extends SparkTest {
       .orderBy(col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
 
-  test("materializeOcc knob is result-identical (spans and cleaned " +
-    "text), both keepFirst policies (r22 occ-materialization knob)") {
-    val block = "p q r s t u v w"
-    val df = docs(1L -> s"x1 x2 $block y1", 2L -> s"z1 $block z2 z3",
-      3L -> "a b c a b c x", 4L -> "lone text with no duplicates here")
-    for (kf <- Seq(true, false)) {
-      val off = SpanDedup.duplicateSpans(df, "doc_id", "text", 4, kf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      val on = SpanDedup.duplicateSpans(df, "doc_id", "text", 4, kf,
-          materializeOcc = true)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      assert(on == off, s"keepFirst=$kf")
-    }
-    val cOff = SpanDedup.removeSpans(df, "doc_id", "text", 4)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val cOn = SpanDedup.removeSpans(df, "doc_id", "text", 4,
-        materializeOcc = true)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(cOn == cOff)
-  }
-
   test("identical documents: first survives, second is one whole-doc span") {
     val df = docs(1L -> "a b c d e f", 2L -> "a b c d e f")
     assert(spans(df, 3) == Seq((2L, 1L, 6L)))
