@@ -61,15 +61,17 @@ object Bench {
     }
 
   /** Parse the per-query medians out of a prior round's bench JSON.
-    * Two shapes exist in the wild (VERDICT r20 "What's wrong" #1):
+    * Three shapes exist in the wild (VERDICT r20 "What's wrong" #1):
     *  - the full format Bench itself writes (bench.json): a root-level
     *    `"queries":{...}` object;
+    *  - the compact [[contractLine]]: a `"q":{...}` object keyed by the
+    *    query number, mapped back to names through [[Queries.all]];
     *  - the DRIVER's checked-in BENCH_r{N}.json WRAPPER:
-    *    `{n, rc, cpus, sf, tail, parsed}` where `parsed` holds the full
-    *    object when the driver could parse it (read `parsed.queries`),
-    *    and otherwise the stdout contract line survives — head-truncated
-    *    — inside the `tail` string (regex the `"qNN_…":<num>` pairs out
-    *    of it; a partial first pair self-excludes).
+    *    `{n, rc, cpus, sf, tail, parsed}` where `parsed` holds either
+    *    object above when the line could be parsed, and otherwise the
+    *    stdout line survives — head-truncated — inside the `tail`
+    *    string (regex the `"qNN_…":<num>` pairs out of it; a partial
+    *    first pair self-excludes).
     * Returns empty on any shape surprise: the cross-round flag is an
     * instrument, never a reason for the bench to fail. */
   def parsePrevQueries(json: String): Map[String, Double] =
@@ -89,13 +91,23 @@ object Bench {
           }
           b.result()
         }
-      val direct = fromObj(root.get("queries"))
+      def medians(o: com.fasterxml.jackson.databind.JsonNode)
+          : Map[String, Double] = {
+        val named = fromObj(o.get("queries"))
+        if (named.nonEmpty) named
+        else {
+          lazy val byKey = Queries.all.map(q => queryKey(q.name) -> q.name)
+            .toMap
+          fromObj(o.get("q")).flatMap { case (k, v) =>
+            byKey.get(k).map(_ -> v) }
+        }
+      }
+      val direct = medians(root)
       if (direct.nonEmpty) direct
       else {
         val parsed = root.get("parsed")
         val viaParsed =
-          if (parsed != null && parsed.isObject)
-            fromObj(parsed.get("queries"))
+          if (parsed != null && parsed.isObject) medians(parsed)
           else Map.empty[String, Double]
         if (viaParsed.nonEmpty) viaParsed
         else {
@@ -408,12 +420,17 @@ object Bench {
   def contractLine(total: Double, nQueries: Int, cpus: Int,
                    scaledFps: Double,
                    results: Seq[(String, Double)]): String = {
-    val num = "q(\\d+).*".r
-    val q = results.map { case (n, v) =>
-      val k = n match { case num(d) => d; case _ => n }
-      "\"" + k + "\":" + v
-    }.mkString("{", ",", "}")
+    val q = results.map { case (n, v) => "\"" + queryKey(n) + "\":" + v }
+      .mkString("{", ",", "}")
     s"""{"total_sec":$total,"n_queries":$nQueries,"cpus":$cpus,""" +
       s""""flagship_scaled_flows_per_sec":$scaledFps,"q":$q}"""
+  }
+
+  private val QueryNumber = "q(\\d+).*".r
+  /** A query's key in [[contractLine]]: its number ("01" for
+    * `q01_fwm_agg`), or the whole name when it has none. */
+  private def queryKey(name: String): String = name match {
+    case QueryNumber(d) => d
+    case _              => name
   }
 }

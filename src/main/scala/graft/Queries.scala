@@ -2667,10 +2667,12 @@ object Queries {
   /** q81 runs q41's EXACT pipeline — v9 decode → filter DSL → fwm — but
     * through the micro-batch engine end-to-end: a pktdump spool tailed
     * by the DSv2 streaming source, [[graft.sources.NetflowDecoder.decodeStream]]
-    * (cross-micro-batch template store), [[Fwm.stream]]'s watermarked
-    * tumbling windows in Append mode under `Trigger.AvailableNow`, into
-    * a memory sink. Hash-matching the SAME DuckDB oracle as the batch
-    * query proves micro-batching preserves the reference's semantics
+    * (cross-micro-batch template store), a one-section
+    * [[graft.operators.SharedFwm.streamGroup]]'s watermarked tumbling
+    * windows in Append mode under `Trigger.AvailableNow`, into a memory
+    * sink, finished by [[graft.operators.SharedFwm.slice]].
+    * Hash-matching the SAME DuckDB oracle as the batch query proves
+    * micro-batching preserves the reference's semantics
     * (INTERNALS.md:16; window close monit-objects-fwm.c:693-723) — the
     * batch/stream equivalence claim, oracle-checked.
     *
@@ -2792,6 +2794,7 @@ object Queries {
   private val q81 = Q(
     "q81_stream_fwm",
     (s, dir) => {
+      import graft.operators.SharedFwm
       import graft.sources.NetflowDecoder
       val run = streamRunSeq.incrementAndGet()
       val pid = ProcessHandle.current().pid()
@@ -2805,17 +2808,16 @@ object Queries {
       val env = FilterEnv.flow(s)
       val pred = Compiler.filterColumn("proto 6 and src net 10.0.0.0/24",
         env).fold(e => sys.error(e), identity)
-      val conf = Fwm.Conf("streamed", Seq("octets desc", "src host"),
-        timeSec = 30)
+      val section = SharedFwm.Section("q81", pred,
+        Fwm.Conf("streamed", Seq("octets desc", "src host"), timeSec = 30))
       val flows = NetflowDecoder.decodeStream(
           s.readStream.format("pktdump").load(spool.getAbsolutePath), ns)
-        .filter(pred)
         .withColumn("ts", timestamp_seconds(col("ts_sec")))
       try {
         val sunk = withStreamParts(s)(runStreamToMemory(s,
           s"q81_sink_$run",
           new java.io.File(base, s"ckpt-$run"))(
-          Fwm.stream(flows, env, conf, tsColName = "ts")))
+          SharedFwm.streamGroup(flows, env, Seq(section))))
         // the OUTPUT assertion: numInputRows alone passed even when
         // the watermark flush never ran and the sink stayed empty
         // (r10's 0-rows-vs-21 red). The spool is authored above, so
@@ -2832,7 +2834,7 @@ object Queries {
           s"q81 sink has $cnt rows, expected 21 closed-window rows — " +
             "the engine did not flush the watermark-closed Append " +
             "windows (SupportsTriggerAvailableNow regression?)")
-        Fwm.finishWindows(frozen, conf)  // = q41's declared sort
+        SharedFwm.slice(frozen, section)  // = q41's declared sort
       } finally {
         // the decode namespace outlives the sink teardown the helper
         // does — clear it on every path (r10 leak, ADVICE.md)

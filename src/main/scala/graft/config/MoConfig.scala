@@ -20,7 +20,9 @@ object MoConfig {
 
   final case class FwmSection(name: String, fields: Seq[String],
                               timeSec: Long, limit: Option[Int],
-                              extended: Boolean)
+                              extended: Boolean) {
+    def conf: Fwm.Conf = Fwm.Conf(name, fields, timeSec, limit)
+  }
   final case class OverlimitSection(name: String, default: Seq[Double],
                                     back2normSec: Long,
                                     actionScript: Option[String],
@@ -52,22 +54,29 @@ object MoConfig {
   def parse(name: String, json: String,
             children: Seq[MonitoringObject] = Nil): MonitoringObject = {
     val root = mapper.readTree(json)
+    val fwm = arr(root, "fwm").map { n =>
+      FwmSection(
+        name = opt(n, "name").map(_.asText).getOrElse("fwm"),
+        fields = arr(n, "fields").map(_.asText),
+        // absent OR explicit 0 → default: the reference substitutes
+        // FWM_DEFAULT_TIMEOUT for time==0 with a warning
+        // (monit-objects.c:343-349); 0 passed through would be a
+        // divide-by-zero window
+        timeSec = opt(n, "time").map(_.asLong).filter(_ != 0L)
+          .getOrElse(30L), // reference monit-objects.h:10
+        limit = opt(n, "limit").map(_.asInt),
+        extended = opt(n, "extended").exists(_.asBoolean))
+    }
+    // sections are addressed by (mo, name) downstream; an unnamed
+    // section is "fwm", so two of them collide
+    val dups = fwm.map(_.name).diff(fwm.map(_.name).distinct).distinct
+    require(dups.isEmpty, s"MO '$name': duplicate fwm section name(s) " +
+      dups.map(d => s"'$d'").mkString(", ") +
+      " (an unnamed section is named 'fwm')")
     MonitoringObject(
       name = name,
       filter = opt(root, "filter").map(_.asText).getOrElse(""),
-      fwm = arr(root, "fwm").map { n =>
-        FwmSection(
-          name = opt(n, "name").map(_.asText).getOrElse("fwm"),
-          fields = arr(n, "fields").map(_.asText),
-          // absent OR explicit 0 → default: the reference substitutes
-          // FWM_DEFAULT_TIMEOUT for time==0 with a warning
-          // (monit-objects.c:343-349); 0 passed through would be a
-          // divide-by-zero window
-          timeSec = opt(n, "time").map(_.asLong).filter(_ != 0L)
-            .getOrElse(30L), // reference monit-objects.h:10
-          limit = opt(n, "limit").map(_.asInt),
-          extended = opt(n, "extended").exists(_.asBoolean))
-      },
+      fwm = fwm,
       mavg = arr(root, "mavg").map { n =>
         MavgSection(
           name = opt(n, "name").map(_.asText).getOrElse("mavg"),
@@ -108,11 +117,28 @@ object MoConfig {
   final case class CompiledFwm(mo: String, section: FwmSection,
                                plan: DataFrame)
 
-  /** Compile an MO tree over a flow DataFrame: each node's filter is the
-    * conjunction of its ancestors' (one shared scan, Catalyst merges the
-    * predicates — the Spark analog of the reference's recursive
-    * dispatch). Returns every fwm plan of every node. */
-  /** @param includeExtended compile `"extended": true` sections too.
+  /** Every node of an MO tree in pre-order with its effective filter:
+    * its own predicate conjoined with its ancestors' (the reference's
+    * recursive dispatch applies a child's filter on top of its
+    * parent's, netflow.c:214-244). Each node's filter compiles once;
+    * every consumer of the tree walks it through here. */
+  def paths(mo: MonitoringObject,
+            env: FilterEnv): Seq[(MonitoringObject, Column)] = {
+    def walk(mo: MonitoringObject,
+             parent: Column): Seq[(MonitoringObject, Column)] = {
+      val pred = parent && Compiler.filterColumn(mo.filter, env)
+        .fold(e => sys.error(s"MO '${mo.name}' filter: $e"), identity)
+      (mo, pred) +: mo.children.flatMap(walk(_, pred))
+    }
+    walk(mo, lit(true))
+  }
+
+  /** Compile an MO tree over a flow DataFrame: one [[Fwm.batch]] plan
+    * per fwm section of every node, over the node's [[paths]]
+    * predicate (Catalyst merges the conjoined predicates into the
+    * scan).
+    *
+    * @param includeExtended compile `"extended": true` sections too.
     *   Default false: extended windows aggregate ONLY while an alert
     *   holds them open (CONFIG.md:411; the streaming path gates them
     *   via ExtStatsGate), and a batch replay has no alert context — an
@@ -121,20 +147,10 @@ object MoConfig {
     *   produces. Pass true for an explicit what-if backfill. */
   def compileTree(mo: MonitoringObject, flows: DataFrame, env: FilterEnv,
                   tsCol: Column, samplingRate: Option[Column],
-                  parentPred: Column = lit(true),
-                  includeExtended: Boolean = false): Seq[CompiledFwm] = {
-    val ownPred = Compiler.filterColumn(mo.filter, env)
-      .fold(e => sys.error(s"MO '${mo.name}' filter: $e"), identity)
-    val pred = parentPred && ownPred
-    val filtered = flows.filter(pred)
-    val own = mo.fwm.filter(includeExtended || !_.extended).map { f =>
-      CompiledFwm(mo.name, f,
-        Fwm.batch(filtered, env,
-          Fwm.Conf(f.name, f.fields, f.timeSec, f.limit),
-          tsCol, samplingRate))
+                  includeExtended: Boolean = false): Seq[CompiledFwm] =
+    paths(mo, env).flatMap { case (node, pred) =>
+      node.fwm.filter(includeExtended || !_.extended).map(f =>
+        CompiledFwm(node.name, f,
+          Fwm.batch(flows.filter(pred), env, f.conf, tsCol, samplingRate)))
     }
-    own ++ mo.children.flatMap(
-      compileTree(_, flows, env, tsCol, samplingRate, pred,
-        includeExtended))
-  }
 }

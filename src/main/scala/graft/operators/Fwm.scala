@@ -31,18 +31,26 @@ object Fwm {
   final case class Compiled(conf: Conf, keys: Seq[FieldSpec],
                             aggrs: Seq[FieldSpec], sortOrder: Seq[FieldSpec])
 
-  def compile(conf: Conf): Either[String, Compiled] =
-    FieldSpec.parseAll(conf.fields).map { specs =>
-      val (aggrs, keys) = specs.partition(_.isAggr)
-      Compiled(conf, keys, aggrs, specs)
-    }
+  /** Parse a section's fields into keys and measures; a section must
+    * declare at least one aggregable field. */
+  private[graft] def compile(conf: Conf): Compiled = {
+    val specs = FieldSpec.parseAll(conf.fields).fold(e => sys.error(e),
+      identity)
+    val (aggrs, keys) = specs.partition(_.isAggr)
+    require(aggrs.nonEmpty,
+      s"section '${conf.name}' needs at least one aggregable field")
+    Compiled(conf, keys, aggrs, specs)
+  }
+
+  /** One flow's contribution to a measure: value × field scale ×
+    * sampling rate (monit-objects.c:988-997). */
+  private[graft] def measure(a: FieldSpec, env: FilterEnv,
+                             samplingRate: Option[Column]): Column =
+    a.column(env) * lit(a.scale) * samplingRate.getOrElse(lit(1L))
 
   /** Epoch-aligned bucket start from an epoch-seconds column. */
   def bucket(tsSec: Column, timeSec: Long): Column =
     (tsSec - (tsSec % timeSec)).cast(LongType)
-
-  /** Epoch-seconds of a TimestampType column (streaming/real ingest). */
-  def toEpochSec(ts: Column): Column = unix_timestamp(ts).cast(LongType)
 
   /** The scan + aggregate half of [[batch]] — epoch-bucketed groupBy +
     * summed measures, no finishing sort/top-N. This is the part whose
@@ -51,19 +59,15 @@ object Fwm {
     * shared-scan fwm — baseline column-pruning bias fixed"); perfbench's
     * layer ladder times it as its aggregate rung.
     *
-    * @param tsCol epoch-seconds column (use [[toEpochSec]] for timestamps)
+    * @param tsCol epoch-seconds column
     */
   def aggregate(flows: DataFrame, env: FilterEnv, conf: Conf,
                 tsCol: Column = col("ts_sec"),
                 samplingRate: Option[Column] = None): DataFrame = {
-    val compiled = compile(conf).fold(e => sys.error(e), identity)
-    require(compiled.aggrs.nonEmpty,
-      s"fwm '${conf.name}' needs at least one aggregable field")
-    val rate = samplingRate.getOrElse(lit(1L))
+    val compiled = compile(conf)
     val keyCols = compiled.keys.map(k => k.column(env).as(k.sqlName))
-    val aggCols = compiled.aggrs.map { a =>
-      sum(a.column(env) * lit(a.scale) * rate).as(a.sqlName)
-    }
+    val aggCols = compiled.aggrs.map(a =>
+      sum(measure(a, env, samplingRate)).as(a.sqlName))
     flows
       .groupBy((bucket(tsCol, conf.timeSec).as("time") +: keyCols): _*)
       .agg(aggCols.head, aggCols.tail: _*)
@@ -75,50 +79,18 @@ object Fwm {
     * (its SQL-safe name), rows ordered by (time, declared field order),
     * with the others row (NULL keys) last inside each window.
     *
-    * @param tsCol epoch-seconds column (use [[toEpochSec]] for timestamps)
+    * @param tsCol epoch-seconds column
     */
   def batch(flows: DataFrame, env: FilterEnv, conf: Conf,
             tsCol: Column = col("ts_sec"),
             samplingRate: Option[Column] = None): DataFrame =
     finishWindows(aggregate(flows, env, conf, tsCol, samplingRate), conf)
 
-  /** Streaming mode: tumbling event-time windows with a watermark. The
-    * same fieldset compiles to `groupBy(window(ts, T), keys).agg(sums)`;
-    * in Append mode a window emits exactly once when the watermark passes
-    * its end — the streaming analog of the reference's bank swap + dump
-    * (monit-objects-fwm.c:665-682). Run the sort/top-N finish per closed
-    * window via [[finishWindows]] inside foreachBatch.
-    *
-    * @param tsColName TimestampType column to window on
-    * @param delay     watermark delay (reference drops late data by
-    *                  design — INTERNALS.md:126-129 — so "0 seconds")
-    */
-  def stream(flows: DataFrame, env: FilterEnv, conf: Conf,
-             tsColName: String = "ts",
-             samplingRate: Option[Column] = None,
-             delay: String = "0 seconds"): DataFrame = {
-    val compiled = compile(conf).fold(e => sys.error(e), identity)
-    require(compiled.aggrs.nonEmpty,
-      s"fwm '${conf.name}' needs at least one aggregable field")
-    val rate = samplingRate.getOrElse(lit(1L))
-    val keyCols = compiled.keys.map(k => k.column(env).as(k.sqlName))
-    val aggCols = compiled.aggrs.map { a =>
-      sum(a.column(env) * lit(a.scale) * rate).as(a.sqlName)
-    }
-    flows
-      .withWatermark(tsColName, delay)
-      .groupBy((window(col(tsColName), s"${conf.timeSec} seconds") +:
-        keyCols): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-      .withColumn("time", unix_timestamp(col("window.start")))
-      .drop("window")
-  }
-
   /** Per-batch finish for streamed windows: declared sort + top-N+others
     * (apply inside foreachBatch, where each closed window's rows are
     * final). */
   def finishWindows(batch: DataFrame, conf: Conf): DataFrame = {
-    val compiled = compile(conf).fold(e => sys.error(e), identity)
+    val compiled = compile(conf)
     val sortCols = compiled.sortOrder.map(f =>
       if (f.descending) col(f.sqlName).desc else col(f.sqlName).asc)
     val limited = conf.limit match {

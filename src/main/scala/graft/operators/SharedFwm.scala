@@ -1,7 +1,8 @@
 package graft.operators
 
+import graft.config.MoConfig
 import graft.config.MoConfig.MonitoringObject
-import graft.filter.{Compiler, FieldSpec, FilterEnv}
+import graft.filter.{FieldSpec, FilterEnv}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
@@ -56,18 +57,12 @@ object SharedFwm {
   final case class Section(mo: String, pred: Column, conf: Fwm.Conf,
                            extended: Boolean = false)
 
-  /** Flatten an MO tree to sections, conjoining filters along the path
-    * (reference: recursive dispatch applies the child's filter on top
-    * of the parent's, netflow.c:226-236). */
-  def sections(mo: MonitoringObject, env: FilterEnv,
-               parentPred: Column = lit(true)): Seq[Section] = {
-    val ownPred = Compiler.filterColumn(mo.filter, env)
-      .fold(e => sys.error(s"MO '${mo.name}' filter: $e"), identity)
-    val pred = parentPred && ownPred
-    mo.fwm.map(f => Section(mo.name, pred,
-      Fwm.Conf(f.name, f.fields, f.timeSec, f.limit), f.extended)) ++
-      mo.children.flatMap(sections(_, env, pred))
-  }
+  /** Flatten an MO tree to sections in pre-order, each carrying its
+    * node's [[MoConfig.paths]] predicate. */
+  def sections(mo: MonitoringObject, env: FilterEnv): Seq[Section] =
+    MoConfig.paths(mo, env).flatMap { case (node, pred) =>
+      node.fwm.map(f => Section(node.name, pred, f.conf, f.extended))
+    }
 
   /** Superset compilation shared by the batch and streaming passes:
     * per-section dispatch structs over deduped key/measure supersets.
@@ -81,12 +76,7 @@ object SharedFwm {
     require(secs.nonEmpty, "shared fwm needs at least one section")
     require(secs.map(s => (s.mo, s.conf.name)).distinct.size == secs.size,
       "shared fwm sections must have distinct (mo, name)")
-    val compiled = secs.map(s =>
-      s -> Fwm.compile(s.conf).fold(e => sys.error(e), identity))
-    compiled.foreach { case (s, c) => require(c.aggrs.nonEmpty,
-      s"fwm '${s.conf.name}' needs at least one aggregable field") }
-
-    val rate = samplingRate.getOrElse(lit(1L))
+    val compiled = secs.map(s => s -> Fwm.compile(s.conf))
     // dedup key is the LOWERCASED sqlName: field-name resolution is
     // case-insensitive but sqlName preserves the declared text's case,
     // so 'Octets desc' in one section and 'octets desc' in another are
@@ -105,7 +95,7 @@ object SharedFwm {
     // superset column types, for NULL-padding the unused slots of a
     // section's struct (array elements must share one struct schema)
     def measureCol(a: FieldSpec): Column =
-      a.column(env) * lit(a.scale) * rate
+      Fwm.measure(a, env, samplingRate)
     val types: Map[String, DataType] = flows.select(
         keySpecs.map(k => k.column(env).as(k.sqlName)) ++
           aggSpecs.map(a => measureCol(a).as(a.sqlName)): _*)
@@ -137,8 +127,7 @@ object SharedFwm {
     * rows). Top-N/sort finishing is per-section work over the (small)
     * aggregate — apply it via [[slice]].
     *
-    * @param tsCol epoch-seconds column ([[Fwm.toEpochSec]] for
-    *              timestamps)
+    * @param tsCol epoch-seconds column
     */
   def batchAll(flows: DataFrame, env: FilterEnv, secs: Seq[Section],
                tsCol: Column = col("ts_sec"),
@@ -161,28 +150,28 @@ object SharedFwm {
   /** STREAMING shared pass for sections sharing ONE window length: a
     * single watermarked windowed aggregation computes every section of
     * the group over one source — one streaming query, one state store,
-    * instead of one query (each re-reading the stream) per section,
-    * which is [[graft.streaming.Pipeline.build]]'s per-branch shape.
-    * Sections with different `timeSec` cannot share a streaming window
-    * operator — group by `conf.timeSec` and run one query per group
-    * (the reference's one-pass dispatch, factored by window length).
+    * however many sections (the engine's only streaming fwm path; one
+    * section is a group of one). Sections with different `timeSec`
+    * cannot share a streaming window operator — group by
+    * `conf.timeSec` and run one query per group (the reference's
+    * one-pass dispatch, factored by window length).
     *
-    * Output rows match [[Fwm.stream]]'s per section, tagged
-    * (mo, section); finish each section per micro-batch with [[slice]]
-    * inside foreachBatch. Append mode: a window emits once when the
-    * watermark passes its end, exactly like [[Fwm.stream]].
+    * Append mode: a window emits once when the watermark passes its
+    * end (the reference's bank swap + dump, monit-objects-fwm.c:
+    * 665-682). Rows carry `mo`, `section`, the superset columns and
+    * `time` (window start, epoch secs); finish each section per
+    * micro-batch with [[slice]] inside foreachBatch, which gives the
+    * rows [[Fwm.batch]] computes for that window.
     *
-    * ONE deliberate semantic difference from N per-section queries:
-    * the watermark is the STREAM's event-time clock, advanced by every
-    * flow any section wants. A per-section query filters before its
-    * own watermark, so a section whose filter matches nothing for a
-    * while holds its last window open until a matching flow finally
-    * arrives past it; the shared group closes it as soon as stream
-    * time passes — strictly more timely, and the behavior of the
-    * reference, whose fwm bank swap flushes EVERY MO's windows on the
-    * shared clock (monit-objects-fwm.c:665-682), not per-MO clocks.
-    * SharedFwmSpec pins both the per-window equality and this timelier
-    * close. */
+    * The watermark is the STREAM's event-time clock, advanced by every
+    * flow any section of the group wants — not a per-section clock. A
+    * section whose filter matches nothing for a while still has its
+    * windows closed as stream time passes, as the reference's fwm bank
+    * swap flushes EVERY MO's windows on the shared clock. SharedFwmSpec
+    * pins both the per-window equality and this close.
+    *
+    * @param delay watermark delay (the reference drops late data by
+    *              design — INTERNALS.md:126-129 — so "0 seconds") */
   def streamGroup(flows: DataFrame, env: FilterEnv, secs: Seq[Section],
                   tsColName: String = "ts",
                   samplingRate: Option[Column] = None,
@@ -194,10 +183,8 @@ object SharedFwm {
     val aggCols = d.aggSpecs.map(a => sum(col(a.sqlName)).as(a.sqlName))
     val out = flows
       .withWatermark(tsColName, delay)
-      // same per-section-filter semantics as Pipeline's per-branch
-      // flows.filter(pred): Catalyst pushes this non-ts disjunction
-      // below the watermark node, so dropped flows don't advance the
-      // watermark — identical to the per-section queries it replaces
+      // Catalyst pushes this non-ts disjunction below the watermark
+      // node, so flows no section wants don't advance the watermark
       // (assertFilterBelowWatermark below proves the placement)
       .where(secs.map(_.pred).reduce(_ || _))
       .select(col(tsColName), explode(array(d.structs: _*)).as("s"))
@@ -217,8 +204,7 @@ object SharedFwm {
   /** Plan guard for [[streamGroup]]'s watermark claim: the root
     * disjunction must sit BELOW the EventTimeWatermark node (so a flow
     * no section wants is dropped before its event time is sampled and
-    * never advances the watermark — the per-section-query semantics
-    * this pass replaces). This rests on Catalyst's
+    * never advances the watermark). This rests on Catalyst's
     * PushPredicateThroughNonJoin — the EXACT placement whose opposite
     * direction silently broke q109's sentinel — so it is asserted, not
     * assumed: an optimizer change or a ts-referencing predicate fails
@@ -260,34 +246,19 @@ object SharedFwm {
     * predicate below the aggregation (they are group keys), so the
     * branches stop being identical and exchange reuse cannot kick in:
     * N actions would mean N scans again. Either keep everything in ONE
-    * query (q111 returns the combined frame directly), or go through
-    * [[batchSlices]], which persists the combined aggregate — small:
-    * its cardinality is the sum of the sections' group counts, not the
-    * scan — so the parquet read happens exactly once regardless of how
-    * many slices are consumed, the Pipeline-cache shape. */
+    * query (q111 returns the combined frame directly), or persist the
+    * combined aggregate before slicing — small: its cardinality is the
+    * sum of the sections' group counts, not the scan — so the parquet
+    * read happens exactly once regardless of how many slices are
+    * consumed (what [[graft.streaming.Pipeline.sharedFwmBatchWriter]]
+    * does per micro-batch). */
   def slice(combined: DataFrame, s: Section): DataFrame = {
-    val c = Fwm.compile(s.conf).fold(e => sys.error(e), identity)
+    val c = Fwm.compile(s.conf)
     val own = combined
       .filter(col("mo") === s.mo && col("section") === s.conf.name)
       .select(col("time") +:
         (c.keys ++ c.aggrs).map(f => col(f.sqlName)): _*)
     Fwm.finishWindows(own, s.conf)
-  }
-
-  /** [[batchAll]] + persist + per-section [[slice]]s: the multi-frame
-    * consumption path. The combined aggregate is cached
-    * (MEMORY_AND_DISK — it is aggregate-sized, not scan-sized), so the
-    * underlying file scan runs once no matter how many sections are
-    * read, mirroring the reference's one-pass dispatch even when each
-    * section feeds a different sink. Caller unpersists the returned
-    * combined frame when done. */
-  def batchSlices(flows: DataFrame, env: FilterEnv, secs: Seq[Section],
-                  tsCol: Column = col("ts_sec"),
-                  samplingRate: Option[Column] = None)
-      : (DataFrame, Seq[(Section, DataFrame)]) = {
-    val combined = batchAll(flows, env, secs, tsCol, samplingRate)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    (combined, secs.map(s => s -> slice(combined, s)))
   }
 
   /** Leaf scans of a physical plan — the shared-scan invariant is

@@ -769,15 +769,12 @@ object NetflowDecoder {
     * the whole partition instead of OOMing the executor — file sources
     * never hit this (input-split sizing keeps partitions ≲ a few
     * hundred MB), it exists for arbitrary upstream partitioning.
-    * Callers whose packets are known time-ordered anyway pass
-    * `orderIndependent = false` to skip buffering entirely. Streaming
-    * ingest uses `orderIndependent = false` per micro-batch for the
-    * same reason. */
+    * Streaming ingest is [[decodeStream]], which decodes in arrival
+    * order against a cache that persists across micro-batches. */
   def decode(df: DataFrame, payloadCol: String = "payload",
              tsCol: String = "ts_sec",
              srcIpCol: String = "src_ip",
              entMap: Map[(Long, Int), Int] = defaultEnterpriseMap,
-             orderIndependent: Boolean = true,
              bufferByteBudget: Long = 256L << 20)
       : DataFrame = {
     val proj = df.select(col(payloadCol), col(tsCol).cast(LongType),
@@ -786,43 +783,39 @@ object NetflowDecoder {
       val cache = new TemplateCache
       val packets = it.map(r => (r.getBinary(0), r.getLong(1),
         r.getLong(2)))
-      def singlePass(rest: Iterator[(Array[Byte], Long, Long)]) =
-        rest.flatMap { case (p, ts, src) =>
+      // buffer up to the byte budget; only a fully-buffered partition
+      // can be replayed order-independently (the 3 passes need every
+      // packet), so past the budget the WHOLE partition degrades to
+      // the single-pass stream rather than a partial replay.
+      val buf = scala.collection.mutable.ArrayBuffer
+        .empty[(Array[Byte], Long, Long)]
+      var bytes = 0L
+      var over = false
+      while (packets.hasNext && !over) {
+        val t = packets.next()
+        buf += t
+        if (t._1 != null) bytes += t._1.length
+        if (bytes > bufferByteBudget) over = true
+      }
+      if (over) {
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"netflow decode: partition exceeds order-independent " +
+            s"buffer budget ($bytes > $bufferByteBudget bytes); " +
+            s"falling back to single-pass in-order decode")
+        (buf.iterator ++ packets).flatMap { case (p, ts, src) =>
           decodePhase(p, ts, src, cache, entMap, PhaseAll)
         }
-      if (orderIndependent) {
-        // buffer up to the byte budget; only a fully-buffered partition
-        // can be replayed order-independently (the 3 passes need every
-        // packet), so past the budget the WHOLE partition degrades to
-        // the single-pass stream rather than a partial replay.
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(Array[Byte], Long, Long)]
-        var bytes = 0L
-        var over = false
-        while (packets.hasNext && !over) {
-          val t = packets.next()
-          buf += t
-          if (t._1 != null) bytes += t._1.length
-          if (bytes > bufferByteBudget) over = true
+      } else {
+        buf.foreach { case (p, ts, src) =>
+          decodePhase(p, ts, src, cache, entMap, PhaseTemplates)
         }
-        if (over) {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"netflow decode: partition exceeds order-independent " +
-              s"buffer budget ($bytes > $bufferByteBudget bytes); " +
-              s"falling back to single-pass in-order decode")
-          singlePass(buf.iterator ++ packets)
-        } else {
-          buf.foreach { case (p, ts, src) =>
-            decodePhase(p, ts, src, cache, entMap, PhaseTemplates)
-          }
-          buf.foreach { case (p, ts, src) =>
-            decodePhase(p, ts, src, cache, entMap, PhaseOptions)
-          }
-          buf.iterator.flatMap { case (p, ts, src) =>
-            decodePhase(p, ts, src, cache, entMap, PhaseFlows)
-          }
+        buf.foreach { case (p, ts, src) =>
+          decodePhase(p, ts, src, cache, entMap, PhaseOptions)
         }
-      } else singlePass(packets)
+        buf.iterator.flatMap { case (p, ts, src) =>
+          decodePhase(p, ts, src, cache, entMap, PhaseFlows)
+        }
+      }
     }
   }
 

@@ -2,8 +2,8 @@ package graft.streaming
 
 import graft.config.MoConfig
 import graft.config.MoConfig.MonitoringObject
-import graft.filter.{Compiler, FilterEnv}
-import graft.operators.{Fwm, Mavg}
+import graft.filter.FilterEnv
+import graft.operators.{Fwm, SharedFwm}
 import graft.sinks.AlertSink
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -22,10 +22,10 @@ import java.util.concurrent.ConcurrentHashMap
   * windowed aggregation itself still executes — Spark commits every
   * stateful operator's state each batch, so the aggregation cannot be
   * conditionally skipped inside one query (see
-  * [[Pipeline.fwmBatchWriter]]). For a truly zero-cost-while-inactive
-  * extended section, run it as its own query and start/stop it on gate
-  * transitions — that also matches the reference's from-empty-on-
-  * activation behavior.
+  * [[Pipeline.sharedFwmBatchWriter]]). For a truly zero-cost-while-
+  * inactive extended section, run it as its own query and start/stop it
+  * on gate transitions — that also matches the reference's from-empty-
+  * on-activation behavior.
   */
 final class ExtStatsGate extends Serializable {
   private val active = ConcurrentHashMap.newKeySet[String]()
@@ -49,90 +49,71 @@ final class ExtStatsGate extends Serializable {
 }
 
 /** End-to-end wiring of a monitoring-object tree over a flow stream:
-  * each fwm section becomes a windowed aggregation finished per batch;
-  * extended sections are gated; mavg sections run the stateful alert
-  * processor. This is the engine's equivalent of the reference's
-  * monit_objects_init + per-thread hot loop (SURVEY.md §3).
+  * the fwm sections run as shared windowed aggregations (one query per
+  * window length) finished per batch; extended sections are gated;
+  * mavg sections run the stateful alert processor. This is the
+  * engine's equivalent of the reference's monit_objects_init +
+  * per-thread hot loop (SURVEY.md §3).
   */
 object Pipeline {
 
-  final case class FwmBranch(mo: String, section: MoConfig.FwmSection,
-                             windowed: DataFrame)
   final case class MavgBranch(mo: String, section: MoConfig.MavgSection,
                               alerts: org.apache.spark.sql.Dataset[
                                 MavgStream.AlertRow])
 
-  /** Build the streaming branches for an MO tree.
+  /** Build the streaming queries for an MO tree: the fwm side is
+    * [[buildSharedFwm]]'s groups, the mavg side one alert processor per
+    * mavg section over its node's [[MoConfig.paths]] predicate.
     *
     * @param flows streaming DataFrame with a TimestampType `ts` column
     *              plus canonical flow columns */
   def build(mo: MonitoringObject, flows: DataFrame, env: FilterEnv,
             samplingRate: Option[Column] = None,
-            parentPred: Column = lit(true),
             /** silent-key tick cadence; 0 disables the processing-time
               * timer (tests / batch replays) */
-            mavgTickMs: Long = 1000L): (Seq[FwmBranch],
+            mavgTickMs: Long = 1000L): (Seq[SharedFwmGroup],
       Seq[MavgBranch]) = {
     import flows.sparkSession.implicits._
-    val ownPred = Compiler.filterColumn(mo.filter, env)
-      .fold(e => sys.error(s"MO '${mo.name}' filter: $e"), identity)
-    val pred = parentPred && ownPred
-    val filtered = flows.filter(pred)
-
-    val fwms = mo.fwm.map { f =>
-      FwmBranch(mo.name, f,
-        Fwm.stream(filtered, env,
-          Fwm.Conf(f.name, f.fields, f.timeSec, f.limit),
-          samplingRate = samplingRate))
+    val mavgs = MoConfig.paths(mo, env).flatMap { case (node, pred) =>
+      node.mavg.map { m =>
+        // key = concat of the non-aggregable fields; value = first
+        // aggregable measure × rate (reference mavg fieldset split)
+        val compiled = Fwm.compile(Fwm.Conf(m.name, m.fields, m.timeSec))
+        val keyCol = concat_ws("|",
+          compiled.keys.map(k => keyDisplayCol(k, env)): _*)
+        val input = flows.filter(pred).select(
+          keyCol.as("key"),
+          (unix_timestamp(col("ts")) * lit(1000000000L)).as("tsNs"),
+          Fwm.measure(compiled.aggrs.head, env, samplingRate)
+            .cast("double").as("v"))
+          // a NULL measure/ts row would be a poison pill: Input's fields
+          // are non-nullable, so the deserializer throws, the batch dies,
+          // and the restart replays the same offsets forever — drop such
+          // rows instead (the reference's fixed-layout flow records
+          // cannot carry a missing measure at all)
+          .where(col("tsNs").isNotNull && col("v").isNotNull)
+          .as[MavgStream.Input]
+        val conf = MavgStream.Conf(
+          windowSec = m.timeSec,
+          // aligned per section; a section without a default never fires
+          // on its own (∞ threshold) but its limits file still can
+          defaultLimits = m.overlimit.map(
+            _.default.headOption.getOrElse(Double.PositiveInfinity)),
+          back2normSec = m.overlimit.headOption
+            .map(_.back2normSec).getOrElse(30L),
+          // each overlimit section keeps its OWN hysteresis (reference:
+          // per-mavg_limit back2norm-time) — the uniform back2normSec
+          // above only backstops indices beyond this seq
+          back2normsSec = m.overlimit.map(_.back2normSec),
+          // one hot-reloadable limits file PER overlimit section
+          // (reference: each mavg_limit carries its own file)
+          limitsProviders = m.overlimit.map(_.limitsFile.map(f =>
+            graft.config.Reloadable.limitsCsv(f, compiled.keys.size))),
+          tickIntervalMs = mavgTickMs)
+        MavgBranch(node.name, m, MavgStream(input, conf))
+      }
     }
-
-    val mavgs = mo.mavg.map { m =>
-      // key = concat of the non-aggregable fields; value = first
-      // aggregable measure × rate (reference mavg fieldset split)
-      val compiled = Fwm.compile(Fwm.Conf(m.name, m.fields, m.timeSec))
-        .fold(e => sys.error(e), identity)
-      require(compiled.aggrs.nonEmpty,
-        s"mavg '${m.name}' needs an aggregable field")
-      val keyCol = concat_ws("|",
-        compiled.keys.map(k => keyDisplayCol(k, env)): _*)
-      val measure = compiled.aggrs.head
-      val rate = samplingRate.getOrElse(lit(1L))
-      val input = filtered.select(
-        keyCol.as("key"),
-        (unix_timestamp(col("ts")) * lit(1000000000L)).as("tsNs"),
-        (measure.column(env) * lit(measure.scale) * rate)
-          .cast("double").as("v"))
-        // a NULL measure/ts row would be a poison pill: Input's fields
-        // are non-nullable, so the deserializer throws, the batch dies,
-        // and the restart replays the same offsets forever — drop such
-        // rows instead (the reference's fixed-layout flow records
-        // cannot carry a missing measure at all)
-        .where(col("tsNs").isNotNull && col("v").isNotNull)
-        .as[MavgStream.Input]
-      val conf = MavgStream.Conf(
-        windowSec = m.timeSec,
-        // aligned per section; a section without a default never fires
-        // on its own (∞ threshold) but its limits file still can
-        defaultLimits = m.overlimit.map(
-          _.default.headOption.getOrElse(Double.PositiveInfinity)),
-        back2normSec = m.overlimit.headOption
-          .map(_.back2normSec).getOrElse(30L),
-        // each overlimit section keeps its OWN hysteresis (reference:
-        // per-mavg_limit back2norm-time) — the uniform back2normSec
-        // above only backstops indices beyond this seq
-        back2normsSec = m.overlimit.map(_.back2normSec),
-        // one hot-reloadable limits file PER overlimit section
-        // (reference: each mavg_limit carries its own file)
-        limitsProviders = m.overlimit.map(_.limitsFile.map(f =>
-          graft.config.Reloadable.limitsCsv(f, compiled.keys.size))),
-        tickIntervalMs = mavgTickMs)
-      MavgBranch(mo.name, m, MavgStream(input, conf))
-    }
-
-    val childResults = mo.children.map(
-      build(_, flows, env, samplingRate, pred, mavgTickMs))
-    (fwms ++ childResults.flatMap(_._1),
-      mavgs ++ childResults.flatMap(_._2))
+    (buildSharedFwm(mo, flows, env, samplingRate), mavgs)
   }
 
   /** Mavg key-field rendering: address-typed fields display in their
@@ -154,27 +135,21 @@ object Pipeline {
 
   /** One shared-scan streaming group: every fwm section of the MO tree
     * with this window length, computed by ONE streaming query
-    * ([[graft.operators.SharedFwm.streamGroup]]). */
+    * ([[SharedFwm.streamGroup]]). */
   final case class SharedFwmGroup(timeSec: Long, combined: DataFrame,
-      sections: Seq[graft.operators.SharedFwm.Section])
+      sections: Seq[SharedFwm.Section])
 
-  /** Shared-scan variant of [[build]]'s fwm side: instead of one
-    * streaming query per section (each re-reading the stream), the MO
-    * tree's sections are grouped by window length and each group runs
-    * as ONE watermarked windowed aggregation over one pass of the
-    * source — the reference's single-pass dispatch
+  /** [[build]]'s fwm side: the MO tree's sections grouped by window
+    * length, each group ONE watermarked windowed aggregation over one
+    * pass of the source — the reference's single-pass dispatch
     * (netflow.c:214-244), factored by window length because one
     * streaming window operator has one length. An MO config whose
     * sections share their `time` (the common case — reference
     * CONFIG.md's examples use one window per MO tree level) collapses
-    * to a single query for the whole tree.
-    *
-    * Mavg/classification branches are untouched — wire them with
-    * [[build]] as before. */
+    * to a single query for the whole tree. */
   def buildSharedFwm(mo: MonitoringObject, flows: DataFrame,
       env: FilterEnv, samplingRate: Option[Column] = None,
       delay: String = "0 seconds"): Seq[SharedFwmGroup] = {
-    import graft.operators.SharedFwm
     val secs = SharedFwm.sections(mo, env)
     secs.groupBy(_.conf.timeSec).toSeq.sortBy(_._1).map {
       case (t, group) => SharedFwmGroup(t,
@@ -184,45 +159,28 @@ object Pipeline {
   }
 
   /** foreachBatch body for a shared group: slice each section out of
-    * the micro-batch (finish = sort + top-N+others, identical to the
-    * per-branch [[fwmBatchWriter]]) and hand it to that section's
-    * sink; gated-off extended sections skip their sink work — the
-    * extended flag travels ON the Section (sections() reads it from
-    * the config), so migrating from [[build]] to [[buildSharedFwm]]
-    * keeps ExtStatsGate gating without the caller rebuilding a lookup
-    * the config already states. The micro-batch is persisted across
-    * the slices — it is aggregate-sized (closed windows only), and
-    * without the persist each slice would recompute the batch's
-    * lineage. */
+    * the micro-batch (finish = sort + top-N+others) and hand it to that
+    * section's sink; gated-off extended sections skip their sink work —
+    * the extended flag travels ON the Section (sections() reads it from
+    * the config), so ExtStatsGate gating needs no caller-built lookup.
+    * The micro-batch is persisted across the slices — it is
+    * aggregate-sized (closed windows only), and without the persist
+    * each slice would recompute the batch's lineage. A batch no live
+    * section reads is still drained: Spark commits a stateful batch
+    * only once every partition ran. */
   def sharedFwmBatchWriter(group: SharedFwmGroup, gate: ExtStatsGate)(
-      sink: (graft.operators.SharedFwm.Section, DataFrame) => Unit)
+      sink: (SharedFwm.Section, DataFrame) => Unit)
       : (DataFrame, Long) => Unit =
     (batch, _) => {
-      batch.persist()
-      try group.sections.foreach { s =>
-        if (!s.extended || gate.isActive(s.conf.name))
-          sink(s, graft.operators.SharedFwm.slice(batch, s))
-      } finally { batch.unpersist(); () }
-    }
-
-  /** foreachBatch body for an fwm branch: finish (sort + top-N+others)
-    * and hand rows to the sink; gated-off extended sections produce no
-    * output but still drain the batch — Spark requires every partition
-    * of a stateful query to be processed (state store commits). The
-    * zero-cost-while-inactive alternative is to start/stop the extended
-    * query itself on gate transitions, which also matches the
-    * reference's from-empty-on-activation behavior. */
-  def fwmBatchWriter(branch: FwmBranch, gate: ExtStatsGate)(
-      sink: DataFrame => Unit): (DataFrame, Long) => Unit =
-    (batch, _) =>
-      if (!branch.section.extended || gate.isActive(branch.section.name)) {
-        sink(Fwm.finishWindows(batch,
-          Fwm.Conf(branch.section.name, branch.section.fields,
-            branch.section.timeSec, branch.section.limit)))
-      } else {
-        batch.count() // drain: commit state for the skipped output
-        ()
+      val live = group.sections.filter(s =>
+        !s.extended || gate.isActive(s.conf.name))
+      if (live.isEmpty) { batch.count(); () }
+      else {
+        batch.persist()
+        try live.foreach(s => sink(s, SharedFwm.slice(batch, s)))
+        finally { batch.unpersist(); () }
       }
+    }
 
   /** Alert sink for a mavg branch, built from its mo.conf overlimit
     * sections (names + action/back2norm scripts). */

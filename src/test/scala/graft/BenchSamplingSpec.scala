@@ -149,6 +149,21 @@ class BenchSamplingSpec extends AnyFunSuite {
     assert(Bench.parsePrevQueries("""{"value":3}""").isEmpty)
   }
 
+  test("parsePrevQueries: reads the contract line's q map, as the line " +
+    "and as a BENCH_r{N}.json wrapper's parsed object") {
+    val results = Queries.all.zipWithIndex.map { case (q, i) =>
+      q.name -> (i + 1) / 1000.0 }
+    val line = Bench.contractLine(1.0, results.size, 4, 0.0, results)
+    val wrapper = s"""{"n":8,"rc":0,"cpus":4,"sf":0.1,
+      "tail":"[success] Total time: 300 s\\n","parsed":$line}"""
+    // every query number maps back to its full name
+    assert(Bench.parsePrevQueries(wrapper) == results.toMap)
+    assert(Bench.parsePrevQueries(line) == results.toMap)
+    // a number no query has is dropped, not guessed
+    assert(Bench.parsePrevQueries(
+      """{"q":{"01":0.5,"9999":1.0}}""") == Map("q01_fwm_agg" -> 0.5))
+  }
+
   test("contractLine: 150 queries fit the 2,000-char tail and parse") {
     val results = (1 to 150).map(i => f"q$i%02d_synthetic" -> 9.999)
     val total = math.rint(results.map(_._2).sum * 1000) / 1000

@@ -90,11 +90,12 @@ class SharedFwmSpec extends SparkTest {
     // multi-frame consumption: the combined aggregate is persisted, so
     // the one scan happens at materialization and every slice reads
     // the cache — zero file scans per slice
-    val (cached, slices) = SharedFwm.batchSlices(flows, env, secs,
-      samplingRate = Some(col("sampling_rate")))
+    val cached = SharedFwm.batchAll(flows, env, secs,
+        samplingRate = Some(col("sampling_rate")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       cached.count() // materialize (the single scan runs here)
-      slices.foreach { case (s, df) =>
+      secs.map(s => s -> SharedFwm.slice(cached, s)).foreach { case (s, df) =>
         assert(SharedFwm.countScans(df) == 0,
           s"slice ${s.conf.name} re-scans:\n" +
             df.queryExecution.executedPlan.toString)
@@ -114,10 +115,10 @@ class SharedFwmSpec extends SparkTest {
   }
 
   /** Streaming: one query per shared-window group must emit, per
-    * section, exactly what that section's own Fwm.stream query emits —
-    * same closed windows, same finished rows — over identical input
-    * chunking. Mixed window lengths split into separate groups. */
-  test("streamGroup == per-section Fwm.stream, grouped by window") {
+    * section, exactly the rows [[Fwm.batch]] computes for every window
+    * the stream's watermark closed. Mixed window lengths split into
+    * separate groups. */
+  test("streamGroup == Fwm.batch per closed window, grouped by window") {
     import graft.streaming.{ExtStatsGate, Pipeline}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.OutputMode
@@ -140,95 +141,68 @@ class SharedFwmSpec extends SparkTest {
           limit = Some(2), extended = false)),
         mavg = Nil, classification = Nil, children = Nil)))
 
-    def data = Seq(
+    val data = Seq(
       (new Timestamp(1000), 6L, 10L, 3000L),
       (new Timestamp(2000), 6L, 11L, 500L),
       (new Timestamp(3000), 17L, 12L, 9999L),
       (new Timestamp(4000), 6L, 13L, 70L),
       // later chunks: advance the watermark past both window lengths.
-      // The FINAL flow is udp: the tcp child's per-section query
-      // filters it before its own watermark, so that query holds
-      // tcp's [20,30) window open — the shared group closes it on the
-      // stream clock (the documented, reference-faithful divergence)
+      // The FINAL flow is udp: tcp's [20,30) window closes on the
+      // stream clock although no tcp flow arrives past it
       (new Timestamp(25000), 6L, 10L, 1L),
       (new Timestamp(45000), 17L, 12L, 2L))
+    // delay 0: the final watermark is the latest event time
+    val watermarkSec = 45L
 
-    // name-sorted columns: Fwm.batch's contract leads with `time`
-    // (slice follows it) while Fwm.stream appends `time` last — the
-    // rows must agree, column order is each path's documented shape
     def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.select(df.columns.sorted.map(col): _*)
         .collect().map(_.toSeq).toSeq
 
-    // shared path: one query per window-length group
-    val memS = MemoryStream[(Timestamp, Long, Long, Long)]
-    val flowsS = memS.toDS().toDF("ts", "protocol", "ip4_src_addr",
+    val mem = MemoryStream[(Timestamp, Long, Long, Long)]
+    val flowsS = mem.toDS().toDF("ts", "protocol", "ip4_src_addr",
       "in_bytes")
     val groups = Pipeline.buildSharedFwm(streamTree, flowsS, env)
     assert(groups.map(g =>
       (g.timeSec, g.sections.map(_.conf.name))) ==
       Seq((10L, Seq("by_proto", "tcp_src")), (20L, Seq("slow"))))
-    val gotShared = scala.collection.mutable.Map
+    val got = scala.collection.mutable.Map
       .empty[String, Seq[Seq[Any]]].withDefaultValue(Seq.empty)
     val gate = new ExtStatsGate
     val qs = groups.map(g => g.combined.writeStream
       .outputMode(OutputMode.Append)
       .foreachBatch(Pipeline.sharedFwmBatchWriter(g, gate) {
-        (s, finished) => gotShared.synchronized {
-          gotShared(s.conf.name) ++= rowsOf(finished) }
+        (s, finished) => got.synchronized {
+          got(s.conf.name) ++= rowsOf(finished) }
       }).start())
-
-    // baseline path: one query per section (Pipeline.build)
-    val memB = MemoryStream[(Timestamp, Long, Long, Long)]
-    val flowsB = memB.toDS().toDF("ts", "protocol", "ip4_src_addr",
-      "in_bytes")
-    val (branches, _) = Pipeline.build(streamTree, flowsB, env,
-      mavgTickMs = 0L)
-    val gotBase = scala.collection.mutable.Map
-      .empty[String, Seq[Seq[Any]]].withDefaultValue(Seq.empty)
-    val qb = branches.map(b => b.windowed.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch(Pipeline.fwmBatchWriter(b, gate) { finished =>
-        gotBase.synchronized {
-          gotBase(b.section.name) ++= rowsOf(finished) }
-      }).start())
-
     try {
       data.grouped(2).foreach { chunk =>
-        memS.addData(chunk: _*); memB.addData(chunk: _*)
-        (qs ++ qb).foreach(_.processAllAvailable())
+        mem.addData(chunk: _*)
+        qs.foreach(_.processAllAvailable())
       }
-    } finally (qs ++ qb).foreach(_.stop())
+    } finally qs.foreach(_.stop())
 
-    assert(gotShared("by_proto").nonEmpty && gotShared("slow").nonEmpty
-      && gotShared("tcp_src").nonEmpty, gotShared.toString)
-    // sections whose filter matches the stream's tail see identical
-    // rows — same closed windows, same finished content
-    Seq("by_proto", "slow").foreach { name =>
-      assert(gotShared(name) == gotBase(name),
-        s"$name:\n shared=${gotShared(name)}\n base=${gotBase(name)}")
+    // the reference: the same flows as one batch frame, every window
+    // the final watermark closed
+    val flowsB = data.toDF("ts", "protocol", "ip4_src_addr", "in_bytes")
+      .withColumn("ts_sec", unix_timestamp(col("ts")))
+    groups.flatMap(_.sections).foreach { s =>
+      val want = rowsOf(Fwm.batch(flowsB.filter(s.pred), env, s.conf)
+        .where(col("time") + s.conf.timeSec <= watermarkSec))
+      assert(got(s.conf.name).nonEmpty && got(s.conf.name) == want,
+        s"${s.conf.name}:\n stream=${got(s.conf.name)}\n batch=$want")
     }
-    // the filtered child: every window BOTH paths closed is identical,
-    // and the shared group additionally closed tcp's [20,30) window on
-    // the stream clock (the final udp flow advanced it past 30) while
-    // the per-section query — which filters udp before its own
-    // watermark — still holds that window open. The reference flushes
-    // every MO's windows on the shared clock; the shared group is the
-    // faithful shape (operator scaladoc).
-    assert(gotShared("tcp_src").take(gotBase("tcp_src").size) ==
-      gotBase("tcp_src"),
-      s"tcp_src:\n shared=${gotShared("tcp_src")}" +
-        s"\n base=${gotBase("tcp_src")}")
-    val extra = gotShared("tcp_src").drop(gotBase("tcp_src").size)
-    assert(extra == Seq(Seq(1L, 10L, 20L)), // octets, src_host, time
-      s"timelier close expected exactly tcp's [20,30) window: $extra")
+    // tcp's [20,30) window, closed by the udp flow at 45 s on the
+    // shared stream clock (the reference flushes every MO's windows on
+    // one clock); a query that filtered udp before its own watermark
+    // would still hold it open
+    assert(got("tcp_src").last == Seq(1L, 10L, 20L), // octets, src_host, time
+      s"tcp's [20,30) window must close on the stream clock: $got")
   }
 
   /** The watermark-semantics claim streamGroup documents (and now
     * asserts in-plan): a flow NO section wants is dropped BELOW the
-    * EventTimeWatermark node, so it never advances the watermark — a
-    * root-filtered MO tree behaves exactly like the per-section
-    * queries it replaces. A no-section flow with a far-future event
+    * EventTimeWatermark node, so it never advances the watermark. A
+    * no-section flow with a far-future event
     * time must close nothing; a matching flow at the same event time
     * then closes everything before it. */
   test("a flow matching no section does not advance the watermark") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.config.MoConfig
 import graft.filter.FilterEnv
-import graft.operators.Fwm
+import graft.operators.{Fwm, SharedFwm}
 import graft.sinks.SqlExport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -204,6 +204,39 @@ class SinkConfigSpec extends SparkTest {
     assert(cOct == 10L) // proto 6 AND dst port 443
   }
 
+  test("MoConfig.paths: pre-order nodes with parent-conjoined filters") {
+    val grand = MoConfig.parse("grand", """{"filter": "proto 6"}""")
+    val child = MoConfig.parse("child", """{"filter": "dst port 443"}""",
+      children = Seq(grand))
+    val sibling = MoConfig.parse("sibling", """{"filter": "dst port 80"}""")
+    val parent = MoConfig.parse("parent", """{"filter": "proto 6"}""",
+      children = Seq(child, sibling))
+    val flows = flowDf(
+      Seq("ts_sec", "protocol", "l4_dst_port", "in_bytes"),
+      Seq(Seq(0L, 6L, 443L, 10L), Seq(1L, 6L, 80L, 20L),
+        Seq(2L, 17L, 443L, 40L)))
+    val env = FilterEnv.flow(spark)
+    val paths = MoConfig.paths(parent, env)
+    assert(paths.map(_._1.name) == Seq("parent", "child", "grand", "sibling"))
+    val sums = paths.map { case (_, pred) =>
+      flows.filter(pred).agg(sum("in_bytes")).collect()(0).getLong(0) }
+    // proto 6; AND dst port 443 (the compileTree sums above); AND
+    // proto 6 again; proto 6 AND dst port 80 — not the 443 branch
+    assert(sums == Seq(30L, 10L, 10L, 20L))
+    val bad = MoConfig.parse("bad", """{"filter": "proto"}""")
+    val e = intercept[RuntimeException](MoConfig.paths(
+      parent.copy(children = Seq(bad)), env))
+    assert(e.getMessage.startsWith("MO 'bad' filter:"), e.getMessage)
+  }
+
+  test("mo.conf: two fwm sections with one name in one MO fail loudly") {
+    // an unnamed section is named "fwm", so two unnamed ones collide
+    val e = intercept[IllegalArgumentException](MoConfig.parse("dup_mo",
+      """{"fwm": [{"fields": ["octets"]}, {"fields": ["packets"]}]}"""))
+    assert(e.getMessage.contains("dup_mo") &&
+      e.getMessage.contains("'fwm'"), e.getMessage)
+  }
+
   test("streaming fwm: window closes when the watermark passes " +
     "(two-bank swap analog)") {
     implicit val sqlCtx = spark.sqlContext
@@ -213,8 +246,9 @@ class SinkConfigSpec extends SparkTest {
       .toDF("ts", "protocol", "in_bytes")
       .withColumn("ts_sec", expr("CAST(unix_timestamp(ts) AS BIGINT)"))
     val env = FilterEnv.flow(spark)
-    val conf = Fwm.Conf("w", Seq("octets desc", "proto"), timeSec = 10)
-    val windowed = Fwm.stream(flows, env, conf)
+    val section = SharedFwm.Section("mo", lit(true),
+      Fwm.Conf("w", Seq("octets desc", "proto"), timeSec = 10))
+    val windowed = SharedFwm.streamGroup(flows, env, Seq(section))
     val q = windowed.writeStream.format("memory").queryName("fwm_stream")
       .outputMode(OutputMode.Append).start()
     try {
