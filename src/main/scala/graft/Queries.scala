@@ -4281,12 +4281,12 @@ object Queries {
     * key each second and raises an alert when its decayed rate sits at or
     * below the limit (monit-objects-mavg-under.c:34-343 — silence IS the
     * alert condition, which is why it needs ticks without traffic). The
-    * Spark shape is [[graft.streaming.MavgTwsProcessor]]'s per-key
-    * processing-time timers over RocksDB state.
+    * Spark shape is [[graft.streaming.MavgStream]]'s per-key
+    * processing-time timeouts.
     *
     * Two keys stream live wall-clock traffic, and the oracle covers the
     * FULL lifecycle: `quiet` sends a healthy burst, goes silent — only
-    * its per-key TIMER can notice (no arrivals while silent) — fires
+    * its per-key TIMEOUT can notice (no arrivals while silent) — fires
     * its underlimit `start`, then its traffic RESUMES above the limit
     * and the scanner's per-scan value refresh lets hysteresis close
     * the episode with `end` (monit-objects-mavg-under.c:57-66 + the
@@ -4295,30 +4295,21 @@ object Queries {
     * deterministic content is the EVENT SET — exactly one start and
     * one end for `quiet`, nothing for `healthy`; tick VALUES ride the
     * wall clock (the reference's scanner does too), so magnitudes are
-    * pinned instead by MavgStreamSpec / MavgTwsSpec on the step core
-    * both operators share. */
+    * pinned instead by MavgStreamSpec on the operator's step core. */
   private val q113 = Q(
     "q113_mavg_underlimit",
     (s, dir) => {
-      import graft.streaming.{MavgStream, MavgTwsProcessor}
+      import graft.streaming.MavgStream
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val run = streamRunSeq.incrementAndGet()
       val pid = ProcessHandle.current().pid()
       val base = tmpWorkDir(s"graft_q113_under_$pid")
-      withRocksDb(s) {
+      withStreamParts(s) {
         import s.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        // two keys need two state shards, not the session's 32: state
-        // partition count is fixed from this conf at query start, and
-        // every micro-batch pays one RocksDB instance per shard (~5 s
-        // of init per batch at 32). Live deployments size this to key
-        // cardinality; scoped + restored here.
-        val oldSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
         val mem = MemoryStream[MavgStream.Input]
         // windowSec 5: `quiet` fully decays ~5 s after its last row (the
-        // timer then seeds the underlimit entry; the next 200 ms tick
+        // timeout then seeds the underlimit entry; the next 200 ms tick
         // fires Started), while a false positive for `healthy` — fed
         // every ~100 ms at far above the limit — would need a FIVE
         // second gap between folded arrivals and a tick. Sized for the
@@ -4335,7 +4326,7 @@ object Queries {
           isOver = false, tickIntervalMs = 200L)
         val got = new java.util.concurrent.ConcurrentLinkedQueue[
           org.apache.spark.sql.Row]()
-        val q = MavgTwsProcessor(mem.toDS(), conf).toDF()
+        val q = MavgStream(mem.toDS(), conf).toDF()
           .writeStream.outputMode("append")
           .option("checkpointLocation",
             new java.io.File(base, s"ckpt-$run").getAbsolutePath)
@@ -4352,7 +4343,7 @@ object Queries {
         // receiving traffic too and would — correctly! — start its own
         // underlimit alert a few windows later; the query's assertion
         // window is "while healthy traffic flowed". No
-        // processAllAvailable here: live processing-time timers emit
+        // processAllAvailable here: live processing-time timeouts emit
         // on every trigger, so the stream never reports caught-up.
         var snap: Seq[org.apache.spark.sql.Row] = Seq.empty
         try {
@@ -4361,7 +4352,7 @@ object Queries {
           while (!has("quiet", "end") && System.nanoTime() < deadline) {
             val nowNs = System.currentTimeMillis() * 1_000_000L
             // quiet's three phases: burst (i < 6) → SILENCE until the
-            // timer chain fires its start → traffic resumed until the
+            // timeout ticks fire its start → traffic resumed until the
             // hysteresis closes the episode
             val feedQuiet = i < 6 || has("quiet", "start")
             val rows = MavgStream.Input("healthy", nowNs, 500.0) +:
@@ -4377,7 +4368,7 @@ object Queries {
         require(snap.exists(r =>
             r.getString(0) == "quiet" && r.getString(2) == "start"),
           "q113: the silent key's underlimit alert never started — " +
-            "the per-key timer chain (underlimit scanner analog) did " +
+            "the per-key timeout (underlimit scanner analog) did " +
             "not tick it")
         require(snap.exists(r =>
             r.getString(0) == "quiet" && r.getString(2) == "end"),
@@ -4390,7 +4381,6 @@ object Queries {
         s.createDataset(events).toDF("key", "limit_idx", "ev")
           .withColumn("limit_idx", col("limit_idx").cast(LongType))
           .orderBy(col("key").asc, col("ev").asc)
-        } finally s.conf.set("spark.sql.shuffle.partitions", oldSp)
       }
     },
     Some("""SELECT * FROM (

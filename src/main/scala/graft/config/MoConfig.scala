@@ -30,7 +30,7 @@ object MoConfig {
                                     extNames: Seq[String],
                                     limitsFile: Option[String])
   final case class MavgSection(name: String, fields: Seq[String],
-                               timeSec: Long, dumpSec: Long,
+                               timeSec: Long,
                                overlimit: Seq[OverlimitSection])
   final case class ClsSection(fields: Seq[String], topPct: Double,
                               timeSec: Long, valField: String)
@@ -84,7 +84,6 @@ object MoConfig {
           timeSec = opt(n, "time").map(_.asLong).filter(_ != 0L)
             .getOrElse(5L), // reference monit-objects.h:12 (0 → default
                             // like fwm: monit-objects.c:399-405)
-          dumpSec = opt(n, "dump").map(_.asLong).getOrElse(0L),
           overlimit = arr(n, "overlimit").map { o =>
             OverlimitSection(
               name = opt(o, "name").map(_.asText).getOrElse("limit"),

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * The reference's act thread walks every tracked item once per scan
   * and advances the overlimit state machine
   * (monit-objects-mavg-act.c:342-444); the streaming analog here is
-  * [[graft.streaming.MavgTws]]. This operator answers the OFFLINE
+  * [[graft.streaming.MavgStream]]. This operator answers the OFFLINE
   * question the same engine leaves to scripts: "given the historical
   * per-key series, what alerts WOULD have fired, when, and with what
   * values?" — one deterministic pass of the SAME pure machine

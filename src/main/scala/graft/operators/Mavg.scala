@@ -20,11 +20,10 @@ import org.apache.spark.sql.types._
   * repartition by key, sort within partitions by (key, ts, tiebreak), one
   * forward pass per partition. No driver-side state; arbitrarily many keys.
   *
-  * Two arithmetic variants:
-  *  - [[decayedFinal]]: integer fixed-point (`N - (dt*N) div T + V`) —
-  *    bit-exact across engines, used for the DuckDB-oracle queries;
-  *  - [[decayedFinalDouble]]: the reference's double arithmetic, used by
-  *    the streaming processor and parity tests.
+  * [[decayedFinal]] folds in integer fixed-point (`N - (dt*N) div T +
+  * V`), bit-exact across engines, for the DuckDB-oracle queries. The
+  * reference's double arithmetic lives in [[scalarTrace]] (the test
+  * model) and in the streaming processor, [[graft.streaming.MavgStream]].
   */
 object Mavg {
 
@@ -40,27 +39,13 @@ object Mavg {
   /** Final decayed value per key after its last arrival, integer
     * fixed-point. Output: keyCols ++ (n: Long, t_last: Long). */
   def decayedFinal(df: DataFrame, conf: Conf): DataFrame =
-    foldPerKey(df, conf) { rows =>
+    runFold(df, conf) { rows =>
       var n = 0L
       var tPrev = Long.MinValue
       rows.foreach { case (ts, v) =>
         val dt = ts - tPrev
         n = if (tPrev == Long.MinValue || dt >= conf.windowSec) v
             else n - (dt * n) / conf.windowSec + v
-        tPrev = ts
-      }
-      (n, tPrev)
-    }
-
-  /** Same recurrence in double arithmetic (reference-exact formula). */
-  def decayedFinalDouble(df: DataFrame, conf: Conf): DataFrame =
-    foldPerKeyDouble(df, conf) { rows =>
-      var n = 0.0
-      var tPrev = Long.MinValue
-      rows.foreach { case (ts, v) =>
-        val dt = (ts - tPrev).toDouble
-        n = if (tPrev == Long.MinValue || dt >= conf.windowSec) v.toDouble
-            else n - dt / conf.windowSec * n + v
         tPrev = ts
       }
       (n, tPrev)
@@ -81,16 +66,8 @@ object Mavg {
 
   // ------------------------------------------------------------------ impl
 
-  private def foldPerKey(df: DataFrame, conf: Conf)(
-      foldFn: Iterator[(Long, Long)] => (Long, Long)): DataFrame =
-    runFold(df, conf, LongType)(rows => { val (n, t) = foldFn(rows); (n, t) })
-
-  private def foldPerKeyDouble(df: DataFrame, conf: Conf)(
-      foldFn: Iterator[(Long, Long)] => (Double, Long)): DataFrame =
-    runFold(df, conf, DoubleType)(rows => { val (n, t) = foldFn(rows); (n, t) })
-
-  private def runFold[A](df: DataFrame, conf: Conf, nType: DataType)(
-      foldFn: Iterator[(Long, Long)] => (A, Long)): DataFrame = {
+  private def runFold(df: DataFrame, conf: Conf)(
+      foldFn: Iterator[(Long, Long)] => (Long, Long)): DataFrame = {
     val keyCols = conf.keyCols
     val nKeys = keyCols.length
     val proj = df.select(
@@ -106,7 +83,7 @@ object Mavg {
     val inSchema = proj.schema
     val outSchema = StructType(
       keyCols.map(k => inSchema(k)) ++
-        Seq(StructField("n", nType, false),
+        Seq(StructField("n", LongType, false),
           StructField("t_last", LongType, false)))
     val enc: ExpressionEncoder[Row] = ExpressionEncoder(RowEncoder
       .encoderFor(outSchema))

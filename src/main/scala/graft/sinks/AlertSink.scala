@@ -15,7 +15,10 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   *  - `end`    → delete the notification file, run the back2norm script.
   *
   * File name (build_file_name:33-84): `{dir}/{mo}-{mavg}-{limit}-{key
-  * fields joined by '-'}`; content (build_file_content:86-118): key
+  * fields joined by '-'}`, with `/`, `\`, `%` and control characters
+  * in each part percent-encoded: key fields such as `sni` or
+  * `dns-name` come from packet bytes, and a `/` in one must not steer
+  * the file out of `dir`; content (build_file_content:86-118): key
   * fields space-separated, then the breaching value and the limit as
   * integers. Script argv (exec_script + STEP-BY-STEP.md:934-973):
   * `script mo mavg limit-name notification-file fields... value limit`.
@@ -41,6 +44,15 @@ object AlertSink {
   final case class Conf(notifDir: String, moName: String, mavgName: String,
                         limits: Seq[Limit], execute: Boolean = false)
 
+  /** One file-name part with the path separators, `%` and control
+    * characters percent-encoded; everything else stays as it is. */
+  private def pathSafe(part: String): String =
+    part.flatMap { c =>
+      if (c == '/' || c == '\\' || c == '%' || Character.isISOControl(c))
+        f"%%${c.toInt}%02X"
+      else c.toString
+    }
+
   /** Event precedence inside one batch at equal timestamps. */
   private val eventOrder = Map("start" -> 0, "update" -> 1, "end" -> 2)
 }
@@ -55,9 +67,15 @@ final class AlertSink(conf: AlertSink.Conf) extends Serializable {
   private def keyFields(key: String): Seq[String] =
     key.split("\\|", -1).toSeq
 
-  def fileName(limitName: String, fields: Seq[String]): Path =
-    Paths.get(conf.notifDir,
-      (Seq(conf.moName, conf.mavgName, limitName) ++ fields).mkString("-"))
+  def fileName(limitName: String, fields: Seq[String]): Path = {
+    val dir = Paths.get(conf.notifDir)
+    val file = dir.resolve((Seq(conf.moName, conf.mavgName, limitName) ++
+      fields).map(pathSafe).mkString("-"))
+    require(file.toAbsolutePath.normalize.getParent ==
+      dir.toAbsolutePath.normalize,
+      s"AlertSink: notification file '$file' escapes '${conf.notifDir}'")
+    file
+  }
 
   private def content(fields: Seq[String], value: Double,
                       lim: Double): String =

@@ -29,8 +29,8 @@ object MavgDump {
     rows.map { r =>
       val keys = keyCols.indices.map(i => String.valueOf(r.get(i)))
       // n is LongType from the integer fixed-point path and DoubleType
-      // from decayedFinalDouble / a streaming-state snapshot — accept
-      // both (a bare getLong ClassCastExceptions on the latter two)
+      // from a streaming-state snapshot — accept both (a bare getLong
+      // ClassCastExceptions on the latter)
       val n = r.get(keyCols.length) match {
         case l: java.lang.Long   => l.toDouble
         case d: java.lang.Double => d.doubleValue
@@ -48,26 +48,25 @@ object MavgDump {
         (k ++ ls.map(d3)).mkString(",")
       }.mkString("\n")
 
-  /** `.d` dump of a LIVE (or stopped) [[graft.streaming.MavgTwsProcessor]]
-    * query, rendered straight from its checkpoint state store — the
-    * engine's wiring for the mavg section's `"dump": N` knob
+  /** `.d` dump of a LIVE (or stopped) [[graft.streaming.MavgStream]]
+    * query, rendered straight from its checkpoint state store
     * (reference monit-objects-mavg-dump.c:34-315 writes the file every
     * N seconds from the shared value tables; here the state-store
-    * READER is the shared table, so the dump runs out-of-band on any
-    * cadence without touching the query). Each key's stored `n` is
-    * decay-corrected to `atNs` with the processor's own law, so the
-    * rendered per-second rates are what the reference would print at
-    * that instant. Requires the session's state-store provider conf to
-    * match the checkpoint (RocksDB for transformWithState). */
+    * READER is the shared table, so the dump is an out-of-band call
+    * on any cadence that never touches the query). Each key's stored
+    * `n` is decay-corrected to `atNs` with the processor's own law, so
+    * the rendered per-second rates are what the reference would print
+    * at that instant. Requires the session's state-store provider conf
+    * to match the checkpoint. */
   def dumpDFromCheckpoint(spark: org.apache.spark.sql.SparkSession,
                           ckptDir: String, windowSec: Long,
                           atNs: Long): String = {
     import org.apache.spark.sql.functions.col
     val windowNs = windowSec * 1_000_000_000L
-    val rows = spark.read.format("statestore")
-      .option("stateVarName", "mavg").load(ckptDir)
+    val rows = spark.read.format("statestore").load(ckptDir)
       .select(col("key.value").cast("string"),
-        col("value.n").cast("double"), col("value.tLast").cast("long"))
+        col("value.groupState.n").cast("double"),
+        col("value.groupState.tLast").cast("long"))
       .collect()
     rows.map { r =>
       val (key, n, tLast) = (r.getString(0), r.getDouble(1), r.getLong(2))

@@ -1,6 +1,8 @@
 package graft.sources
 
 import graft.flow.FlowSchema
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -282,55 +284,24 @@ object NetflowDecoder {
       }
     } catch { case _: Exception => None }
 
-  /** Atomic snapshot write: tmp file + rename, so a reader never sees
-    * a torn file (the reference's tkvdb file write is likewise
-    * all-or-nothing per transaction). */
-  def saveTemplates(cache: TemplateCache, file: java.io.File): Unit = {
-    val snap = cache.synchronized(cache.snapshot())
-    val tmp = new java.io.File(file.getParentFile,
-      file.getName + ".tmp" + ProcessHandle.current().pid())
-    try {
-      val out = new java.io.DataOutputStream(
-        new java.io.BufferedOutputStream(
-          new java.io.FileOutputStream(tmp)))
-      try writeSnapshot(snap, out) finally out.close()
-      java.nio.file.Files.move(tmp.toPath, file.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } catch { case e: Exception => tmp.delete(); throw e }
-  }
+  // ---------------------------------------- snapshot persistence
+  // Snapshots go through the Hadoop FileSystem API, so one code path
+  // serves local disk (`file:`) and the cluster shape, where the store
+  // must outlive any one executor AND be reachable from whichever
+  // host a restarted task lands on (HDFS-class shared storage).
 
-  /** Load a snapshot; a missing, corrupt, truncated, or
-    * wrong-version file is a cold start, not an error (the reference
-    * logs and continues the same way). */
-  def loadTemplates(file: java.io.File): Option[TemplateSnapshot] =
-    if (!file.isFile) None
-    else try {
-      val in = new java.io.DataInputStream(
-        new java.io.BufferedInputStream(
-          new java.io.FileInputStream(file)))
-      try readSnapshot(in) finally in.close()
-    } catch { case _: Exception => None }
-
-  // ------------- Hadoop-FileSystem snapshot persistence (cluster mode)
-  // On a real cluster the template store must outlive any one
-  // executor AND be reachable from whichever host a restarted task
-  // lands on — that means HDFS-class shared storage, not executor-
-  // local disk. These mirrors of save/loadTemplates speak the same
-  // GFTS v1 records through org.apache.hadoop.fs, selected by
-  // decodeStream whenever templatesDir carries a URI scheme.
-
-  /** Write one snapshot to a Hadoop path: tmp file + rename. On HDFS
-    * the FileContext OVERWRITE rename is atomic (a reader sees the old
-    * or the new file, never a torn one); on copy-rename stores (S3A)
-    * the window is non-atomic, which degrades safely — a torn read
-    * parses to None = cold start until the next micro-batch rewrite. */
-  def saveTemplatesFs(cache: TemplateCache,
-                      conf: org.apache.hadoop.conf.Configuration,
-                      file: org.apache.hadoop.fs.Path): Unit = {
+  /** Snapshot write: tmp file + rename, so a reader never sees a
+    * half-written file (the reference's tkvdb file write is likewise
+    * all-or-nothing per transaction). On HDFS the FileContext
+    * OVERWRITE rename is atomic (a reader sees the old or the new
+    * file); on copy-rename stores (S3A) the window is non-atomic,
+    * which degrades safely — a torn read parses to None = cold start
+    * until the next micro-batch rewrite. */
+  def saveTemplates(cache: TemplateCache, conf: Configuration,
+                    file: Path): Unit = {
     val snap = cache.synchronized(cache.snapshot())
     val fs = rawFs(file, conf)
-    val tmp = new org.apache.hadoop.fs.Path(file.getParent,
+    val tmp = new Path(file.getParent,
       file.getName + ".tmp" + ProcessHandle.current().pid())
     try {
       val out = new java.io.DataOutputStream(fs.create(tmp, true))
@@ -346,10 +317,11 @@ object NetflowDecoder {
     }
   }
 
-  /** Load one snapshot from a Hadoop path; missing/corrupt = None. */
-  def loadTemplatesFs(conf: org.apache.hadoop.conf.Configuration,
-                      file: org.apache.hadoop.fs.Path)
-      : Option[TemplateSnapshot] =
+  /** Load a snapshot; a missing, corrupt, truncated, or
+    * wrong-version file is a cold start, not an error (the reference
+    * logs and continues the same way). */
+  def loadTemplates(conf: Configuration,
+                    file: Path): Option[TemplateSnapshot] =
     try {
       val in = new java.io.DataInputStream(
         new java.io.BufferedInputStream(rawFs(file, conf).open(file)))
@@ -359,9 +331,7 @@ object NetflowDecoder {
   /** The checksum-less filesystem for a path: LocalFileSystem writes
     * .crc side files that a FileContext rename (raw AbstractFileSystem)
     * would strand; HDFS/S3A pass through unchanged. */
-  private def rawFs(p: org.apache.hadoop.fs.Path,
-                    conf: org.apache.hadoop.conf.Configuration)
-      : org.apache.hadoop.fs.FileSystem =
+  private def rawFs(p: Path, conf: Configuration): FileSystem =
     p.getFileSystem(conf) match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem =>
         c.getRawFileSystem
@@ -921,15 +891,18 @@ object NetflowDecoder {
       if (c.isLetterOrDigit || c == '-' || c == '.' || c == '_') c
       else '_')
 
+  /** Snapshot file name for one (namespace, input partition). */
   private def templateFileName(namespace: String, pid: Int): String =
     f"${safeNs(namespace)}-p$pid%05d.tmpl"
 
-  /** Snapshot file for one (namespace, input partition). */
-  private def templateFile(dir: String, namespace: String,
-                           pid: Int): java.io.File = {
-    val d = new java.io.File(dir)
-    d.mkdirs()
-    new java.io.File(d, templateFileName(namespace, pid))
+  /** The store a `templatesDir` names. A dir with no URI scheme is
+    * local disk on the executor, qualified here to a `file:` URI (a
+    * relative one against the executor's working dir), so it never
+    * resolves against `fs.defaultFS` — HDFS on a cluster. */
+  private[sources] def templateStore(dir: String): Path = {
+    val p = new Path(dir)
+    if (p.toUri.getScheme != null) p
+    else new Path("file", null, new java.io.File(dir).getAbsolutePath)
   }
 
   private def nsFilePattern(namespace: String): java.util.regex.Pattern =
@@ -948,12 +921,14 @@ object NetflowDecoder {
     * merge-only and epoch-keyed (idempotent, order-independent), so
     * over-merging is safe; WRITES stay per-partition, so there is no
     * cross-task file contention. */
-  private[sources] def namespaceTemplateFiles(
-      dir: String, namespace: String): Seq[java.io.File] = {
+  private def namespaceTemplateFiles(conf: Configuration, dir: Path,
+                                     namespace: String): Seq[Path] = {
     val pat = nsFilePattern(namespace)
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten
-      .filter(f => pat.matcher(f.getName).matches())
+    try rawFs(dir, conf).listStatus(dir).toSeq
+      .map(_.getPath)
+      .filter(p => pat.matcher(p.getName).matches())
       .sortBy(_.getName)
+    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** Tmp files a crashed writer left behind (`.tmpl.tmp<pid>`): the
@@ -971,20 +946,8 @@ object NetflowDecoder {
       java.util.regex.Pattern.quote(safeNs(namespace)) +
         "-p\\d{5,}\\.tmpl\\.tmp\\d+")
 
-  private def sweepStaleTmp(dir: String, namespace: String): Unit = {
-    val pat = tmpFilePattern(namespace)
-    val cutoff = System.currentTimeMillis() - staleTmpAgeMs
-    Option(new java.io.File(dir).listFiles()).toSeq.flatten.foreach {
-      f =>
-        if (pat.matcher(f.getName).matches() &&
-            f.lastModified() < cutoff) f.delete()
-    }
-  }
-
-  /** Hadoop-FS twin of [[sweepStaleTmp]]. */
-  private def sweepStaleTmpFs(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: org.apache.hadoop.fs.Path, namespace: String): Unit = {
+  private def sweepStaleTmp(conf: Configuration, dir: Path,
+                            namespace: String): Unit = {
     val pat = tmpFilePattern(namespace)
     val cutoff = System.currentTimeMillis() - staleTmpAgeMs
     try {
@@ -996,19 +959,6 @@ object NetflowDecoder {
           catch { case _: Exception => () } // another sweeper won
       }
     } catch { case _: java.io.FileNotFoundException => () }
-  }
-
-  /** Hadoop-FS twin of [[namespaceTemplateFiles]]. */
-  private def namespaceTemplateFilesFs(
-      conf: org.apache.hadoop.conf.Configuration,
-      dir: org.apache.hadoop.fs.Path, namespace: String)
-      : Seq[org.apache.hadoop.fs.Path] = {
-    val pat = nsFilePattern(namespace)
-    try rawFs(dir, conf).listStatus(dir).toSeq
-      .map(_.getPath)
-      .filter(p => pat.matcher(p.getName).matches())
-      .sortBy(_.getName)
-    catch { case _: java.io.FileNotFoundException => Nil }
   }
 
   /** Streaming decode: constant-memory single-pass per micro-batch,
@@ -1031,13 +981,12 @@ object NetflowDecoder {
     *   immediately instead of dropping flows until the exporter's next
     *   template announcement. On a cluster, point it at storage the
     *   executor can reach again after restart (shared fs, or a local
-    *   volume when executors are host-pinned). A dir WITH a URI
-    *   scheme (`hdfs://nn/...`, `file:///...`, `s3a://...`) goes
-    *   through the Hadoop FileSystem API — the cluster deployment
-    *   shape, where the store must be reachable from whichever host a
-    *   restarted task lands on; a bare path stays on fast local
-    *   java.io. The file format is an explicit versioned binary
-    *   record layout either way (see [[saveTemplates]]) — never Java
+    *   volume when executors are host-pinned). Every dir goes through
+    *   the Hadoop FileSystem API: a dir WITH a URI scheme
+    *   (`hdfs://nn/...`, `file:///...`, `s3a://...`) names its store,
+    *   and a bare path is the executor's local disk, never
+    *   `fs.defaultFS`. The file format is an explicit versioned
+    *   binary record layout (see [[saveTemplates]]) — never Java
     *   serialization. */
   def decodeStream(df: DataFrame, namespace: String,
                    payloadCol: String = "payload",
@@ -1048,64 +997,40 @@ object NetflowDecoder {
       : DataFrame = {
     val proj = df.select(col(payloadCol), col(tsCol).cast(LongType),
       col(srcIpCol).cast(LongType))
-    // URI-scheme dirs route through Hadoop FS; the executor-side
-    // closure needs the driver's Hadoop conf (S3 credentials, NN
-    // address), shipped via the broadcast-safe wrapper. Scheme
-    // detection parses the path — substring tests on "://" would
-    // misroute legal single-slash URIs ("file:/x", Path.toString's
-    // own rendering) onto java.io, which treats "file:/x" as a
-    // RELATIVE local path and silently writes under the task cwd.
-    val hadoopConf: Option[
-        org.apache.spark.util.SerializableConfiguration] =
-      templatesDir.filter(d =>
-          new org.apache.hadoop.fs.Path(d).toUri.getScheme != null)
-        .map(_ => new org.apache.spark.util.SerializableConfiguration(
-          df.sparkSession.sparkContext.hadoopConfiguration))
+    // the executor-side closure needs the driver's Hadoop conf (S3
+    // credentials, NN address), shipped via the broadcast-safe wrapper
+    val store = templatesDir.map(d =>
+      (d, new org.apache.spark.util.SerializableConfiguration(
+        df.sparkSession.sparkContext.hadoopConfiguration)))
     DecodeFlows.frame(proj, outSchema) { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val cache = streamCache(namespace, pid)
-      templatesDir.foreach { dir =>
+      store.foreach { case (dir, sc) =>
+        val conf = sc.value
+        val base = templateStore(dir)
         // first touch after a (re)start merges EVERY partition's file
         // for the namespace — routing may have changed since the files
         // were written, see namespaceTemplateFiles. The restore mark
-        // is set only AFTER the merge completes: the FS branch can
-        // throw (transient NN/store outage), and marking first would
-        // make the retried task skip the restore forever — a permanent
+        // is set only AFTER the merge completes: the store can throw
+        // (transient NN/store outage), and marking first would make
+        // the retried task skip the restore forever — a permanent
         // cold start with valid snapshots sitting on disk.
         val key = (namespace, pid)
-        val firstTouch = !restoredOnce.contains(key)
-        val persist: () => Unit = hadoopConf match {
-          case Some(sc) =>
-            val conf = sc.value
-            val base = new org.apache.hadoop.fs.Path(dir)
-            val f = new org.apache.hadoop.fs.Path(base,
-              templateFileName(namespace, pid))
-            if (firstTouch) {
-              rawFs(base, conf).mkdirs(base)
-              sweepStaleTmpFs(conf, base, namespace)
-              namespaceTemplateFilesFs(conf, base, namespace).foreach(
-                nf => loadTemplatesFs(conf, nf).foreach(s =>
-                  cache.synchronized(cache.restore(s))))
-              restoredOnce.add(key)
-            }
-            () => saveTemplatesFs(cache, conf, f)
-          case None =>
-            val f = templateFile(dir, namespace, pid)
-            if (firstTouch) {
-              sweepStaleTmp(dir, namespace)
-              namespaceTemplateFiles(dir, namespace).foreach(nf =>
-                loadTemplates(nf).foreach(s =>
-                  cache.synchronized(cache.restore(s))))
-              restoredOnce.add(key)
-            }
-            () => saveTemplates(cache, f)
+        if (!restoredOnce.contains(key)) {
+          rawFs(base, conf).mkdirs(base)
+          sweepStaleTmp(conf, base, namespace)
+          namespaceTemplateFiles(conf, base, namespace).foreach(nf =>
+            loadTemplates(conf, nf).foreach(s =>
+              cache.synchronized(cache.restore(s))))
+          restoredOnce.add(key)
         }
+        val f = new Path(base, templateFileName(namespace, pid))
         // persist at task end — the cache then contains everything this
         // micro-batch learned; an empty batch re-writes the restored
         // content (never less: the cache is merge-only within a JVM)
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit] { _ =>
-            try persist()
+            try saveTemplates(cache, conf, f)
             catch { case _: Exception => () } // never fail the task
           })
       }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.streaming._
   *
   * The reference needs a dedicated scanner thread because alert decay
   * and hysteresis must advance on ticks WITHOUT traffic
-  * (monit-objects-mavg-act.c:569-592); [[MavgTws]] models that with
-  * processing-time timers, which is right live but non-deterministic
+  * (monit-objects-mavg-act.c:569-592); [[MavgStream]] models that with
+  * processing-time timeouts, which is right live but non-deterministic
   * in a replay. Here the silent-key tick is an event-time timer chain:
   * each key registers a timer for its next unprocessed tick, and the
   * WATERMARK — not the wall clock — decides when a tick is complete
@@ -37,7 +37,7 @@ import org.apache.spark.sql.streaming._
   *
   * Scale shape: state per key is O(watermark lag) buffered ticks plus
   * one machine — bounded, keys shard across the state store exactly
-  * like [[MavgTws]]. The ONLY ordering assumption is the watermark
+  * like [[MavgStream]]. The ONLY ordering assumption is the watermark
   * contract itself (no rows for tick t after the watermark passes t),
   * which the caller's `withWatermark` declares.
   *
@@ -50,7 +50,7 @@ import org.apache.spark.sql.streaming._
   * ticks processed after it arrives, but a LOWERED one is ignored —
   * the old max wins retroactively. A live pipeline that needs
   * hot-reloaded limits to take effect downward should use
-  * [[MavgTws]], which reads the limit per wall-clock evaluation from
+  * [[MavgStream]], which reads the limit per wall-clock evaluation from
   * the reloadable config rather than folding it into keyed state.
   *
   * @param nTicks         grid length; ticks are 1-second grid slots
@@ -105,7 +105,7 @@ class AlertTimelineStreamProcessor(nTicks: Int, epoch0: Long,
       buf = buf.toSeq.sortBy(_._1).map { case (i, v) => Buf(i, v) }))
     // arm the chain at the key's first unprocessed tick; ONE timer per
     // key at any instant (an unconditional register would mint one
-    // chain per data batch — the MavgTws lesson)
+    // chain per data batch)
     if (nextTick >= 0 && !getHandle.listTimers().hasNext)
       getHandle.registerTimer(tickMs(nextTick))
     Iterator.empty
@@ -119,7 +119,7 @@ class AlertTimelineStreamProcessor(nTicks: Int, epoch0: Long,
     val wmMs = timerValues.getCurrentWatermarkInMs()
     var buf = st0.buf.map(b => b.idx -> b.v).toMap
     var machine: Option[LimState] =
-      if (st0.hasSt) Some(MavgTwsProcessor.fromS(st0.st)) else None
+      if (st0.hasSt) Some(MavgStream.fromS(st0.st)) else None
     var t = st0.nextTick
     val out = Seq.newBuilder[Event]
     val windowNs = windowTicks.toLong * TickNs
@@ -149,7 +149,7 @@ class AlertTimelineStreamProcessor(nTicks: Int, epoch0: Long,
     if (t >= nTicks) state.clear() // grid done: state follows live keys
     else {
       state.update(State(t, st0.limit, machine.isDefined,
-        machine.map(MavgTwsProcessor.toS).getOrElse(st0.st),
+        machine.map(MavgStream.toS).getOrElse(st0.st),
         buf.toSeq.sortBy(_._1).map { case (i, v) => Buf(i, v) }))
       getHandle.registerTimer(tickMs(t))
     }

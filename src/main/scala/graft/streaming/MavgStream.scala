@@ -81,13 +81,13 @@ object MavgStream {
         * back to the uniform `back2normSec`. */
       back2normsSec: Seq[Long] = Nil)
 
-  private def toS(s: LimState): LimStateS =
+  private[streaming] def toS(s: LimState): LimStateS =
     LimStateS(s.state match {
       case New => 0; case Update => 1; case AlmostGone => 2; case Gone => 3
     }, s.timeLastNs, s.timeDumpNs, s.timeBack2NormNs, s.value, s.limit,
       s.back2normNs)
 
-  private def fromS(s: LimStateS): LimState =
+  private[streaming] def fromS(s: LimStateS): LimState =
     LimState(s.state match {
       case 0 => New; case 1 => Update; case 2 => AlmostGone; case _ => Gone
     }, s.timeLast, s.timeDump, s.timeB2n, s.value, s.limit, s.b2n)
@@ -104,9 +104,8 @@ object MavgStream {
         OutputMode.Append, timeout)(process(conf))
   }
 
-  /** Per-key limit thresholds (shared by the flatMapGroupsWithState and
-    * transformWithState processors — one resolution semantic). */
-  private[streaming] def resolveLimits(conf: Conf, key: String): Seq[Double] =
+  /** Per-key limit thresholds for one lifecycle instant. */
+  private def resolveLimits(conf: Conf, key: String): Seq[Double] =
     if (conf.limitsProviders.nonEmpty)
       // per-section resolution: a key row in one section's file never
       // silences the OTHER sections' checks
@@ -123,25 +122,24 @@ object MavgStream {
     }
 
   /** Per-section hysteresis ns (falls back to the uniform value). */
-  private[streaming] def b2nNs(conf: Conf, i: Int): Long =
+  private def b2nNs(conf: Conf, i: Int): Long =
     conf.back2normsSec.lift(i).getOrElse(conf.back2normSec) * 1_000_000_000L
 
-  /** Shared per-key step: fold arrivals (or take a tick instant), check
+  /** Per-key step: fold arrivals (or take a tick instant), check
     * limits, advance the lifecycle, prune finished entries, and decide
-    * retirement. Both stateful operators delegate here so the two can
-    * never diverge semantically.
+    * retirement.
     *
     * @return (new n, new tLast, surviving lim entries, events, retire) —
     *         retire=true means the key's state can be dropped entirely
     *         (overlimit mode, nothing tracked, value fully decayed); the
-    *         caller removes its state and stops re-arming its timer.
+    *         caller removes its state and stops re-arming its timeout.
     *         Underlimit keys never retire: silence IS their alert
     *         condition, so the watched key set must stay resident —
     *         size underlimit key cardinality accordingly (the reference
     *         has the same property: its underlimit scanner walks a
     *         configured key table, monit-objects-mavg-under.c).
     */
-  private[streaming] def step(conf: Conf, key: String, rows: Seq[Input],
+  private def step(conf: Conf, key: String, rows: Seq[Input],
       n0: Double, tLast0: Long, lims0: Map[Int, LimState],
       tickNowNs: Option[Long])
       : (Double, Long, Map[Int, LimState], Seq[AlertRow], Boolean) = {

@@ -505,9 +505,11 @@ class DecoderSpec extends SparkTest {
       NetflowDecoder.Template(Seq((2, 4, 0L))))
     c.putSampling(9, 7, 150L, 64L)
     val f = new java.io.File(dir, "roundtrip.tmpl")
-    NetflowDecoder.saveTemplates(c, f)
+    val fp = new org.apache.hadoop.fs.Path(f.toURI)
+    val conf = spark.sparkContext.hadoopConfiguration
+    NetflowDecoder.saveTemplates(c, conf, fp)
     val c2 = new NetflowDecoder.TemplateCache()
-    c2.restore(NetflowDecoder.loadTemplates(f).get)
+    c2.restore(NetflowDecoder.loadTemplates(conf, fp).get)
     assert(c2.get(9, 7, 9, 256, 150L).map(_.fields)
       == Some(Seq((1, 4, 0L))), "epoch-100 revision must floor-match")
     assert(c2.get(9, 7, 9, 256, 250L).map(_.fields)
@@ -515,7 +517,7 @@ class DecoderSpec extends SparkTest {
     assert(c2.getSampling(9, 7, 160L) == Some(64L))
     // corrupt file = cold start, not an error
     java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3))
-    assert(NetflowDecoder.loadTemplates(f).isEmpty)
+    assert(NetflowDecoder.loadTemplates(conf, fp).isEmpty)
   }
 
   test("template snapshot format is explicit binary: hostile or " +
@@ -525,34 +527,36 @@ class DecoderSpec extends SparkTest {
     val c = new NetflowDecoder.TemplateCache()
     c.put(1, 2, 9, 256, 100L, NetflowDecoder.Template(Seq((1, 4, 0L))))
     val f = new java.io.File(dir.toFile, "fmt.tmpl")
-    NetflowDecoder.saveTemplates(c, f)
+    val fp = new org.apache.hadoop.fs.Path(f.toURI)
+    val conf = spark.sparkContext.hadoopConfiguration
+    NetflowDecoder.saveTemplates(c, conf, fp)
     val good = Files.readAllBytes(f.toPath)
     // the writer must emit the documented magic+version header —
     // proof no ObjectOutputStream header (0xACED) is ever on disk
     assert(good.take(8).toSeq ==
       Seq[Byte](0x47, 0x46, 0x54, 0x53, 0, 0, 0, 1), "GFTS v1 header")
-    assert(NetflowDecoder.loadTemplates(f).isDefined)
+    assert(NetflowDecoder.loadTemplates(conf, fp).isDefined)
     // a Java-serialization payload (the pre-r15 format, and the gadget
     // vector) must be REJECTED as a cold start, not fed to readObject
     val oos = new java.io.ByteArrayOutputStream()
     val o = new java.io.ObjectOutputStream(oos)
     o.writeObject("not a snapshot"); o.close()
     Files.write(f.toPath, oos.toByteArray)
-    assert(NetflowDecoder.loadTemplates(f).isEmpty, "0xACED stream")
+    assert(NetflowDecoder.loadTemplates(conf, fp).isEmpty, "0xACED stream")
     // unknown version = cold start (format evolution is explicit)
     val badVer = good.clone(); badVer(7) = 99
     Files.write(f.toPath, badVer)
-    assert(NetflowDecoder.loadTemplates(f).isEmpty, "version 99")
+    assert(NetflowDecoder.loadTemplates(conf, fp).isEmpty, "version 99")
     // truncated mid-record = cold start
     Files.write(f.toPath, good.dropRight(3))
-    assert(NetflowDecoder.loadTemplates(f).isEmpty, "truncated")
+    assert(NetflowDecoder.loadTemplates(conf, fp).isEmpty, "truncated")
     // a hostile count field must not drive allocation: flip the
     // template count to Int.MaxValue — bounded parse, cold start
     val badCount = good.clone()
     badCount(8) = 0x7f.toByte; badCount(9) = 0xff.toByte
     badCount(10) = 0xff.toByte; badCount(11) = 0xff.toByte
     Files.write(f.toPath, badCount)
-    assert(NetflowDecoder.loadTemplates(f).isEmpty, "hostile count")
+    assert(NetflowDecoder.loadTemplates(conf, fp).isEmpty, "hostile count")
   }
 
   test("templatesDir restore merges ALL partition files: a routing " +
@@ -649,12 +653,12 @@ class DecoderSpec extends SparkTest {
     val p = new org.apache.hadoop.fs.Path(dir, "direct.tmpl")
     val c = new NetflowDecoder.TemplateCache()
     c.put(3, 4, 9, 300, 50L, NetflowDecoder.Template(Seq((1, 4, 0L))))
-    NetflowDecoder.saveTemplatesFs(c, conf, p) // create
+    NetflowDecoder.saveTemplates(c, conf, p) // create
     c.put(3, 4, 9, 301, 60L, NetflowDecoder.Template(Seq((2, 4, 0L))))
-    NetflowDecoder.saveTemplatesFs(c, conf, p) // overwrite-rename
-    val back = NetflowDecoder.loadTemplatesFs(conf, p)
+    NetflowDecoder.saveTemplates(c, conf, p) // overwrite-rename
+    val back = NetflowDecoder.loadTemplates(conf, p)
     assert(back.map(_.templates.size) == Some(2))
-    assert(NetflowDecoder.loadTemplatesFs(conf,
+    assert(NetflowDecoder.loadTemplates(conf,
       new org.apache.hadoop.fs.Path(dir, "absent.tmpl")).isEmpty)
   }
 
@@ -699,8 +703,10 @@ class DecoderSpec extends SparkTest {
     // and the durable file still holds the template (never clobbered)
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".tmpl"))
+    val conf = spark.sparkContext.hadoopConfiguration
     assert(files.exists(f =>
-      NetflowDecoder.loadTemplates(f).exists(_.templates.nonEmpty)),
+      NetflowDecoder.loadTemplates(conf, new org.apache.hadoop.fs.Path(
+        f.toURI)).exists(_.templates.nonEmpty)),
       "the snapshot file must keep its templates across the sweep")
     NetflowDecoder.clearStreamCache(ns)
   }

@@ -27,18 +27,6 @@ class MavgSpec extends SparkTest {
     assert(out(0).getLong(1) == 15L)
   }
 
-  test("decayedFinalDouble matches the scalar reference model " +
-    "(INTERNALS.md:144-162)") {
-    val events = Seq((100L, 600L), (130L, 300L), (190L, 60L), (1000L, 42L))
-    val expect = Mavg.scalarTrace(events, 300).last
-    val df = flowDf(Seq("k", "ts", "id", "v"),
-      events.zipWithIndex.map { case ((t, v), i) =>
-        Seq(1L, t, i.toLong, v) })
-    val out = Mavg.decayedFinalDouble(df,
-      Mavg.Conf(Seq("k"), "ts", "id", "v", 300)).collect()
-    assert(out(0).getDouble(1) == expect)
-  }
-
   test("limits CSV parse (CONFIG.md:438-469)") {
     val csv = """# fields = ["src host", "proto", "packets"]
       |1.2.3.4,1,100000

@@ -204,6 +204,60 @@ class MavgStreamSpec extends SparkTest {
     assert(out4.count(_.event == "start") == 1,
       s"re-silenced key must start a fresh underlimit alert: $out4")
   }
+
+  test("hysteresis timeline survives a query restart (no duplicate " +
+    "start, end fires on schedule)") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val S = 1_000_000_000L
+    val mem = MemoryStream[Input]
+    // window 5 s, limit 100/s, hysteresis 30 s; ticks ride the data path
+    // (tickIntervalMs = 0) so the lifecycle is event-time deterministic
+    val alerts = MavgStream(mem.toDS(),
+      Conf(windowSec = 5, defaultLimits = Seq(100.0),
+        back2normSec = 30, isOver = true, tickIntervalMs = 0))
+    val ckpt = java.nio.file.Files.createTempDirectory("mavg_restart")
+    // memory sink can't recover from a checkpoint; foreachBatch can
+    val sunk = new java.util.concurrent.ConcurrentLinkedQueue[AlertRow]()
+    def run(body: => Unit): Seq[AlertRow] = {
+      sunk.clear()
+      val q = alerts.writeStream
+        .outputMode(OutputMode.Append)
+        .option("checkpointLocation", ckpt.toString)
+        .foreachBatch { (b: Dataset[AlertRow], _: Long) =>
+          b.collect().foreach(sunk.add); ()
+        }
+        .start()
+      try { body; sunk.toArray(Array.empty[AlertRow]).toSeq }
+      finally q.stop()
+    }
+    // phase 1: breach at t=10 (600/5 = 120 ≥ 100) → NEW → Started;
+    // quiet row at t=15 decays the value to 0 → ALMOST_GONE with
+    // back2norm clock started at t=15 (GONE due after t=45)
+    val p1 = run {
+      mem.addData(Input("a", 10 * S, 600.0))
+      spark.streams.active.foreach(_.processAllAvailable())
+      mem.addData(Input("a", 15 * S, 1.0))
+      spark.streams.active.foreach(_.processAllAvailable())
+    }
+    assert(p1.count(r => r.key == "a" && r.event == "start") == 1, p1)
+    assert(!p1.exists(_.event == "end"), p1)
+
+    // phase 2: new query, same checkpoint — the state store must restore
+    // the mid-ALMOST_GONE machine. t=20 is inside the hysteresis
+    // window (must NOT re-fire start: the key is not (absent)); t=50
+    // is past 15+30 → Ended fires exactly once.
+    val p2 = run {
+      mem.addData(Input("a", 20 * S, 1.0))
+      spark.streams.active.foreach(_.processAllAvailable())
+      mem.addData(Input("a", 50 * S, 1.0))
+      spark.streams.active.foreach(_.processAllAvailable())
+    }
+    assert(!p2.exists(_.event == "start"),
+      s"restart must not re-fire start (state lost?): $p2")
+    assert(p2.count(r => r.key == "a" && r.event == "end") == 1,
+      s"expected exactly one end after hysteresis: $p2")
+  }
 }
 
 /** Minimal GroupState stub for direct processor tests. */
@@ -227,106 +281,4 @@ class TestGroupState[T] extends org.apache.spark.sql.streaming.GroupState[T] {
     additionalDuration: String): Unit = ()
   override def getCurrentWatermarkMs(): Long = 0L
   override def getCurrentProcessingTimeMs(): Long = processingTimeMs
-}
-
-/** Spark 4 transformWithState variant: same semantics, native per-key
-  * timers. */
-class MavgTwsSpec extends SparkTest {
-  test("TWS overlimit alert fires through a streaming query") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.{MavgStream, MavgTwsProcessor}
-    import graft.streaming.MavgStream.{AlertRow, Conf, Input}
-    val S = 1_000_000_000L
-    // transformWithState needs a multi-column-family store (RocksDB)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Input]
-    val alerts = MavgTwsProcessor(mem.toDS(),
-      Conf(windowSec = 5, defaultLimits = Seq(100.0),
-        back2normSec = 30, isOver = true, tickIntervalMs = 0))
-    val q = alerts.writeStream
-      .format("memory").queryName("tws_alerts")
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("tws").toString)
-      .start()
-    try {
-      mem.addData(Input("a", 10 * S, 600.0), Input("b", 10 * S, 10.0))
-      q.processAllAvailable()
-      val rows = spark.table("tws_alerts").as[AlertRow].collect().toSeq
-      assert(rows.exists(r => r.key == "a" && r.event == "start"),
-        s"expected start alert, got $rows")
-      assert(!rows.exists(_.key == "b"))
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
-  test("hysteresis timeline survives a query restart (no duplicate " +
-    "start, end fires on schedule)") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.MavgTwsProcessor
-    import graft.streaming.MavgStream.{AlertRow, Conf, Input}
-    val S = 1_000_000_000L
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Input]
-    // window 5 s, limit 100/s, hysteresis 30 s; ticks ride the data path
-    // (tickIntervalMs = 0) so the lifecycle is event-time deterministic
-    val alerts = MavgTwsProcessor(mem.toDS(),
-      Conf(windowSec = 5, defaultLimits = Seq(100.0),
-        back2normSec = 30, isOver = true, tickIntervalMs = 0))
-    val ckpt = java.nio.file.Files.createTempDirectory("tws_restart")
-    // memory sink can't recover from a checkpoint; foreachBatch can
-    val sunk = new java.util.concurrent.ConcurrentLinkedQueue[AlertRow]()
-    def run(body: => Unit): Seq[AlertRow] = {
-      sunk.clear()
-      val q = alerts.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (b: Dataset[AlertRow], _: Long) =>
-          b.collect().foreach(sunk.add); ()
-        }
-        .start()
-      try { body; sunk.toArray(Array.empty[AlertRow]).toSeq }
-      finally q.stop()
-    }
-    try {
-      // phase 1: breach at t=10 (600/5 = 120 ≥ 100) → NEW → Started;
-      // quiet row at t=15 decays the value to 0 → ALMOST_GONE with
-      // back2norm clock started at t=15 (GONE due after t=45)
-      val p1 = run {
-        mem.addData(Input("a", 10 * S, 600.0))
-        spark.streams.active.foreach(_.processAllAvailable())
-        mem.addData(Input("a", 15 * S, 1.0))
-        spark.streams.active.foreach(_.processAllAvailable())
-      }
-      assert(p1.count(r => r.key == "a" && r.event == "start") == 1, p1)
-      assert(!p1.exists(_.event == "end"), p1)
-
-      // phase 2: new query, same checkpoint — RocksDB state must restore
-      // the mid-ALMOST_GONE machine. t=20 is inside the hysteresis
-      // window (must NOT re-fire start: the key is not (absent)); t=50
-      // is past 15+30 → Ended fires exactly once.
-      val p2 = run {
-        mem.addData(Input("a", 20 * S, 1.0))
-        spark.streams.active.foreach(_.processAllAvailable())
-        mem.addData(Input("a", 50 * S, 1.0))
-        spark.streams.active.foreach(_.processAllAvailable())
-      }
-      assert(!p2.exists(_.event == "start"),
-        s"restart must not re-fire start (state lost?): $p2")
-      assert(p2.count(r => r.key == "a" && r.event == "end") == 1,
-        s"expected exactly one end after hysteresis: $p2")
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
 }

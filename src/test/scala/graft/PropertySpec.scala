@@ -670,15 +670,17 @@ class PropertySpec extends SparkTest {
       Gen.chooseNum(1L, 1L << 20)).map { case (a, b, c, d) =>
       SamplingSnapshotEntry(a, b, c, d) }
     val dir = java.nio.file.Files.createTempDirectory("gfts_prop")
+    val conf = new org.apache.hadoop.conf.Configuration()
     samples(Gen.zip(Gen.listOfN(6, genTmpl), Gen.listOfN(4, genSamp)),
         20).zipWithIndex.foreach { case ((ts, ss), i) =>
       // round-trip through a REAL cache: save serializes whatever the
       // cache's snapshot() yields, load must restore it identically
       val c = new NetflowDecoder.TemplateCache()
       c.restore(NetflowDecoder.TemplateSnapshot(ts, ss))
-      val f = new java.io.File(dir.toFile, s"prop$i.tmpl")
-      NetflowDecoder.saveTemplates(c, f)
-      val back = NetflowDecoder.loadTemplates(f)
+      val f = new org.apache.hadoop.fs.Path(
+        dir.resolve(s"prop$i.tmpl").toUri)
+      NetflowDecoder.saveTemplates(c, conf, f)
+      val back = NetflowDecoder.loadTemplates(conf, f)
       assert(back.isDefined, s"case $i failed to load")
       val c2 = new NetflowDecoder.TemplateCache()
       c2.restore(back.get)
@@ -700,7 +702,8 @@ class PropertySpec extends SparkTest {
         java.nio.file.Files.write(f.toPath, bytes)
         // only a byte-perfect GFTS v1 header could even begin parsing;
         // random bytes hit the magic/version/count guards -> None
-        assert(NetflowDecoder.loadTemplates(f).isEmpty
+        assert(NetflowDecoder.loadTemplates(conf,
+            new org.apache.hadoop.fs.Path(f.toURI)).isEmpty
           || bytes.length >= 12 && bytes.take(8).toSeq ==
             Seq[Byte](0x47, 0x46, 0x54, 0x53, 0, 0, 0, 1))
       }

@@ -237,6 +237,34 @@ class SinkConfigSpec extends SparkTest {
       e.getMessage.contains("'fwm'"), e.getMessage)
   }
 
+  test("alert sink: a packet-sourced key with '/' and '..' writes and " +
+    "deletes only inside notifDir; plain keys keep their file names") {
+    import graft.sinks.AlertSink
+    import graft.streaming.MavgStream.AlertRow
+    import java.nio.file.Files
+    val base = Files.createTempDirectory("graft_notif_esc")
+    val notif = base.resolve("notif")
+    // the directory a raw join of the hostile key would walk through
+    Files.createDirectories(notif.resolve("mo-m-lim-x"))
+    val sink = new AlertSink(AlertSink.Conf(notif.toString, "mo", "m",
+      Seq(AlertSink.Limit("lim"))))
+    // e.g. a TLS ClientHello SNI naming a path
+    val hostile = "x/../../outside"
+    sink.handle(Seq(AlertRow(hostile, 0, "start", 500.0, 100.0, 1L)))
+    assert(!Files.exists(base.resolve("outside")),
+      "start must not write outside notifDir")
+    val inside = notif.resolve("mo-m-lim-x%2F..%2F..%2Foutside")
+    assert(Files.exists(inside))
+    sink.handle(Seq(AlertRow(hostile, 0, "end", 1.0, 100.0, 2L)))
+    assert(!Files.exists(inside), "end deletes the file start wrote")
+    // '\', '%' and control characters are encoded too
+    assert(sink.fileName("lim", Seq("a\\b%c\u0001d")).getFileName
+      .toString == "mo-m-lim-a%5Cb%25c%01d")
+    // ordinary IP, port and hostname keys: today's names, unchanged
+    assert(sink.fileName("lim", Seq("10.0.0.1", "443", "www.example.com"))
+      == notif.resolve("mo-m-lim-10.0.0.1-443-www.example.com"))
+  }
+
   test("streaming fwm: window closes when the watermark passes " +
     "(two-bank swap analog)") {
     implicit val sqlCtx = spark.sqlContext
@@ -282,8 +310,8 @@ class MavgDumpSpec extends SparkTest {
     assert(a == "1.2.3.4,17,2.500\n1.2.3.4,6,100.000")
   }
 
-  test("dumpD accepts a DoubleType n column (decayedFinalDouble / " +
-    "streaming-state snapshots), not just the fixed-point Long") {
+  test("dumpD accepts a DoubleType n column (streaming-state " +
+    "snapshots), not just the fixed-point Long") {
     import graft.sinks.MavgDump
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -297,42 +325,36 @@ class MavgDumpSpec extends SparkTest {
       "10,5.000")
   }
 
-  test("dumpDFromCheckpoint renders the live MavgTws store — the " +
-    "mavg 'dump' knob end to end (monit-objects-mavg-dump.c)") {
+  test("dumpDFromCheckpoint renders the live MavgStream store " +
+    "(monit-objects-mavg-dump.c)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     import graft.sinks.MavgDump
-    import graft.streaming.MavgTwsProcessor
+    import graft.streaming.MavgStream
     import graft.streaming.MavgStream.{Conf, Input}
     val S = 1_000_000_000L
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
     val ckpt = java.nio.file.Files.createTempDirectory("mavg_dump")
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Input]
+    // no alerts in play (huge limit), event-time deterministic ticks
+    val q = MavgStream(mem.toDS(),
+        Conf(windowSec = 5, defaultLimits = Seq(1e18),
+          back2normSec = 30, isOver = true, tickIntervalMs = 0))
+      .writeStream.format("memory").queryName("mavg_dump_sink")
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
+      .option("checkpointLocation", ckpt.toString)
+      .start()
     try {
-      val mem = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[Input]
-      // no alerts in play (huge limit), event-time deterministic ticks
-      val q = MavgTwsProcessor(mem.toDS(),
-          Conf(windowSec = 5, defaultLimits = Seq(1e18),
-            back2normSec = 30, isOver = true, tickIntervalMs = 0))
-        .writeStream.format("memory").queryName("mavg_dump_sink")
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try {
-        mem.addData(Input("a", 10 * S, 600.0), Input("b", 10 * S, 1200.0))
-        q.processAllAvailable()
-      } finally q.stop()
-      // decay-corrected to t=12s: a = 600·(1−2/5)/5 = 72/s,
-      // b = 1200·0.6/5 = 144/s — what the reference's .d file would
-      // print at that instant
-      assert(MavgDump.dumpDFromCheckpoint(spark, ckpt.toString,
-        windowSec = 5, atNs = 12 * S) == "a,72.000\nb,144.000")
-      // past the window the rates have fully decayed
-      assert(MavgDump.dumpDFromCheckpoint(spark, ckpt.toString,
-        windowSec = 5, atNs = 30 * S) == "a,0.000\nb,0.000")
-    } finally spark.conf.unset(
-      "spark.sql.streaming.stateStore.providerClass")
+      mem.addData(Input("a", 10 * S, 600.0), Input("b", 10 * S, 1200.0))
+      q.processAllAvailable()
+    } finally q.stop()
+    // decay-corrected to t=12s: a = 600·(1−2/5)/5 = 72/s,
+    // b = 1200·0.6/5 = 144/s — what the reference's .d file would
+    // print at that instant
+    assert(MavgDump.dumpDFromCheckpoint(spark, ckpt.toString,
+      windowSec = 5, atNs = 12 * S) == "a,72.000\nb,144.000")
+    // past the window the rates have fully decayed
+    assert(MavgDump.dumpDFromCheckpoint(spark, ckpt.toString,
+      windowSec = 5, atNs = 30 * S) == "a,0.000\nb,0.000")
   }
 }
