@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.streaming.AlertMachine
-import graft.streaming.AlertMachine.{Ended, LimState, Started, Updated}
+import graft.streaming.AlertMachine.LimState
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
@@ -48,8 +48,6 @@ import org.apache.spark.sql.types._
   */
 object AlertTimeline {
 
-  private val TickNs = 1_000_000_000L // 1 grid tick = 1 machine "second"
-
   val outSchema: StructType = StructType(Seq(
     StructField("key", LongType, nullable = false),
     StructField("t", LongType, nullable = false),
@@ -61,8 +59,6 @@ object AlertTimeline {
              windowTicks: Int = 8, back2normTicks: Int = 2): DataFrame = {
     val s = series.sparkSession
     import s.implicits._
-    val windowNs = windowTicks * TickNs
-    val back2normNs = back2normTicks * TickNs
     val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
     series
       .select(col(keyCol).cast(LongType), col(idxCol).cast(LongType),
@@ -90,26 +86,10 @@ object AlertTimeline {
         }
         var st: Option[LimState] = None
         val out = Seq.newBuilder[Row]
-        var i = 0
-        while (i < nTicks) {
-          val nowNs = i * TickNs
-          if (seen(i) && v(i) > limit)
-            st = Some(AlertMachine.onBreach(st, nowNs, v(i), limit,
-              back2normNs))
-          st.foreach { cur =>
-            val (next, events) =
-              AlertMachine.onTick(cur, nowNs, windowNs, isOver = true)
-            st = Some(next)
-            events.foreach {
-              case Started(value, _) =>
-                out += Row(key, i.toLong, "started", value)
-              case Updated(value) =>
-                out += Row(key, i.toLong, "updated", value)
-              case Ended(value) =>
-                out += Row(key, i.toLong, "ended", value)
-            }
-          }
-          i += 1
+        (0 until nTicks).foreach { i =>
+          st = AlertMachine.replayTick(st, i, seen(i), v(i), limit,
+            windowTicks, back2normTicks)((ev, x) =>
+            out += Row(key, i.toLong, ev, x))
         }
         out.result().iterator
       }(enc)

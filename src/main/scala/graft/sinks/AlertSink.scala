@@ -18,7 +18,9 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * fields joined by '-'}`, with `/`, `\`, `%` and control characters
   * in each part percent-encoded: key fields such as `sni` or
   * `dns-name` come from packet bytes, and a `/` in one must not steer
-  * the file out of `dir`; content (build_file_content:86-118): key
+  * the file out of `dir`; a name past 255 bytes is cut and tagged
+  * with a hash of the whole name, since an SNI or DNS-name key can be
+  * that long; content (build_file_content:86-118): key
   * fields space-separated, then the breaching value and the limit as
   * integers. Script argv (exec_script + STEP-BY-STEP.md:934-973):
   * `script mo mavg limit-name notification-file fields... value limit`.
@@ -53,6 +55,25 @@ object AlertSink {
       else c.toString
     }
 
+  /** A file name cut to the 255-byte limit of common filesystems: a
+    * longer one keeps its longest prefix that fits whole characters
+    * and ends in `~` plus 16 hex digits of its SHA-256, so distinct
+    * long keys keep distinct files. */
+  private def capped(name: String): String = {
+    val utf8 = name.getBytes(StandardCharsets.UTF_8)
+    if (utf8.length <= 255) name
+    else {
+      val tag = "~" + java.security.MessageDigest.getInstance("SHA-256")
+        .digest(utf8).take(8).map(b => f"${b & 0xff}%02x").mkString
+      // the encoder stops before the first character that would not
+      // fit whole, leaving `in` positioned there
+      val in = java.nio.CharBuffer.wrap(name)
+      StandardCharsets.UTF_8.newEncoder().encode(in,
+        java.nio.ByteBuffer.allocate(255 - tag.length), true)
+      name.substring(0, in.position()) + tag
+    }
+  }
+
   /** Event precedence inside one batch at equal timestamps. */
   private val eventOrder = Map("start" -> 0, "update" -> 1, "end" -> 2)
 }
@@ -69,8 +90,8 @@ final class AlertSink(conf: AlertSink.Conf) extends Serializable {
 
   def fileName(limitName: String, fields: Seq[String]): Path = {
     val dir = Paths.get(conf.notifDir)
-    val file = dir.resolve((Seq(conf.moName, conf.mavgName, limitName) ++
-      fields).map(pathSafe).mkString("-"))
+    val file = dir.resolve(capped((Seq(conf.moName, conf.mavgName,
+      limitName) ++ fields).map(pathSafe).mkString("-")))
     require(file.toAbsolutePath.normalize.getParent ==
       dir.toAbsolutePath.normalize,
       s"AlertSink: notification file '$file' escapes '${conf.notifDir}'")

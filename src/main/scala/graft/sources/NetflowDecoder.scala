@@ -12,7 +12,8 @@ import java.nio.charset.StandardCharsets
 
 import scala.jdk.CollectionConverters._
 
-/** NetFlow v5/v9 and IPFIX (RFC 7011) decoders.
+/** NetFlow v5/v9 and IPFIX (RFC 7011) decoder: one template-driven
+  * path for all three dialects.
   *
   * Wire formats are public standards; the decode strategy mirrors the
   * reference's shape (SURVEY.md §2.1): templates cached per
@@ -20,7 +21,13 @@ import scala.jdk.CollectionConverters._
   * netflow-templates.c:100-252 — and each data record dispatched
   * per-field by NetFlow field id into the canonical FlowSchema columns
   * (the reference's 65536-entry function table, netflow.c:56,824-837,
-  * becomes a Map lookup).
+  * becomes a Map lookup). v9 and IPFIX share one set walker, told
+  * apart by a private `Dialect` (header layout, set ids, options
+  * header, enterprise bit, message length). v5 is a constant template
+  * over its fixed 48-byte record, the reference's NF5_FIELDS mapping
+  * onto v9 field ids. Every data record of every dialect goes through
+  * one record loop, which writes a flow row or, for an options
+  * template, harvests the exporter's sampling rate.
   *
   * Distribution model: packets are decoded per partition by the
   * [[DecodeFlows]] plan node; the template cache is partition-local, so
@@ -43,12 +50,18 @@ object NetflowDecoder {
     * they must never hit the field dispatch). */
   final case class Template(fields: Seq[(Int, Int, Long)],
                             isOptions: Boolean = false) {
-    // record-layout sums, computed once per template instead of per
-    // record (65535 marks an IPFIX variable-length field)
-    lazy val recLen: Int = fields.iterator.map(_._2).sum
-    lazy val varFields: Int = fields.count(_._2 == 65535)
-    lazy val fixedLen: Int =
-      fields.iterator.map(_._2).filter(_ != 65535).sum
+    // the record loop's flat view, built on a revision's first data set
+    // (a re-announced template that no record uses costs nothing); 65535
+    // is an IPFIX variable-length field, or a plain v9 length
+    private[sources] lazy val ids: Array[Int] =
+      fields.iterator.map(_._1).toArray
+    private[sources] lazy val lens: Array[Int] =
+      fields.iterator.map(_._2).toArray
+    private[sources] lazy val ents: Array[Long] =
+      fields.iterator.map(_._3).toArray
+    private[sources] lazy val varFields: Int = lens.count(_ == 65535)
+    private[sources] lazy val fixedLen: Int =
+      lens.iterator.filter(_ != 65535).sum
   }
 
   /** Partition-local template store with LRU eviction and EPOCH
@@ -438,285 +451,191 @@ object NetflowDecoder {
                           cache: TemplateCache,
                           entMap: Map[(Long, Int), Int],
                           ph: Phase): Seq[Array[Any]] = {
-    if (payload.length < 2) return Nil
-    u16(payload, 0) match {
-      case 5  => if (ph.flows) decodeV5(payload, tsSec, srcIp) else Nil
-      case 9  => decodeV9(payload, tsSec, srcIp, cache, ph)
-      case 10 => decodeIpfix(payload, tsSec, srcIp, cache, entMap, ph)
-      case _  => Nil
+    val d = new PacketDecode(payload, tsSec, srcIp, cache, entMap)
+    if (payload.length >= 2) u16(payload, 0) match {
+      case 5 if ph.flows && payload.length >= 24 =>
+        // header sampling_interval (bytes 22-23): 2-bit mode + 14-bit
+        // value (public v5 spec; the reference maps it onto the
+        // exporter rate)
+        val rate = u16(payload, 22) & 0x3fff
+        d.records(v5Template, 24,
+          math.min(payload.length, 24 + u16(payload, 2) * 48),
+          varLen = false, 0L, if (rate > 0) Long.box(rate.toLong) else null)
+      case 9  => d.sets(V9, ph)
+      case 10 => d.sets(Ipfix, ph)
+      case _  => ()
     }
+    d.out.result()
   }
 
-  // NetFlow v5: 24-byte header + 48-byte fixed records
-  // (field order per the public v5 spec; reference netflow.h NF5_FIELDS)
+  // NetFlow v5: 24-byte header + 48-byte fixed records, decoded as one
+  // constant template (field order per the public v5 spec; reference
+  // netflow.h NF5_FIELDS maps it onto v9 field ids the same way)
   private val v5Layout: Seq[(Int, Int)] = Seq(
     // (netflow field id, length); id -1 = skip
     8 -> 4, 12 -> 4, 15 -> 4, 10 -> 2, 14 -> 2, 2 -> 4, 1 -> 4,
     22 -> 4, 21 -> 4, 7 -> 2, 11 -> 2, -1 -> 1, 6 -> 1, 4 -> 1,
     5 -> 1, 16 -> 2, 17 -> 2, 9 -> 1, 13 -> 1, -1 -> 2)
+  private val v5Template =
+    Template(v5Layout.map { case (fid, len) => (fid, len, 0L) })
 
-  private def decodeV5(b: Array[Byte], tsSec: Long,
-                       srcIp: Long): Seq[Array[Any]] = {
-    if (b.length < 24) return Nil
-    val count = u16(b, 2)
-    // header sampling_interval (bytes 22-23): 2-bit mode + 14-bit value
-    // (public v5 spec; the reference maps it onto the exporter rate)
-    val sampling = u16(b, 22) & 0x3fff
+  /** What separates the two template dialects in the one set walker:
+    * NetFlow v9 (RFC 3954) and IPFIX (RFC 7011). Only IPFIX ends the
+    * walk at its header's message length, sets an enterprise bit on a
+    * field spec and marks a variable-length field with length 65535;
+    * in v9, 65535 is an ordinary length. The options-template set id
+    * is the template set id + 1 in both. */
+  private final case class Dialect(version: Int, headerLen: Int,
+                                   idOff: Int, templateSet: Int) {
+    val ipfix: Boolean = version == 10
+  }
+  private val V9 = Dialect(9, 20, 16, 0)
+  private val Ipfix = Dialect(10, 16, 12, 2)
+
+  /** Options-data fields that carry the exporter's sampling interval:
+    * 34 SAMPLING_INTERVAL, 50 SAMPLER_RANDOM_INTERVAL, 305
+    * samplingPacketInterval. */
+  private val SamplingFields = Set(34, 50, 305)
+
+  /** One packet's decode: the set walker and the record loop, writing
+    * flow rows into `out`. */
+  private final class PacketDecode(b: Array[Byte], tsSec: Long,
+                                   srcIp: Long, cache: TemplateCache,
+                                   entMap: Map[(Long, Int), Int]) {
     val out = Vector.newBuilder[Array[Any]]
-    var off = 24
-    var i = 0
-    while (i < count && off + 48 <= b.length) {
-      val row = new Array[Any](outSchema.length)
-      row(0) = tsSec
-      var p = off
-      v5Layout.foreach { case (fid, len) =>
-        if (fid > 0) setField(row, fid, b, p, len)
-        p += len
+
+    /** The one set walker (v9 and IPFIX): template and options-template
+      * sets fill the cache, data sets run the record loop with the
+      * template live at the packet's time. A set that overruns the
+      * message ends the walk. */
+    def sets(d: Dialect, ph: Phase): Unit = {
+      if (b.length < d.headerLen) return
+      val end = if (d.ipfix) math.min(u16(b, 2), b.length) else b.length
+      val sourceId = u32(b, d.idOff)
+      var off = d.headerLen
+      while (off + 4 <= end) {
+        val setId = u16(b, off)
+        val setEnd = off + u16(b, off + 2)
+        if (setEnd < off + 4 || setEnd > end) return
+        if ((setId == d.templateSet || setId == d.templateSet + 1) &&
+            ph.templates)
+          templates(d, sourceId, off + 4, setEnd, setId != d.templateSet)
+        else if (setId >= 256 && (ph.options || ph.flows))
+          cache.get(srcIp, sourceId, d.version, setId, tsSec).foreach { t =>
+            if (t.isOptions && ph.options)
+              records(t, off + 4, setEnd, d.ipfix, sourceId, null)
+            else if (!t.isOptions && ph.flows)
+              records(t, off + 4, setEnd, d.ipfix, sourceId,
+                cache.getSampling(srcIp, sourceId, tsSec).map(Long.box)
+                  .orNull)
+          } // other set ids below 256 are reserved: skipped
+        off = setEnd
       }
-      if (sampling > 0) row(sampSlot) = sampling.toLong
-      row(devIpSlot) = srcIp
-      out += row
-      off += 48
-      i += 1
     }
-    out.result()
-  }
 
-  private def decodeV9(b: Array[Byte], tsSec: Long, srcIp: Long,
-                       cache: TemplateCache, ph: Phase): Seq[Array[Any]] = {
-    if (b.length < 20) return Nil
-    val sourceId = u32(b, 16)
-    val out = Vector.newBuilder[Array[Any]]
-    var off = 20
-    while (off + 4 <= b.length) {
-      val setId = u16(b, off)
-      val setLen = u16(b, off + 2)
-      if (setLen < 4 || off + setLen > b.length) return out.result()
-      if (setId == 0 && ph.templates) {
-        // template flowset
-        var p = off + 4
-        while (p + 4 <= off + setLen) {
-          val tid = u16(b, p)
-          val nf = u16(b, p + 2)
-          p += 4
-          if (p + nf * 4 <= off + setLen) {
-            val fields = (0 until nf).map { k =>
-              (u16(b, p + k * 4), u16(b, p + k * 4 + 2), 0L)
-            }
-            cache.put(srcIp, sourceId, 9, tid, tsSec, Template(fields))
-          }
-          p += nf * 4
-        }
-      } else if (setId == 1 && ph.templates) {
-        // options template flowset (RFC 3954 §6.1; reference
-        // netflow.c:147-365): tid, scope length, option length (both in
-        // BYTES), then scope specs then option specs. Scope types are
-        // stored negated so they never hit the field dispatch.
-        var p = off + 4
-        var more = true
-        while (more && p + 6 <= off + setLen) {
-          val tid = u16(b, p)
-          val scopeLen = u16(b, p + 2)
-          val optLen = u16(b, p + 4)
-          p += 6
-          if (tid >= 256 && p + scopeLen + optLen <= off + setLen &&
-              scopeLen % 4 == 0 && optLen % 4 == 0) {
-            val scope = (0 until scopeLen / 4).map { k =>
-              (-u16(b, p + k * 4) - 1, u16(b, p + k * 4 + 2), 0L)
-            }
-            val opts = (0 until optLen / 4).map { k =>
-              (u16(b, p + scopeLen + k * 4),
-                u16(b, p + scopeLen + k * 4 + 2), 0L)
-            }
-            cache.put(srcIp, sourceId, 9, tid, tsSec,
-              Template(scope ++ opts, isOptions = true))
-            p += scopeLen + optLen
-          } else more = false // malformed/padding: stop this flowset
-        }
-      } else if (setId >= 256 && (ph.options || ph.flows)) {
-        cache.get(srcIp, sourceId, 9, setId, tsSec).foreach { t =>
-          val recLen = t.recLen
-          if (recLen > 0 && t.isOptions && ph.options) {
-            // options DATA: no flow rows — harvest the exporter's
-            // sampling interval (fields 34 SAMPLING_INTERVAL /
-            // 50 SAMPLER_RANDOM_INTERVAL), like the reference's
-            // per-exporter option state
-            var p = off + 4
-            while (p + recLen <= off + setLen) {
-              var q = p
-              t.fields.foreach { case (fid, len, _) =>
-                if ((fid == 34 || fid == 50) && len >= 1 && len <= 8) {
-                  val v = be(b, q, len)
-                  if (v > 0) cache.putSampling(srcIp, sourceId, tsSec, v)
-                }
-                q += len
-              }
-              p += recLen
-            }
-          } else if (recLen > 0 && !t.isOptions && ph.flows) {
-            val sampling = cache.getSampling(srcIp, sourceId, tsSec)
-            var p = off + 4
-            while (p + recLen <= off + setLen) {
-              val row = new Array[Any](outSchema.length)
-              row(0) = tsSec
-              var q = p
-              t.fields.foreach { case (fid, len, _) =>
-                setField(row, fid, b, q, len)
-                q += len
-              }
-              if (row(sampSlot) == null)
-                sampling.foreach(v => row(sampSlot) = v)
-              row(devIpSlot) = srcIp
-              out += row
-              p += recLen
-            }
+    /** The template specs of one set, b[p0, setEnd), into the cache. A
+      * v9 options header gives the scope and option LENGTHS in bytes
+      * (RFC 3954 §6.1; reference netflow.c:147-365), an IPFIX one the
+      * field count and then the scope field count (RFC 7011 §3.4.2.2);
+      * the first specs are the scope fields, stored negated so they
+      * never hit the field dispatch. A spec that does not fit (its
+      * enterprise number included) or a malformed options header ends
+      * the set and stores nothing. */
+    private def templates(d: Dialect, sourceId: Long, p0: Int,
+                          setEnd: Int, opts: Boolean): Unit = {
+      val hdr = if (opts) 6 else 4
+      var p = p0
+      while (p + hdr <= setEnd) {
+        val tid = u16(b, p)
+        var nf = u16(b, p + 2)
+        var nScope = 0
+        var ok = true
+        if (opts) {
+          val x = u16(b, p + 4)
+          if (d.ipfix) { nScope = x; ok = tid >= 256 && x <= nf }
+          else {
+            ok = tid >= 256 && nf % 4 == 0 && x % 4 == 0
+            nScope = nf / 4
+            nf = (nf + x) / 4
           }
         }
-      } // setId 2..255: reserved, skipped
-      off += setLen
+        p += hdr
+        val fields = Vector.newBuilder[(Int, Int, Long)]
+        var k = 0
+        while (ok && k < nf) {
+          // an IPFIX spec with the enterprise bit set carries a 4-byte
+          // enterprise number, which must fit as well
+          val pen = d.ipfix && p + 4 <= setEnd && (b(p) & 0x80) != 0
+          val specLen = if (pen) 8 else 4
+          if (p + specLen > setEnd) ok = false
+          else {
+            val fid = u16(b, p) & (if (pen) 0x7fff else 0xffff)
+            fields += ((if (k < nScope) -fid - 1 else fid, u16(b, p + 2),
+              if (pen) u32(b, p + 4) else 0L))
+            p += specLen
+            k += 1
+          }
+        }
+        if (ok) cache.put(srcIp, sourceId, d.version, tid, tsSec,
+          Template(fields.result(), opts))
+        else p = setEnd
+      }
     }
-    out.result()
-  }
 
-  private def decodeIpfix(b: Array[Byte], tsSec: Long, srcIp: Long,
-                          cache: TemplateCache,
-                          entMap: Map[(Long, Int), Int],
-                          ph: Phase): Seq[Array[Any]] = {
-    if (b.length < 16) return Nil
-    val totalLen = math.min(u16(b, 2), b.length)
-    val domainId = u32(b, 12)
-    val out = Vector.newBuilder[Array[Any]]
-    var off = 16
-    while (off + 4 <= totalLen) {
-      val setId = u16(b, off)
-      val setLen = u16(b, off + 2)
-      if (setLen < 4 || off + setLen > totalLen) return out.result()
-      if (setId == 2 && ph.templates) {
-        var p = off + 4
-        while (p + 4 <= off + setLen) {
-          val tid = u16(b, p)
-          val nf = u16(b, p + 2)
-          p += 4
-          val fields = Vector.newBuilder[(Int, Int, Long)]
-          var ok = true
-          (0 until nf).foreach { _ =>
-            if (p + 4 <= off + setLen) {
-              val rawType = u16(b, p)
-              val len = u16(b, p + 2)
-              p += 4
-              val ent =
-                if ((rawType & 0x8000) != 0 && p + 4 <= off + setLen) {
-                  val e = u32(b, p); p += 4; e
-                } else 0L
-              fields += (((rawType & 0x7fff), len, ent))
-            } else ok = false
+    /** The one record loop (v5, v9 and IPFIX): the records of `t` in
+      * b[p0, end). A flow template writes one row per record; an
+      * options template instead harvests the exporter's sampling
+      * interval into the cache. A record that does not fit ends the
+      * loop. `sampling` (a boxed rate, or null) fills the rows whose
+      * own fields carry none. */
+    def records(t: Template, p0: Int, end: Int, varLen: Boolean,
+                sourceId: Long, sampling: java.lang.Long): Unit = {
+      val ids = t.ids
+      val lens = t.lens
+      val ents = t.ents
+      // smallest record: an IPFIX variable-length field takes at least
+      // its 1-byte length prefix
+      val minRec = t.fixedLen + t.varFields * (if (varLen) 1 else 65535)
+      var fits = minRec > 0
+      var p = p0
+      while (fits && end - p >= minRec) {
+        val row = if (t.isOptions) null else new Array[Any](outSchema.length)
+        var q = p
+        var k = 0
+        while (fits && k < ids.length) {
+          var len = lens(k)
+          if (len == 65535 && varLen) {
+            // RFC 7011 §7 variable length: 1 byte, or 255 + 2 bytes
+            if (q < end && (b(q) & 0xff) < 255) { len = b(q) & 0xff; q += 1 }
+            else if (q + 3 <= end) { len = u16(b, q + 1); q += 3 }
+            else fits = false
           }
-          if (ok) cache.put(srcIp, domainId, 10, tid, tsSec,
-            Template(fields.result()))
-        }
-      } else if (setId == 3 && ph.templates) {
-        // IPFIX options template set (RFC 7011 §3.4.2.2): unlike v9's
-        // byte lengths, the header carries FIELD counts — total field
-        // count, then scope field count; the first `scope` specs are
-        // scope fields (stored negated, like v9, so they never hit the
-        // flow-field dispatch).
-        var p = off + 4
-        while (p + 6 <= off + setLen) {
-          val tid = u16(b, p)
-          val nf = u16(b, p + 2)
-          val nScope = u16(b, p + 4)
-          p += 6
-          val fields = Vector.newBuilder[(Int, Int, Long)]
-          var ok = tid >= 256 && nScope <= nf
-          (0 until nf).foreach { k =>
-            if (ok && p + 4 <= off + setLen) {
-              val rawType = u16(b, p)
-              val len = u16(b, p + 2)
-              p += 4
-              val ent =
-                if ((rawType & 0x8000) != 0 && p + 4 <= off + setLen) {
-                  val e = u32(b, p); p += 4; e
-                } else 0L
-              val fid = rawType & 0x7fff
-              fields += ((if (k < nScope) -fid - 1 else fid, len, ent))
-            } else ok = false
-          }
-          if (ok) cache.put(srcIp, domainId, 10, tid, tsSec,
-            Template(fields.result(), isOptions = true))
-          else p = off + setLen // malformed/padding: stop this set
-        }
-      } else if (setId >= 256 && (ph.options || ph.flows)) {
-        cache.get(srcIp, domainId, 10, setId, tsSec).foreach { t =>
-          val isOpt = t.isOptions
-          if ((isOpt && ph.options) || (!isOpt && ph.flows)) {
-            val sampling =
-              if (isOpt) None
-              else cache.getSampling(srcIp, domainId, tsSec)
-            var p = off + 4
-            // smallest record: every variable-length field takes at
-            // least its 1-byte length prefix
-            val minRecLen = t.fixedLen + t.varFields
-            var continue = true
-            while (continue && p < off + setLen &&
-                   (off + setLen - p) >= minRecLen && minRecLen > 0) {
-              val row = new Array[Any](outSchema.length)
-              row(0) = tsSec
-              var q = p
-              t.fields.foreach { case (fid, len0, ent) =>
-                if (continue) {
-                  var len = len0
-                  if (len == 65535) {
-                    // RFC 7011 §7 variable-length: 1-byte, 255 → 2-byte
-                    if (q >= off + setLen) { continue = false; len = 0 }
-                    else {
-                      val l0 = b(q) & 0xff
-                      q += 1
-                      if (l0 == 255) {
-                        // 2-byte extended length must itself fit in the
-                        // set — a truncated marker at the last byte would
-                        // otherwise read past the buffer
-                        if (q + 2 <= off + setLen) { len = u16(b, q); q += 2 }
-                        else { continue = false; len = 0 }
-                      } else len = l0
-                    }
-                  }
-                  if (continue) {
-                    if (q + len > off + setLen) continue = false
-                    else {
-                      if (isOpt) {
-                        // options DATA: harvest the sampling interval
-                        // (34 SAMPLING_INTERVAL, 50 SAMPLER_RANDOM_
-                        // INTERVAL, 305 samplingSpaceInterval family)
-                        if ((fid == 34 || fid == 50 || fid == 305) &&
-                            ent == 0L && len >= 1 && len <= 8) {
-                          val v = be(b, q, len)
-                          if (v > 0)
-                            cache.putSampling(srcIp, domainId, tsSec, v)
-                        }
-                      } else if (ent == 0L) setField(row, fid, b, q, len)
-                      else entMap.get((ent, fid)) // configured vendor field
-                        .foreach(m => setField(row, m, b, q, len))
-                      q += len
-                    }
-                  }
-                }
+          if (!fits || q + len > end) fits = false
+          else {
+            if (row == null) {
+              if (ents(k) == 0L && SamplingFields(ids(k)) && len >= 1 &&
+                  len <= 8) {
+                val v = be(b, q, len)
+                if (v > 0) cache.putSampling(srcIp, sourceId, tsSec, v)
               }
-              if (continue) {
-                if (!isOpt) {
-                  if (row(sampSlot) == null)
-                    sampling.foreach(v => row(sampSlot) = v)
-                  row(devIpSlot) = srcIp
-                  out += row
-                }
-                p = q
-              }
-            }
+            } else if (ents(k) == 0L) setField(row, ids(k), b, q, len)
+            else entMap.get((ents(k), ids(k))) // configured vendor field
+              .foreach(setField(row, _, b, q, len))
+            q += len
           }
+          k += 1
+        }
+        if (fits) {
+          if (row != null) {
+            row(0) = tsSec
+            if (row(sampSlot) == null) row(sampSlot) = sampling
+            row(devIpSlot) = srcIp
+            out += row
+          }
+          p = q
         }
       }
-      off += setLen
     }
-    out.result()
   }
 
   /** DataFrame-level decode: (payload binary, ts_sec long, src_ip long) →

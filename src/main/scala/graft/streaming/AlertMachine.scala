@@ -49,6 +49,10 @@ object AlertMachine {
 
   val updateCadenceNs: Long = 3_000_000_000L // reference act():427
 
+  /** One grid tick of the keyed replays ([[graft.operators.AlertTimeline]]
+    * and [[AlertTimelineStream]]) = one machine second. */
+  private[graft] val TickNs: Long = 1_000_000_000L
+
   /** A worker detected value ≥ limit (or ≤ for underlimit) and inserted
     * the item (reference check_items:446-531). */
   def onBreach(st: Option[LimState], nowNs: Long, value: Double,
@@ -96,5 +100,31 @@ object AlertMachine {
       } else {
         (st, Nil)
       }
+  }
+
+  /** One step of a keyed tick-grid replay: a breach check of tick `t`'s
+    * summed value (when the tick saw traffic) against the limit, then
+    * the scan step. Each event reaches `emit` as a timeline row's
+    * (ev, value): started, updated or ended. Returns the machine after
+    * the tick; None while the key has never breached. */
+  private[graft] def replayTick(st: Option[LimState], t: Long,
+      seen: Boolean, v: Double, limit: Double, windowTicks: Int,
+      back2normTicks: Int)(emit: (String, Double) => Unit)
+      : Option[LimState] = {
+    val nowNs = t * TickNs
+    val cur =
+      if (seen && v > limit)
+        Some(onBreach(st, nowNs, v, limit, back2normTicks * TickNs))
+      else st
+    cur.map { c =>
+      val (next, events) =
+        onTick(c, nowNs, windowTicks * TickNs, isOver = true)
+      events.foreach {
+        case Started(x, _) => emit("started", x)
+        case Updated(x)    => emit("updated", x)
+        case Ended(x)      => emit("ended", x)
+      }
+      next
+    }
   }
 }

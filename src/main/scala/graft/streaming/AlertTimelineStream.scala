@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.streaming.AlertMachine.{Ended, LimState, Started, Updated}
+import graft.streaming.AlertMachine.LimState
 import graft.streaming.MavgStream.LimStateS
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming._
@@ -29,10 +29,10 @@ import org.apache.spark.sql.streaming._
   *    may still be incomplete;
   *  - when the watermark passes tick t, the timer fires and the
   *    machine advances through EVERY complete tick ≤ watermark in one
-  *    callback (breach check against the buffered sum — the same
-  *    `seen && v > limit` gate as the batch replay — then
-  *    [[AlertMachine.onTick]]), emits the events, drops the consumed
-  *    buffer entries, and re-arms for the next tick;
+  *    callback (breach check against the buffered sum, then the scan
+  *    step: [[AlertMachine.replayTick]], the batch replay's own tick
+  *    step), emits the events, drops the consumed buffer entries, and
+  *    re-arms for the next tick;
   *  - past `nTicks` the chain stops and the key's state clears.
   *
   * Scale shape: state per key is O(watermark lag) buffered ticks plus
@@ -63,7 +63,7 @@ class AlertTimelineStreamProcessor(nTicks: Int, epoch0: Long,
     windowTicks: Int, back2normTicks: Int)
     extends StatefulProcessor[Long, AlertTimelineStream.Tick,
       AlertTimelineStream.Event] {
-  import AlertTimelineStream.{Buf, Event, State, Tick, TickNs}
+  import AlertTimelineStream.{Buf, Event, State, Tick}
 
   @transient private var state: ValueState[State] = _
 
@@ -122,28 +122,14 @@ class AlertTimelineStreamProcessor(nTicks: Int, epoch0: Long,
       if (st0.hasSt) Some(MavgStream.fromS(st0.st)) else None
     var t = st0.nextTick
     val out = Seq.newBuilder[Event]
-    val windowNs = windowTicks.toLong * TickNs
-    val b2nNs = back2normTicks.toLong * TickNs
     // every COMPLETE tick at once: the watermark may have jumped a
     // whole micro-batch of input files past the armed tick
     while (t < nTicks && tickMs(t) <= wmMs) {
-      val nowNs = t * TickNs
-      buf.get(t).foreach { v =>
-        if (v > st0.limit)
-          machine = Some(AlertMachine.onBreach(machine, nowNs, v,
-            st0.limit, b2nNs))
-        buf -= t
-      }
-      machine.foreach { cur =>
-        val (next, events) =
-          AlertMachine.onTick(cur, nowNs, windowNs, isOver = true)
-        machine = Some(next)
-        events.foreach {
-          case Started(v, _) => out += Event(key, t, "started", v)
-          case Updated(v)    => out += Event(key, t, "updated", v)
-          case Ended(v)      => out += Event(key, t, "ended", v)
-        }
-      }
+      val v = buf.get(t)
+      buf -= t
+      machine = AlertMachine.replayTick(machine, t, v.isDefined,
+        v.getOrElse(0.0), st0.limit, windowTicks, back2normTicks)(
+        (ev, x) => out += Event(key, t, ev, x))
       t += 1
     }
     if (t >= nTicks) state.clear() // grid done: state follows live keys
@@ -158,8 +144,6 @@ class AlertTimelineStreamProcessor(nTicks: Int, epoch0: Long,
 }
 
 object AlertTimelineStream {
-  val TickNs: Long = 1_000_000_000L // 1 grid tick = 1 machine "second"
-
   /** One series observation: grid tick, value contribution, limit. */
   final case class Tick(key: Long, idx: Long, v: Double, lim: Double)
 

@@ -40,22 +40,17 @@ object MavgStream {
 
   final case class Conf(
       windowSec: Long = 5L,       // reference monit-objects.h:12
-      limits: Map[String, Seq[Double]] = Map.empty,
       defaultLimits: Seq[Double] = Seq.empty,
       back2normSec: Long = 30L,   // reference monit-objects.h:14
       isOver: Boolean = true,
-      /** hot-reloadable per-key limits file; when set it overrides
-        * `limits` and a file edit takes effect on the NEXT micro-batch
-        * without restarting the query (reference SIGHUP +
-        * mavg_limits_update bank swap, monit-objects-mavg.c:756-774) */
-      limitsProvider: Option[graft.config.Reloadable[
-        Map[String, Seq[Double]]]] = None,
-      /** per-overlimit-section limits files, aligned with
-        * `defaultLimits` indices — each section resolves its threshold
-        * independently (its file's value for the key, else that
-        * section's default), matching the reference's one-file-per-
-        * mavg_limit layout (CONFIG.md:438-469). Takes precedence over
-        * `limitsProvider`/`limits` when non-empty. */
+      /** per-overlimit-section hot-reloadable limits files, aligned
+        * with `defaultLimits` indices — each section resolves its
+        * threshold independently (its file's value for the key, else
+        * that section's default), matching the reference's one-file-
+        * per-mavg_limit layout (CONFIG.md:438-469). A file edit takes
+        * effect on the NEXT micro-batch without restarting the query
+        * (reference SIGHUP + mavg_limits_update bank swap,
+        * monit-objects-mavg.c:756-774). */
       limitsProviders: Seq[Option[graft.config.Reloadable[
         Map[String, Seq[Double]]]]] = Nil,
       /** processing-time tick for silent keys (reference's 1 s underlimit
@@ -106,19 +101,11 @@ object MavgStream {
 
   /** Per-key limit thresholds for one lifecycle instant. */
   private def resolveLimits(conf: Conf, key: String): Seq[Double] =
-    if (conf.limitsProviders.nonEmpty)
-      // per-section resolution: a key row in one section's file never
-      // silences the OTHER sections' checks
-      conf.defaultLimits.zipWithIndex.map { case (d, i) =>
-        conf.limitsProviders.lift(i).flatten
-          .flatMap(_.get().get(key)).flatMap(_.headOption).getOrElse(d)
-      }
-    else {
-      val limitsMap = conf.limitsProvider match {
-        case Some(r) => r.get()
-        case None    => conf.limits
-      }
-      limitsMap.getOrElse(key, conf.defaultLimits)
+    // per-section resolution: a key row in one section's file never
+    // silences the OTHER sections' checks
+    conf.defaultLimits.zipWithIndex.map { case (d, i) =>
+      conf.limitsProviders.lift(i).flatten
+        .flatMap(_.get().get(key)).flatMap(_.headOption).getOrElse(d)
     }
 
   /** Per-section hysteresis ns (falls back to the uniform value). */

@@ -901,6 +901,38 @@ class DecoderSpec extends SparkTest {
       entMap = Map((9999L, 77) -> 2001)), rows)
   }
 
+  test("IPFIX: a template whose last enterprise number is cut off by " +
+    "the set end is rejected, not stored as an IANA field") {
+    // template 256: one field, enterprise bit | 8 (sourceIPv4Address
+    // when IANA), length 4, then 2 of its 4 enterprise-number bytes
+    def pkt(pen: Array[Byte]): Array[Byte] = {
+      val tmpl = bytes(2, 4 + 4 + 4 + pen.length, 256, 1, 0x8000 | 8, 4,
+        pen)
+      val data = bytes(256, 8, 0x0a000001L)
+      bytes(10, 16 + tmpl.length + data.length, 1700000000L, 1L, 5L) ++
+        tmpl ++ data
+    }
+    def decode(p: Array[Byte]) = NetflowDecoder.decodePacket(p,
+      1700000000L, 1L, new NetflowDecoder.TemplateCache)
+    // whole enterprise number: the vendor field is skipped
+    val whole = decode(pkt(bytes(9999L)))
+    assert(whole.length == 1)
+    assert(whole.head(fieldIndexOf("ip4_src_addr")) == null)
+    // truncated enterprise number: no template, so no rows
+    assert(decode(pkt(Array[Byte](0, 0))).isEmpty)
+  }
+
+  test("decoder corpus: the contract v5/v9/IPFIX packets, every " +
+    "truncation and seeded byte flips decode to pinned rows") {
+    // DecoderCorpus renders every value of every decoded row, so any
+    // change in what valid or malformed input decodes to moves the digest
+    val ls = DecoderCorpus.lines()
+    assert(ls.size == 12210)
+    assert(ls.count(_.contains("[1700")) == 10776) // lines with a row
+    assert(DecoderCorpus.digest(ls) ==
+      "cce845a8f3b0df1226da99791fdce441cede583d938c0b30947574a988ed11eb")
+  }
+
   test("DataFrame-level decode distributes with partition-local caches") {
     import spark.implicits._
     val header = bytes(9, 2, 1000L, 1700000000L, 1L, 42L)

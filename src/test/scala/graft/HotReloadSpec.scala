@@ -136,7 +136,7 @@ class HotReloadSpec extends SparkTest {
     val mem = MemoryStream[Input]
     val alerts = MavgStream(mem.toDS(),
       Conf(windowSec = 5, defaultLimits = Seq(1e18),
-        limitsProvider = Some(provider), tickIntervalMs = 0))
+        limitsProviders = Seq(Some(provider)), tickIntervalMs = 0))
     val q = alerts.writeStream
       .format("memory").queryName("hot_alerts")
       .outputMode(OutputMode.Append).start()

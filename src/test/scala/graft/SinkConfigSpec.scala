@@ -265,6 +265,31 @@ class SinkConfigSpec extends SparkTest {
       == notif.resolve("mo-m-lim-10.0.0.1-443-www.example.com"))
   }
 
+  test("alert sink: a key past the 255-byte file-name limit gets a " +
+    "capped, hash-tagged file that still holds the full key") {
+    import graft.sinks.AlertSink
+    import graft.streaming.MavgStream.AlertRow
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val notif = Files.createTempDirectory("graft_notif_long")
+    val sink = new AlertSink(AlertSink.Conf(notif.toString, "mo", "m",
+      Seq(AlertSink.Limit("lim"))))
+    val key = "a" * 255 + ".ex.com" // e.g. a long SNI, 262 characters
+    def files() = Files.list(notif).iterator().asScala.toList
+    sink.handle(Seq(AlertRow(key, 0, "start", 500.0, 100.0, 1L)))
+    val written = files()
+    assert(written.size == 1)
+    val name = written.head.getFileName.toString
+    assert(name.getBytes("UTF-8").length <= 255, name)
+    assert(name.startsWith("mo-m-lim-aaaa"), name)
+    assert(new String(Files.readAllBytes(written.head), "UTF-8") ==
+      s"$key 500 100")
+    // a different long key with the same prefix gets its own file
+    assert(sink.fileName("lim", Seq(key + "x")) != written.head)
+    sink.handle(Seq(AlertRow(key, 0, "end", 1.0, 100.0, 2L)))
+    assert(files().isEmpty, "end deletes the file start wrote")
+  }
+
   test("streaming fwm: window closes when the watermark passes " +
     "(two-bank swap analog)") {
     implicit val sqlCtx = spark.sqlContext
