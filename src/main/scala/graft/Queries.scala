@@ -5341,13 +5341,12 @@ object Queries {
     (s, dir) => {
       import graft.operators.{Curation, Multimodal}
       val imgs = imageDedupCorpus(s)
-      // the composition is PARAMETERIZED by signature family since
-      // r20 (Multimodal.perceptualDedup) — q131 pins the narrow
-      // 64-bit form it has always oracled (thumbnail-scale corpus);
-      // q142 runs the same shape through the wide scale default
+      // the composition is PARAMETERIZED by signature width
+      // (Multimodal.perceptualDedup) — q131 pins the narrow 64-bit
+      // form it has always oracled (thumbnail-scale corpus); q142
+      // runs the same shape through the 256-bit scale default
       val survivors = Multimodal.perceptualDedup(imgs, "img_id",
-        "payload", maxDist = 6, maxBucket = mediaMaxBucket,
-        family = Multimodal.SigNarrow64)
+        "payload", maxDist = 6, maxBucket = mediaMaxBucket, bits = 64)
       Curation.shuffleShards(survivors.select(col("img_id")),
           "img_id", seed = 7L, shards = 4)
         .select(col("img_id"), col("shard"), col("seq"))
@@ -5711,7 +5710,8 @@ object Queries {
       FROM rowvals GROUP BY i ORDER BY id ASC"""))
 
   /** q138: banded Hamming pairs over the WIDE signature
-    * ([[graft.operators.Dedup.hammingPairsWide]]) on the media
+    * ([[graft.operators.Dedup.hammingPairs]] on an `array<bigint>`
+    * signature) on the media
     * corpus — same pigeonhole contract as q123, bands spanning word
     * boundaries (256 bits / 7 bands ≈ 37 bits each), distance =
     * Σ popcount(xor) across the 4 words. The oracle brute-forces
@@ -5721,7 +5721,7 @@ object Queries {
     "q138_image_neardup_wide",
     (s, dir) => {
       import graft.operators.{Dedup, Multimodal}
-      Dedup.hammingPairsWide(
+      Dedup.hammingPairs(
           Multimodal.withAHashWide(imageDedupCorpus(s), "payload"),
           "img_id", "ahash_w", bits = 256, maxDist = 6)
         .orderBy(col("a").asc, col("b").asc)
@@ -5781,10 +5781,9 @@ object Queries {
     * q131's exact shape (hash → connectivity-equivalent Hamming edges
     * → star-contraction CC → keep smallest id → deterministic
     * reshard) through [[graft.operators.Multimodal.perceptualDedup]]'s
-    * SCALE DEFAULT ([[graft.operators.Multimodal.SigWide256]], the
-    * r19 measurement wired into the production composition): 256-bit
-    * 16×16 aHash, `hammingEdgesWide` at the measured precision budget
-    * d≤3, the q131 skew cap. The DuckDB oracle replays the whole
+    * SCALE DEFAULT (`bits = 256`, the r19 measurement wired into the
+    * production composition): 256-bit 16×16 aHash, `hammingEdges` at
+    * the measured precision budget d≤3, the q131 skew cap. The DuckDB oracle replays the whole
     * chain — wide hashes from the pixel formula, brute-force
     * all-pairs distances, recursive-CTE closure, md5 reshard — so the
     * edge set's connectivity equivalence is proven against all-pairs

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Deduplication operators for large-scale text corpora (engine extension
   * beyond the reference surface, BASELINE.json north-star).
@@ -290,10 +290,38 @@ object Dedup {
     hammingPairs(simhash(df, idCol, textCol, bits), idCol, "simhash",
       bits, maxDist)
 
-  /** The pigeonhole band split [[hammingPairs]] joins on — exposed
-    * package-private so specs pin cap decisions against the REAL
-    * banding arithmetic, not a hand-copied replica. */
-  private[graft] def bandColumns(sigCol: Column, bits: Int,
+  /** Reads word `k` (0-based, little-endian) of a signature column. */
+  private[graft] type WordOf = (Column, Int) => Column
+
+  /** How the Hamming operators read a signature, chosen by the
+    * column's Catalyst type alone: a `bigint` column is one word
+    * holding 1 ≤ bits ≤ 64; an `array<bigint>` column holds bits/64
+    * words (bit k of the signature = bit k%64 of element k/64+1). Any
+    * other type, or a `bits` the type cannot hold, fails at plan time
+    * naming the column and its type. */
+  private[graft] def wordOf(sig: DataFrame, sigCol: String,
+                            bits: Int): WordOf = {
+    val dt = sig.schema(sigCol).dataType
+    def fail(why: String): Nothing = throw new IllegalArgumentException(
+      s"signature column '$sigCol' of type ${dt.simpleString}: $why")
+    dt match {
+      case LongType =>
+        if (bits < 1 || bits > 64) fail(s"bits=$bits out of [1,64]")
+        (c, _) => c
+      case ArrayType(LongType, _) =>
+        if (bits < 64 || bits % 64 != 0)
+          fail(s"bits=$bits is not a positive multiple of 64")
+        (c, k) => element_at(c, k + 1)
+      case _ => fail("expected bigint or array<bigint>")
+    }
+  }
+
+  /** The pigeonhole band split [[hammingPairs]] joins on: maxDist+1
+    * bands of ⌈bits/(maxDist+1)⌉ or ⌊…⌋ bits, each read as one long.
+    * A band may span a word boundary. Exposed package-private so specs
+    * pin cap decisions against the REAL banding arithmetic, not a
+    * hand-copied replica. */
+  private[graft] def bandColumns(sigCol: Column, word: WordOf, bits: Int,
                                  maxDist: Int): Seq[Column] = {
     val nBands = maxDist + 1
     val base = bits / nBands
@@ -301,13 +329,36 @@ object Dedup {
     (0 until nBands).map { b =>
       val width = base + (if (b < rem) 1 else 0)
       val start = b * base + math.min(b, rem)
+      val k = start / 64
+      val off = start % 64
       val mask = if (width == 64) -1L else (1L << width) - 1
-      shiftright(sigCol, start).bitwiseAND(lit(mask))
+      // UNSIGNED shift is load-bearing: an arithmetic shift of a
+      // negative lo word smears sign bits into exactly the positions
+      // the hi word's bits are OR'd into — matches stay correct (the
+      // smear is a function of band bits both sides share, and the
+      // exact dist filter kills false candidates) but the band value
+      // loses the hi word's entropy, re-creating the bucket
+      // saturation wide signatures exist to avoid. Within one word
+      // (start + width ≤ 64) the mask removes every bit where the two
+      // shifts differ.
+      val lo = shiftrightunsigned(word(sigCol, k), off)
+      val v =
+        if (start + width > (k + 1) * 64)
+          lo.bitwiseOR(shiftleft(word(sigCol, k + 1), 64 - off))
+        else lo
+      v.bitwiseAND(lit(mask))
     }
   }
 
+  /** Σ popcount(xor) across the words of two signatures. */
+  private def hammingDist(a: Column, b: Column, word: WordOf,
+                          words: Int): Column =
+    (0 until words)
+      .map(k => bit_count(word(a, k).bitwiseXOR(word(b, k))))
+      .reduce(_ + _).cast(LongType)
+
   /** Signature-contracted ALL-PAIRS form shared by the UNCAPPED
-    * [[hammingPairs]]/[[hammingPairsWide]] paths (r21). Hamming
+    * [[hammingPairs]] path (r21). Hamming
     * distance is a function of the signatures alone, so the banded
     * join only ever needs DISTINCT signatures: group ids per
     * signature once, band-join the signature table, dedup + dist-
@@ -378,14 +429,23 @@ object Dedup {
     sameSig.unionByName(cross)
   }
 
-  /** Pigeonhole-banded Hamming pairs over ANY ≤64-bit integer
-    * signature column (see [[simhashPairs]] for the recall argument —
-    * this is that join, factored so other signature families reuse it:
-    * text SimHash, image aHash, any fingerprint that compares by
-    * Hamming distance). Output: (a, b, dist), a < b, dist ≤ maxDist,
-    * identical to brute-force all-pairs. NULL signatures (undecodable
-    * payloads) never pair — each band value is non-NULL only for
-    * non-NULL signatures, and the equi-join drops NULL keys.
+  /** Pigeonhole-banded Hamming pairs over a signature column of any
+    * width (see [[simhashPairs]] for the recall argument — this is
+    * that join, factored so every signature family reuses it: text
+    * SimHash, image aHash, audio/video fingerprints, the 256-bit wide
+    * aHash). The column's type says how its words are read
+    * ([[wordOf]]): `bigint` for ≤ 64 bits, `array<bigint>` for
+    * 64·words bits; the distance is Σ popcount(xor) over the words.
+    * Output: (a, b, dist), a < b, dist ≤ maxDist, identical to
+    * brute-force all-pairs. NULL signatures (undecodable payloads)
+    * never pair — each band value is non-NULL only for non-NULL
+    * signatures, and the equi-join drops NULL keys. Each band must
+    * fit one long (bits/(maxDist+1) ≤ 64).
+    *
+    * Why wide signatures exist, measured (SCALE.md r19): on structured
+    * corpora 64-bit aHash band values repeat across genuinely
+    * different images, so buckets saturate at O(10³) images; 256 bits
+    * give maxDist-6 bands of ~37 bits instead of ~9.
     *
     * `maxBucket` is the corpus-scale skew guard: one degenerate band
     * value (the all-zero band every near-blank image or silent clip
@@ -396,27 +456,46 @@ object Dedup {
     * where the output was least informative (blank-vs-blank matches).
     * Default None: exact semantics, oracle-matched.
     *
-    * `materializeSlim` (meaningful only with `maxBucket`): the capped
-    * plan consumes the signature lineage three times, so by default
+    * The capped plan consumes the signature lineage three times, so
     * the narrow (id, sig) projection is localCheckpoint'ed — an EAGER
     * materialization (runs a Spark job at plan-construction time,
     * pins executor storage for the session, unusable on streaming
     * inputs). Eager is deliberate: a lazy checkpoint lets the three
     * consumer stages race and recompute the decode lineage
     * concurrently (r22 measured the race on q121's sibling-stage
-    * shape). Pass false to keep a pure lazy plan and manage
-    * materialization yourself (persist/checkpoint the signature frame
-    * upstream, or accept the decode re-run). */
+    * shape). */
   def hammingPairs(sig: DataFrame, idCol: String, sigCol: String,
                    bits: Int, maxDist: Int,
-                   maxBucket: Option[Long] = None,
-                   materializeSlim: Boolean = true): DataFrame = {
-    require(bits >= 1 && bits <= 64, s"bits=$bits out of [1,64]")
+                   maxBucket: Option[Long] = None): DataFrame =
+    pairs(sig, idCol, sigCol, bits, maxDist, maxBucket,
+      materializeSlim = true)
+
+  /** Plan-time checks shared by [[hammingPairs]] and [[hammingEdges]];
+    * returns the signature's word reader. */
+  private def checked(sig: DataFrame, sigCol: String, bits: Int,
+                      maxDist: Int, maxBucket: Option[Long]): WordOf = {
+    val word = wordOf(sig, sigCol, bits)
     require(maxDist >= 0 && maxDist < bits,
       s"maxDist=$maxDist out of [0,$bits)")
-    val bandCols = bandColumns(col(sigCol), bits, maxDist)
+    val nBands = maxDist + 1
+    require((bits + nBands - 1) / nBands <= 64,
+      s"band width ${(bits + nBands - 1) / nBands} exceeds 64 bits — " +
+        "raise maxDist or shrink the signature")
     maxBucket.foreach(cap =>
       require(cap >= 2, s"maxBucket=$cap out of [2,∞)"))
+    word
+  }
+
+  /** [[hammingPairs]]' body; `materializeSlim = false` keeps the capped
+    * plan lazy for [[hammingEdges]], which materializes its own
+    * (smaller) representative table instead. */
+  private def pairs(sig: DataFrame, idCol: String, sigCol: String,
+                    bits: Int, maxDist: Int, maxBucket: Option[Long],
+                    materializeSlim: Boolean): DataFrame = {
+    val word = checked(sig, sigCol, bits, maxDist, maxBucket)
+    val words = (bits + 63) / 64
+    val bandsOf = (s: Column) => bandColumns(s, word, bits, maxDist)
+    val distOf = (a: Column, b: Column) => hammingDist(a, b, word, words)
     // uncapped: exact semantics via the signature-contracted form
     // (scaladoc on [[contractedPairs]]) — the banded join runs over
     // DISTINCT signatures, never signature instances
@@ -424,151 +503,34 @@ object Dedup {
       return contractedPairs(
         sig.select(col(idCol), col(sigCol))
           .where(col(sigCol).isNotNull),
-        idCol, sigCol, s => bandColumns(s, bits, maxDist),
-        (a, b) => bit_count(a.bitwiseXOR(b)).cast(LongType), maxDist)
+        idCol, sigCol, bandsOf, distOf, maxDist)
+    val cap = maxBucket.get
     // capped mode consumes the signature lineage three times
     // (histogram + both join sides) — materialize the NARROW (id, sig)
     // projection once so a decode-heavy upstream (withAHash over
-    // binary payloads) never re-runs; ~16 bytes/row, the cheapest
-    // thing in the plan. The caller opts out
-    // via materializeSlim=false (streaming inputs, self-managed
-    // caching).
-    val slim = maxBucket match {
-      case Some(_) if materializeSlim =>
+    // binary payloads) never re-runs; ~16 bytes/row narrow, 40 wide
+    val slim =
+      if (materializeSlim)
         sig.select(col(idCol), col(sigCol))
           .where(col(sigCol).isNotNull).localCheckpoint()
-      case _ => sig
-    }
+      else sig
     val banded0 = slim.select(col(idCol), col(sigCol).as("__sig"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "bv")))
+      posexplode(array(bandsOf(col(sigCol)): _*)).as(Seq("band", "bv")))
       .where(col("__sig").isNotNull)
-    val banded = maxBucket match {
-      case None => banded0
-      case Some(cap) =>
-        // the bucket histogram is a map-side-combined count — at most
-        // one ~30-byte row per distinct (band, bv) ever shuffles
-        val hot = banded0.groupBy(col("band"), col("bv"))
-          .agg(count(lit(1)).as("__n"))
-          .where(col("__n") > cap)
-          .select(col("band"), col("bv"))
-        banded0.join(hot, Seq("band", "bv"), "left_anti")
-    }
+    // the bucket histogram is a map-side-combined count — at most one
+    // ~30-byte row per distinct (band, bv) ever shuffles
+    val hot = banded0.groupBy(col("band"), col("bv"))
+      .agg(count(lit(1)).as("__n"))
+      .where(col("__n") > cap)
+      .select(col("band"), col("bv"))
+    val banded = banded0.join(hot, Seq("band", "bv"), "left_anti")
     val l = banded.select(col(idCol).as("a"), col("__sig").as("sa"),
       col("band"), col("bv"))
     val r = banded.select(col(idCol).as("b"), col("__sig").as("sb"),
       col("band"), col("bv"))
     l.join(r, Seq("band", "bv"))
       .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sa").bitwiseXOR(col("sb"))).cast(LongType)
-          .as("dist"))
-      .distinct()
-      .filter(col("dist") <= maxDist)
-  }
-
-  /** [[bandColumns]] for WIDE signatures (array<long>, little-endian
-    * words: bit k of the signature = bit k%64 of element k/64+1).
-    * Bands may span a word boundary; each band value still fits one
-    * long (width ≤ 64 enforced by the callers). */
-  private[graft] def bandColumnsWide(sigCol: Column, bits: Int,
-                                     maxDist: Int): Seq[Column] = {
-    val nBands = maxDist + 1
-    val base = bits / nBands
-    val rem = bits % nBands
-    (0 until nBands).map { b =>
-      val width = base + (if (b < rem) 1 else 0)
-      val start = b * base + math.min(b, rem)
-      val end = start + width
-      val loIdx = start / 64
-      val off = start % 64
-      val mask = if (width == 64) -1L else (1L << width) - 1
-      // UNSIGNED shift is load-bearing: an arithmetic shift of a
-      // negative lo word smears sign bits into exactly the positions
-      // the hi word's bits are OR'd into — matches stay correct (the
-      // smear is a function of band bits both sides share, and the
-      // exact dist filter kills false candidates) but the band value
-      // loses the hi word's entropy, re-creating the bucket
-      // saturation this form exists to avoid
-      val lo = shiftrightunsigned(element_at(sigCol, loIdx + 1), off)
-      val v =
-        if (end > (loIdx + 1) * 64)
-          lo.bitwiseOR(
-            shiftleft(element_at(sigCol, loIdx + 2), 64 - off))
-        else lo
-      v.bitwiseAND(lit(mask))
-    }
-  }
-
-  /** Σ popcount(xor) across the words of two wide signatures. */
-  private def wideDist(a: Column, b: Column, words: Int): Column =
-    (1 to words)
-      .map(j => bit_count(element_at(a, j)
-        .bitwiseXOR(element_at(b, j))))
-      .reduce(_ + _).cast(LongType)
-
-  /** [[hammingPairs]] for WIDE (>64-bit) signatures held as
-    * array<long> — the measured answer to 64-bit signature-entropy
-    * saturation (SCALE.md r19: on structured corpora 64-bit aHash
-    * band values repeat across genuinely different images, so buckets
-    * saturate at O(10³) images; 256 bits give maxDist-6 bands of ~37
-    * bits instead of ~9). Same pigeonhole recall argument, same
-    * output contract ((a, b, dist), a < b, dist ≤ maxDist ≡
-    * brute-force all-pairs), same `maxBucket` skew cap and
-    * `materializeSlim` opt-out. `bits` must be word-aligned (64·words)
-    * and band width (bits/(maxDist+1)) at most 64. NULL signatures
-    * never pair. */
-  def hammingPairsWide(sig: DataFrame, idCol: String, sigCol: String,
-                       bits: Int, maxDist: Int,
-                       maxBucket: Option[Long] = None,
-                       materializeSlim: Boolean = true): DataFrame = {
-    require(bits > 64 && bits % 64 == 0,
-      s"bits=$bits must be a multiple of 64 over 64 (use hammingPairs" +
-        " for ≤64-bit signatures)")
-    require(maxDist >= 0 && maxDist < bits,
-      s"maxDist=$maxDist out of [0,$bits)")
-    val nBands = maxDist + 1
-    require((bits + nBands - 1) / nBands <= 64,
-      s"band width ${(bits + nBands - 1) / nBands} exceeds 64 bits — " +
-        "raise maxDist or shrink the signature")
-    val words = bits / 64
-    val bandCols = bandColumnsWide(col(sigCol), bits, maxDist)
-    maxBucket.foreach(cap =>
-      require(cap >= 2, s"maxBucket=$cap out of [2,∞)"))
-    // uncapped: signature-contracted exact form (see [[hammingPairs]]
-    // and [[contractedPairs]]); array<long> signatures group and
-    // order fine as keys
-    if (maxBucket.isEmpty)
-      return contractedPairs(
-        sig.select(col(idCol), col(sigCol))
-          .where(col(sigCol).isNotNull),
-        idCol, sigCol, s => bandColumnsWide(s, bits, maxDist),
-        (a, b) => wideDist(a, b, words), maxDist)
-    val slim = maxBucket match {
-      case Some(_) if materializeSlim =>
-        sig.select(col(idCol), col(sigCol))
-          .where(col(sigCol).isNotNull).localCheckpoint()
-      case _ => sig
-    }
-    val banded0 = slim.select(col(idCol), col(sigCol).as("__sig"),
-      posexplode(array(bandCols: _*)).as(Seq("band", "bv")))
-      .where(col("__sig").isNotNull)
-    val banded = maxBucket match {
-      case None => banded0
-      case Some(cap) =>
-        val hot = banded0.groupBy(col("band"), col("bv"))
-          .agg(count(lit(1)).as("__n"))
-          .where(col("__n") > cap)
-          .select(col("band"), col("bv"))
-        banded0.join(hot, Seq("band", "bv"), "left_anti")
-    }
-    val l = banded.select(col(idCol).as("a"), col("__sig").as("sa"),
-      col("band"), col("bv"))
-    val r = banded.select(col(idCol).as("b"), col("__sig").as("sb"),
-      col("band"), col("bv"))
-    l.join(r, Seq("band", "bv"))
-      .filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        wideDist(col("sa"), col("sb"), words).as("dist"))
+      .select(col("a"), col("b"), distOf(col("sa"), col("sb")).as("dist"))
       .distinct()
       .filter(col("dist") <= maxDist)
   }
@@ -576,16 +538,16 @@ object Dedup {
   /** Connectivity-equivalent Hamming edge set for DEDUP pipelines —
     * the scale form of [[hammingPairs]] when the consumer is a
     * connected-components resolve (q131's shape) rather than the
-    * all-pairs list: identical-signature groups are star-contracted
-    * FIRST (min-id representative, one dist-0 edge per other member),
-    * and only the DISTINCT signatures enter the banded join. The
-    * returned edges' connected components are exactly
-    * [[hammingPairs]]' components (spec'd differentially): a pair
-    * with equal signatures shares a star; a pair with different
-    * signatures has representatives at the same distance, so the
-    * banded rep edge plus two star edges connects it — and every
-    * emitted edge is itself a valid ≤ maxDist pair, so no component
-    * over-merges.
+    * all-pairs list, for signatures of any width: identical-signature
+    * groups are star-contracted FIRST (min-id representative, one
+    * dist-0 edge per other member), and only the DISTINCT signatures
+    * enter the banded join. The returned edges' connected components
+    * are exactly [[hammingPairs]]' components (spec'd
+    * differentially): a pair with equal signatures shares a star; a
+    * pair with different signatures has representatives at the same
+    * distance, so the banded rep edge plus two star edges connects it
+    * — and every emitted edge is itself a valid ≤ maxDist pair, so no
+    * component over-merges.
     *
     * Why this is the 100 TB form:
     *  - exact re-ingest duplicates (the bulk of crawl dup mass) are
@@ -605,50 +567,24 @@ object Dedup {
     * is the product. */
   def hammingEdges(sig: DataFrame, idCol: String, sigCol: String,
                    bits: Int, maxDist: Int,
-                   maxBucket: Option[Long] = None,
-                   materializeSlim: Boolean = true): DataFrame = {
-    require(bits >= 1 && bits <= 64, s"bits=$bits out of [1,64]")
-    require(maxDist >= 0 && maxDist < bits,
-      s"maxDist=$maxDist out of [0,$bits)")
-    hammingEdgesImpl(sig, idCol, sigCol, materializeSlim)(reps =>
-      hammingPairs(reps, idCol, sigCol, bits, maxDist, maxBucket,
-        materializeSlim = false))
-  }
-
-  /** [[hammingEdges]] for WIDE (array<long>) signatures — the same
-    * star-contraction + distinct-signature banding over
-    * [[hammingPairsWide]]'s join. Contracts identical: components ≡
-    * the wide all-pairs set, star edges dist 0, exact-dup recall
-    * structural. */
-  def hammingEdgesWide(sig: DataFrame, idCol: String, sigCol: String,
-                       bits: Int, maxDist: Int,
-                       maxBucket: Option[Long] = None,
-                       materializeSlim: Boolean = true): DataFrame =
-    hammingEdgesImpl(sig, idCol, sigCol, materializeSlim)(reps =>
-      hammingPairsWide(reps, idCol, sigCol, bits, maxDist, maxBucket,
-        materializeSlim = false))
-
-  private def hammingEdgesImpl(sig: DataFrame, idCol: String,
-                               sigCol: String,
-                               materializeSlim: Boolean)(
-      pairFn: DataFrame => DataFrame): DataFrame = {
-    val slim0 = sig.select(col(idCol), col(sigCol))
-      .where(col(sigCol).isNotNull)
+                   maxBucket: Option[Long] = None): DataFrame = {
+    checked(sig, sigCol, bits, maxDist, maxBucket)
     // the narrow projection feeds the rep aggregation AND the star
     // join; the rep table feeds the star join AND the banded join —
-    // materialize both once (same contract and opt-out as
-    // hammingPairs' materializeSlim; reps is ≤ |distinct sigs| rows
-    // of 16 bytes narrow / 40 wide)
-    val slim = if (materializeSlim) slim0.localCheckpoint() else slim0
-    val reps0 = slim.groupBy(col(sigCol).as("__sig"))
-      .agg(min(col(idCol)).as("__rep"))
-    val reps = if (materializeSlim) reps0.localCheckpoint() else reps0
+    // materialize both once (the same eager contract as
+    // hammingPairs' capped path; reps is ≤ |distinct sigs| rows of
+    // 16 bytes narrow / 40 wide)
+    val slim = sig.select(col(idCol), col(sigCol))
+      .where(col(sigCol).isNotNull).localCheckpoint()
+    val reps = slim.groupBy(col(sigCol).as("__sig"))
+      .agg(min(col(idCol)).as("__rep")).localCheckpoint()
     val stars = slim.join(reps, col(sigCol) === col("__sig"))
       .where(col(idCol) =!= col("__rep"))
       .select(col("__rep").as("a"), col(idCol).as("b"),
         lit(0L).as("dist"))
-    val repPairs = pairFn(
-      reps.select(col("__rep").as(idCol), col("__sig").as(sigCol)))
+    val repPairs = pairs(
+      reps.select(col("__rep").as(idCol), col("__sig").as(sigCol)),
+      idCol, sigCol, bits, maxDist, maxBucket, materializeSlim = false)
     stars.unionByName(repPairs)
   }
 

@@ -180,30 +180,43 @@ object Multimodal {
       Array.fill[Byte](payloadLen)(0x5a)
   }
 
+  /** The one payload-attach path every `with*` operator runs: append
+    * the nullable column `outCol` of `dataType`, computed per row by
+    * `f` from the `binCol` payload bytes (NULL payloads included),
+    * partition-batched. `f` returns the column's external value (a
+    * `Row` for a struct, a `Seq` for an array, NULL for none). An input
+    * already carrying `outCol` fails loudly instead of growing a
+    * second column of the same name. */
+  private def attach(df: DataFrame, binCol: String, outCol: String,
+                     dataType: DataType)(f: Array[Byte] => Any)
+      : DataFrame = {
+    require(!df.columns.contains(outCol),
+      s"output column '$outCol' already exists in the input")
+    val outSchema = StructType(df.schema.fields :+
+      StructField(outCol, dataType, true))
+    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
+    val binIdx = df.schema.fieldIndex(binCol)
+    df.mapPartitions { it =>
+      it.map(row =>
+        Row.fromSeq(row.toSeq :+ f(row.getAs[Array[Byte]](binIdx))))
+    }(enc)
+  }
+
   /** Attach decoded metadata to a binary column, partition-batched.
     * Output = input columns + `meta` struct. Real ImageIO decode first;
     * unclaimed payloads fall back to the stub header. Corrupt rows get
     * meta.ok=false instead of failing the job. */
-  def withImageMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("meta", imageMetaSchema, false))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        val n = if (bytes == null) 0L else bytes.length.toLong
-        val meta = decodeImage(bytes) match {
-          case Some((f, w, h, ch)) => Row(f, w, h, ch.orNull, n, true)
-          case None => decodeImageStub(bytes) match {
-            case Some((f, w, h)) => Row(f, w, h, null, n, true)
-            case None            => Row(null, null, null, null, n, false)
-          }
+  def withImageMeta(df: DataFrame, binCol: String): DataFrame =
+    attach(df, binCol, "meta", imageMetaSchema) { bytes =>
+      val n = if (bytes == null) 0L else bytes.length.toLong
+      decodeImage(bytes) match {
+        case Some((f, w, h, ch)) => Row(f, w, h, ch.orNull, n, true)
+        case None => decodeImageStub(bytes) match {
+          case Some((f, w, h)) => Row(f, w, h, null, n, true)
+          case None            => Row(null, null, null, null, n, false)
         }
-        Row.fromSeq(row.toSeq :+ meta)
       }
-    }(enc)
-  }
+    }
 
   /** Deterministic REAL image generator (test/data-gen helper): encodes
     * a small PNG or JPEG through the same in-JDK ImageIO codecs
@@ -260,13 +273,8 @@ object Multimodal {
     * payloads no decoder claims. This is the thumbnail/normalize step
     * of a multimodal training pipeline — the decode is necessarily a
     * full pixel decode here, unlike the metadata pass. */
-  def resizeImage(bytes: Array[Byte], box: Int): Option[Array[Byte]] = {
-    if (bytes == null || bytes.length < 8 || !pixelDecodable(bytes))
-      return None
-    try {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      if (img == null) return None
+  def resizeImage(bytes: Array[Byte], box: Int): Option[Array[Byte]] =
+    withPixels(bytes) { img =>
       val (tw, th) = fitDims(img.getWidth, img.getHeight, box)
       val typ =
         if (img.getColorModel.hasAlpha)
@@ -282,25 +290,14 @@ object Multimodal {
       } finally g.dispose()
       val bos = new java.io.ByteArrayOutputStream()
       javax.imageio.ImageIO.write(out, "png", bos)
-      Some(bos.toByteArray)
-    } catch { case _: Exception => None }
-  }
+      bos.toByteArray
+    }
 
   /** Attach a resized payload column (`resized`, PNG bytes, NULL when
     * the input doesn't decode), partition-batched. */
   def withResizedImage(df: DataFrame, binCol: String,
-                       box: Int): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("resized", BinaryType, true))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        Row.fromSeq(row.toSeq :+ resizeImage(bytes, box).orNull)
-      }
-    }(enc)
-  }
+                       box: Int): DataFrame =
+    attach(df, binCol, "resized", BinaryType)(resizeImage(_, box).orNull)
 
   /** Metadata contract for a decoded audio payload. */
   val audioMetaSchema: StructType = StructType(Seq(
@@ -343,24 +340,15 @@ object Multimodal {
 
   /** Attach decoded audio metadata, partition-batched — the audio
     * sibling of [[withImageMeta]]. */
-  def withAudioMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("meta", audioMetaSchema, false))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        val n = if (bytes == null) 0L else bytes.length.toLong
-        val meta = decodeAudio(bytes) match {
-          case Some((f, sr, ch, bits, fr)) =>
-            Row(f, sr, ch, bits, fr.orNull, n, true)
-          case None => Row(null, null, null, null, null, n, false)
-        }
-        Row.fromSeq(row.toSeq :+ meta)
+  def withAudioMeta(df: DataFrame, binCol: String): DataFrame =
+    attach(df, binCol, "meta", audioMetaSchema) { bytes =>
+      val n = if (bytes == null) 0L else bytes.length.toLong
+      decodeAudio(bytes) match {
+        case Some((f, sr, ch, bits, fr)) =>
+          Row(f, sr, ch, bits, fr.orNull, n, true)
+        case None => Row(null, null, null, null, null, n, false)
       }
-    }(enc)
-  }
+    }
 
   /** Deterministic REAL audio generator: 16-bit signed PCM through the
     * same in-JDK codecs [[decodeAudio]] reads, rotating through ALL
@@ -420,8 +408,9 @@ object Multimodal {
     * `moov/trak/tkhd` the track count and presentation dims (16.16
     * fixed point). Header-only — sample data (`mdat`) is never touched,
     * so a corpus metadata pass reads O(moov) bytes per payload.
-    * Frame EXTRACTION stays stubbed ([[sampleFrames]]) — that genuinely
-    * needs a codec this container doesn't ship. */
+    * Encoded-sample extraction is [[mp4SampleFrames]]; the pixel
+    * decode of those samples needs a codec this container doesn't
+    * ship. */
   def decodeVideo(bytes: Array[Byte])
       : Option[(String, Option[Long], Option[Int], Option[Int], Int)] = {
     if (bytes == null || bytes.length < 16) return None
@@ -496,24 +485,15 @@ object Multimodal {
   }
 
   /** Attach decoded video metadata, partition-batched. */
-  def withVideoMeta(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("meta", videoMetaSchema, false))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        val n = if (bytes == null) 0L else bytes.length.toLong
-        val meta = decodeVideo(bytes) match {
-          case Some((f, d, w, h, t)) =>
-            Row(f, d.orNull, w.orNull, h.orNull, t, n, true)
-          case None => Row(null, null, null, null, null, n, false)
-        }
-        Row.fromSeq(row.toSeq :+ meta)
+  def withVideoMeta(df: DataFrame, binCol: String): DataFrame =
+    attach(df, binCol, "meta", videoMetaSchema) { bytes =>
+      val n = if (bytes == null) 0L else bytes.length.toLong
+      decodeVideo(bytes) match {
+        case Some((f, d, w, h, t)) =>
+          Row(f, d.orNull, w.orNull, h.orNull, t, n, true)
+        case None => Row(null, null, null, null, null, n, false)
       }
-    }(enc)
-  }
+    }
 
   /** REAL frame sampling from an MP4 container: parse the sample table
     * (moov/trak/mdia/minf/stbl — stsz sizes, stco chunk offsets, stsc
@@ -717,36 +697,16 @@ object Multimodal {
   /** Attach sampled encoded frames (`frames` array<binary>, NULL when
     * not parseable), partition-batched. */
   def withSampledFrames(df: DataFrame, binCol: String,
-                        stride: Int): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("frames", ArrayType(BinaryType, false), true))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        val fs = mp4SampleFrames(bytes, stride).map(_.toSeq).orNull
-        Row.fromSeq(row.toSeq :+ fs)
-      }
-    }(enc)
-  }
+                        stride: Int): DataFrame =
+    attach(df, binCol, "frames", ArrayType(BinaryType, false))(
+      mp4SampleFrames(_, stride).orNull)
 
   /** Attach time-sampled encoded frames (`frames` array<binary>, NULL
     * when not parseable or untimed), partition-batched. */
   def withTimeSampledFrames(df: DataFrame, binCol: String,
-                            everyMs: Long): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("frames", ArrayType(BinaryType, false), true))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        val fs = mp4SampleFramesByTime(bytes, everyMs).map(_.toSeq).orNull
-        Row.fromSeq(row.toSeq :+ fs)
-      }
-    }(enc)
-  }
+                            everyMs: Long): DataFrame =
+    attach(df, binCol, "frames", ArrayType(BinaryType, false))(
+      mp4SampleFramesByTime(_, everyMs).orNull)
 
   /** Video sample-stream signature — the container-level member of
     * the fingerprint family ([[imageAHash]], [[audioFingerprint]]):
@@ -795,8 +755,8 @@ object Multimodal {
     * when the sample table is unparseable), partition-batched. */
   def withVideoSignature(df: DataFrame, binCol: String,
                          buckets: Int = 64): DataFrame =
-    attachSignature(df, binCol, "vsig", "withVideoSignature")(
-      videoSampleSignature(_, buckets))
+    attach(df, binCol, "vsig", LongType)(
+      videoSampleSignature(_, buckets).map(Long.box).orNull)
 
   /** Deterministic REAL MP4 generator: hand-assembled ISO-BMFF boxes
     * (ftyp + moov(mvhd + trak(tkhd)...)), analytic in `i`:
@@ -843,18 +803,8 @@ object Multimodal {
     * generator's pixel formula in DuckDB); lossy formats decode to
     * codec-defined pixels and are spec-only. */
   def imageChannelSums(bytes: Array[Byte])
-      : Option[(Int, Int, Long, Long, Long)] = {
-    // PIXEL paths gate on pixelDecodable: the stock JDK has no WebP
-    // codec (admitting WebP would pay the full stream+plugin setup
-    // per payload just to return None), but a registered plugin
-    // re-admits it — probed once (the metadata path's decodeWebp is
-    // header-only and always WebP-capable)
-    if (bytes == null || bytes.length < 8 ||
-        !pixelDecodable(bytes)) return None
-    try {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      if (img == null) return None
+      : Option[(Int, Int, Long, Long, Long)] =
+    withPixels(bytes) { img =>
       var sr = 0L; var sg = 0L; var sb = 0L
       var y = 0
       while (y < img.getHeight) {
@@ -868,9 +818,8 @@ object Multimodal {
         }
         y += 1
       }
-      Some((img.getWidth, img.getHeight, sr, sg, sb))
-    } catch { case _: Exception => None }
-  }
+      (img.getWidth, img.getHeight, sr, sg, sb)
+    }
 
   /** One bit per bucket — bucket mean strictly above the global mean,
     * compared as EXACT rationals: bit(k) = bSum(k)·n > tot·bN(k).
@@ -896,26 +845,51 @@ object Multimodal {
     hash
   }
 
-  /** Shared attach wrapper for the fingerprint family: one nullable
-    * LongType signature column computed per row, partition-batched;
-    * refuses an input already carrying the output name. */
-  private def attachSignature(df: DataFrame, binCol: String,
-                              outCol: String, fnName: String)(
-      f: Array[Byte] => Option[Long]): DataFrame = {
-    require(!df.columns.contains(outCol),
-      s"$fnName output column '$outCol' already exists in the input")
-    val outSchema = StructType(df.schema.fields :+
-      StructField(outCol, LongType, true))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val hv = f(row.getAs[Array[Byte]](binIdx))
-          .map(java.lang.Long.valueOf).orNull
-        Row.fromSeq(row.toSeq :+ hv)
-      }
-    }(enc)
+  /** The one pixel-decode preamble: payloads that pass the magic-byte
+    * admission ([[pixelDecodable]] — the stock JDK has no WebP codec,
+    * so WebP is admitted iff a registered plugin can decode it, probed
+    * once) are decoded by ImageIO and handed to `f`; anything that
+    * fails to decode, or throws inside `f`, is None. */
+  private def withPixels[T](bytes: Array[Byte])(
+      f: java.awt.image.BufferedImage => T): Option[T] = {
+    if (bytes == null || bytes.length < 8 || !pixelDecodable(bytes))
+      return None
+    try {
+      val img = javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(bytes))
+      if (img == null) None else Some(f(img))
+    } catch { case _: Exception => None }
   }
+
+  /** The one cell-luma loop behind [[imageAHash]], [[imageAHashWide]]
+    * and [[imageLumaGrid]]: luma = r + g + b per pixel, pixel (x, y)
+    * in cell c = (y·grid/h)·grid + x·grid/w (floor). Returns
+    * (cellSum, cellN, tot, n): per-cell luma sums and pixel counts,
+    * the image's luma total and pixel count. */
+  private def cellLuma(bytes: Array[Byte], grid: Int)
+      : Option[(Array[Long], Array[Long], Long, Long)] =
+    withPixels(bytes) { img =>
+      val w = img.getWidth; val h = img.getHeight
+      val cellSum = Array.ofDim[Long](grid * grid)
+      val cellN = Array.ofDim[Long](grid * grid)
+      var tot = 0L
+      var y = 0
+      while (y < h) {
+        val v0 = y * grid / h
+        var x = 0
+        while (x < w) {
+          val p = img.getRGB(x, y)
+          val luma = ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
+          val c = v0 * grid + x * grid / w
+          cellSum(c) += luma
+          cellN(c) += 1
+          tot += luma
+          x += 1
+        }
+        y += 1
+      }
+      (cellSum, cellN, tot, w.toLong * h)
+    }
 
   /** Perceptual average-hash (aHash) of a decoded image — the standard
     * cheap near-duplicate fingerprint for image corpora (same family
@@ -940,45 +914,18 @@ object Multimodal {
   def imageAHash(bytes: Array[Byte], grid: Int = 8): Option[Long] = {
     require(grid >= 1 && grid * grid <= 64,
       s"grid=$grid out of [1,8] (signature must fit 64 bits)")
-    // pixelDecodable — WebP admitted iff a reader is registered (see
-    // imageChannelSums)
-    if (bytes == null || bytes.length < 8 ||
-        !pixelDecodable(bytes)) return None
-    try {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      if (img == null) return None
-      val w = img.getWidth; val h = img.getHeight
-      val cellSum = Array.ofDim[Long](grid * grid)
-      val cellN = Array.ofDim[Long](grid * grid)
-      var tot = 0L
-      var y = 0
-      while (y < h) {
-        val v0 = y * grid / h
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          val luma = ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-          val c = v0 * grid + x * grid / w
-          cellSum(c) += luma
-          cellN(c) += 1
-          tot += luma
-          x += 1
-        }
-        y += 1
-      }
-      val n = w.toLong * h
-      // past 2^24 pixels luma·n² could overflow long
-      Some(meanBits(cellSum, cellN, tot, n, big = n > (1L << 24)))
-    } catch { case _: Exception => None }
+    // past 2^24 pixels luma·n² could overflow long
+    cellLuma(bytes, grid).map { case (cellSum, cellN, tot, n) =>
+      meanBits(cellSum, cellN, tot, n, big = n > (1L << 24))
+    }
   }
 
   /** Attach the 64-bit aHash (`ahash`, NULL for undecodable payloads),
     * partition-batched like every decode pass here. */
   def withAHash(df: DataFrame, binCol: String,
                 grid: Int = 8): DataFrame =
-    attachSignature(df, binCol, "ahash", "withAHash")(
-      imageAHash(_, grid))
+    attach(df, binCol, "ahash", LongType)(
+      imageAHash(_, grid).map(Long.box).orNull)
 
   /** WIDE perceptual average-hash — [[imageAHash]]'s exact arithmetic
     * on a finer grid, emitting ceil(grid²/64) packed 64-bit words
@@ -990,7 +937,7 @@ object Multimodal {
     * different images, so at corpus scale the banded join's buckets
     * saturate and near-dup matching over-merges (precision collapse)
     * while the skew cap erodes recall. 4× the bits raises per-band
-    * entropy (the [[graft.operators.Dedup.hammingPairsWide]] bands
+    * entropy (the [[graft.operators.Dedup.hammingPairs]] bands
     * are ~37 bits at maxDist 6 instead of ~9) and separates
     * near-identical-LOOKING images a 64-bit cell grid cannot.
     * Integer-exact like the narrow form (same rational mean compare),
@@ -999,48 +946,12 @@ object Multimodal {
                      grid: Int = 16): Option[Array[Long]] = {
     require(grid >= 1 && grid <= 32,
       s"grid=$grid out of [1,32]")
-    if (bytes == null || bytes.length < 8 ||
-        !pixelDecodable(bytes)) return None
-    try {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      if (img == null) return None
-      val w = img.getWidth; val h = img.getHeight
-      val cellSum = Array.ofDim[Long](grid * grid)
-      val cellN = Array.ofDim[Long](grid * grid)
-      var tot = 0L
-      var y = 0
-      while (y < h) {
-        val v0 = y * grid / h
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          val luma = ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-          val c = v0 * grid + x * grid / w
-          cellSum(c) += luma
-          cellN(c) += 1
-          tot += luma
-          x += 1
-        }
-        y += 1
-      }
-      val n = w.toLong * h
-      val big = n > (1L << 24)
-      val words = Array.ofDim[Long]((grid * grid + 63) / 64)
-      var c = 0
-      while (c < grid * grid) {
-        val above =
-          if (big)
-            java.math.BigInteger.valueOf(cellSum(c))
-              .multiply(java.math.BigInteger.valueOf(n))
-              .compareTo(java.math.BigInteger.valueOf(tot)
-                .multiply(java.math.BigInteger.valueOf(cellN(c)))) > 0
-          else cellSum(c) * n > tot * cellN(c)
-        if (above) words(c / 64) |= 1L << (c % 64)
-        c += 1
-      }
-      Some(words)
-    } catch { case _: Exception => None }
+    cellLuma(bytes, grid).map { case (cellSum, cellN, tot, n) =>
+      // word j holds cells 64j until 64j+64, cell c at bit c%64
+      Array.tabulate((grid * grid + 63) / 64)(j =>
+        meanBits(cellSum.slice(64 * j, 64 * j + 64),
+          cellN.slice(64 * j, 64 * j + 64), tot, n, big = n > (1L << 24)))
+    }
   }
 
   /** Quantized cell-luma grid — the VERIFY-stage feature for media
@@ -1056,52 +967,18 @@ object Multimodal {
   def imageLumaGrid(bytes: Array[Byte],
                     grid: Int = 16): Option[Array[Long]] = {
     require(grid >= 1 && grid <= 32, s"grid=$grid out of [1,32]")
-    if (bytes == null || bytes.length < 8 ||
-        !pixelDecodable(bytes)) return None
-    try {
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))
-      if (img == null) return None
-      val w = img.getWidth; val h = img.getHeight
-      val cellSum = Array.ofDim[Long](grid * grid)
-      val cellN = Array.ofDim[Long](grid * grid)
-      var y = 0
-      while (y < h) {
-        val v0 = y * grid / h
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          val luma = ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-          val c = v0 * grid + x * grid / w
-          cellSum(c) += luma
-          cellN(c) += 1
-          x += 1
-        }
-        y += 1
-      }
-      Some(Array.tabulate(grid * grid)(c =>
-        if (cellN(c) == 0) 0L else 256L * cellSum(c) / cellN(c)))
-    } catch { case _: Exception => None }
+    cellLuma(bytes, grid).map { case (cellSum, cellN, _, _) =>
+      Array.tabulate(grid * grid)(c =>
+        if (cellN(c) == 0) 0L else 256L * cellSum(c) / cellN(c))
+    }
   }
 
   /** Attach the quantized cell-luma grid (`lgrid` array<long>, NULL
     * for undecodable payloads), partition-batched. */
   def withLumaGrid(df: DataFrame, binCol: String,
-                   grid: Int = 16): DataFrame = {
-    require(!df.columns.contains("lgrid"),
-      "withLumaGrid output column 'lgrid' already exists")
-    val outSchema = StructType(df.schema.fields :+
-      StructField("lgrid", ArrayType(LongType, false), true))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val g = imageLumaGrid(row.getAs[Array[Byte]](binIdx), grid)
-          .map(_.toSeq).orNull
-        Row.fromSeq(row.toSeq :+ g)
-      }
-    }(enc)
-  }
+                   grid: Int = 16): DataFrame =
+    attach(df, binCol, "lgrid", ArrayType(LongType, false))(
+      imageLumaGrid(_, grid).map(_.toSeq).orNull)
 
   /** PIXEL-LEVEL verify for media candidate pairs — the
     * candidates→verify split every text-dedup family here already
@@ -1155,106 +1032,32 @@ object Multimodal {
   /** Attach the wide aHash (`ahash_w` array<long>, NULL for
     * undecodable payloads), partition-batched. */
   def withAHashWide(df: DataFrame, binCol: String,
-                    grid: Int = 16): DataFrame = {
-    require(!df.columns.contains("ahash_w"),
-      "withAHashWide output column 'ahash_w' already exists")
-    val outSchema = StructType(df.schema.fields :+
-      StructField("ahash_w", ArrayType(LongType, false), true))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val hv = imageAHashWide(row.getAs[Array[Byte]](binIdx), grid)
-          .map(_.toSeq).orNull
-        Row.fromSeq(row.toSeq :+ hv)
-      }
-    }(enc)
-  }
-
-  /** Perceptual-signature FAMILY for the composed media-dedup
-    * pipelines — which hash + Hamming-edge operator pair the
-    * composition runs. Parameterizing the composition is the r19
-    * measurement's conclusion made API: the two families share every
-    * contract (integer-exact hash, connectivity-equivalent edge set,
-    * skew cap) and differ only in signature entropy, so the pipeline
-    * shape must not hard-code one of them.
-    *
-    * [[SigWide256]] is the SCALE DEFAULT: the replicated-corpus runs
-    * (SCALE.md "Wide (256-bit) signature family") measured the 64-bit
-    * family's band space saturating at O(10³)
-    * structured images — low-entropy near-matches percolate through
-    * the CC closure and over-merge (4,101 survivors vs 10,286 planted
-    * truth at 18K images), while the 256-bit family's ~37-bit bands
-    * stay sparse at equal wall time. [[SigNarrow64]] remains for
-    * thumbnail-scale corpora and for callers pinned to the narrow
-    * hash's artifact compatibility. */
-  sealed trait SigFamily {
-    /** Signature width in bits. */
-    def bits: Int
-    /** Column the family's `withSig` attaches. */
-    def sigCol: String
-    /** Attach the family's signature column to `df`. */
-    def withSig(df: DataFrame, binCol: String): DataFrame
-    /** The family's connectivity-equivalent Hamming edge set. */
-    def edges(sig: DataFrame, idCol: String, maxDist: Int,
-              maxBucket: Option[Long]): DataFrame
-    /** The family's ALL-PAIRS-equivalent banded pair set — the form a
-      * downstream per-pair VERIFY stage needs (the edge set is a
-      * spanning structure whose connectivity equals all-pairs ONLY if
-      * no edge is removed afterward; filtering it breaks transitive
-      * links through a failed representative). */
-    def pairs(sig: DataFrame, idCol: String, maxDist: Int,
-              maxBucket: Option[Long]): DataFrame
-  }
-
-  /** 64-bit aHash (8×8 grid) + [[graft.operators.Dedup.hammingEdges]].
-    * Saturates at O(10³) structured images (measured) — prefer
-    * [[SigWide256]] beyond thumbnail-corpus scale. */
-  case object SigNarrow64 extends SigFamily {
-    val bits = 64
-    val sigCol = "ahash"
-    def withSig(df: DataFrame, binCol: String): DataFrame =
-      withAHash(df, binCol)
-    def edges(sig: DataFrame, idCol: String, maxDist: Int,
-              maxBucket: Option[Long]): DataFrame =
-      Dedup.hammingEdges(sig, idCol, sigCol, bits, maxDist, maxBucket)
-    def pairs(sig: DataFrame, idCol: String, maxDist: Int,
-              maxBucket: Option[Long]): DataFrame =
-      Dedup.hammingPairs(sig, idCol, sigCol, bits, maxDist, maxBucket)
-  }
-
-  /** 256-bit wide aHash (16×16 grid, 4 packed words) +
-    * [[graft.operators.Dedup.hammingEdgesWide]] — the measured scale
-    * default. */
-  case object SigWide256 extends SigFamily {
-    val bits = 256
-    val sigCol = "ahash_w"
-    def withSig(df: DataFrame, binCol: String): DataFrame =
-      withAHashWide(df, binCol)
-    def edges(sig: DataFrame, idCol: String, maxDist: Int,
-              maxBucket: Option[Long]): DataFrame =
-      Dedup.hammingEdgesWide(sig, idCol, sigCol, bits, maxDist,
-        maxBucket)
-    def pairs(sig: DataFrame, idCol: String, maxDist: Int,
-              maxBucket: Option[Long]): DataFrame =
-      Dedup.hammingPairsWide(sig, idCol, sigCol, bits, maxDist,
-        maxBucket)
-  }
+                    grid: Int = 16): DataFrame =
+    attach(df, binCol, "ahash_w", ArrayType(LongType, false))(
+      imageAHashWide(_, grid).map(_.toSeq).orNull)
 
   /** The COMPOSED perceptual media-dedup pipeline, parameterized by
-    * signature family: hash the payloads, build the family's
-    * connectivity-equivalent Hamming edge set, star-contraction
+    * signature width: hash the payloads, build the
+    * connectivity-equivalent Hamming edge set
+    * ([[graft.operators.Dedup.hammingEdges]]), star-contraction
     * connected components, keep each duplicate cluster's smallest id
     * (plus everything never paired). Returns the surviving rows of
     * `imgs` unchanged — compose reshard / downstream curation on top.
     *
-    * `family` defaults to [[SigWide256]] (the measured scale default;
-    * see [[SigFamily]]). `maxDist` is the family's Hamming budget —
-    * the wide family spends ~4× the bits, so a narrow d≤6 corresponds
-    * to roughly wide d≤24 on pure bit-rate, but the measured
-    * precision ladder (SCALE.md) favors TIGHTER wide budgets (d≤3):
-    * the extra entropy exists to separate near-identical-looking
-    * images, not to re-admit them.
+    * `bits` picks the signature: 64 → the 8×8 aHash ([[withAHash]]),
+    * 256 → the 16×16 wide aHash ([[withAHashWide]]). 256 is the SCALE
+    * DEFAULT: the replicated-corpus runs (SCALE.md "Wide (256-bit)
+    * signature family") measured the 64-bit band space saturating at
+    * O(10³) structured images — low-entropy near-matches percolate
+    * through the CC closure and over-merge (4,101 survivors vs 10,286
+    * planted truth at 18K images), while the 256-bit ~37-bit bands
+    * stay sparse at equal wall time. 64 remains for thumbnail-scale
+    * corpora and for callers pinned to the narrow hash's artifacts.
+    * `maxDist` is the Hamming budget — 256 bits spend ~4× the bits, so
+    * a narrow d≤6 corresponds to roughly wide d≤24 on pure bit-rate,
+    * but the measured precision ladder (SCALE.md) favors TIGHTER wide
+    * budgets (d≤3): the extra entropy exists to separate
+    * near-identical-looking images, not to re-admit them.
     *
     * `verifyMaxAvgDiff` adds the pixel-level VERIFY stage
     * ([[verifyPairsByLumaGrid]]). SCALE.md r20 measured why a growing
@@ -1272,7 +1075,8 @@ object Multimodal {
     * byte-identical payloads FIRST by digest — exact duplicates are
     * duplicates by definition, no pixel pass, recall structural
     * (exactly the text side's exactByDigest-before-near-dup shape) —
-    * then (2) runs the family's ALL-PAIRS-equivalent banded pair set
+    * then (2) runs the ALL-PAIRS-equivalent banded pair set
+    * ([[graft.operators.Dedup.hammingPairs]])
     * over the digest representatives and verifies each pair. Every
     * surviving edge is either byte-identity or a pixel-confirmed
     * near-match; connectivity over them equals the verified all-pairs
@@ -1282,18 +1086,24 @@ object Multimodal {
   def perceptualDedup(imgs: DataFrame, idCol: String, binCol: String,
                       maxDist: Int,
                       maxBucket: Option[Long] = None,
-                      family: SigFamily = SigWide256,
+                      bits: Int = 256,
                       verifyMaxAvgDiff: Option[Long] = None)
       : DataFrame = {
+    require(bits == 64 || bits == 256,
+      s"bits=$bits: perceptualDedup hashes 64 (8×8 aHash) or 256 " +
+        "(16×16 wide aHash) bits")
+    def withSig(df: DataFrame) =
+      if (bits == 64) withAHash(df, binCol) else withAHashWide(df, binCol)
+    val sigCol = if (bits == 64) "ahash" else "ahash_w"
     val e = verifyMaxAvgDiff match {
       case None =>
-        family.edges(family.withSig(imgs, binCol), idCol, maxDist,
+        Dedup.hammingEdges(withSig(imgs), idCol, sigCol, bits, maxDist,
           maxBucket)
       case Some(budget) =>
         // byte-identical star contraction (digest = md5 of the raw
         // payload; the narrow (id, digest) projection feeds the rep
         // aggregation AND the star join — materialize once, the
-        // hammingEdges materializeSlim rationale)
+        // hammingEdges materialization rationale)
         val slim = imgs
           .select(col(idCol), md5(col(binCol)).as("__dg"))
           .localCheckpoint()
@@ -1307,7 +1117,7 @@ object Multimodal {
           reps.select(col("__rep")),
           col(idCol) === col("__rep"), "left_semi")
         val verified = verifyPairsByLumaGrid(
-            family.pairs(family.withSig(repImgs, binCol), idCol,
+            Dedup.hammingPairs(withSig(repImgs), idCol, sigCol, bits,
               maxDist, maxBucket),
             "a", "b", repImgs, idCol, binCol, budget)
           .select(col("a"), col("b"), col("dist"))
@@ -1369,33 +1179,23 @@ object Multimodal {
     * payloads), partition-batched. */
   def withAudioFingerprint(df: DataFrame, binCol: String,
                            buckets: Int = 64): DataFrame =
-    attachSignature(df, binCol, "afp", "withAudioFingerprint")(
-      audioFingerprint(_, buckets))
+    attach(df, binCol, "afp", LongType)(
+      audioFingerprint(_, buckets).map(Long.box).orNull)
 
   /** Attach per-channel pixel sums, partition-batched. */
-  def withChannelSums(df: DataFrame, binCol: String): DataFrame = {
-    val statsSchema = StructType(Seq(
-      StructField("width", IntegerType, true),
-      StructField("height", IntegerType, true),
-      StructField("sum_r", LongType, true),
-      StructField("sum_g", LongType, true),
-      StructField("sum_b", LongType, true),
-      StructField("ok", BooleanType, false)))
-    val outSchema = StructType(df.schema.fields :+
-      StructField("stats", statsSchema, false))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        val st = imageChannelSums(bytes) match {
-          case Some((w, h, r, g, b)) => Row(w, h, r, g, b, true)
-          case None => Row(null, null, null, null, null, false)
-        }
-        Row.fromSeq(row.toSeq :+ st)
+  def withChannelSums(df: DataFrame, binCol: String): DataFrame =
+    attach(df, binCol, "stats", StructType(Seq(
+        StructField("width", IntegerType, true),
+        StructField("height", IntegerType, true),
+        StructField("sum_r", LongType, true),
+        StructField("sum_g", LongType, true),
+        StructField("sum_b", LongType, true),
+        StructField("ok", BooleanType, false)))) { bytes =>
+      imageChannelSums(bytes) match {
+        case Some((w, h, r, g, b)) => Row(w, h, r, g, b, true)
+        case None => Row(null, null, null, null, null, false)
       }
-    }(enc)
-  }
+    }
 
   /** Deterministic MP4 generator WITH a sample table: n = 5 + i%4
     * samples of 8 bytes each, sample k filled with byte value
@@ -1456,47 +1256,5 @@ object Multimodal {
     }
     val h0 = head(0L)
     head(h0.length + 8L) ++ bmffBox("mdat", payload)
-  }
-
-  /** Byte-level payload statistics (length/mean/first/last) — the cheap
-    * pre-filter pass that runs on EVERY payload regardless of format,
-    * before the format-aware extractors ([[imageChannelSums]] for
-    * decoded pixels; a model pass would use the same partition-batched
-    * shape). */
-  def extractFeatures(df: DataFrame, binCol: String): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("features", ArrayType(DoubleType, false), false))
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(outSchema))
-    val binIdx = df.schema.fieldIndex(binCol)
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](binIdx)
-        val fs =
-          if (bytes == null || bytes.isEmpty) Seq(0.0, 0.0, 0.0, 0.0)
-          else {
-            val n = bytes.length.toDouble
-            val mean = bytes.map(b => (b & 0xff).toDouble).sum / n
-            Seq(n, mean, (bytes.head & 0xff).toDouble,
-              (bytes.last & 0xff).toDouble)
-          }
-        Row.fromSeq(row.toSeq :+ fs)
-      }
-    }(enc)
-  }
-
-  /** Fixed-length chunk sampler for UNSTRUCTURED binary streams (raw
-    * capture dumps, fixed-record formats) — pure column expressions.
-    * Container formats with a real sample table use
-    * [[mp4SampleFrames]]/[[withSampledFrames]] instead. */
-  def sampleFrames(df: DataFrame, binCol: String, frameLen: Int,
-                   stride: Int): DataFrame = {
-    require(frameLen > 0 && stride > 0)
-    df.withColumn("frames",
-      transform(
-        sequence(lit(0),
-          greatest((length(col(binCol)) / (frameLen * stride)).cast("int")
-            - 1, lit(-1))),
-        i => substring(col(binCol), (i * frameLen * stride + 1).cast("int"),
-          lit(frameLen))))
   }
 }

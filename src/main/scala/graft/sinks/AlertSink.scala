@@ -15,10 +15,12 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   *  - `end`    → delete the notification file, run the back2norm script.
   *
   * File name (build_file_name:33-84): `{dir}/{mo}-{mavg}-{limit}-{key
-  * fields joined by '-'}`, with `/`, `\`, `%` and control characters
-  * in each part percent-encoded: key fields such as `sni` or
-  * `dns-name` come from packet bytes, and a `/` in one must not steer
-  * the file out of `dir`; a name past 255 bytes is cut and tagged
+  * fields joined by '-'}`, with `/`, `\`, `%`, control characters and
+  * non-ASCII characters in each part percent-encoded (non-ASCII as
+  * UTF-8 bytes): key fields such as `sni` or `dns-name` come from
+  * packet bytes, and a `/` in one must not steer the file out of
+  * `dir`, nor a non-ASCII one fail the path on a JVM whose file-name
+  * encoding is not UTF-8; a name past 255 bytes is cut and tagged
   * with a hash of the whole name, since an SNI or DNS-name key can be
   * that long; content (build_file_content:86-118): key
   * fields space-separated, then the breaching value and the limit as
@@ -46,33 +48,35 @@ object AlertSink {
   final case class Conf(notifDir: String, moName: String, mavgName: String,
                         limits: Seq[Limit], execute: Boolean = false)
 
-  /** One file-name part with the path separators, `%` and control
-    * characters percent-encoded; everything else stays as it is. */
-  private def pathSafe(part: String): String =
-    part.flatMap { c =>
-      if (c == '/' || c == '\\' || c == '%' || Character.isISOControl(c))
-        f"%%${c.toInt}%02X"
-      else c.toString
+  /** One file-name part in printable ASCII: the path separators,
+    * `%`, control characters and every non-ASCII character are
+    * percent-encoded as their UTF-8 bytes (`é` → `%C3%A9`), so a name
+    * never depends on the JVM's file-name encoding
+    * (`sun.jnu.encoding`), which under a C/POSIX locale cannot map
+    * non-ASCII text at all; everything else stays as it is. */
+  private def pathSafe(part: String): String = {
+    val sb = new StringBuilder
+    part.codePoints().forEach { cp =>
+      if (cp < 0x20 || cp > 0x7e || cp == '/' || cp == '\\' || cp == '%')
+        new String(Character.toChars(cp)).getBytes(StandardCharsets.UTF_8)
+          .foreach(b => sb.append(f"%%${b & 0xff}%02X"))
+      else sb.append(cp.toChar)
     }
+    sb.toString
+  }
 
-  /** A file name cut to the 255-byte limit of common filesystems: a
-    * longer one keeps its longest prefix that fits whole characters
-    * and ends in `~` plus 16 hex digits of its SHA-256, so distinct
-    * long keys keep distinct files. */
-  private def capped(name: String): String = {
-    val utf8 = name.getBytes(StandardCharsets.UTF_8)
-    if (utf8.length <= 255) name
+  /** A file name cut to the 255-byte limit of common filesystems (the
+    * name is ASCII, so bytes are characters): a longer one keeps its
+    * first 238 characters and ends in `~` plus 16 hex digits of its
+    * SHA-256, so distinct long keys keep distinct files. */
+  private def capped(name: String): String =
+    if (name.length <= 255) name
     else {
       val tag = "~" + java.security.MessageDigest.getInstance("SHA-256")
-        .digest(utf8).take(8).map(b => f"${b & 0xff}%02x").mkString
-      // the encoder stops before the first character that would not
-      // fit whole, leaving `in` positioned there
-      val in = java.nio.CharBuffer.wrap(name)
-      StandardCharsets.UTF_8.newEncoder().encode(in,
-        java.nio.ByteBuffer.allocate(255 - tag.length), true)
-      name.substring(0, in.position()) + tag
+        .digest(name.getBytes(StandardCharsets.US_ASCII)).take(8)
+        .map(b => f"${b & 0xff}%02x").mkString
+      name.take(255 - tag.length) + tag
     }
-  }
 
   /** Event precedence inside one batch at equal timestamps. */
   private val eventOrder = Map("start" -> 0, "update" -> 1, "end" -> 2)

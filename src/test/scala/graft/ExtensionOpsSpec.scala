@@ -923,9 +923,16 @@ class ExtensionOpsSpec extends SparkTest {
         (r.getString(1), r.get(2), r.get(3), r.getBoolean(4))).toMap
     assert(out(1L) == (("jpeg", 640, 480, true)))
     assert(out(2L)._4 == false && out(2L)._1 == null)
-    val feats = Multimodal.extractFeatures(df, "payload")
-      .select("features").collect()(0).getSeq[Double](0)
-    assert(feats.length == 4 && feats.head == good.length.toDouble)
+  }
+
+  test("media attach: an input already carrying the output column " +
+    "fails loudly, naming the column") {
+    import spark.implicits._
+    val df = Seq((1L, Multimodal.encodeImageStub("png", 4, 4, 1), 7L))
+      .toDF("id", "payload", "meta")
+    val e = intercept[IllegalArgumentException](
+      Multimodal.withImageMeta(df, "payload"))
+    assert(e.getMessage.contains("'meta'"), e.getMessage)
   }
 
   test("device enrichment: rate, mark count, skip-unmarked " +

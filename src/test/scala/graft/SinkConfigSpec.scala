@@ -290,6 +290,42 @@ class SinkConfigSpec extends SparkTest {
     assert(files().isEmpty, "end deletes the file start wrote")
   }
 
+  test("alert sink: a non-ASCII key (short, and past the name limit " +
+    "once encoded) writes an ASCII file holding the raw key, and end " +
+    "deletes it") {
+    import graft.sinks.AlertSink
+    import graft.streaming.MavgStream.AlertRow
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val notif = Files.createTempDirectory("graft_notif_utf8")
+    val sink = new AlertSink(AlertSink.Conf(notif.toString, "mo", "m",
+      Seq(AlertSink.Limit("lim"), AlertSink.Limit("lim2",
+        actionScript = Some("/bin/true")))))
+    def files() = Files.list(notif).iterator().asScala.toList
+      .filter(_.getFileName.toString != "invocations.log")
+    // e.g. an IDN SNI decoded from packet bytes; 200 × é encodes to
+    // 1,200 name characters
+    for (key <- Seq("café.example", "é" * 200)) {
+      sink.handle(Seq(AlertRow(key, 1, "start", 500.0, 100.0, 1L)))
+      val written = files()
+      assert(written.size == 1, written)
+      val name = written.head.getFileName.toString
+      assert(name.getBytes("UTF-8").length <= 255, name)
+      assert(name.forall(c => c >= ' ' && c <= '~'), name)
+      assert(name.startsWith("mo-m-lim2-"), name)
+      assert(new String(Files.readAllBytes(written.head), "UTF-8") ==
+        s"$key 500 100")
+      // the script argv keeps the raw key too
+      assert(new String(Files.readAllBytes(
+          notif.resolve("invocations.log")), "UTF-8")
+        .linesIterator.toSeq.last.split("\t").contains(key))
+      sink.handle(Seq(AlertRow(key, 1, "end", 1.0, 100.0, 2L)))
+      assert(files().isEmpty, "end deletes the file start wrote")
+    }
+    assert(sink.fileName("lim", Seq("café.example")).getFileName
+      .toString == "mo-m-lim-caf%C3%A9.example")
+  }
+
   test("streaming fwm: window closes when the watermark passes " +
     "(two-bank swap analog)") {
     implicit val sqlCtx = spark.sqlContext

@@ -59,7 +59,8 @@ class SkewSpec extends SparkTest {
     val sig = Multimodal.withAHash(corpus, "payload")
     val maxBucket = sig
       .select(posexplode(
-        array(Dedup.bandColumns(col("ahash"), 64, 6): _*))
+        array(Dedup.bandColumns(col("ahash"),
+          Dedup.wordOf(sig, "ahash", 64), 64, 6): _*))
         .as(Seq("band", "bv")))
       .groupBy(col("band"), col("bv")).count()
       .agg(max(col("count"))).collect().head.getLong(0)
@@ -174,29 +175,134 @@ class SkewSpec extends SparkTest {
       "capped hammingPairs unexpectedly kept blob pairs")
   }
 
-  /** Random 256-bit signatures clustered around shared bases so wide
-    * pairs/edges have real positives to find. */
-  private def wideRows(seed: Long, n: Int): Seq[(Long, Seq[Long])] = {
+  /** Random signatures of `words` words clustered around shared bases
+    * (0–5 flips of the low `bits` bits) so pairs and edges have real
+    * positives to find; bits < 64 keep the one word's high bits 0. */
+  private def sigRows(seed: Long, n: Int, bits: Int): Seq[(Long, Seq[Long])] = {
+    val words = (bits + 63) / 64
+    val low = if (bits >= 64) -1L else (1L << bits) - 1
     val rnd = new scala.util.Random(seed)
-    val bases = Seq.fill(5)(Seq.fill(4)(rnd.nextLong()))
+    val bases = Seq.fill(5)(Seq.fill(words)(rnd.nextLong() & low))
     (1L to n).map { id =>
       val b = bases(rnd.nextInt(bases.size))
-      val flips = Seq.fill(rnd.nextInt(6))(rnd.nextInt(256))
+      val flips = Seq.fill(rnd.nextInt(6))(rnd.nextInt(bits))
       id -> flips.foldLeft(b)((s, k) =>
         s.updated(k / 64, s(k / 64) ^ (1L << (k % 64))))
     }
   }
 
-  private def wideDistOf(a: Seq[Long], b: Seq[Long]): Int =
-    a.zip(b).map { case (x, y) =>
-      java.lang.Long.bitCount(x ^ y) }.sum
+  /** The 64-bit anchored corpus (negatives included, every 13th
+    * signature NULL) the narrow brute-force check has always used. */
+  private def anchoredRows: Seq[(Long, Option[Seq[Long]])] = {
+    val rnd = new scala.util.Random(7L)
+    (1L to 40L).map { i =>
+      // cluster signatures around a few anchors so distances spread
+      val anchor = Seq(0L, -1L, 0x0123456789ABCDEFL)(rnd.nextInt(3))
+      val flips = rnd.nextInt(12)
+      val s = (0 until flips).foldLeft(anchor)((a, _) =>
+        a ^ (1L << rnd.nextInt(64)))
+      (i, if (i % 13 == 0) None else Some(Seq(s)))
+    }
+  }
+
+  private def distOf(a: Seq[Long], b: Seq[Long]): Int =
+    a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
+
+  /** Band `b` of a signature, sliced bit by bit — the spec-side
+    * replica of the pigeonhole split. */
+  private def bandOf(s: Seq[Long], bits: Int, maxDist: Int,
+                     b: Int): Long = {
+    val nBands = maxDist + 1
+    val width = bits / nBands + (if (b < bits % nBands) 1 else 0)
+    val start = b * (bits / nBands) + math.min(b, bits % nBands)
+    (0 until width).map(k =>
+      ((s((start + k) / 64) >>> ((start + k) % 64)) & 1L) << k)
+      .reduce(_ | _)
+  }
+
+  /** A signature frame: `bigint` for ≤ 64 bits, `array<bigint>` above. */
+  private def sigFrame(bits: Int,
+                       rows: Seq[(Long, Option[Seq[Long]])]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val narrow = bits <= 64
+    spark.createDataFrame(
+      rows.map { case (i, s) =>
+        Row(i, s.map(w => if (narrow) w.head else w).orNull) }.asJava,
+      StructType(Seq(StructField("id", LongType, false),
+        StructField("sig",
+          if (narrow) LongType else ArrayType(LongType, false), true))))
+  }
+
+  test("hammingPairs and hammingEdges equal brute force over 16-, 64-, " +
+    "128- and 256-bit signatures, capped and uncapped; NULL " +
+    "signatures never pair") {
+    import graft.operators.Dedup
+    def withNull(rows: Seq[(Long, Seq[Long])]) =
+      rows.map { case (i, s) => (i, Option(s)) } :+ ((999L, None))
+    // (bits, rows, maxDists): 64-bit maxDist 0 is one 64-bit band;
+    // 128-bit maxDist 2 and 5 put a band across the word boundary;
+    // 256-bit maxDist 3 → 4 bands × 64 bits (exact word boundaries),
+    // maxDist 6 → 7 bands of 37/36 bits (every band spans a word)
+    val table = Seq(
+      (16, withNull(sigRows(3L, 40, 16)), Seq(1, 3)),
+      (64, anchoredRows, Seq(0, 3, 9)),
+      (128, withNull(sigRows(11L, 50, 128)), Seq(2, 5)),
+      (256, withNull(sigRows(31L, 50, 256)), Seq(3, 6)),
+      (256, withNull(sigRows(77L, 60, 256)), Seq(6)))
+    val cap = 4L
+    for ((bits, rows, maxDists) <- table; d <- maxDists) {
+      val at = s"bits=$bits maxDist=$d"
+      val df = sigFrame(bits, rows)
+      val sigOf = rows.collect { case (i, Some(s)) => i -> s }.toMap
+      val ids = sigOf.keys.toSeq.sorted
+      val want = (for {
+        a <- ids; b <- ids if a < b
+        dist = distOf(sigOf(a), sigOf(b)) if dist <= d
+      } yield (a, b, dist.toLong))
+      def triples(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+          .sortBy(t => (t._1, t._2)).toSeq
+      // uncapped pairs: exactly the brute-force all-pairs set
+      val got = triples(Dedup.hammingPairs(df, "id", "sig", bits, d))
+      assert(got == want, s"$at: got ${got.size} pairs, want ${want.size}")
+      // capped pairs: exactly the pairs agreeing on a band whose bucket
+      // holds at most `cap` signatures
+      val pop = (0 to d).flatMap(b => ids.map(i =>
+        (b, bandOf(sigOf(i), bits, d, b)))).groupBy(identity)
+        .map { case (k, v) => k -> v.size }
+      val cold = want.filter { case (a, b, _) => (0 to d).exists { k =>
+        val v = bandOf(sigOf(a), bits, d, k)
+        v == bandOf(sigOf(b), bits, d, k) && pop((k, v)) <= cap } }
+      assert(triples(Dedup.hammingPairs(df, "id", "sig", bits, d,
+        maxBucket = Some(cap))) == cold, s"$at capped")
+      // edges, capped and uncapped: every edge is a valid pair and the
+      // dist-0 star edges count the exact-dup mass
+      val dupMass = sigOf.groupBy(_._2).values.map(_.size - 1).sum
+      for (mb <- Seq(None, Some(cap))) {
+        val edges = triples(Dedup.hammingEdges(df, "id", "sig", bits, d,
+          maxBucket = mb))
+        edges.foreach { case (a, b, e) =>
+          assert(a < b && distOf(sigOf(a), sigOf(b)).toLong == e &&
+            e <= d, s"$at $mb: invalid edge ($a,$b,$e)")
+        }
+        assert(edges.count(_._3 == 0L) == dupMass, s"$at $mb stars")
+        // uncapped: components equal the all-pairs components
+        if (mb.isEmpty)
+          assert(components(ids, edges.map(e => (e._1, e._2))) ==
+            components(ids, want.map(e => (e._1, e._2))), s"$at cc")
+      }
+    }
+  }
 
   test("hammingPairsWide: equals brute-force all-pairs on random " +
     "clustered 256-bit signatures, at word-aligned AND word-spanning " +
     "band widths; NULL signatures never pair") {
+    // the 256-bit pair join is hammingPairs over an array<bigint> column
     import graft.operators.Dedup
     import spark.implicits._
-    val rows = wideRows(31L, 50)
+    val rows = sigRows(31L, 50, 256)
     val sigOf = rows.toMap
     val df = rows.toDF("id", "sig")
       .unionByName(Seq((999L, null)).toDF("id", "sig")
@@ -204,13 +310,13 @@ class SkewSpec extends SparkTest {
     // maxDist 3 → 4 bands × 64 bits (exact word boundaries);
     // maxDist 6 → 7 bands of 37/36 bits (every band spans a word)
     for (d <- Seq(3, 6)) {
-      val got = Dedup.hammingPairsWide(df, "id", "sig", 256, d)
+      val got = Dedup.hammingPairs(df, "id", "sig", 256, d)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sortBy(t => (t._1, t._2)).toSeq
       val ids = rows.map(_._1)
       val want = (for {
         a <- ids; b <- ids if a < b
-        dist = wideDistOf(sigOf(a), sigOf(b)) if dist <= d
+        dist = distOf(sigOf(a), sigOf(b)) if dist <= d
       } yield (a, b, dist.toLong)).sortBy(t => (t._1, t._2))
       assert(got == want,
         s"maxDist=$d: got ${got.size} pairs, want ${want.size}")
@@ -218,66 +324,85 @@ class SkewSpec extends SparkTest {
     }
   }
 
-  test("bandColumnsWide: every band value is the exact bit slice, " +
-    "including word-spanning bands over NEGATIVE low words") {
-    // an arithmetic shift of a negative lo word would smear sign bits
-    // into the hi word's OR positions — matches would still be found
-    // (the smear is shared and the dist filter is exact) but the band
-    // would lose the hi word's entropy; this pins the slice exactly
-    import graft.operators.Dedup
-    import spark.implicits._
-    val rnd = new scala.util.Random(5L)
-    val sigs = Seq.fill(8)(Seq.fill(4)(rnd.nextLong())) :+
-      Seq(0x8000000000000001L, 0xffL, -1L, Long.MinValue) // adversarial
-    def bitOf(s: Seq[Long], k: Int): Long =
-      (s(k / 64) >>> (k % 64)) & 1L
-    for (maxDist <- Seq(3, 6, 7)) {
-      val nBands = maxDist + 1
-      val base = 256 / nBands
-      val rem = 256 % nBands
-      val got = sigs.map(s => s -> Seq(s).toDF("sig")
-        .select(Dedup.bandColumnsWide(col("sig"), 256, maxDist): _*)
-        .collect().head.toSeq.map(_.asInstanceOf[Long]))
-      got.foreach { case (s, bands) =>
-        bands.zipWithIndex.foreach { case (bv, b) =>
-          val width = base + (if (b < rem) 1 else 0)
-          val start = b * base + math.min(b, rem)
-          val want = (0 until width).map(k =>
-            bitOf(s, start + k) << k).reduce(_ | _)
-          assert(bv == want,
-            s"band $b of $s at maxDist $maxDist: got $bv want $want")
-        }
-      }
-    }
-  }
-
   test("hammingEdgesWide: components equal hammingPairsWide's; " +
     "star edges count the exact-dup mass; narrow/wide arithmetic " +
     "agree at grid 8") {
+    // the 256-bit edge set is hammingEdges over an array<bigint> column
     import graft.operators.{Dedup, Multimodal}
     import spark.implicits._
-    val rows = wideRows(77L, 60)
+    val rows = sigRows(77L, 60, 256)
     val df = rows.toDF("id", "sig")
     val ids = rows.map(_._1)
-    val edges = Dedup.hammingEdgesWide(df, "id", "sig", 256, 6)
+    val edges = Dedup.hammingEdges(df, "id", "sig", 256, 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val sigOf = rows.toMap
     edges.foreach { case (a, b, d) =>
-      assert(a < b && wideDistOf(sigOf(a), sigOf(b)).toLong == d &&
+      assert(a < b && distOf(sigOf(a), sigOf(b)).toLong == d &&
         d <= 6, s"invalid wide edge ($a,$b,$d)")
     }
-    val pairs = Dedup.hammingPairsWide(df, "id", "sig", 256, 6)
+    val pairs = Dedup.hammingPairs(df, "id", "sig", 256, 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(components(ids, edges.map(e => (e._1, e._2)).toSeq) ==
       components(ids, pairs))
     val dupMass = rows.groupBy(_._2).values.map(g => g.size - 1).sum
     assert(edges.count(_._3 == 0L) == dupMass)
     // the wide hash at grid 8 packs to exactly the narrow hash — one
-    // differential pins both implementations to the same arithmetic
+    // differential pins both readings to the same arithmetic
     for (i <- Seq(4L, 10L, 58L, 7L)) { // 7 is corrupt → None on both
       val p = Multimodal.encodeTestImage(i)
       assert(Multimodal.imageAHashWide(p, grid = 8).map(_.head) ==
         Multimodal.imageAHash(p, grid = 8), s"grid-8 drift at $i")
+    }
+  }
+
+  test("bandColumns: every band value is the exact bit slice, " +
+    "including word-spanning bands over NEGATIVE low words") {
+    // an arithmetic shift of a negative lo word would smear sign bits
+    // into the hi word's OR positions — matches would still be found
+    // (the smear is shared and the dist filter is exact) but the band
+    // would lose the hi word's entropy; this pins the slice exactly
+    import graft.operators.Dedup
+    for ((bits, maxDists) <- Seq(64 -> Seq(0, 3, 6), 128 -> Seq(2, 5),
+        256 -> Seq(3, 6, 7))) {
+      val rnd = new scala.util.Random(5L)
+      val words = bits / 64
+      val sigs = Seq.fill(8)(Seq.fill(words)(rnd.nextLong())) :+
+        Seq(0x8000000000000001L, 0xffL, -1L, Long.MinValue)
+          .take(words) // adversarial
+      val df = sigFrame(bits, sigs.zipWithIndex.map { case (s, i) =>
+        (i.toLong, Some(s)) })
+      for (maxDist <- maxDists) {
+        val got = df.select(col("id") +: Dedup.bandColumns(col("sig"),
+            Dedup.wordOf(df, "sig", bits), bits, maxDist): _*)
+          .collect().sortBy(_.getLong(0))
+          .map(_.toSeq.tail.map(_.asInstanceOf[Long]))
+        sigs.zip(got).foreach { case (s, bands) =>
+          bands.zipWithIndex.foreach { case (bv, b) =>
+            val want = bandOf(s, bits, maxDist, b)
+            assert(bv == want, s"band $b of $s at bits $bits maxDist " +
+              s"$maxDist: got $bv want $want")
+          }
+        }
+      }
+    }
+  }
+
+  test("Hamming operators: a signature column of the wrong type, or a " +
+    "bits value its type cannot hold, fails at plan time naming both") {
+    import graft.operators.Dedup
+    import spark.implicits._
+    val ints = Seq((1L, 3), (2L, 5)).toDF("id", "isig")
+    val longs = Seq((1L, 3L), (2L, 5L)).toDF("id", "lsig")
+    for ((df, c, bits, typ) <- Seq((ints, "isig", 32, "int"),
+        (longs, "lsig", 256, "bigint"))) {
+      val ops = Seq[() => Any](
+        () => Dedup.hammingPairs(df, "id", c, bits, 3),
+        () => Dedup.hammingEdges(df, "id", c, bits, 3))
+      ops.foreach { op =>
+        val e = intercept[IllegalArgumentException](op())
+        assert(e.getMessage.contains(s"'$c'") &&
+          e.getMessage.contains(typ), e.getMessage)
+      }
     }
   }
 
@@ -292,18 +417,16 @@ class SkewSpec extends SparkTest {
     val imgs = (srcs.map(i => (i, Multimodal.encodeTestImage(i))) ++
       srcs.map(i => (i + 100L, Multimodal.encodeTestImage(i))))
       .toDF("img_id", "payload")
-    for ((family, maxDist) <- Seq(
-        (Multimodal.SigWide256: Multimodal.SigFamily) -> 3,
-        (Multimodal.SigNarrow64: Multimodal.SigFamily) -> 6)) {
+    for ((bits, maxDist) <- Seq(256 -> 3, 64 -> 6)) {
       val surv = Multimodal.perceptualDedup(imgs, "img_id", "payload",
-          maxDist = maxDist, maxBucket = Some(8L), family = family)
+          maxDist = maxDist, maxBucket = Some(8L), bits = bits)
         .select("img_id").collect().map(_.getLong(0)).toSet
       // every planted duplicate (id+100) drops — structurally (star
       // contraction), independent of banding luck in either family
       assert(srcs.forall(i => !surv.contains(i + 100L)),
-        s"$family kept a planted duplicate: $surv")
+        s"$bits-bit kept a planted duplicate: $surv")
       assert(srcs.toSet.subsetOf(surv),
-        s"$family dropped an original: $surv")
+        s"$bits-bit dropped an original: $surv")
     }
     // parameterization is pure routing: the narrow family's output is
     // bit-identical to composing the operators by hand (q131's chain)
@@ -313,8 +436,7 @@ class SkewSpec extends SparkTest {
           maxBucket = Some(8L)), "a", "b")
       .select("img_id").collect().map(_.getLong(0)).toSet
     val viaApi = Multimodal.perceptualDedup(imgs, "img_id", "payload",
-        maxDist = 6, maxBucket = Some(8L),
-        family = Multimodal.SigNarrow64)
+        maxDist = 6, maxBucket = Some(8L), bits = 64)
       .select("img_id").collect().map(_.getLong(0)).toSet
     assert(byHand == viaApi)
   }
