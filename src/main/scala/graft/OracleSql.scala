@@ -236,12 +236,6 @@ object OracleSql {
                WHERE (10000 * inter) // (sa.sz + sb.sz - inter)
                  >= $minBp)"""
 
-  /** Product quantization replay (mirrors Similarity.pqTrainQuantized /
-    * pqEncode / pqSearchADC): per-subspace integer Lloyd — the SAME
-    * recurrence as [[kmeansCtes]] with a `sub` grouping column — then
-    * final-codebook assignment (`pcode`) and the query's ADC distance
-    * table (`ptab`); exposes `padc(id, adist)`. The query is the row
-    * with id = `queryId`. */
   /** The PQ training + encode chain over a source CTE `src(id, sub,
     * v)` of already-quantized BIGINT subspace slices — shared verbatim
     * by the raw-vector replay ([[pqCtes]], src = the quantized
@@ -290,6 +284,12 @@ object OracleSql {
     (base +: steps :+ encode).mkString(",\n      ")
   }
 
+  /** Product quantization replay (mirrors Similarity.pqTrainQuantized /
+    * pqEncode / pqSearchADC): per-subspace integer Lloyd — the SAME
+    * recurrence as [[kmeansCtes]] with a `sub` grouping column — then
+    * final-codebook assignment (`pcode`) and the query's ADC distance
+    * table (`ptab`); exposes `padc(id, adist)`. The query is the row
+    * with id = `queryId`. */
   def pqCtes(m: Int, k: Int, iters: Int, dim: Int, scale: Long,
              queryId: Long): String = {
     val s = dim / m

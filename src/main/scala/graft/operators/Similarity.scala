@@ -216,6 +216,7 @@ object Similarity {
         col(vecCol).as("__v"), col("__n").as("__vn"))).as("m"))
       .select(col(idCol), col("m.__v").as(vecCol),
         col("m.__vn").as("__n"), col("m.__cid").as("__cid"))
+
   /** Σ (a_i − b_i)² over long arrays, codegen'd — the exact integer
     * distance of k-means training and PQ. */
   private def sqDist(a: Column, b: Column): Column = GraftBridge.toColumn(
@@ -232,155 +233,73 @@ object Similarity {
                         scale: Long): DataFrame =
     df.select(col(idCol).as("id"), floorScaled(col(vecCol), scale).as("v"))
 
-  /** One (sub, sv) struct per PQ subspace j — positions
-    * [j·sub, (j+1)·sub) of `v` — to be exploded. */
-  private def subspaces(v: Column, m: Int, sub: Int): Column =
-    explode(array((0 until m).map(j =>
-      struct(lit(j).cast(LongType).as("sub"),
-        slice(v, j * sub + 1, sub).as("sv"))): _*))
-
-  /** Distributed k-means (Lloyd) over integer-quantized vectors — the
-    * trainer that produces an IVF centroid table ([[IvfLifecycle]]).
-    *
-    * Every step is EXACT integer math, which makes the whole training
-    * run deterministic and engine-portable (the DuckDB oracle replays
-    * it bit-for-bit) — normally k-means can't be oracled because float
-    * mean aggregation is order-dependent:
-    *  - vectors quantize to floor(x·10^6) longs;
-    *  - seeds are the k rows with smallest md5(id) (stable under
-    *    resharding, no RNG);
-    *  - assignment minimizes exact integer squared-L2, ties to the
-    *    smaller centroid id;
-    *  - the centroid update is an element-wise floor(sum/count) —
-    *    floor-division on both engines;
-    *  - empty clusters carry their previous centroid forward.
-    *
-    * Scale shape per iteration: centroids broadcast (k·dim longs);
-    * assignment is a map-side argmin folded into a partial-aggregated
-    * groupBy(id) min(struct) — no window, no n×k shuffle; the update
-    * shuffles (cid, pos) partial sums only. Component sums stay exact
-    * in a double up to 2^53 (≈ 9·10^9 rows at |x| ≤ 1); beyond that,
-    * swap the floor(sum/count) to decimal division.
-    *
-    * @return exploded centroid table (cid, pos, cx), pos 1-based.
-    */
-  def kmeansQuantized(df: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int,
-                      scale: Long = 1000000L): DataFrame = {
-    kmeansArrays(df, idCol, vecCol, k, iters, scale)
-      .select(col("cid"), posexplode(col("cv")).as(Seq("pos0", "cx")))
-      .select(col("cid"), (col("pos0") + 1).cast(LongType).as("pos"),
-        col("cx"))
+  /** The PQ subspace width dim/m. */
+  private def subDim(dim: Int, m: Int): Int = {
+    require(m >= 1 && dim % m == 0, s"dim $dim must split into $m subspaces")
+    dim / m
   }
 
-  /** [[kmeansQuantized]]'s centroids dequantized to double arrays —
-    * drop-in centroid table for [[IvfLifecycle]] (cid, cv). */
-  def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int,
-                      scale: Long = 1000000L): DataFrame =
-    kmeansArrays(df, idCol, vecCol, k, iters, scale)
-      .select(col("cid"),
-        transform(col("cv"), x => x / lit(scale.toDouble)).as("cv"))
+  /** `keep` plus one (sub, sv) row per PQ subspace j of the long array
+    * `v`: positions [j·sub, (j+1)·sub). */
+  private def sliced(df: DataFrame, m: Int, sub: Int,
+                     keep: Seq[String] = Seq("id")): DataFrame =
+    df.select(keep.map(col) :+ explode(array((0 until m).map(j =>
+        struct(lit(j).cast(LongType).as("sub"),
+          slice(col("v"), j * sub + 1, sub).as("sv"))): _*)).as("__s"): _*)
+      .select(keep.map(col) ++ Seq(col("__s.sub").as("sub"),
+        col("__s.sv").as("sv")): _*)
 
-  private def kmeansArrays(df: DataFrame, idCol: String, vecCol: String,
-                           k: Int, iters: Int,
-                           scale: Long): DataFrame = {
-    val vq = quantized(df, idCol, vecCol, scale)
-    val wSeed = Window.orderBy(col("__h").asc, col("id").asc)
-    var cents = vq
-      .withColumn("__h", md5(col("id").cast("string")))
-      .orderBy(col("__h").asc, col("id").asc).limit(k)
-      .withColumn("cid", row_number().over(wSeed).cast(LongType) - 1)
-      .select(col("cid"), col("v").as("cv"))
-    for (_ <- 0 until iters) {
-      // codegen'd integer distance (VecSqDistLongExpr) — this runs k
-      // times per vector per iteration, the training hot loop
-      val asg = vq.join(broadcast(cents))
-        .withColumn("dist", sqDist(col("v"), col("cv")))
-        .groupBy(col("id"))
-        .agg(min(struct(col("dist"), col("cid"), col("v"))).as("m"))
-        .select(col("m.cid").as("cid"), col("m.v").as("v"))
-      val upd = asg
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-        .groupBy(col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"),
-          floor(col("s").cast("double") / col("n")).cast(LongType)
-            .as("cx")))).as("ps"))
-        .select(col("cid"),
-          transform(col("ps"), p => p.getField("cx")).as("cvNew"))
-      // Lazy local checkpoint: truncates lineage across iterations
-      // without executing the Lloyd rounds at plan-construction time
-      // (eager = true would run every iteration on a mere .explain).
-      // Tradeoff: local checkpoint blocks are not recomputable if an
-      // executor is lost mid-job — acceptable for a bounded training
-      // loop; a long multi-hour cluster run should swap this for
-      // reliable .checkpoint() against a DFS checkpoint dir.
-      cents = cents.join(upd, Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("cvNew"), col("cv")).as("cv"))
-        .localCheckpoint(eager = false)
-    }
-    cents
-  }
+  /** Nearest centroid by exact integer squared-L2, ties to the smaller
+    * cid — the one argmin behind Lloyd assignment, PQ encoding and the
+    * IVF-PQ list assignment. Every row of `df` (an `id`, the `keys`, the
+    * long array `vec`) meets each broadcast centroid (cid, cv) that
+    * agrees on `on` (all of them when `on` is empty), and a
+    * partial-aggregated min(struct(dist, cid, carry…)) per `keys` folds
+    * the fan-out back to one row inside the map task, as in
+    * [[assignToCentroids]]. A NULL distance — vector and centroid differ
+    * in length, or the vector or one of its elements is NULL — would
+    * sort first and win, so it fails the plan naming the id; `coalesce`
+    * keeps the check off every valid row. Returns (keys, cid, carry). */
+  private def nearest(df: DataFrame, keys: Seq[String], vec: String,
+                      cents: DataFrame, on: Seq[String],
+                      carry: Seq[String] = Nil): DataFrame =
+    df.join(broadcast(cents), on)
+      .withColumn("__d", coalesce(sqDist(col(vec), col("cv")),
+        raise_error(concat(lit("malformed vector id "),
+          col("id").cast("string"), lit(": its length differs from the " +
+            "centroid's, or it or one of its elements is NULL")))))
+      .groupBy(keys.map(col): _*)
+      .agg(min(struct((Seq("__d", "cid") ++ carry).map(col): _*)).as("__m"))
+      .select(keys.map(col) ++ ("cid" +: carry).map(c =>
+        col(s"__m.$c").as(c)): _*)
 
-  // ------------------------------------------------------------------
-  // Product quantization (PQ) — the memory side of the canonical
-  // IVF-PQ answer at corpus scale: a d-dim float vector becomes m
-  // small codes (m bytes at k ≤ 256), so a 100 TB embedding store
-  // compresses ~4·d/m× and asymmetric-distance search reads codes,
-  // never vectors. All math is the SAME integer-exact Lloyd as
-  // [[kmeansQuantized]] (md5 seeds, (dist, cid) tie-break, floor-div
-  // means), run independently per contiguous subspace, so the DuckDB
-  // oracle replays training, encoding and search bit-for-bit
-  // (OracleSql.pqCtes).
-  // ------------------------------------------------------------------
-
-  /** Train per-subspace codebooks: subspace j covers vector positions
-    * [j·dim/m, (j+1)·dim/m). Returns (sub, cid, cv: array<long>) with
-    * quantized centroid components (×scale, floored).
-    *
-    * The m trainings are independent small jobs (m ≤ 16 in practice);
-    * each is the bounded Lloyd loop of [[kmeansQuantized]] over a
-    * dim/m-wide slice — at corpus scale the slice projection prunes
-    * the shuffle width by the same m factor the codes win at rest. */
-  def pqTrainQuantized(df: DataFrame, idCol: String, vecCol: String,
-                       dim: Int, m: Int, k: Int, iters: Int,
-                       scale: Long = 1000000L): DataFrame = {
-    require(dim % m == 0, s"dim $dim must split into $m subspaces")
-    val sub = dim / m
-    // ONE keyed Lloyd loop over all m subspaces instead of m
-    // independent loops (r21): the per-subspace recurrences are
-    // completely independent, so keying every stage by `sub` runs them
-    // inside ONE assignment join + ONE update aggregation per
-    // iteration — m× fewer jobs, broadcasts, plan compiles and
-    // checkpoints per iteration, and the broadcast join is an equi on
-    // `sub` instead of m separate k-row cross joins. Bit-identical to
-    // the per-subspace form: seeds are the same k ids for every
-    // subspace (md5(id) ordering is slice-independent), quantize∘slice
-    // = slice∘quantize elementwise, and the (dist, cid) argmin and
-    // floor-div means never mix subspaces (every aggregation is keyed
-    // by sub) — the q89/q90/q110 oracles replay the training
-    // bit-for-bit and stay green across this rewrite.
-    val vq = quantized(df, idCol, vecCol, scale)
-    val slices = vq.select(col("id"), subspaces(col("v"), m, sub).as("s"))
-      .select(col("s.sub").as("sub"), col("id"), col("s.sv").as("sv"))
-    val wSeed = Window.orderBy(col("__h").asc, col("id").asc)
-    val seedIds = vq
-      .withColumn("__h", md5(col("id").cast("string")))
-      .orderBy(col("__h").asc, col("id").asc).limit(k)
-      .withColumn("cid", row_number().over(wSeed).cast(LongType) - 1)
-      .select(col("id"), col("cid"))
-    var cents = slices.join(broadcast(seedIds), Seq("id"))
-      .select(col("sub"), col("cid"), col("sv").as("cv"))
+  /** The integer-exact Lloyd loop behind every trainer here: k-means
+    * runs it on whole vectors under one constant `sub`, PQ on all m
+    * subspace slices at once. `slices` holds (sub, id, sv: array<long>),
+    * one row per id and each of the `m` subs.
+    *  - seeds are the k ids with smallest md5(id) (stable under
+    *    resharding, no RNG), the same ids in every subspace;
+    *  - assignment is [[nearest]];
+    *  - the update is an element-wise floor(sum/count) — floor-division
+    *    on both engines;
+    *  - an empty cluster carries its previous centroid forward.
+    * Every stage is keyed by `sub`, so subspaces never mix and one
+    * assignment join plus one update aggregation serve all m per
+    * iteration. Component sums stay exact in a double up to 2^53
+    * (≈ 9·10^9 rows at |x| ≤ 1); beyond that, swap the floor(sum/count)
+    * to decimal division. Returns (sub, cid, cv: array<long>). */
+  private def lloyd(slices: DataFrame, m: Int, k: Int, iters: Int,
+                    kName: String): DataFrame = {
+    require(k >= 1, s"$kName=$k out of [1,∞)")
+    // the first k ids' m slices each, straight off one bounded sort
+    var cents = slices.withColumn("__h", md5(col("id").cast("string")))
+      .orderBy(col("__h").asc, col("id").asc, col("sub").asc).limit(k * m)
+      .select(col("sub"), (dense_rank().over(Window.orderBy(col("__h").asc,
+        col("id").asc)).cast(LongType) - 1).as("cid"), col("sv").as("cv"))
       .localCheckpoint(eager = false)
     for (_ <- 0 until iters) {
-      val asg = slices.join(broadcast(cents), Seq("sub"))
-        .withColumn("dist", sqDist(col("sv"), col("cv")))
-        .groupBy(col("sub"), col("id"))
-        .agg(min(struct(col("dist"), col("cid"), col("sv"))).as("m"))
-        .select(col("sub"), col("m.cid").as("cid"), col("m.sv").as("sv"))
-      val upd = asg
+      val upd = nearest(slices, Seq("sub", "id"), "sv", cents, Seq("sub"),
+          Seq("sv"))
         .select(col("sub"), col("cid"),
           posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy(col("sub"), col("cid"), col("pos"))
@@ -391,16 +310,96 @@ object Similarity {
             .as("cx")))).as("ps"))
         .select(col("sub"), col("cid"),
           transform(col("ps"), p => p.getField("cx")).as("cvNew"))
-      // lazy checkpoint per iteration: same lineage-truncation
-      // tradeoff as kmeansArrays (see that loop's comment)
+      // Lazy local checkpoint: truncates lineage across iterations
+      // without executing the Lloyd rounds at plan-construction time
+      // (eager = true would run every iteration on a mere .explain).
+      // Tradeoff: local checkpoint blocks are not recomputable if an
+      // executor is lost mid-job — acceptable for a bounded training
+      // loop; a long multi-hour cluster run should swap this for
+      // reliable .checkpoint() against a DFS checkpoint dir.
       cents = cents.join(upd, Seq("sub", "cid"), "left")
         .select(col("sub"), col("cid"),
           coalesce(col("cvNew"), col("cv")).as("cv"))
         .localCheckpoint(eager = false)
     }
-    cents.select(col("sub").cast("int").as("sub"), col("cid"),
-      col("cv"))
+    cents
   }
+
+  /** [[lloyd]] over whole quantized vectors (id, v): (cid, cv). */
+  private def centroids(vq: DataFrame, k: Int, iters: Int,
+                        kName: String): DataFrame =
+    lloyd(vq.select(lit(0L).as("sub"), col("id"), col("v").as("sv")), 1, k,
+      iters, kName).select(col("cid"), col("cv"))
+
+  /** Distributed k-means (Lloyd) over integer-quantized vectors — the
+    * trainer that produces an IVF centroid table ([[IvfLifecycle]]).
+    *
+    * Every step is EXACT integer math, which makes the whole training
+    * run deterministic and engine-portable (the DuckDB oracle replays
+    * it bit-for-bit) — normally k-means can't be oracled because float
+    * mean aggregation is order-dependent. Vectors quantize to
+    * floor(x·10^6) longs and run the one [[lloyd]] loop (md5 seeds,
+    * (dist, cid) argmin, floor-div means, empty clusters carried
+    * forward). A vector whose length differs from the seeds', or that
+    * holds a NULL, fails the plan.
+    *
+    * Scale shape per iteration: centroids broadcast (k·dim longs);
+    * assignment is a map-side argmin folded into a partial-aggregated
+    * groupBy(id) min(struct) — no window, no n×k shuffle; the update
+    * shuffles (cid, pos) partial sums only.
+    *
+    * @return exploded centroid table (cid, pos, cx), pos 1-based.
+    */
+  def kmeansQuantized(df: DataFrame, idCol: String, vecCol: String,
+                      k: Int, iters: Int,
+                      scale: Long = 1000000L): DataFrame =
+    centroids(quantized(df, idCol, vecCol, scale), k, iters, "k")
+      .select(col("cid"), posexplode(col("cv")).as(Seq("pos0", "cx")))
+      .select(col("cid"), (col("pos0") + 1).cast(LongType).as("pos"),
+        col("cx"))
+
+  /** [[kmeansQuantized]]'s centroids dequantized to double arrays —
+    * drop-in centroid table for [[IvfLifecycle]] (cid, cv). */
+  def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
+                      k: Int, iters: Int,
+                      scale: Long = 1000000L): DataFrame =
+    centroids(quantized(df, idCol, vecCol, scale), k, iters, "k")
+      .select(col("cid"),
+        transform(col("cv"), x => x / lit(scale.toDouble)).as("cv"))
+
+  // ------------------------------------------------------------------
+  // Product quantization (PQ) — the memory side of the canonical
+  // IVF-PQ answer at corpus scale: a d-dim float vector becomes m
+  // small codes (m bytes at k ≤ 256), so a 100 TB embedding store
+  // compresses ~4·d/m× and asymmetric-distance search reads codes,
+  // never vectors. Training is the SAME [[lloyd]] loop as
+  // [[kmeansQuantized]], keyed by contiguous subspace, encoding is its
+  // [[nearest]] argmin and every search ends in [[adcTopK]], so the
+  // DuckDB oracle replays training, encoding and search bit-for-bit
+  // (OracleSql.pqCtes).
+  // ------------------------------------------------------------------
+
+  /** Train per-subspace codebooks: subspace j covers vector positions
+    * [j·dim/m, (j+1)·dim/m). Returns (sub, cid, cv: array<long>) with
+    * quantized centroid components (×scale, floored). The m trainings
+    * run inside one keyed [[lloyd]] loop — one assignment join and one
+    * update aggregation per iteration for all m — over dim/m-wide
+    * slices, so at corpus scale the slice projection prunes the
+    * shuffle width by the same m factor the codes win at rest. */
+  def pqTrainQuantized(df: DataFrame, idCol: String, vecCol: String,
+                       dim: Int, m: Int, k: Int, iters: Int,
+                       scale: Long = 1000000L): DataFrame =
+    lloyd(sliced(quantized(df, idCol, vecCol, scale), m, subDim(dim, m)),
+        m, k, iters, "k")
+      .select(col("sub").cast("int").as("sub"), col("cid"), col("cv"))
+
+  /** (keep…, sub, cid): every row's per-subspace code against `book`
+    * (sub, cid, cv) — the [[nearest]] argmin, with `keep` beyond `id`
+    * carried through. */
+  private def encode(vq: DataFrame, book: DataFrame, m: Int, sub: Int,
+                     keep: Seq[String] = Seq("id")): DataFrame =
+    nearest(sliced(vq, m, sub, keep = keep), Seq("id", "sub"), "sv", book,
+      Seq("sub"), keep.filterNot(_ == "id"))
 
   /** Encode every vector as its per-subspace nearest-centroid ids:
     * (id, codes: array<long>) with codes(j) = argmin over the subspace-j
@@ -408,100 +407,66 @@ object Similarity {
     * codebook rows; the data-sized side is a single explode+agg. */
   def pqEncode(df: DataFrame, idCol: String, vecCol: String,
                codebook: DataFrame, dim: Int, m: Int,
-               scale: Long = 1000000L): DataFrame = {
-    val sub = dim / m
-    val vq = quantized(df, idCol, vecCol, scale)
-    val slices = vq.select(col("id"), subspaces(col("v"), m, sub).as("s"))
-      .select(col("id"), col("s.sub").as("sub"), col("s.sv").as("sv"))
-    slices.join(broadcast(codebook), Seq("sub"))
-      .withColumn("dist", sqDist(col("sv"), col("cv")))
-      .groupBy(col("id"), col("sub"))
-      .agg(min(struct(col("dist"), col("cid"))).as("m"))
+               scale: Long = 1000000L): DataFrame =
+    encode(quantized(df, idCol, vecCol, scale), codebook, m,
+        subDim(dim, m))
       .groupBy(col("id"))
       .agg(array_sort(collect_list(struct(col("sub"),
-        col("m.cid").as("code")))).as("ps"))
+        col("cid").as("code")))).as("ps"))
       .select(col("id"),
         transform(col("ps"), p => p.getField("code")).as("codes"))
-  }
 
-  /** Asymmetric-distance (ADC) top-k: the query row (by id) is sliced
-    * once against the codebook into an m·k distance table — broadcast,
-    * tiny — and every encoded vector's approximate distance is the sum
-    * of m table lookups joined on (sub, code). No full vector is read
-    * at search time; ties break by id. */
-  def pqSearchADC(df: DataFrame, idCol: String, vecCol: String,
-                  codebook: DataFrame, queryId: Long, dim: Int, m: Int,
-                  topK: Int, scale: Long = 1000000L): DataFrame =
-    pqAdcDistances(df, df, idCol, vecCol, codebook, queryId, dim, m,
-        scale)
-      .orderBy(col("adist").asc, col("id").asc)
-      .limit(topK)
-
-  /** The un-limited ADC core shared by [[pqSearchADC]] (whole corpus)
-    * and [[ivfPqSearch]] (probed lists only): score `candidates`
-    * against the query row looked up in `queryDf`. Returns
-    * (id, adist). */
-  private def pqAdcDistances(candidates: DataFrame, queryDf: DataFrame,
-                             idCol: String, vecCol: String,
-                             codebook: DataFrame, queryId: Long,
-                             dim: Int, m: Int,
-                             scale: Long): DataFrame = {
-    val sub = dim / m
-    val q = queryDf.filter(col(idCol) === queryId)
-      .select(subspaces(floorScaled(col(vecCol), scale), m, sub).as("s"))
-      .select(col("s.sub").as("sub"), col("s.sv").as("qv"))
-    val table = codebook.join(broadcast(q), Seq("sub"))
-      .withColumn("d", sqDist(col("qv"), col("cv")))
-      .select(col("sub"), col("cid"), col("d"))
-    pqEncode(candidates, idCol, vecCol, codebook, dim, m, scale)
-      .select(col("id"), posexplode(col("codes")).as(Seq("pos", "code")))
-      .join(broadcast(table),
-        col("pos").cast(LongType) === col("sub") &&
-          col("code") === col("cid"))
+  /** Asymmetric-distance (ADC) top-k — the one scorer of [[pqSearchADC]]
+    * and both IVF-PQ searches. `query` holds (list, sub, sv): the query
+    * slices each inverted list sees. Against `book` they form the
+    * distance table (list, sub, cid, d) — nlists·m·k entries,
+    * broadcast — and each coded row of `codes` (id, list, sub, cid)
+    * sums the m lookups of ITS OWN list's table. No full vector is read
+    * at search time; ties break by id. Returns (id, adist). */
+  private def adcTopK(codes: DataFrame, book: DataFrame, query: DataFrame,
+                      topK: Int): DataFrame = {
+    val table = book.join(broadcast(query), Seq("sub"))
+      .select(col("list"), col("sub"), col("cid"),
+        sqDist(col("sv"), col("cv")).as("d"))
+    codes.join(broadcast(table), Seq("list", "sub", "cid"))
       .groupBy(col("id"))
       .agg(sum(col("d")).as("adist"))
+      .orderBy(col("adist").asc, col("id").asc)
+      .limit(topK)
+  }
+
+  /** ADC top-k over the whole corpus: the query row (by id) is sliced
+    * once against the codebook into an m·k distance table and every
+    * encoded vector's approximate distance is the sum of m table
+    * lookups — [[adcTopK]] with one list. Ties break by id. */
+  def pqSearchADC(df: DataFrame, idCol: String, vecCol: String,
+                  codebook: DataFrame, queryId: Long, dim: Int, m: Int,
+                  topK: Int, scale: Long = 1000000L): DataFrame = {
+    require(topK >= 1, s"topK=$topK out of [1,∞)")
+    val sub = subDim(dim, m)
+    val vq = quantized(df, idCol, vecCol, scale).withColumn("list", lit(0L))
+    adcTopK(encode(vq, codebook, m, sub, Seq("id", "list")), codebook,
+      sliced(vq.filter(col("id") === queryId), m, sub, keep = Seq("list")),
+      topK)
   }
 
   /** IVF-PQ: the two corpus-scale halves composed. A coarse integer
     * k-means partitions the corpus into inverted lists (assignment =
     * broadcast argmin, shuffle |vectors| — the IVF assignment's
-    * shape); the query probes its `nprobe` nearest coarse
-    * centroids; only vectors in the probed lists are ADC-scored
-    * against the PQ codebook. Codes are trained on raw vectors (not
-    * residuals — a documented simplification: residual PQ needs
-    * per-list or shared-residual codebooks; raw-vector PQ keeps every
-    * stage bit-replayable by the q90 oracle). At deployment the
+    * shape); the query probes its `nprobe` nearest coarse centroids;
+    * only vectors in the probed lists are ADC-scored against the PQ
+    * codebook. Codes are trained on the raw quantized vectors, so this
+    * is [[ivfPqSearchResidual]] with every coarse centroid taken as
+    * zero: the same pipeline, each probed list's table built from the
+    * unchanged query (the q90 oracle replays it). At deployment the
     * assignment and codes are precomputed once (cf. IvfLifecycle.build);
     * the per-query cost is nprobe list scans of m-int codes. */
   def ivfPqSearch(df: DataFrame, idCol: String, vecCol: String,
                   coarseK: Int, coarseIters: Int, m: Int, pqK: Int,
                   pqIters: Int, nprobe: Int, queryId: Long, dim: Int,
-                  topK: Int, scale: Long = 1000000L): DataFrame = {
-    val coarse = kmeansArrays(df, idCol, vecCol, coarseK, coarseIters,
-      scale)
-    val vq = quantized(df, idCol, vecCol, scale)
-    val assigned = vq.join(broadcast(coarse))
-      .withColumn("dist", sqDist(col("v"), col("cv")))
-      .groupBy(col("id"))
-      .agg(min(struct(col("dist"), col("cid"))).as("a"))
-      .select(col("id"), col("a.cid").as("ccid"))
-    val probes = broadcast(
-      coarse.join(broadcast(vq.filter(col("id") === queryId)
-          .select(col("v").as("qv"))))
-        .withColumn("dist", sqDist(col("qv"), col("cv")))
-        .orderBy(col("dist").asc, col("cid").asc)
-        .limit(nprobe)
-        .select(col("cid").as("ccid")))
-    val candIds = assigned.join(probes, Seq("ccid")).select(col("id"))
-    val cand = df.join(candIds,
-      df(idCol) === candIds("id"), "left_semi")
-    val book = pqTrainQuantized(df, idCol, vecCol, dim, m, pqK,
-      pqIters, scale)
-    pqAdcDistances(cand, df, idCol, vecCol, book, queryId, dim, m,
-        scale)
-      .orderBy(col("adist").asc, col("id").asc)
-      .limit(topK)
-  }
+                  topK: Int, scale: Long = 1000000L): DataFrame =
+    ivfPq(df, idCol, vecCol, coarseK, coarseIters, m, pqK, pqIters, nprobe,
+      queryId, dim, topK, scale, residual = false)
 
   /** IVF-PQ with RESIDUAL encoding — the opt-in alternative to
     * [[ivfPqSearch]]'s raw-vector codes, and the standard form at
@@ -514,83 +479,53 @@ object Similarity {
     *
     * Everything stays integer-exact and oracle-replayable (q110): the
     * residual of two quantized vectors is an exact long array, and the
-    * PQ half runs on it with scale = 1 (floor(x·1) on integer-valued
-    * doubles is the identity — no second quantization error).
-    *
-    * Search differs from the raw form in ONE structural way: the ADC
-    * distance table is PER PROBED LIST (the query's residual is
-    * relative to each probe's centroid), so the broadcast is
-    * nprobe·m·pqK entries instead of m·pqK — still tiny — and each
-    * candidate joins the table of ITS OWN list via its coarse id.
-    * Scale shape otherwise identical to [[ivfPqSearch]]: assignment =
-    * broadcast argmin over |vectors|, residual training runs the same
-    * bounded Lloyd loop, candidates restricted to the probed lists. */
+    * PQ half trains and encodes on it directly (no second quantization
+    * error). The query's residual is relative to each probe's centroid,
+    * so the ADC table is PER PROBED LIST — nprobe·m·pqK entries, still
+    * tiny — and each candidate scores against its own list's table. */
   def ivfPqSearchResidual(df: DataFrame, idCol: String, vecCol: String,
                           coarseK: Int, coarseIters: Int, m: Int,
                           pqK: Int, pqIters: Int, nprobe: Int,
                           queryId: Long, dim: Int, topK: Int,
-                          scale: Long = 1000000L): DataFrame = {
-    val coarse = kmeansArrays(df, idCol, vecCol, coarseK, coarseIters,
-      scale) // (cid, cv: array<long>)
+                          scale: Long = 1000000L): DataFrame =
+    ivfPq(df, idCol, vecCol, coarseK, coarseIters, m, pqK, pqIters, nprobe,
+      queryId, dim, topK, scale, residual = true)
+
+  /** The one IVF-PQ pipeline: coarse [[centroids]] → list assignment by
+    * [[nearest]] → PQ [[lloyd]] over the list rows → the query's
+    * top-`nprobe` lists by (integer squared-L2, cid) → [[encode]] the
+    * probed lists → [[adcTopK]]. `residual` subtracts each row's (and
+    * each probe's) coarse centroid from the vectors PQ sees; without it
+    * they are the quantized vectors themselves. */
+  private def ivfPq(df: DataFrame, idCol: String, vecCol: String,
+                    coarseK: Int, coarseIters: Int, m: Int, pqK: Int,
+                    pqIters: Int, nprobe: Int, queryId: Long, dim: Int,
+                    topK: Int, scale: Long, residual: Boolean): DataFrame = {
+    require(nprobe >= 1, s"nprobe=$nprobe out of [1,∞)")
+    require(topK >= 1, s"topK=$topK out of [1,∞)")
+    val sub = subDim(dim, m)
     val vq = quantized(df, idCol, vecCol, scale)
-    // coarse assignment, keeping the vector for the residual
-    val assigned = vq.join(broadcast(coarse))
-      .withColumn("dist", sqDist(col("v"), col("cv")))
-      .groupBy(col("id"))
-      .agg(min(struct(col("dist"), col("cid"), col("v"))).as("a"))
-      .select(col("id"), col("a.cid").as("ccid"), col("a.v").as("v"))
-    // lazy checkpoint (r21): resid feeds BOTH the codebook training
-    // and the probed-list candidate prune — without it the coarse
-    // assignment join + argmin aggregation re-runs for each consumer.
-    // At deployment this is the materialized assignment table
-    // (IvfLifecycle.build's artifact); same eager-on-first-use tradeoff as
-    // kmeansArrays' iteration checkpoint.
-    val resid = assigned.join(broadcast(coarse),
-        col("ccid") === col("cid"))
-      .select(col("id"), col("ccid"),
-        zip_with(col("v"), col("cv"), (x, c) => x - c).as("rv"))
+    val coarse = centroids(vq, coarseK, coarseIters, "coarseK")
+    def minusCentroid(v: String) =
+      if (residual) zip_with(col(v), col("cv"), (x, c) => x - c) else col(v)
+    // (id, list, v): lazy checkpoint (r21) — the list rows feed BOTH the
+    // codebook training and the probed-list candidate prune; without
+    // it the assignment join + argmin re-runs for each consumer. At
+    // deployment this is the materialized assignment table
+    // (IvfLifecycle.build's artifact).
+    val lists = nearest(vq, Seq("id"), "v", coarse, Nil, Seq("v", "cv"))
+      .select(col("id"), col("cid").as("list"), minusCentroid("v").as("v"))
       .localCheckpoint(eager = false)
-    // shared residual codebook: the SAME exact Lloyd as the raw path,
-    // identity-quantized (scale 1) over the integer residuals
-    val residF = resid.select(col("id"), col("ccid"),
-      transform(col("rv"), x => x.cast("double")).as("rvd"))
-    val book = pqTrainQuantized(residF, "id", "rvd", dim, m, pqK,
-      pqIters, scale = 1L)
-    // query probes + per-list query residuals
-    val qv = vq.filter(col("id") === queryId).select(col("v").as("qv"))
-    val probes = broadcast(
-      coarse.join(broadcast(qv))
-        .withColumn("dist", sqDist(col("qv"), col("cv")))
-        .orderBy(col("dist").asc, col("cid").asc)
-        .limit(nprobe)
-        .select(col("cid").as("pcid"), col("cv").as("pcv")))
-    val sub = dim / m
-    val qres = probes.join(broadcast(qv))
-      .select(col("pcid"), subspaces(zip_with(col("qv"), col("pcv"),
-        (x, c) => x - c), m, sub).as("s"))
-      .select(col("pcid"), col("s.sub").as("sub"), col("s.sv").as("qr"))
-    // per-list ADC tables: nprobe·m·pqK entries, broadcast
-    val table = book.join(broadcast(qres), Seq("sub"))
-      .withColumn("d", sqDist(col("qr"), col("cv")))
-      .select(col("pcid"), col("sub"), col("cid"), col("d"))
-    // candidates: the probed lists' residuals, PQ-encoded
-    val cand = resid.join(probes.select(col("pcid")),
-      col("ccid") === col("pcid"), "left_semi")
-    val candF = cand.select(col("id"), col("ccid"),
-      transform(col("rv"), x => x.cast("double")).as("rvd"))
-    val codes = pqEncode(candF, "id", "rvd", book, dim, m, scale = 1L)
-    codes
-      .join(candF.select(col("id"), col("ccid")), Seq("id"))
-      .select(col("id"), col("ccid"),
-        posexplode(col("codes")).as(Seq("pos", "code")))
-      .join(broadcast(table),
-        col("ccid") === col("pcid") &&
-          col("pos").cast(LongType) === col("sub") &&
-          col("code") === col("cid"))
-      .groupBy(col("id"))
-      .agg(sum(col("d")).as("adist"))
-      .orderBy(col("adist").asc, col("id").asc)
-      .limit(topK)
+    val book = lloyd(sliced(lists, m, sub), m, pqK, pqIters, "pqK")
+    val probes = broadcast(coarse
+      .join(broadcast(vq.filter(col("id") === queryId)
+        .select(col("v").as("qv"))))
+      .orderBy(sqDist(col("qv"), col("cv")).asc, col("cid").asc)
+      .limit(nprobe)
+      .select(col("cid").as("list"), minusCentroid("qv").as("v")))
+    adcTopK(encode(lists.join(probes.select(col("list")), Seq("list"),
+        "left_semi"), book, m, sub, Seq("id", "list")),
+      book, sliced(probes, m, sub, keep = Seq("list")), topK)
   }
 
   /** Int8 scalar quantization of unit-normalized embeddings — the
