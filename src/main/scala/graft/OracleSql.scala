@@ -42,34 +42,23 @@ object OracleSql {
   }
 
   /** Disjoint-interval CASE for one attribute of an LPM table:
-    * `CASE WHEN ip BETWEEN a AND b THEN 'v' ... ELSE '?' END`.
+    * `CASE WHEN ip BETWEEN a AND b THEN 'v' ... ELSE '?' END`, over the
+    * window [base, base + 2^32) rebased to [0, 2^32). A v4 table lies
+    * wholly in the default window; for a v6 table, `base` is the NAT64
+    * prefix the test addresses embed v4 in, and intervals outside the
+    * window are skipped — so the oracle checks the v6 tables on the
+    * embedded v4 integer, without blob arithmetic in DuckDB.
     * @param attr index into the pipe-joined record, or -1 for whole value */
-  def lpmCase(table: Lpm.Table, ipExpr: String, attr: Int): String = {
-    val whens = table.starts.indices.map { i =>
-      val v =
-        if (attr < 0) table.values(i)
-        else table.values(i).split('|')(attr)
-      s"WHEN $ipExpr BETWEEN ${table.starts(i)} AND ${table.ends(i)} " +
-        s"THEN '$v'"
-    }
-    s"CASE ${whens.mkString(" ")} ELSE '?' END"
-  }
-
-  /** v6 variant of [[lpmCase]] for NAT64-embedded test addresses: every
-    * table interval fully inside [base, base+2^32) is rebased onto the
-    * embedded v4 integer; intervals outside the window (other address
-    * families' ranges in the same table) are skipped. The oracle thereby
-    * checks the v6 tables without blob arithmetic in DuckDB. */
-  def lpmCase6(table: Lpm.Table, ipExpr: String, attr: Int,
-               base: BigInt): String = {
+  def lpmCase(table: Lpm.Table, ipExpr: String, attr: Int,
+              base: BigInt = 0): String = {
     val top = base + (BigInt(1) << 32)
-    val whens = table.starts.indices.flatMap { i =>
-      if (table.starts(i) >= base && table.ends(i) < top) {
+    val whens = (0 until table.size).flatMap { i =>
+      if (table.start(i) >= base && table.end(i) < top) {
         val v =
           if (attr < 0) table.values(i)
           else table.values(i).split('|')(attr)
-        Some(s"WHEN $ipExpr BETWEEN ${table.starts(i) - base} " +
-          s"AND ${table.ends(i) - base} THEN '$v'")
+        Some(s"WHEN $ipExpr BETWEEN ${table.start(i) - base} " +
+          s"AND ${table.end(i) - base} THEN '$v'")
       } else None
     }
     s"CASE ${whens.mkString(" ")} ELSE '?' END"

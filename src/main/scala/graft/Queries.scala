@@ -515,10 +515,10 @@ object Queries {
                          geo: graft.functions.GeoDb): DataFrame =
     TestFlowView.load(s, dir)
       .select(
-        geo.geoAttr(s, "country")(col("ip4_dst_addr")).as("country"),
-        geo.geoAttr(s, "country_code")(col("ip4_dst_addr")).as("cc"),
-        geo.asn(s)(col("ip4_src_addr")).as("src_asn"),
-        geo.asd(s)(col("ip4_src_addr")).as("src_asd"),
+        geo.geo("country")(col("ip4_dst_addr")).as("country"),
+        geo.geo("country_code")(col("ip4_dst_addr")).as("cc"),
+        geo.asn(col("ip4_src_addr")).as("src_asn"),
+        geo.asd(col("ip4_src_addr")).as("src_asd"),
         col("in_bytes"), col("sampling_rate"))
       .groupBy(col("country"), col("cc"), col("src_asn"), col("src_asd"))
       .agg(count(lit(1)).as("n"),
@@ -607,7 +607,7 @@ object Queries {
 
   /** Embedded-v4 [start,end] of a v6 CIDR under `base` (oracle side). */
   private def v6Emb(cidr: String, base: BigInt): (Long, Long) = {
-    val p = graft.functions.Lpm.v6Prefix(cidr, "1")
+    val p = graft.functions.Lpm.prefix(cidr)
     ((p.start - base).toLong, (p.end - base).toLong)
   }
 
@@ -651,10 +651,10 @@ object Queries {
       val geo = BuiltinTables.geoDb
       TestFlowView.load(s, dir)
         .select(
-          geo.geoAttr6(s, "country")(col("ip6_dst_addr")).as("country"),
-          geo.geoAttr6(s, "country_code")(col("ip6_dst_addr")).as("cc"),
-          geo.asn6(s)(col("ip6_src_addr")).as("src_asn"),
-          geo.asd6(s)(col("ip6_src_addr")).as("src_asd"),
+          geo.geo("country")(col("ip6_dst_addr")).as("country"),
+          geo.geo("country_code")(col("ip6_dst_addr")).as("cc"),
+          geo.asn(col("ip6_src_addr")).as("src_asn"),
+          geo.asd(col("ip6_src_addr")).as("src_asd"),
           col("in_bytes"), col("sampling_rate"))
         .groupBy(col("country"), col("cc"), col("src_asn"), col("src_asd"))
         .agg(count(lit(1)).as("n"),
@@ -667,10 +667,10 @@ object Queries {
       val as6 = BuiltinTables.geoDb.as6
       Some(s"""WITH $F,
       g AS (SELECT
-        ${OracleSql.lpmCase6(geo6, "ip4_dst_addr", 2, v6DstBase)} AS country,
-        ${OracleSql.lpmCase6(geo6, "ip4_dst_addr", 1, v6DstBase)} AS cc,
-        ${OracleSql.lpmCase6(as6, "ip4_src_addr", 0, v6SrcBase)} AS src_asn,
-        ${OracleSql.lpmCase6(as6, "ip4_src_addr", 1, v6SrcBase)} AS src_asd,
+        ${OracleSql.lpmCase(geo6, "ip4_dst_addr", 2, v6DstBase)} AS country,
+        ${OracleSql.lpmCase(geo6, "ip4_dst_addr", 1, v6DstBase)} AS cc,
+        ${OracleSql.lpmCase(as6, "ip4_src_addr", 0, v6SrcBase)} AS src_asn,
+        ${OracleSql.lpmCase(as6, "ip4_src_addr", 1, v6SrcBase)} AS src_asd,
         in_bytes, sampling_rate
       FROM flow)
       SELECT country, cc, src_asn, src_asd,
@@ -2562,7 +2562,7 @@ object Queries {
   // The beyond-broadcast enrichment path: the SAME parquet artifact
   // consumed as a distributed bucketed range join (ranges exploded
   // into /8 buckets, flows equi-joined on the bucket, range residual —
-  // GeoDbStore.rangeJoinV4) instead of a broadcast LPM. Disjoint
+  // GeoDbStore.rangeJoin) instead of a broadcast LPM. Disjoint
   // ranges → at most one match → identical semantics to an LPM CASE.
   private val q78 = Q(
     "q78_geo_range_join",
@@ -2572,7 +2572,7 @@ object Queries {
       val flows = TestFlowView.load(s, dir)
         .select(col("ip4_dst_addr"), col("in_bytes"),
           col("sampling_rate"))
-      GeoDbStore.rangeJoinV4(flows, "ip4_dst_addr", artifact,
+      GeoDbStore.rangeJoin(flows, "ip4_dst_addr", artifact,
           family = "geo4", valueAs = "geo")
         .select(coalesce(col("geo"), lit("?")).as("geo"),
           col("in_bytes"), col("sampling_rate"))
@@ -2592,7 +2592,7 @@ object Queries {
         FROM g GROUP BY geo ORDER BY geo ASC""")
     })
 
-  // q78's v6 sibling: the SAME artifact consumed through rangeJoin6 —
+  // q78's v6 sibling: the SAME artifact consumed through rangeJoin —
   // hex-aligned top-bits buckets over the binary(16) address, range
   // residual on Spark's unsigned-lexicographic binary ordering (at
   // fixed 16-byte width that IS numeric order). Oracle rebases the
@@ -2605,7 +2605,7 @@ object Queries {
       val flows = TestFlowView.load(s, dir)
         .select(col("ip6_dst_addr"), col("in_bytes"),
           col("sampling_rate"))
-      GeoDbStore.rangeJoin6(flows, "ip6_dst_addr", artifact,
+      GeoDbStore.rangeJoin(flows, "ip6_dst_addr", artifact,
           family = "geo6", valueAs = "geo")
         .select(coalesce(col("geo"), lit("?")).as("geo"),
           col("in_bytes"), col("sampling_rate"))
@@ -2618,7 +2618,7 @@ object Queries {
       val geo6 = BuiltinTables.geoDb.geo6
       Some(s"""WITH $F,
         g AS (SELECT
-            ${OracleSql.lpmCase6(geo6, "ip4_dst_addr", -1, v6DstBase)}
+            ${OracleSql.lpmCase(geo6, "ip4_dst_addr", -1, v6DstBase)}
               AS geo, in_bytes, sampling_rate
           FROM flow)
         SELECT geo, CAST(COUNT(*) AS BIGINT) AS n,
@@ -3000,7 +3000,7 @@ object Queries {
   /** q83 oracle-checks `src net <listname>` — the reference's named
     * IP-list filter (filter.c:186-218, loaded from iplists.d) compiled
     * to the codegen'd LPM membership expression
-    * ([[graft.functions.LpmExpr.contains4]], no UDF). The list mixes
+    * ([[graft.functions.IpList.contains]], no UDF). The list mixes
     * DISJOINT, NESTED (10.0.4.0/22 inside 10.0.0.0/20) and /32
     * prefixes so the interval build's overlap handling is on the hook;
     * the DuckDB oracle re-expresses membership as the union of closed

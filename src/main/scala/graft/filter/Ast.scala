@@ -30,11 +30,9 @@ object Ast {
   final case class IntRange(lo: Long, hi: Long) extends Value
   /** Quoted string literal. */
   final case class StrV(s: String) extends Value
-  /** IPv4 CIDR; a bare address is /32. Value and mask host-order u32.
-    * (reference filter.c:86-156) */
-  final case class Cidr4(addr: Long, maskLen: Int) extends Value
-  /** IPv6 CIDR over 16 bytes. */
-  final case class Cidr6(addr: Array[Byte], maskLen: Int) extends Value
+  /** IPv4 or IPv6 CIDR as its canonical prefix; a bare address is
+    * /32 or /128 (reference filter.c:86-156). */
+  final case class Cidr(p: graft.functions.Lpm.Prefix) extends Value
   /** MAC literal, 6 bytes (reference utils.c mac_addr_read). */
   final case class MacV(bytes: Array[Byte]) extends Value
   /** Named IP list — longest-prefix-match membership

@@ -2,7 +2,7 @@ package graft.filter
 
 import graft.flow.FlowSchema
 import graft.flow.FlowSchema._
-import graft.functions.{GeoDb, IpList, Lpm, LpmExpr, NetFns}
+import graft.functions.{GeoDb, IpList, Lpm, NetFns}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -91,27 +91,22 @@ object Compiler {
                          env: FilterEnv): Column = (kind, v) match {
     case (RangeL, IntRange(lo, hi)) =>
       if (lo == hi) c === lit(lo) else c.between(lit(lo), lit(hi))
-    case (Addr4L, Cidr4(addr, maskLen)) =>
-      // (addr & mask) == value (reference filter.c:255-357)
-      if (maskLen == 0) c.isNotNull
-      else if (maskLen == 32) c === lit(addr)
+    case (Addr4L, Cidr(p)) if p.bits == 32 =>
+      // (addr & mask) == network (reference filter.c:255-357)
+      val net = p.start.toLong
+      if (p.maskLen == 0) c.isNotNull
+      else if (p.maskLen == 32) c === lit(net)
       else {
-        val mask = ((1L << maskLen) - 1) << (32 - maskLen)
-        c.bitwiseAND(lit(mask)) === lit(addr & mask)
+        val mask = ((1L << p.maskLen) - 1) << (32 - p.maskLen)
+        c.bitwiseAND(lit(mask)) === lit(net)
       }
-    case (Addr4L, ListName(nm)) =>
-      val list = env.ipLists.getOrElse(nm,
-        fail(s"Unknown IP list '$nm'"))
-      LpmExpr.contains4(list.v4)(c) // codegen'd, no UDF
-    case (Addr6L, Cidr6(addr, maskLen)) =>
-      val pfx = Lpm.build(Seq(
-        Lpm.Prefix(net6start(addr, maskLen), net6end(addr, maskLen),
-          maskLen, "1")))
-      LpmExpr.contains6(pfx)(c) // codegen'd two-long search, no UDF
-    case (Addr6L, ListName(nm)) =>
-      val list = env.ipLists.getOrElse(nm,
-        fail(s"Unknown IP list '$nm'"))
-      LpmExpr.contains6(list.v6)(c)
+    case (Addr6L, Cidr(p)) if p.bits == 128 =>
+      // a one-prefix list: the same membership as below, reading the
+      // address once per row (a derived column is not re-evaluated)
+      IpList("", Lpm.build(Nil), Lpm.build(Seq(p))).contains(c)
+    case (Addr4L | Addr6L, ListName(nm)) =>
+      // codegen'd LPM membership, no UDF; the column type picks the family
+      env.ipLists.getOrElse(nm, fail(s"Unknown IP list '$nm'")).contains(c)
     case (MacL, MacV(bytes)) => c === lit(bytes)
     case (StringL, StrV(s))  => c === lit(s)
     // bare word after a string field = literal string. The reference
@@ -152,14 +147,6 @@ object Compiler {
       case other      => fail(s"Unsupported function comparison: $other")
     }
 
-  private def net6start(addr: Array[Byte], maskLen: Int): BigInt = {
-    val a = BigInt(1, addr)
-    val span = BigInt(1) << (128 - maskLen)
-    (a / span) * span
-  }
-  private def net6end(addr: Array[Byte], maskLen: Int): BigInt =
-    net6start(addr, maskLen) + (BigInt(1) << (128 - maskLen)) - 1
-
   /** Resolve a function argument `[src|dst] name` to a Column. */
   def argColumn(ref: FieldRef, env: FilterEnv): Column =
     env.measures.get(ref.name) match {
@@ -196,29 +183,12 @@ object Compiler {
       val ca = argColumn(a, env)
       val cb = argColumn(b, env)
       when(fa > fb, ca).when(fb > fa, cb).otherwise(least(ca, cb))
+    // the arg column's type picks the v4 or v6 tables (LpmLookup)
     case GeoFn(kind, a) =>
-      // v6-typed args (host6/net6, reference geoip.h:43-55 xe_ip covers
-      // both families) route to the v6 tables; everything else v4
-      env.geo.map { g =>
-        if (argKind(a, env) == Addr6L)
-          g.geoAttr6(env.spark, kind)(argColumn(a, env))
-        else g.geoAttr(env.spark, kind)(argColumn(a, env))
-      }.getOrElse(lit("?"))
-    case AsnFn(a) =>
-      env.geo.map { g =>
-        if (argKind(a, env) == Addr6L) g.asn6(env.spark)(argColumn(a, env))
-        else g.asn(env.spark)(argColumn(a, env))
-      }.getOrElse(lit("?"))
-    case AsdFn(a) =>
-      env.geo.map { g =>
-        if (argKind(a, env) == Addr6L) g.asd6(env.spark)(argColumn(a, env))
-        else g.asd(env.spark)(argColumn(a, env))
-      }.getOrElse(lit("?"))
+      env.geo.fold(lit("?"))(_.geo(kind)(argColumn(a, env)))
+    case AsnFn(a) => env.geo.fold(lit("?"))(_.asn(argColumn(a, env)))
+    case AsdFn(a) => env.geo.fold(lit("?"))(_.asd(argColumn(a, env)))
   }
-
-  /** Logical kind of a function-arg field (measures are integer). */
-  private def argKind(ref: FieldRef, env: FilterEnv): LKind =
-    env.fields.get(ref.name).map(_._1).getOrElse(RangeL)
 
   private def freqOf(c: Column, env: FilterEnv): Column = {
     if (env.mfreq.isEmpty) lit(0L)

@@ -1,5 +1,7 @@
 package graft.filter
 
+import graft.functions.Lpm
+
 import Ast._
 import Lexer._
 
@@ -122,16 +124,19 @@ object Parser {
       e
     }
 
-    /** A comparison value token. Bare words become CIDR literals when they
-      * parse as addresses, else IP-list names (reference filter.c:186-218:
-      * a non-address ID after net/host is a list name). */
+    /** A comparison value token. Bare words become CIDR literals when
+      * their address part parses (a bad mask is then an error, not a
+      * list name), else IP-list names (reference filter.c:186-218: a
+      * non-address ID after net/host is a list name). */
     private def valueTok(): Option[Value] = peek match {
       case IntRangeTok(lo, hi) => advance(); Some(IntRange(lo, hi))
       case StrTok(s)           => advance(); Some(StrV(s))
       case MacTok(b)           => advance(); Some(MacV(b))
       case Word(s) if !isReserved(s) =>
         advance()
-        Some(parseCidr4(s).orElse(parseCidr6(s)).getOrElse(ListName(s)))
+        Some(
+          if (Lpm.parseAddress(s.takeWhile(_ != '/')).isLeft) ListName(s)
+          else Cidr(Lpm.parseCidr(s).fold(fail, identity)))
       case _ => None
     }
 
@@ -195,52 +200,5 @@ object Parser {
         case t => fail(s"Expected integer k argument, got $t")
       }
     }
-  }
-
-  /** "1.2.3.4" or "10.0.0.0/24" → Cidr4 (host-order u32). */
-  private[filter] def parseCidr4(s: String): Option[Cidr4] = {
-    val (addrS, maskS) = s.span(_ != '/')
-    val parts = addrS.split("\\.", -1)
-    if (parts.length != 4) return None
-    var addr = 0L
-    for (p <- parts) {
-      if (p.isEmpty || p.length > 3 || !p.forall(_.isDigit)) return None
-      val v = p.toInt
-      if (v > 255) return None
-      addr = addr * 256 + v
-    }
-    val mask =
-      if (maskS.isEmpty) 32
-      else {
-        val m = maskS.substring(1)
-        if (m.isEmpty || !m.forall(_.isDigit)) return None
-        val v = m.toInt
-        if (v > 32) return None
-        v
-      }
-    Some(Cidr4(addr, mask))
-  }
-
-  private[filter] def parseCidr6(s: String): Option[Cidr6] = {
-    val (addrS, maskS) = s.span(_ != '/')
-    if (!addrS.contains(":")) return None
-    // charset guard: InetAddress.getByName would resolve hostnames via DNS
-    if (!addrS.forall(c => c == ':' || c == '.' ||
-        Character.digit(c, 16) >= 0)) return None
-    try {
-      val inet = java.net.InetAddress.getByName(addrS)
-      val bytes = inet.getAddress
-      val b16 =
-        if (bytes.length == 16) bytes
-        else return None
-      val mask =
-        if (maskS.isEmpty) 128
-        else {
-          val v = maskS.substring(1).toInt
-          if (v > 128) return None
-          v
-        }
-      Some(Cidr6(b16, mask))
-    } catch { case _: Exception => None }
   }
 }

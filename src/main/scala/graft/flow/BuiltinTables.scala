@@ -54,22 +54,22 @@ object BuiltinTables {
   /** Same data as prefix literals — kept for the loader-equivalence
     * spec (continent/cc lowercased the way the loader does). */
   val geoPrefixes: Seq[Lpm.Prefix] = Seq(
-    Lpm.v4Prefix("192.0.0.0/10",
+    Lpm.prefix("192.0.0.0/10",
       GeoDb.record("eu", "de", "Germany", "BY", "Munich", "80331",
         "48.14", "11.58")),
-    Lpm.v4Prefix("192.64.0.0/10",
+    Lpm.prefix("192.64.0.0/10",
       GeoDb.record("na", "us", "USA", "CA", "San Jose", "95113",
         "37.34", "-121.89")),
-    Lpm.v4Prefix("192.128.0.0/10",
+    Lpm.prefix("192.128.0.0/10",
       GeoDb.record("as", "jp", "Japan", "13", "Tokyo", "100-0001",
         "35.68", "139.77")),
-    Lpm.v4Prefix("192.192.0.0/10",
+    Lpm.prefix("192.192.0.0/10",
       GeoDb.record("sa", "br", "Brazil", "SP", "Sao Paulo", "01000-000",
         "-23.55", "-46.63")),
-    Lpm.v4Prefix("192.0.2.0/24",
+    Lpm.prefix("192.0.2.0/24",
       GeoDb.record("eu", "fr", "France", "IDF", "Paris", "75001",
         "48.86", "2.35")),
-    Lpm.v4Prefix("10.0.0.0/8",
+    Lpm.prefix("10.0.0.0/8",
       GeoDb.record("eu", "nl", "Netherlands", "NH", "Amsterdam", "1011",
         "52.37", "4.90"))
   )
@@ -77,17 +77,13 @@ object BuiltinTables {
   /** AS records as prefix literals (asn|description), for the same
     * equivalence spec. */
   val asPrefixes: Seq[Lpm.Prefix] = Seq(
-    Lpm.v4Prefix("10.0.0.0/14", "64500|EXAMPLE-NET-A"),
-    Lpm.v4Prefix("10.4.0.0/14", "64501|EXAMPLE-NET-B"),
-    Lpm.v4Prefix("10.8.0.0/14", "64502|EXAMPLE-NET-C"),
-    Lpm.v4Prefix("10.12.0.0/14", "64503|EXAMPLE-NET-D")
+    Lpm.prefix("10.0.0.0/14", "64500|EXAMPLE-NET-A"),
+    Lpm.prefix("10.4.0.0/14", "64501|EXAMPLE-NET-B"),
+    Lpm.prefix("10.8.0.0/14", "64502|EXAMPLE-NET-C"),
+    Lpm.prefix("10.12.0.0/14", "64503|EXAMPLE-NET-D")
   )
 
-  lazy val geoDb: GeoDb = {
-    val g = GeoLoader.geoTables(geoCsv)
-    val a = GeoLoader.asTables(asCsv)
-    GeoDb(g.v4, a.v4, g.v6, a.v6)
-  }
+  lazy val geoDb: GeoDb = GeoLoader.geoDb(geoCsv, asCsv)
 
   /** Standard IP lists (bogon per RFC 1918 + friends). */
   lazy val ipLists: Map[String, IpList] = Map(

@@ -27,18 +27,9 @@ object GeoDbStore {
     StructField("value", StringType, nullable = false),
     StructField("family", StringType, nullable = false)))
 
-  private[graft] def toBytes(x: BigInt): Array[Byte] = {
-    val raw = x.toByteArray.dropWhile(_ == 0) // strip sign/leading zeros
-    require(raw.length <= 16, s"address wider than 128 bits: $x")
-    val out = new Array[Byte](16)
-    System.arraycopy(raw, 0, out, 16 - raw.length, raw.length)
-    out
-  }
-  private[graft] def toBig(b: Array[Byte]): BigInt = BigInt(1, b)
-
   private def rows(family: String, t: Lpm.Table): Seq[Row] =
-    t.starts.indices.map { i =>
-      Row(toBytes(t.starts(i)), toBytes(t.ends(i)), t.values(i), family)
+    (0 until t.size).map { i =>
+      Row(Lpm.bytes16(t.start(i)), Lpm.bytes16(t.end(i)), t.values(i), family)
     }
 
   /** Write a built [[GeoDb]] as the parquet artifact. */
@@ -61,13 +52,11 @@ object GeoDbStore {
       .select("family", "start", "end", "value")
       .collect()
       .groupBy(_.getString(0))
-    def table(f: String): Lpm.Table = {
-      val rs = byFam.getOrElse(f, Array.empty[Row])
-        .map(r => (toBig(r.getAs[Array[Byte]](1)),
-          toBig(r.getAs[Array[Byte]](2)), r.getString(3)))
-        .sortBy(_._1)
-      Lpm.Table(rs.map(_._1), rs.map(_._2), rs.map(_._3))
-    }
+    def table(f: String): Lpm.Table =
+      Lpm.Table(byFam.getOrElse(f, Array.empty[Row]).toSeq
+        .map(r => (BigInt(1, r.getAs[Array[Byte]](1)),
+          BigInt(1, r.getAs[Array[Byte]](2)), r.getString(3)))
+        .sortBy(_._1))
     GeoDb(table("geo4"), table("as4"), table("geo6"), table("as6"))
   }
 
@@ -81,14 +70,15 @@ object GeoDbStore {
   /** One `xegeoq`-style lookup line per family (xegeoq.c:155-188:
     * "<addr> geo: a, b, ..." / "<addr> as: n, desc"; '?' unknown). */
   private[graft] def queryLines(db: GeoDb, addr: String): Seq[String] = {
-    val isV6 = addr.contains(":")
-    val x =
-      if (isV6) GeoLoader.ipv6ToBig(addr) else GeoLoader.ipv4ToBig(addr)
-    val geo = (if (isV6) db.geo6 else db.geo4).lookup(x)
-      .map(_.split("\\|", -1).mkString(", ")).getOrElse("?")
-    val as = (if (isV6) db.as6 else db.as4).lookup(x)
-      .map(_.split("\\|", -1).mkString(", ")).getOrElse("?")
-    Seq(s"$addr geo: $geo", s"$addr as: $as")
+    val (x, bits) = Lpm.parseAddress(addr)
+      .fold(e => throw new IllegalArgumentException(e), identity)
+    def line(v4: Lpm.Table, v6: Lpm.Table): String = {
+      val t = if (bits == 32) v4 else v6
+      val i = t.searchBytes(Lpm.bytes16(x))
+      if (i < 0) "?" else t.values(i).split("\\|", -1).mkString(", ")
+    }
+    Seq(s"$addr geo: ${line(db.geo4, db.geo6)}",
+      s"$addr as: ${line(db.as4, db.as6)}")
   }
 
   /** CLI: the reference's two geo-DB tools in one main.
@@ -113,70 +103,54 @@ object GeoDbStore {
   import org.apache.spark.sql.{Column, DataFrame}
   import org.apache.spark.sql.functions._
 
-  /** Distributed v4 range-join enrichment — the scale path for when an
+  /** Distributed range-join enrichment — the scale path for when an
     * enrichment table OUTGROWS broadcast (the broadcast [[GeoDb]] is
     * the right tool for the reference-sized geo/AS DBs; a 100 TB-corpus
     * IP-reputation or flow-annotation table is not driver-sized).
     *
     * A naive `ip BETWEEN start AND end` join is a BroadcastNestedLoop /
     * cartesian — O(rows × ranges). Instead both sides are keyed by the
-    * IP's top `prefixBits` bits: each range EXPLODES into the buckets
-    * it overlaps (bounded by its width / 2^(32-prefixBits)), the flow
-    * side computes one shift per row, and the join is a plain shuffled
-    * EQUI-join on the bucket with the range test as residual. Ranges
-    * are sorted-disjoint by construction ([[GeoLoader]]), so at most
-    * one range matches any address — no post-join dedup needed.
+    * address's top `prefixBits` bits: each range EXPLODES into the
+    * buckets it overlaps, the flow side computes one bucket per row, and
+    * the join is a plain shuffled EQUI-join on the bucket with the range
+    * test as residual. Ranges are sorted-disjoint by construction
+    * ([[GeoLoader]]), so at most one range matches any address — no
+    * post-join dedup needed.
     *
-    * Returns `flows` + `valueAs` (null where no range covers the ip).
-    * Skew note: a bucket is one /prefixBits block; pick prefixBits so
-    * the hottest block's flow share fits an executor (8 → /8 blocks;
-    * AQE skew-join splits residual hot buckets). */
-  def rangeJoinV4(flows: DataFrame, ipCol: String, artifact: DataFrame,
-                  family: String, valueAs: String,
-                  prefixBits: Int = 8): DataFrame = {
-    require(prefixBits >= 1 && prefixBits <= 24, s"prefixBits $prefixBits")
-    val shift = 32 - prefixBits
-    // v4 addresses sit in the last 4 of the 16 artifact bytes
-    def v4(c: Column): Column =
-      conv(substring(hex(c), 25, 8), 16, 10).cast("long")
+    * The address column's type picks the family, as in [[LpmLookup]]: an
+    * integral column is v4, a binary(16) column v6. The artifact's
+    * 16-byte bounds are read in that type (a v4 bound is its low 4
+    * bytes), so the flow side costs one shift (v4) or one hex-substring
+    * conv (v6) per row; Spark's BinaryType ordering is unsigned
+    * lexicographic, which at fixed width IS numeric order.
+    * `prefixBits` counts from the top of the family's width and
+    * defaults to a quarter of it (/8 for v4, /32 for v6, one bucket per
+    * allocation block); a range wider than a bucket explodes into every
+    * bucket it overlaps, so keep it ≤ the narrowest expected
+    * allocation. AQE skew-join splits residual hot buckets.
+    *
+    * Returns `flows` + `valueAs` (null where no range covers the ip). */
+  def rangeJoin(flows: DataFrame, ipCol: String, artifact: DataFrame,
+                family: String, valueAs: String,
+                prefixBits: Option[Int] = None): DataFrame = {
+    val bits = if (flows.schema(ipCol).dataType == BinaryType) 128 else 32
+    val pb = prefixBits.getOrElse(bits / 4)
+    require(pb >= 1 && pb <= math.min(bits - 8, 60),
+      s"prefixBits must be in [1, ${math.min(bits - 8, 60)}], got $pb")
+    def key(bound: Column): Column =
+      if (bits == 128) bound
+      else conv(hex(substring(bound, 13, 4)), 16, 10).cast("long")
+    // the top pb bits of an address; a v6 one from the hex digits of
+    // its 16 bytes (≤ 15 digits fit a long)
+    val digits = (pb + 3) / 4
+    def bucket(k: Column): Column =
+      if (bits == 32) shiftright(k, 32 - pb)
+      else shiftright(conv(substring(hex(k), 1, digits), 16, 10)
+        .cast("long"), digits * 4 - pb)
     val ranges = artifact
       .filter(col("family") === family)
-      .select(v4(col("start")).as("_rj_start"),
-        v4(col("end")).as("_rj_end"), col("value").as(valueAs))
-      .select(col("_rj_start"), col("_rj_end"), col(valueAs),
-        explode(sequence(shiftright(col("_rj_start"), shift),
-          shiftright(col("_rj_end"), shift))).as("_rj_bucket"))
-    val f = flows
-      .withColumn("_rj_bucket", shiftright(col(ipCol), shift)).alias("_f")
-    val r = ranges.alias("_r")
-    f.join(r,
-        col("_f._rj_bucket") === col("_r._rj_bucket") &&
-          col(s"_f.$ipCol") >= col("_r._rj_start") &&
-          col(s"_f.$ipCol") <= col("_r._rj_end"),
-        "left")
-      .drop("_rj_bucket", "_rj_start", "_rj_end")
-  }
-
-  /** v6 form of [[rangeJoinV4]] over a binary(16) address column. The
-    * bucket is the address's top `prefixBits` bits (hex-aligned so it
-    * extracts as a substring of `hex()`; 32 → one bucket per /32
-    * allocation). Residual range tests compare the binary columns
-    * directly — Spark's BinaryType ordering is unsigned lexicographic,
-    * which at fixed 16-byte width IS numeric order. A range wider than
-    * a bucket explodes into every bucket it overlaps, so keep
-    * prefixBits ≤ the narrowest expected allocation. */
-  def rangeJoin6(flows: DataFrame, ipCol: String, artifact: DataFrame,
-                 family: String, valueAs: String,
-                 prefixBits: Int = 32): DataFrame = {
-    require(prefixBits >= 4 && prefixBits <= 60 && prefixBits % 4 == 0,
-      s"prefixBits must be a multiple of 4 in [4,60], got $prefixBits")
-    val h = prefixBits / 4
-    def bucket(c: Column): Column =
-      conv(substring(hex(c), 1, h), 16, 10).cast("long")
-    val ranges = artifact
-      .filter(col("family") === family)
-      .select(col("start").as("_rj_start"), col("end").as("_rj_end"),
-        col("value").as(valueAs))
+      .select(key(col("start")).as("_rj_start"),
+        key(col("end")).as("_rj_end"), col("value").as(valueAs))
       .select(col("_rj_start"), col("_rj_end"), col(valueAs),
         explode(sequence(bucket(col("_rj_start")),
           bucket(col("_rj_end")))).as("_rj_bucket"))

@@ -53,38 +53,19 @@ object GeoLoader {
     out.result()
   }
 
-  def ipv4ToBig(s: String): BigInt = {
-    val parts = s.trim.split('.')
-    require(parts.length == 4, s"not an IPv4 address: '$s'")
-    BigInt(parts.foldLeft(0L) { (a, p) =>
-      val v = p.toLongOption.getOrElse(-1L)
-      require(v >= 0 && v <= 255, s"not an IPv4 address: '$s'")
-      a * 256 + v
-    })
-  }
+  /** One dump address field through the shared literal parser
+    * ([[Lpm.parseAddress]]: ASCII only, never a DNS lookup). */
+  private def address(s: String): (BigInt, Int) =
+    Lpm.parseAddress(s.trim)
+      .fold(e => throw new IllegalArgumentException(e), identity)
 
-  def ipv6ToBig(s: String): BigInt = {
-    val t = s.trim
-    // refuse anything that isn't a v6 literal BEFORE InetAddress sees
-    // it: getByName on a non-literal is a DNS lookup, and a dump field
-    // must never trigger one. A ':' is the discriminator (hostnames
-    // cannot contain one); '.' stays allowed for the RFC 4291 embedded
-    // dotted-quad forms (::ffff:10.0.0.1, 64:ff9b::192.0.2.1).
-    require(t.contains(":") &&
-      t.forall(c => Character.digit(c, 16) >= 0 || c == ':' || c == '.'),
-      s"not an IPv6 address literal: '$s'")
-    val bytes =
-      try java.net.InetAddress.getByName(t).getAddress
-      catch { case _: java.net.UnknownHostException =>
-        throw new IllegalArgumentException(s"not an IPv6 address: '$s'") }
-    bytes.length match {
-      case 16 => BigInt(1, bytes)
-      // Java collapses ::ffff:a.b.c.d to an Inet4Address — rebuild the
-      // 128-bit v4-mapped value (RFC 4291 §2.5.5.2)
-      case 4 => (BigInt(0xffff) << 32) + BigInt(1, bytes)
-      case _ =>
-        throw new IllegalArgumentException(s"not an IPv6 address: '$s'")
-    }
+  /** A `first,last` range row → its prefixes, family from the text. */
+  private def range(first: String, last: String,
+                    value: String): Seq[Lpm.Prefix] = {
+    val (s, bits) = address(first)
+    val (e, lastBits) = address(last)
+    require(bits == lastBits, s"range '$first'..'$last' mixes families")
+    rangeToPrefixes(s, e, bits, value)
   }
 
   /** Split an inclusive address range into maximal aligned CIDR
@@ -101,7 +82,7 @@ object GeoLoader {
       var size = BigInt(1) << alignBit
       while (s + size - 1 > end) size >>= 1
       val maskLen = bits - (size.bitLength - 1)
-      out += Lpm.Prefix(s, s + size - 1, maskLen, value)
+      out += Lpm.Prefix(s, s + size - 1, maskLen, value, bits)
       s += size
     }
     out.result()
@@ -122,37 +103,29 @@ object GeoLoader {
       throw new IllegalArgumentException(s"line $n: ${e.getMessage}") }
 
   /** Parse a geo dump (ipapi format) into v4 + v6 prefix sets. */
-  def parseGeoPrefixes(text: String): (Seq[Lpm.Prefix], Seq[Lpm.Prefix]) = {
-    val v4 = Seq.newBuilder[Lpm.Prefix]
-    val v6 = Seq.newBuilder[Lpm.Prefix]
-    dataLines(text).foreach { case (n, f) => withLine(n) {
+  def parseGeoPrefixes(text: String): (Seq[Lpm.Prefix], Seq[Lpm.Prefix]) =
+    byFamily(dataLines(text).flatMap { case (n, f) => withLine(n) {
       require(f.length >= 12, s"geo row needs 12 fields, got ${f.length}")
       // field 9 is the timezone — unused, like the reference
       val rec = GeoDb.record(f(3).toLowerCase, f(4).toLowerCase, f(5),
         f(6), f(7), f(8), f(10), f(11))
-      if (f(0) == "6")
-        v6 ++= rangeToPrefixes(ipv6ToBig(f(1)), ipv6ToBig(f(2)), 128, rec)
-      else
-        v4 ++= rangeToPrefixes(ipv4ToBig(f(1)), ipv4ToBig(f(2)), 32, rec)
-    }}
-    (v4.result(), v6.result())
-  }
+      val ps = range(f(1), f(2), rec)
+      require(ps.forall(_.bits == (if (f(0) == "6") 128 else 32)),
+        s"ip_ver ${f(0)} does not match '${f(1)}'")
+      ps
+    }})
 
   /** Parse an AS dump into v4 + v6 prefix sets (value `asn|descr`). */
-  def parseAsPrefixes(text: String): (Seq[Lpm.Prefix], Seq[Lpm.Prefix]) = {
-    val v4 = Seq.newBuilder[Lpm.Prefix]
-    val v6 = Seq.newBuilder[Lpm.Prefix]
-    dataLines(text).foreach { case (n, f) => withLine(n) {
+  def parseAsPrefixes(text: String): (Seq[Lpm.Prefix], Seq[Lpm.Prefix]) =
+    byFamily(dataLines(text).flatMap { case (n, f) => withLine(n) {
       require(f.length >= 4, s"AS row needs 4 fields, got ${f.length}")
       val asn = f(2).toIntOption.getOrElse(0) // reference atoi
-      val rec = s"$asn|${f(3)}"
-      if (f(0).contains(":"))
-        v6 ++= rangeToPrefixes(ipv6ToBig(f(0)), ipv6ToBig(f(1)), 128, rec)
-      else
-        v4 ++= rangeToPrefixes(ipv4ToBig(f(0)), ipv4ToBig(f(1)), 32, rec)
-    }}
-    (v4.result(), v6.result())
-  }
+      range(f(0), f(1), s"$asn|${f(3)}")
+    }})
+
+  private def byFamily(ps: Iterator[Lpm.Prefix])
+      : (Seq[Lpm.Prefix], Seq[Lpm.Prefix]) =
+    ps.toVector.partition(_.bits == 32)
 
   def geoTables(text: String): Tables = {
     val (v4, v6) = parseGeoPrefixes(text)
@@ -164,13 +137,18 @@ object GeoLoader {
     Tables(Lpm.build(v4), Lpm.build(v6))
   }
 
+  /** A [[GeoDb]] from geo + AS dump texts. */
+  def geoDb(geoText: String, asText: String): GeoDb = {
+    val g = geoTables(geoText)
+    val a = asTables(asText)
+    GeoDb(g.v4, a.v4, g.v6, a.v6)
+  }
+
   /** Load a [[GeoDb]] from dump files (the reference's geodb dir holds
     * geo + AS databases side by side, CONFIG.md:104-106). */
   def fromFiles(geoPath: String, asPath: String): GeoDb = {
     def read(p: String) =
       new String(Files.readAllBytes(Paths.get(p)), StandardCharsets.UTF_8)
-    val g = geoTables(read(geoPath))
-    val a = asTables(read(asPath))
-    GeoDb(g.v4, a.v4, g.v6, a.v6)
+    geoDb(read(geoPath), read(asPath))
   }
 }

@@ -2,313 +2,94 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType, StringType}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** IPv4 LPM lookup as a native Catalyst expression with whole-stage
-  * codegen: primitive-array binary search over a driver-built disjoint
-  * interval table (SURVEY.md §2.9 — "promote to Catalyst Expressions for
-  * codegen"). Unlike a Scala UDF there is no Any-boxing, no encoder
-  * round-trip, and the call stays inside the generated consume loop.
-  *
-  * The table rides along as a referenced object in the generated class —
-  * the Spark-native analog of the reference's mmap'd read-only tries
+/** A (v4, v6) LPM table pair packed for [[LpmLookup]]: both tables'
+  * values sliced to one pipe-joined attribute (-1 = whole value) as
+  * UTF8String, so per-row work is the search alone. The pair rides
+  * along as a referenced object in the generated class — the
+  * Spark-native analog of the reference's mmap'd read-only tries
   * (reference geoip.c:91-183).
   */
-final class Lpm4Packed(val starts: Array[Long], val ends: Array[Long],
-                       val values: Array[UTF8String]) extends Serializable
+final class LpmPacked(val v4: Lpm.Bounds, val v6: Lpm.Bounds,
+                      val values4: Array[UTF8String],
+                      val values6: Array[UTF8String]) extends Serializable {
+  /** v4 address: the key is (0, ip). Called from interpreted eval and
+    * generated code (Java widens int/short/byte columns to this one). */
+  def lookup(ip: Long): UTF8String = {
+    val i = v4.search(0L, ip)
+    if (i < 0) null else values4(i)
+  }
 
-object Lpm4Packed {
-  /** Pack a generic LPM table (v4 range ⊂ Long). Optionally slice one
-    * pipe-joined attribute at build time so per-row work is pure lookup. */
-  def apply(t: Lpm.Table, attr: Int = -1): Lpm4Packed =
-    new Lpm4Packed(
-      t.starts.map(_.toLong),
-      t.ends.map(_.toLong),
-      t.values.map(v => UTF8String.fromString(sliceAttr(v, attr))))
+  /** v6 address: 16 big-endian bytes; any other length misses. */
+  def lookup(ip: Array[Byte]): UTF8String = {
+    val i = v6.searchBytes(ip)
+    if (i < 0) null else values6(i)
+  }
+}
+
+object LpmPacked {
+  def apply(v4: Lpm.Table, v6: Lpm.Table, attr: Int): LpmPacked =
+    new LpmPacked(v4.bounds, v6.bounds, utf8(v4, attr), utf8(v6, attr))
 
   /** Pipe-joined attribute slice with limit -1 (a bare split drops
     * trailing empty fields — a record ending in '|' would then crash
     * the build with AIOOBE); an absent attribute yields "" (the
     * reference renders missing geo attributes as empty/unknown). */
-  private[functions] def sliceAttr(v: String, attr: Int): String =
-    if (attr < 0) v
-    else {
-      val parts = v.split("\\|", -1)
-      if (attr < parts.length) parts(attr) else ""
-    }
-
-  /** Binary search; called from both interpreted eval and generated
-    * code. Returns null when no interval covers the ip. */
-  def lookup(t: Lpm4Packed, ip: Long): UTF8String = {
-    var lo = 0
-    var hi = t.starts.length - 1
-    var found = -1
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (t.starts(mid) <= ip) { found = mid; lo = mid + 1 }
-      else hi = mid - 1
-    }
-    if (found >= 0 && t.ends(found) >= ip) t.values(found) else null
-  }
+  private def utf8(t: Lpm.Table, attr: Int): Array[UTF8String] =
+    t.values.map(v => UTF8String.fromString(
+      if (attr < 0) v else v.split("\\|", -1).lift(attr).getOrElse("")))
 }
 
-/** `lookup(ip)` → matched value, `default` when unmatched (null default →
-  * nullable result). */
-case class Lpm4LookupExpr(child: Expression, table: Lpm4Packed,
-                          default: Option[String]) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = LpmExpr.expect(
-    child, LongType, prettyName)
+/** LPM lookup as a native Catalyst expression with whole-stage codegen
+  * (SURVEY.md §2.9 — "promote to Catalyst Expressions for codegen"):
+  * the matched value, NULL when no prefix covers the address. Unlike a
+  * Scala UDF there is no Any-boxing, no encoder round-trip, and the
+  * call stays inside the generated consume loop.
+  *
+  * The resolved input type picks the key reader: an integral column is a
+  * v4 address (key (0, ip) into the v4 table), a binary column a v6 one
+  * (16 bytes → (hi, lo) into the v6 table; any other length misses).
+  * Membership is `isnotnull(lookup)`.
+  */
+case class LpmLookup(child: Expression, table: LpmPacked)
+  extends UnaryExpression {
+  // a clean analysis error beats a janino failure / per-row CCE when a
+  // SQL caller hands a string column to asn() & friends
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ByteType | ShortType | IntegerType | LongType | BinaryType =>
+      TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName expects an integral (v4) or binary (v6) address, " +
+        s"got ${t.sql}")
+  }
   override def dataType: DataType = StringType
-  // nullable even with a default: a NULL input ip still yields NULL
-  // (callers coalesce if they want the reference's "?")
   override def nullable: Boolean = true
   override def prettyName: String = "lpm_lookup"
 
-  private val defaultU8: UTF8String =
-    default.map(UTF8String.fromString).orNull
-
-  override def nullSafeEval(ip: Any): Any = {
-    val r = Lpm4Packed.lookup(table, ip.asInstanceOf[Long])
-    if (r == null) defaultU8 else r
+  override def nullSafeEval(ip: Any): Any = ip match {
+    case b: Array[Byte] => table.lookup(b)
+    case n: Number      => table.lookup(n.longValue)
   }
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("lpmTable", table,
-      classOf[Lpm4Packed].getName)
-    val helper = Lpm4Packed.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val defRef = default.map(d =>
-      ctx.addReferenceObj("lpmDefault", UTF8String.fromString(d),
-        classOf[UTF8String].getName))
-    nullSafeCodeGen(ctx, ev, c => {
-      val fallback = defRef match {
-        case Some(d) => s"${ev.value} = $d;"
-        case None    => s"${ev.isNull} = true;"
-      }
+    val ref = ctx.addReferenceObj("lpm", table, classOf[LpmPacked].getName)
+    nullSafeCodeGen(ctx, ev, c =>
       s"""
-         |${ev.value} = $helper.lookup($tableRef, $c);
-         |if (${ev.value} == null) { $fallback }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Membership test (`net <listname>` semantics). */
-case class Lpm4ContainsExpr(child: Expression,
-                            table: Lpm4Packed) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = LpmExpr.expect(
-    child, LongType, prettyName)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "lpm_contains"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    v != null && Lpm4Packed.lookup(table, v.asInstanceOf[Long]) != null
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("lpmTable", table,
-      classOf[Lpm4Packed].getName)
-    val helper = Lpm4Packed.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val childGen = child.genCode(ctx)
-    val code =
-      code"""
-         |${childGen.code}
-         |boolean ${ev.value} = !${childGen.isNull} &&
-         |  $helper.lookup($tableRef, ${childGen.value}) != null;
-       """
-    ev.copy(code = code, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** IPv6 LPM table packed as parallel (hi, lo) unsigned-128 bound arrays.
-  * The reference stores v6 addresses as a native `__int128`
-  * (geoip.h:43-55 `xe_ip`) and walks the same tries as v4
-  * (filter.c:359-466); here the 128-bit bounds split into two longs and
-  * the binary search compares them with `Long.compareUnsigned` — no
-  * BigInt, no boxing, same codegen shape as [[Lpm4Packed]].
-  */
-final class Lpm6Packed(val startsHi: Array[Long], val startsLo: Array[Long],
-                       val endsHi: Array[Long], val endsLo: Array[Long],
-                       val values: Array[UTF8String]) extends Serializable
-
-object Lpm6Packed {
-  private def hiOf(b: BigInt): Long = (b >> 64).longValue
-  private def loOf(b: BigInt): Long = b.longValue // low 64 bits, 2's compl.
-
-  def apply(t: Lpm.Table, attr: Int = -1): Lpm6Packed =
-    new Lpm6Packed(
-      t.starts.map(hiOf), t.starts.map(loOf),
-      t.ends.map(hiOf), t.ends.map(loOf),
-      t.values.map(v =>
-        UTF8String.fromString(Lpm4Packed.sliceAttr(v, attr))))
-
-  /** Unsigned 128-bit compare of (aHi,aLo) vs (bHi,bLo). */
-  @inline private def cmp(aHi: Long, aLo: Long, bHi: Long, bLo: Long): Int = {
-    val h = java.lang.Long.compareUnsigned(aHi, bHi)
-    if (h != 0) h else java.lang.Long.compareUnsigned(aLo, bLo)
-  }
-
-  /** Binary search over a 16-byte big-endian address; called from both
-    * interpreted eval and generated code. Non-16-byte input → null. */
-  def lookup(t: Lpm6Packed, ip: Array[Byte]): UTF8String = {
-    if (ip == null || ip.length != 16) return null
-    var hi = 0L
-    var lo = 0L
-    var b = 0
-    while (b < 8)  { hi = (hi << 8) | (ip(b) & 0xffL); b += 1 }
-    while (b < 16) { lo = (lo << 8) | (ip(b) & 0xffL); b += 1 }
-    var l = 0
-    var h = t.startsHi.length - 1
-    var found = -1
-    while (l <= h) {
-      val mid = (l + h) >>> 1
-      if (cmp(t.startsHi(mid), t.startsLo(mid), hi, lo) <= 0) {
-        found = mid; l = mid + 1
-      } else h = mid - 1
-    }
-    if (found >= 0 && cmp(t.endsHi(found), t.endsLo(found), hi, lo) >= 0)
-      t.values(found)
-    else null
-  }
-}
-
-/** `lookup(ip6_binary)` → matched value, `default` when unmatched. */
-case class Lpm6LookupExpr(child: Expression, table: Lpm6Packed,
-                          default: Option[String]) extends UnaryExpression {
-  // a clean analysis error beats a janino failure / per-row CCE when a
-  // SQL caller hands a non-binary column to asn6() & friends
-  override def checkInputDataTypes(): TypeCheckResult = LpmExpr.expect(
-    child, BinaryType, prettyName)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "lpm6_lookup"
-
-  private val defaultU8: UTF8String =
-    default.map(UTF8String.fromString).orNull
-
-  override def nullSafeEval(ip: Any): Any = {
-    val r = Lpm6Packed.lookup(table, ip.asInstanceOf[Array[Byte]])
-    if (r == null) defaultU8 else r
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("lpm6Table", table,
-      classOf[Lpm6Packed].getName)
-    val helper = Lpm6Packed.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val defRef = default.map(d =>
-      ctx.addReferenceObj("lpm6Default", UTF8String.fromString(d),
-        classOf[UTF8String].getName))
-    nullSafeCodeGen(ctx, ev, c => {
-      val fallback = defRef match {
-        case Some(d) => s"${ev.value} = $d;"
-        case None    => s"${ev.isNull} = true;"
-      }
-      s"""
-         |${ev.value} = $helper.lookup($tableRef, $c);
-         |if (${ev.value} == null) { $fallback }
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Membership test over a 16-byte IPv6 binary column
-  * (`host6`/`net6`/v6-list semantics, reference filter.c:359-466). */
-case class Lpm6ContainsExpr(child: Expression,
-                            table: Lpm6Packed) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult = LpmExpr.expect(
-    child, BinaryType, prettyName)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "lpm6_contains"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    v != null &&
-      Lpm6Packed.lookup(table, v.asInstanceOf[Array[Byte]]) != null
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("lpm6Table", table,
-      classOf[Lpm6Packed].getName)
-    val helper = Lpm6Packed.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val childGen = child.genCode(ctx)
-    val code =
-      code"""
-         |${childGen.code}
-         |boolean ${ev.value} = !${childGen.isNull} &&
-         |  $helper.lookup($tableRef, ${childGen.value}) != null;
-       """
-    ev.copy(code = code, isNull = FalseLiteral)
+         |${ev.value} = $ref.lookup($c);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
   }
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 object LpmExpr {
-  /** Analysis-time input check shared by the four expressions. */
-  private[functions] def expect(child: Expression, t: DataType,
-                                name: String): TypeCheckResult =
-    if (child.dataType == t) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$name expects ${t.sql} input, got ${child.dataType.sql}")
-
-  // pack memoization: a production geo DB is hundreds of thousands of
-  // prefixes, and every country()/asn()/... Column used to repack the
-  // WHOLE table (map + attr slice + UTF8String per entry) on each call
-  // — asn+asd alone packed the AS table twice per query. Weak keys: the
-  // cache lives exactly as long as the Table it packs (GeoDb holds it).
-  private val cache4 =
-    new java.util.WeakHashMap[Lpm.Table, java.util.HashMap[Integer, Lpm4Packed]]
-  private val cache6 =
-    new java.util.WeakHashMap[Lpm.Table, java.util.HashMap[Integer, Lpm6Packed]]
-
-  private def packed4(t: Lpm.Table, attr: Int): Lpm4Packed =
-    cache4.synchronized {
-      cache4.computeIfAbsent(t, _ => new java.util.HashMap)
-        .computeIfAbsent(attr, _ => Lpm4Packed(t, attr))
-    }
-
-  private def packed6(t: Lpm.Table, attr: Int): Lpm6Packed =
-    cache6.synchronized {
-      cache6.computeIfAbsent(t, _ => new java.util.HashMap)
-        .computeIfAbsent(attr, _ => Lpm6Packed(t, attr))
-    }
-
-  /** Column API: LPM value lookup with default. */
-  def lookup4(table: Lpm.Table, attr: Int = -1,
-              default: Option[String] = None)(ip: Column): Column =
-    GraftBridge.toColumn(Lpm4LookupExpr(
-      GraftBridge.toExpression(ip.cast("long")),
-      packed4(table, attr), default))
-
-  /** Column API: LPM membership. */
-  def contains4(table: Lpm.Table)(ip: Column): Column =
-    GraftBridge.toColumn(Lpm4ContainsExpr(
-      GraftBridge.toExpression(ip.cast("long")), packed4(table, -1)))
-
-  /** Column API: v6 LPM value lookup over a binary(16) column. */
-  def lookup6(table: Lpm.Table, attr: Int = -1,
-              default: Option[String] = None)(ip: Column): Column =
-    GraftBridge.toColumn(Lpm6LookupExpr(
-      GraftBridge.toExpression(ip), packed6(table, attr), default))
-
-  /** Column API: v6 LPM membership over a binary(16) column. */
-  def contains6(table: Lpm.Table)(ip: Column): Column =
-    GraftBridge.toColumn(Lpm6ContainsExpr(
-      GraftBridge.toExpression(ip), packed6(table, -1)))
+  /** Column API: the longest-prefix value of `ip` in a packed pair. */
+  def lookup(table: LpmPacked)(ip: Column): Column =
+    GraftBridge.toColumn(LpmLookup(GraftBridge.toExpression(ip), table))
 }

@@ -35,14 +35,26 @@ object SqlFunctions {
   /** The function surface as (name, builder) pairs — shared by
     * [[registerAll]] (temp functions on a live session) and
     * [[graft.GraftExtensions]] (injectFunction at session build).
-    * Builders that need a session resolve `SparkSession.active` at
-    * CALL time, so the list itself can be built before any session
-    * exists (the extensions path). */
+    * No builder needs a session, so the list itself can be built
+    * before any session exists (the extensions path). */
   def builders(geo: GeoDb = BuiltinTables.geoDb,
                ipLists: Map[String, IpList] = BuiltinTables.ipLists)
       : Seq[(String, Seq[Expression] => Column)] = {
-    def sess = SparkSession.active
-    Seq[(String, Seq[Expression] => Column)](
+    type Builder = Seq[Expression] => Column
+    // every LPM builder answers to its v4 and its v6 name: the argument's
+    // type picks the family ([[LpmLookup]])
+    val lpm = Seq[((String, String), Builder)](
+      ("asn", "asn6") -> (es => geo.asn(colOf(es.head))),
+      ("asd", "asd6") -> (es => geo.asd(colOf(es.head))),
+      ("ip_in_list", "ip6_in_list") -> (es => {
+        val nm = strArg(es(1))
+        ipLists.getOrElse(nm, sys.error(s"unknown IP list '$nm'"))
+          .contains(colOf(es(0)))
+      })) ++
+      GeoDb.attrs.map(attr =>
+        (attr, s"${attr}6") -> ((es: Seq[Expression]) =>
+          geo.geo(attr)(colOf(es.head))))
+    Seq[(String, Builder)](
       "tfstr" -> (es => NetFns.tfstr(colOf(es.head))),
       "portstr" -> (es => NetFns.portstr(colOf(es.head))),
       "ppstr" -> (es => NetFns.ppstr(colOf(es(0)), colOf(es(1)))),
@@ -52,23 +64,7 @@ object SqlFunctions {
       "xdiv_l" -> (es =>
         NetFns.xdivL(colOf(es(0)), colOf(es(1)), longArg(es(2)))),
       "ip4str" -> (es => NetFns.ip4str(colOf(es.head))),
-      "asn" -> (es => geo.asn(sess)(colOf(es.head))),
-      "asd" -> (es => geo.asd(sess)(colOf(es.head))),
-      "ip_in_list" -> (es => {
-        val nm = strArg(es(1))
-        val list = ipLists.getOrElse(nm,
-          sys.error(s"unknown IP list '$nm'"))
-        LpmExpr.contains4(list.v4)(colOf(es(0)))
-      }),
       "ip6str" -> (es => NetFns.ip6str(colOf(es.head))),
-      "asn6" -> (es => geo.asn6(sess)(colOf(es.head))),
-      "asd6" -> (es => geo.asd6(sess)(colOf(es.head))),
-      "ip6_in_list" -> (es => {
-        val nm = strArg(es(1))
-        val list = ipLists.getOrElse(nm,
-          sys.error(s"unknown IP list '$nm'"))
-        LpmExpr.contains6(list.v6)(colOf(es(0)))
-      }),
       "hash_bucket" -> (es =>
         graft.operators.Curation.hashBucket(colOf(es.head))),
       "vec_dot" -> (es =>
@@ -79,12 +75,7 @@ object SqlFunctions {
       "lsh_signature" -> (es =>
         graft.operators.Similarity.lshSignature(colOf(es.head),
           longArg(es(1)).toInt, longArg(es(2)).toInt))) ++
-      GeoDb.attrs.map(attr =>
-        attr -> ((es: Seq[Expression]) =>
-          geo.geoAttr(sess, attr)(colOf(es.head)))) ++
-      GeoDb.attrs.map(attr =>
-        s"${attr}6" -> ((es: Seq[Expression]) =>
-          geo.geoAttr6(sess, attr)(colOf(es.head))))
+      lpm.flatMap { case ((n4, n6), fn) => Seq(n4 -> fn, n6 -> fn) }
   }
 
   def registerAll(spark: SparkSession,

@@ -291,11 +291,19 @@ object Similarity {
   private def lloyd(slices: DataFrame, m: Int, k: Int, iters: Int,
                     kName: String): DataFrame = {
     require(k >= 1, s"$kName=$k out of [1,∞)")
-    // the first k ids' m slices each, straight off one bounded sort
+    // the first k ids' m slices each, straight off one bounded sort;
+    // every sub then holds exactly those k ids, so a seed's position in
+    // its sub's (__h, id)-sorted list is its cid. No window: k-means'
+    // constant sub would be optimized out of a window's partitioning,
+    // which then runs (and warns) as one unpartitioned window
     var cents = slices.withColumn("__h", md5(col("id").cast("string")))
       .orderBy(col("__h").asc, col("id").asc, col("sub").asc).limit(k * m)
-      .select(col("sub"), (dense_rank().over(Window.orderBy(col("__h").asc,
-        col("id").asc)).cast(LongType) - 1).as("cid"), col("sv").as("cv"))
+      .groupBy(col("sub"))
+      .agg(array_sort(collect_list(struct(col("__h"), col("id"),
+        col("sv")))).as("__s"))
+      .select(col("sub"), posexplode(col("__s")).as(Seq("cid", "__e")))
+      .select(col("sub"), col("cid").cast(LongType).as("cid"),
+        col("__e.sv").as("cv"))
       .localCheckpoint(eager = false)
     for (_ <- 0 until iters) {
       val upd = nearest(slices, Seq("sub", "id"), "sv", cents, Seq("sub"),

@@ -141,10 +141,14 @@ class FilterSpec extends SparkTest {
     def a6(s: String) = java.net.InetAddress.getByName(s).getAddress
     // (idx, src6, dst6): row 0 in 2001:db8::/32 src, row 1 matches the
     // docs6 dst list, row 2 matches neither
+    // row 3's src is the v4-mapped ::ffff:10.0.0.1 (Java would fold the
+    // literal to 4 bytes, so spell out the 16)
+    val mapped = Array.fill[Byte](10)(0) ++ Array[Byte](-1, -1, 10, 0, 0, 1)
     val rows = Seq(
       (0L, a6("2001:db8::a04:1"), a6("2001:db9::1")),
       (1L, a6("fd00::1"), a6("2001:db8:1::c0a8:7")),
-      (2L, a6("fd00::1"), a6("2001:db9::1")))
+      (2L, a6("fd00::1"), a6("2001:db9::1")),
+      (3L, mapped, a6("2001:db9::1")))
     val df = spark.createDataFrame(
       rows.map { case (i, s, d) => Row(i, s, d) }.asJava,
       StructType(Seq(StructField("idx", LongType),
@@ -162,15 +166,28 @@ class FilterSpec extends SparkTest {
     assert(sel("src host6 2001:db8::a04:1") == Seq(0))
     assert(sel("dst net6 docs6") == Seq(1))
     assert(sel("net6 2001:db8::/32") == Seq(0, 1)) // bare = src OR dst
+    // the embedded dotted-quad form is an ordinary v6 literal, parsed
+    // the way IP lists and the geo loader parse it
+    assert(sel("src host6 ::ffff:10.0.0.1") == Seq(3))
+    assert(sel("net6 ::ffff:10.0.0.0/104") == Seq(3))
+    assert(sel("net6 ::ffff:0:0/96") == Seq(3))
+    // a mask outside [0, 128] is an error, not a match-everything range
+    // (nor an IP-list name)
+    for (bad <- Seq("dst net6 2001:db8::/-1", "dst net 2001:db8::/-1",
+        "dst net6 2001:db8::/129",
+        "net 10.0.0.0/33", "net 10.0.0.0/-8")) {
+      val r = Compiler.filterColumn(bad, env6)
+      assert(r.isLeft && r.left.exists(_.contains("mask")), s"$bad -> $r")
+    }
     // geo function over a v6-typed arg resolves via the v6 tables
     // (row1 dst embeds 192.168.0.7 → the JP quarter of the geo layout)
     assert(sel("asn(src host6) 64601") == Seq(0))
     assert(sel("country(dst host6) Japan") == Seq(1))
-    // compiled plan: native lpm6 expression, no ScalaUDF
+    // compiled plan: native LPM expression, no ScalaUDF
     val pred = Compiler.filterColumn("net6 2001:db8::/32 or src net6 docs6",
       env6).fold(e => fail(e), identity)
     val plan = df.filter(pred).queryExecution.analyzed.toString
-    assert(plan.contains("lpm6_contains"), plan)
+    assert(plan.contains("lpm_lookup"), plan)
     assert(!plan.contains("UDF"), plan)
   }
 

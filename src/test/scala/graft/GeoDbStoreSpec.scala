@@ -1,7 +1,8 @@
 package graft
 
 import graft.flow.BuiltinTables
-import graft.functions.{GeoDb, GeoDbStore, GeoLoader}
+import graft.functions.{GeoDb, GeoDbStore, GeoLoader, Lpm}
+import graft.LpmSpec.look
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
@@ -14,18 +15,20 @@ class GeoDbStoreSpec extends SparkTest {
       "192.130.0.1", "10.0.0.1", "10.5.5.5", "10.13.0.9", "8.8.8.8",
       "0.0.0.1", "255.255.255.255")
     v4Probes.foreach { ip =>
-      val x = GeoLoader.ipv4ToBig(ip)
-      assert(a.geo4.lookup(x) == b.geo4.lookup(x), s"geo4 $ip")
-      assert(a.as4.lookup(x) == b.as4.lookup(x), s"as4 $ip")
+      assert(look(a.geo4, ip) == look(b.geo4, ip), s"geo4 $ip")
+      assert(look(a.as4, ip) == look(b.as4, ip), s"as4 $ip")
     }
     val v6Probes = Seq("2001:db8::1", "2001:db8:1::42", "2001:db9::1",
       "::1", "ffff:ffff:ffff:ffff:ffff:ffff:ffff:ffff")
     v6Probes.foreach { ip =>
-      val x = GeoLoader.ipv6ToBig(ip)
-      assert(a.geo6.lookup(x) == b.geo6.lookup(x), s"geo6 $ip")
-      assert(a.as6.lookup(x) == b.as6.lookup(x), s"as6 $ip")
+      assert(look(a.geo6, ip) == look(b.geo6, ip), s"geo6 $ip")
+      assert(look(a.as6, ip) == look(b.as6, ip), s"as6 $ip")
     }
   }
+
+  /** The whole pipe-joined geo record, through the broadcast LPM. */
+  private def lookup(db: GeoDb) = graft.functions.LpmExpr.lookup(
+    graft.functions.LpmPacked(db.geo4, db.geo6, -1)) _
 
   test("compile → read round-trips every family, including v6 and " +
     "full-width addresses") {
@@ -53,10 +56,18 @@ class GeoDbStoreSpec extends SparkTest {
   }
 
   test("binary address codec: zero, v4-width, and 128-bit-max values") {
-    Seq(BigInt(0), BigInt(1), GeoLoader.ipv4ToBig("255.255.255.255"),
+    // bytes16 is the artifact's column form; Table packs the same
+    // value as two unsigned longs and must give it back unchanged
+    Seq(BigInt(0), BigInt(1), Lpm.prefix("255.255.255.255").start,
+      (BigInt(1) << 63), (BigInt(1) << 64) - 1, (BigInt(1) << 64),
       (BigInt(1) << 127), (BigInt(1) << 128) - 1).foreach { x =>
-      assert(GeoDbStore.toBig(GeoDbStore.toBytes(x)) == x, x.toString)
+      assert(BigInt(1, Lpm.bytes16(x)) == x, x.toString)
+      val t = Lpm.Table(Seq((x, x, "v")))
+      assert(t.start(0) == x && t.end(0) == x, x.toString)
+      assert(t.searchBytes(Lpm.bytes16(x)) == 0, x.toString)
     }
+    intercept[IllegalArgumentException] { Lpm.bytes16(BigInt(1) << 128) }
+    intercept[IllegalArgumentException] { Lpm.bytes16(BigInt(-1)) }
   }
 
   test("xegeoq-style query lines: hit formats pipe fields, miss is '?'") {
@@ -73,7 +84,7 @@ class GeoDbStoreSpec extends SparkTest {
       miss.toString)
   }
 
-  test("rangeJoin6 equals the broadcast v6 LPM path over NAT64-shaped " +
+  test("rangeJoin on a v6 column equals the broadcast LPM path over NAT64 " +
     "addresses") {
     import org.apache.spark.sql.functions._
     val out = Files.createTempDirectory("geodb_rj6").toFile
@@ -85,12 +96,11 @@ class GeoDbStoreSpec extends SparkTest {
       expr("unhex(concat('20010DB80001000000000000', " +
         "lpad(hex((id * 2654435761) % 16777216 + 3221225472), 8, '0')))")
         .as("ip6"))
-    val viaJoin = GeoDbStore.rangeJoin6(flows, "ip6", artifact,
+    val viaJoin = GeoDbStore.rangeJoin(flows, "ip6", artifact,
         family = "geo6", valueAs = "g")
       .select(col("id"), coalesce(col("g"), lit("-")).as("g"))
     val viaLpm = flows.select(col("id"),
-      coalesce(graft.functions.LpmExpr.lookup6(
-        BuiltinTables.geoDb.geo6)(col("ip6")), lit("-")).as("g"))
+      coalesce(lookup(BuiltinTables.geoDb)(col("ip6")), lit("-")).as("g"))
     assert(viaJoin.count() == 2048) // disjoint ranges: no row fan-out
     assert(viaJoin.orderBy("id").collect().map(_.toSeq).toSeq ==
       viaLpm.orderBy("id").collect().map(_.toSeq).toSeq)
@@ -99,8 +109,8 @@ class GeoDbStoreSpec extends SparkTest {
       s"v6 range join must be an equi-join on the bucket:\n$plan")
   }
 
-  test("rangeJoinV4 equals the broadcast LPM path and plans as an " +
-    "equi-join, not a nested loop") {
+  test("rangeJoin on a v4 column equals the broadcast LPM path, as an " +
+    "equi-join") {
     import org.apache.spark.sql.functions._
     val out = Files.createTempDirectory("geodb_rj").toFile
     GeoDbStore.write(spark, BuiltinTables.geoDb, out.getAbsolutePath)
@@ -110,17 +120,21 @@ class GeoDbStoreSpec extends SparkTest {
     val flows = spark.range(4096).select(
       col("id"),
       ((col("id") * 7919 * 65537) % 4294967296L).as("ip"))
-    val viaJoin = GeoDbStore.rangeJoinV4(flows, "ip", artifact,
+    val viaJoin = GeoDbStore.rangeJoin(flows, "ip", artifact,
         family = "geo4", valueAs = "g")
       .select(col("id"), col("ip"),
         // geo4 values pack "attr1|attr2|..." — compare raw
         coalesce(col("g"), lit("-")).as("g"))
     val viaLpm = flows.select(col("id"), col("ip"),
-      coalesce(graft.functions.LpmExpr.lookup4(geo.geo4)(col("ip")),
-        lit("-")).as("g"))
+      coalesce(lookup(geo)(col("ip")), lit("-")).as("g"))
     val a = viaJoin.orderBy("id").collect().map(_.toSeq)
     val b = viaLpm.orderBy("id").collect().map(_.toSeq)
     assert(a.length == 4096 && a.toSeq == b.toSeq)
+    // a bucket width off the hex-digit grid reads the same ranges
+    val odd = GeoDbStore.rangeJoin(flows, "ip", artifact,
+        family = "geo4", valueAs = "g", prefixBits = Some(6))
+      .select(col("id"), col("ip"), coalesce(col("g"), lit("-")).as("g"))
+    assert(odd.orderBy("id").collect().map(_.toSeq).toSeq == b.toSeq)
     // at most one range matches (disjoint ranges): row count preserved
     assert(viaJoin.count() == 4096)
     val plan = viaJoin.queryExecution.executedPlan.toString

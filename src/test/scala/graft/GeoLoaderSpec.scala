@@ -2,6 +2,7 @@ package graft
 
 import graft.flow.BuiltinTables
 import graft.functions.{GeoDb, GeoLoader, Lpm}
+import graft.LpmSpec.look
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.charset.StandardCharsets
@@ -22,7 +23,7 @@ class GeoLoaderSpec extends AnyFunSuite {
   test("range → maximal CIDR prefixes (add_range4 walk)") {
     // aligned block = one prefix
     val one = GeoLoader.rangeToPrefixes(
-      GeoLoader.ipv4ToBig("192.0.2.0"), GeoLoader.ipv4ToBig("192.0.2.255"),
+      Lpm.prefix("192.0.2.0").start, Lpm.prefix("192.0.2.255").start,
       32, "v")
     assert(one.map(_.maskLen) == Seq(24))
     // unaligned range splits, covers exactly, stays disjoint
@@ -35,7 +36,8 @@ class GeoLoaderSpec extends AnyFunSuite {
     // full space from zero
     val all = GeoLoader.rangeToPrefixes(BigInt(0),
       (BigInt(1) << 32) - 1, 32, "v")
-    assert(all == Seq(Lpm.Prefix(BigInt(0), (BigInt(1) << 32) - 1, 0, "v")))
+    assert(all ==
+      Seq(Lpm.Prefix(BigInt(0), (BigInt(1) << 32) - 1, 0, "v", 32)))
   }
 
   test("geo dump parse: ranges, lowercasing, v6 rows, LPM nesting") {
@@ -47,19 +49,18 @@ class GeoLoaderSpec extends AnyFunSuite {
         |""".stripMargin
     val t = GeoLoader.geoTables(csv)
     def country(ip: String) =
-      t.v4.lookup(GeoLoader.ipv4ToBig(ip))
-        .map(_.split('|')(GeoDb.attrIndex("country")))
+      look(t.v4, ip).map(_.split('|')(GeoDb.attrIndex("country")))
     assert(country("10.200.0.1").contains("Netherlands"))
     assert(country("10.1.2.3").contains("Germany")) // nested range wins
     assert(country("11.0.0.1").isEmpty)
     // continent/cc lowercased like the reference (xemkgeodb.c:321-327)
-    val rec = t.v4.lookup(GeoLoader.ipv4ToBig("10.1.2.3")).get.split('|')
+    val rec = look(t.v4, "10.1.2.3").get.split('|')
     assert(rec(GeoDb.attrIndex("continent")) == "eu")
     assert(rec(GeoDb.attrIndex("country_code")) == "de")
     // v6 row with a quoted comma city landed in the v6 table
-    val v6rec = t.v6.lookup(GeoLoader.ipv6ToBig("2001:db8::1")).get
+    val v6rec = look(t.v6, "2001:db8::1").get
     assert(v6rec.split('|')(GeoDb.attrIndex("city")) == "San Jose, CA")
-    assert(t.v6.lookup(GeoLoader.ipv6ToBig("2001:db9::1")).isEmpty)
+    assert(look(t.v6, "2001:db9::1").isEmpty)
   }
 
   test("AS dump parse: v4/v6 auto-detect, quoted descriptions") {
@@ -68,10 +69,8 @@ class GeoLoaderSpec extends AnyFunSuite {
         |2001:db8::,2001:db8::ffff,64496,EXAMPLE-V6
         |""".stripMargin
     val t = GeoLoader.asTables(csv)
-    assert(t.v4.lookup(GeoLoader.ipv4ToBig("1.0.0.128"))
-      .contains("13335|Cloudflare, Inc."))
-    assert(t.v6.lookup(GeoLoader.ipv6ToBig("2001:db8::42"))
-      .contains("64496|EXAMPLE-V6"))
+    assert(look(t.v4, "1.0.0.128").contains("13335|Cloudflare, Inc."))
+    assert(look(t.v6, "2001:db8::42").contains("64496|EXAMPLE-V6"))
   }
 
   test("fromFiles loads a GeoDb from fixture dump files") {
@@ -81,32 +80,35 @@ class GeoLoaderSpec extends AnyFunSuite {
     Files.write(geo, BuiltinTables.geoCsv.getBytes(StandardCharsets.UTF_8))
     Files.write(as, BuiltinTables.asCsv.getBytes(StandardCharsets.UTF_8))
     val db = GeoLoader.fromFiles(geo.toString, as.toString)
-    assert(db.geo4.lookup(GeoLoader.ipv4ToBig("192.0.2.7"))
+    assert(look(db.geo4, "192.0.2.7")
       .map(_.split('|')(GeoDb.attrIndex("country"))).contains("France"))
-    assert(db.as4.lookup(GeoLoader.ipv4ToBig("10.5.0.1"))
-      .contains("64501|EXAMPLE-NET-B"))
+    assert(look(db.as4, "10.5.0.1").contains("64501|EXAMPLE-NET-B"))
   }
 
   test("loader-built builtin tables ≡ the prefix-literal tables") {
     val fromPrefixes = GeoDb(Lpm.build(BuiltinTables.geoPrefixes),
-      Lpm.build(BuiltinTables.asPrefixes))
+      Lpm.build(BuiltinTables.asPrefixes), Lpm.build(Nil), Lpm.build(Nil))
     val loaded = BuiltinTables.geoDb
     val probes = Seq("192.0.1.1", "192.0.2.200", "192.70.0.1",
       "192.130.0.1", "192.200.0.1", "10.0.0.1", "10.5.5.5", "10.13.0.9",
       "8.8.8.8", "192.0.3.0")
     probes.foreach { ip =>
-      val x = GeoLoader.ipv4ToBig(ip)
-      assert(loaded.geo4.lookup(x) == fromPrefixes.geo4.lookup(x), ip)
-      assert(loaded.as4.lookup(x) == fromPrefixes.as4.lookup(x), ip)
+      assert(look(loaded.geo4, ip) == look(fromPrefixes.geo4, ip), ip)
+      assert(look(loaded.as4, ip) == look(fromPrefixes.as4, ip), ip)
     }
   }
 
   test("malformed dump rows fail with the line number, never with a " +
     "raw NumberFormatException or a DNS lookup") {
-    // bad v4 octet / wrong part count / garbage: clear line-tagged error
+    // bad v4 octet / wrong part count / garbage / a signed octet (the
+    // filter and IP lists reject it, so the loader must too) / a row
+    // whose addresses disagree with its ip_ver: clear line-tagged error
     Seq("4,999.1.1.1,1.2.3.4,EU,DE,g,s,c,z,tz,1,2",
         "4,1.2.3,1.2.3.4,EU,DE,g,s,c,z,tz,1,2",
-        "4,xx,1.2.3.4,EU,DE,g,s,c,z,tz,1,2").foreach { row =>
+        "4,xx,1.2.3.4,EU,DE,g,s,c,z,tz,1,2",
+        "4,+10.0.0.1,10.0.0.2,EU,DE,g,s,c,z,tz,1,2",
+        "6,10.0.0.1,10.0.0.2,EU,DE,g,s,c,z,tz,1,2",
+        "4,10.0.0.1,2001:db8::1,EU,DE,g,s,c,z,tz,1,2").foreach { row =>
       val e = intercept[IllegalArgumentException] {
         GeoLoader.parseGeoPrefixes(s"# header\n$row")
       }
@@ -126,10 +128,14 @@ class GeoLoaderSpec extends AnyFunSuite {
     }
     assert(ea.getMessage.contains("line 1"), ea.getMessage)
     // valid v6 literals still parse (compressed + full width + the
-    // RFC 4291 embedded dotted-quad forms)
-    assert(GeoLoader.ipv6ToBig("2001:db8::1") ==
-      GeoLoader.ipv6ToBig("2001:0db8:0000:0000:0000:0000:0000:0001"))
-    assert(GeoLoader.ipv6ToBig("::ffff:10.0.0.1") ==
-      (BigInt(0xffff) << 32) + GeoLoader.ipv4ToBig("10.0.0.1"))
+    // RFC 4291 embedded dotted-quad forms, which stay 128-bit values in
+    // the v6 table — the same value the filter DSL and IP lists use)
+    val (v4, v6) = GeoLoader.parseAsPrefixes(
+      "2001:db8::1,2001:0db8:0000:0000:0000:0000:0000:0001,1,A\n" +
+        "::ffff:10.0.0.1,::ffff:10.0.0.1,2,B")
+    assert(v4.isEmpty)
+    assert(v6.map(p => (p.start, p.maskLen)) == Seq(
+      (Lpm.prefix("2001:db8::1").start, 128),
+      ((BigInt(0xffff) << 32) + Lpm.prefix("10.0.0.1").start, 128)))
   }
 }

@@ -51,7 +51,7 @@ class PropertySpec extends SparkTest {
       val span = 1L << (32 - len)
       val start = (addr / span) * span
       Lpm.Prefix(BigInt(start), BigInt(start + span - 1), len,
-        s"$start/$len")
+        s"$start/$len", 32)
     }
     samples(Gen.zip(Gen.listOfN(12, genPrefix), Gen.listOfN(40,
       Gen.chooseNum(0L, (1L << 32) - 1))), 15).foreach { case (prefixes, ips) =>
@@ -60,43 +60,92 @@ class PropertySpec extends SparkTest {
         val naive = prefixes
           .filter(p => p.start <= ip && p.end >= ip)
           .sortBy(-_.maskLen).headOption.map(_.value)
-        assert(table.lookup(BigInt(ip)) == naive,
+        val i = table.search(0L, ip)
+        assert((if (i < 0) None else Some(table.values(i))) == naive,
           s"ip=$ip prefixes=$prefixes")
       }
     }
   }
 
-  test("Lpm6Packed.lookup equals the BigInt reference for random v6 " +
-    "prefixes and addresses (two-long unsigned-128 search)") {
-    import graft.functions.Lpm6Packed
-    // bias generation toward the hi/lo boundary and high-bit regions
-    // where signed/unsigned and carry bugs live
-    val genAddr: Gen[BigInt] = Gen.oneOf(
-      Gen.listOfN(16, Gen.chooseNum(0, 255))
-        .map(bs => BigInt(1, bs.map(_.toByte).toArray)),
-      Gen.chooseNum(-4L, 4L).map(d => (BigInt(1) << 64) + d),
-      Gen.chooseNum(0L, 255L).map(d => (BigInt(1) << 127) + d))
-    val genPrefix = for {
-      addr <- genAddr
-      len <- Gen.chooseNum(1, 128)
-    } yield {
-      val span = BigInt(1) << (128 - len)
-      val start = (addr / span) * span
-      Lpm.Prefix(start, start + span - 1, len, s"p$len")
+  test("LpmLookup equals a longest-mask scan over random nested v4/v6 " +
+    "prefix sets") {
+    import graft.functions.{IpList, LpmExpr, LpmLookup, LpmPacked}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types._
+    val rnd = new scala.util.Random(20261020L)
+    def below(n: BigInt): BigInt = BigInt(n.bitLength + 8, rnd).mod(n)
+    // addresses biased toward the edges of the family's space, and for
+    // v6 toward the hi/lo split and the high bit, where signed/unsigned
+    // and carry bugs live
+    def addr(bits: Int): BigInt = rnd.nextInt(4) match {
+      case 0 => below(BigInt(1) << bits)
+      case 1 => below(BigInt(256))
+      case 2 => (BigInt(1) << bits) - 1 - below(BigInt(256))
+      case _ =>
+        if (bits == 32) (BigInt(1) << 31) + below(BigInt(512)) - 256
+        else (BigInt(1) << (if (rnd.nextBoolean()) 64 else 127)) +
+          below(BigInt(512)) - 256
     }
-    samples(Gen.zip(Gen.listOfN(10, genPrefix),
-      Gen.listOfN(30, genAddr)), 12).foreach { case (prefixes, addrs) =>
-      val table = Lpm.build(prefixes)
-      val packed = Lpm6Packed(table)
-      addrs.foreach { a =>
-        val bytes = {
-          val raw = a.toByteArray.takeRight(16)
-          Array.fill[Byte](16 - raw.length)(0) ++ raw
-        }
-        val expected = table.lookup(a).orNull
-        val got = Option(Lpm6Packed.lookup(packed, bytes))
-          .map(_.toString).orNull
-        assert(got == expected, s"addr=$a prefixes=$prefixes")
+    // each prefix lands inside a random earlier one two times in three,
+    // so nesting chains, siblings and disjoint roots mix; CIDR blocks of
+    // one length are equal or disjoint, so after the distinct the
+    // longest covering mask is unique
+    def nested(bits: Int, n: Int): Seq[Lpm.Prefix] = {
+      val out = scala.collection.mutable.ArrayBuffer[Lpm.Prefix]()
+      for (i <- 0 until n) {
+        val parent =
+          if (out.nonEmpty && rnd.nextInt(3) > 0) Some(out(rnd.nextInt(out.size)))
+          else None
+        val minLen = parent.fold(0)(_.maskLen)
+        val len = minLen + rnd.nextInt(bits - minLen + 1)
+        val a = parent.fold(addr(bits))(p => p.start + below(p.end - p.start + 1))
+        val span = BigInt(1) << (bits - len)
+        val start = a - a.mod(span)
+        out += Lpm.Prefix(start, start + span - 1, len, s"p$i", bits)
+      }
+      out.toSeq.distinctBy(p => (p.start, p.maskLen))
+    }
+    def probes(ps: Seq[Lpm.Prefix], bits: Int): Seq[BigInt] =
+      (ps.flatMap(p => Seq(p.start, p.end, p.start - 1, p.end + 1)) ++
+        Seq.fill(20)(addr(bits))).filter(x => x >= 0 && x < (BigInt(1) << bits))
+    def scan(ps: Seq[Lpm.Prefix], x: BigInt): Option[String] =
+      ps.filter(p => p.start <= x && x <= p.end).sortBy(-_.maskLen)
+        .headOption.map(_.value)
+
+    for (sample <- 1 to 8) {
+      val (p4, p6) = (nested(32, 4 + rnd.nextInt(12)), nested(128, 4 + rnd.nextInt(12)))
+      val (t4, t6) = (Lpm.build(p4), Lpm.build(p6))
+      val packed = LpmPacked(t4, t6, -1)
+      val list = IpList("l", t4, t6)
+      // key readers: a bigint column is (0, ip), a binary one 16 bytes
+      val cases = Seq(
+        (LongType, probes(p4, 32).map(x => (x, x.toLong: Any)), p4),
+        (BinaryType, probes(p6, 128).map(x => (x, Lpm.bytes16(x): Any)), p6))
+      for ((t, xs, ps) <- cases) {
+        val want = xs.map { case (x, _) => scan(ps, x) }
+        // interpreted eval
+        val evald = xs.map { case (_, v) =>
+          Option(LpmLookup(Literal.create(v, t), packed).eval(null))
+            .map(_.toString) }
+        assert(evald == want, s"sample $sample $t eval, prefixes=$ps")
+        // whole-stage codegen over an RDD scan (a local relation would be
+        // folded by the optimizer and evaluated interpreted)
+        val df = spark.createDataFrame(spark.sparkContext.parallelize(
+          xs.zipWithIndex.map { case ((_, v), i) => Row(i.toLong, v) }, 2),
+          StructType(Seq(StructField("i", LongType),
+            StructField("ip", t))))
+          .select(col("i"), LpmExpr.lookup(packed)(col("ip")).as("v"),
+            list.contains(col("ip")).as("m"))
+        val plan = df.queryExecution.executedPlan
+        assert(plan.collect { case w: WholeStageCodegenExec => w }
+          .exists(_.toString.contains("lpm_lookup")), plan.toString)
+        val got = df.collect().sortBy(_.getLong(0))
+        assert(got.map(r => Option(r.getString(1))).toSeq == want,
+          s"sample $sample $t codegen, prefixes=$ps")
+        assert(got.map(_.getBoolean(2)).toSeq == want.map(_.isDefined))
       }
     }
   }
