@@ -254,7 +254,7 @@ object Queries {
         .groupBy(col("protocol").as("proto"),
           col("l4_dst_port").as("port"))
         .agg(sum(col("in_bytes") * col("sampling_rate")).as("octets"))
-      TopK.topPctCut(agg, Seq.empty, "octets", 90.0,
+      TopK.topPctCut(agg, "octets", 90.0,
           Seq(col("proto").asc, col("port").asc))
         .orderBy(col("octets").desc, col("proto").asc, col("port").asc)
     },
@@ -3048,16 +3048,16 @@ object Queries {
                        FROM documents GROUP BY text)
       ORDER BY doc_id ASC"""))
 
-  /** q85: GLOBAL top-N + others via the distributed head path
-    * (TopK.topNOthersGlobal — TakeOrderedAndProject + narrow residual
-    * agg, no single-partition window). */
+  /** q85: GLOBAL top-N + others over the whole per-AS aggregate — the
+    * windowed `TopK.topNOthers` with no partition columns, so the oracle's
+    * head LIMIT + residual sum checks the unpartitioned cut. */
   private val q85 = Q(
     "q85_topn_global",
     (s, dir) => {
       val agg = TestFlowView.load(s, dir)
         .groupBy(col("dst_as"))
         .agg(sum(col("in_bytes") * col("sampling_rate")).as("octets"))
-      TopK.topNOthersGlobal(agg, Seq("octets"),
+      TopK.topNOthers(agg, Nil, Seq("dst_as"), Seq("octets"),
         Seq(col("octets").desc, col("dst_as").asc), 5)
         .orderBy(col("dst_as").isNull.cast("int").asc,
           col("octets").desc, col("dst_as").asc)
@@ -3075,17 +3075,16 @@ object Queries {
       SELECT * FROM (SELECT * FROM head UNION ALL SELECT * FROM others)
       ORDER BY (dst_as IS NULL) ASC, octets DESC, dst_as ASC"""))
 
-  /** q86: GLOBAL top-pct cut via the banded path (TopK.topPctCutGlobal):
-    * only the crossing log2-band is exactly sorted; buckets above it are
-    * proven kept, below proven cut. Oracle is the plain windowed cumsum
-    * with identical double math. */
+  /** q86: GLOBAL top-pct cut over the (src_as, dst_as) aggregate via
+    * `TopK.topPctCut`. Oracle is the plain windowed cumsum with identical
+    * double math. */
   private val q86 = Q(
     "q86_toppct_global",
     (s, dir) => {
       val agg = TestFlowView.load(s, dir)
         .groupBy(col("src_as"), col("dst_as"))
         .agg(sum(col("in_bytes") * col("sampling_rate")).as("octets"))
-      TopK.topPctCutGlobal(agg, "octets", 80.0,
+      TopK.topPctCut(agg, "octets", 80.0,
         Seq(col("src_as").asc, col("dst_as").asc))
         .orderBy(col("octets").desc, col("src_as").asc, col("dst_as").asc)
     },

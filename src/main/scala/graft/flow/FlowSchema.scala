@@ -183,9 +183,4 @@ object FlowSchema {
     Measure("ipackets", "ipackets", 1),
     Measure("rpackets", "rpackets", 1)
   )
-
-  val logicalByName: Map[String, LogicalField] =
-    logicalFields.map(f => f.name -> f).toMap
-  val measureByName: Map[String, Measure] =
-    measures.map(m => m.name -> m).toMap
 }

@@ -31,7 +31,7 @@ object Classification {
     val agg = flows
       .groupBy(conf.keyCols.map(col): _*)
       .agg(sum(measureExpr).as(conf.measure))
-    TopK.topPctCut(agg, Seq.empty, conf.measure, conf.topPct,
+    TopK.topPctCut(agg, conf.measure, conf.topPct,
         conf.keyCols.map(c => col(c).asc))
       .withColumn("class_name", conf.nameCol)
   }

@@ -85,21 +85,14 @@ object Contamination {
     * (h1 + j·h2) mod m (h2 forced odd), the standard k-from-2
     * construction; the DuckDB oracle replays it bit-for-bit.
     *
-    * `materializeProbe` (default true): the probed gram projection
-    * feeds two consumers whose subtrees can never be plan-identical
-    * (PushDownLeftSemiAntiJoin rewrites the verify branch), so it is
-    * localCheckpoint'ed EAGERLY — building (or even explain()ing) the
-    * returned frame runs the whole gram-probe job at plan-construction
-    * time and pins the materialized RDD in executor storage for the
-    * session; streaming inputs are unsupported. (Eager is deliberate:
-    * a lazy checkpoint lets the two consumer stages race and
-    * recompute the probe chain — measured r22.) Pass false for a pure
-    * lazy plan (streaming inputs, self-managed caching — the probe
-    * chain then re-runs once per consumer). */
+    * The probed gram projection is localCheckpoint'ed EAGERLY: building
+    * (or even explain()ing) the returned frame runs the whole gram-probe
+    * job at plan-construction time and pins the materialized RDD in
+    * executor storage for the session; streaming inputs are
+    * unsupported. */
   def bloomContamination(corpus: DataFrame, bench: DataFrame,
                          idCol: String, textCol: String, n: Int,
-                         k: Int, m: Int,
-                         materializeProbe: Boolean = true): DataFrame = {
+                         k: Int, m: Int): DataFrame = {
     require(k >= 1 && k <= 8, s"k=$k out of [1,8]")
     require(m >= 64, s"m=$m too small")
     require(m % 64 == 0, s"m=$m must be a multiple of 64")
@@ -155,9 +148,7 @@ object Contamination {
     // (measured on q121's sibling-stage shape: lazy ~10% over eager
     // in the same window, medians 5.8 vs 5.3); the blocking job IS
     // the serialization point.
-    // materializeProbe=false keeps the pure lazy plan (streaming
-    // inputs, self-managed caching).
-    val probed0 = dg.crossJoin(broadcast(bitsRow))
+    val probed = dg.crossJoin(broadcast(bitsRow))
       .withColumn("__maybe", (0 until k)
         .map { j =>
           val gp = cell(j) + lit(j.toLong * m)
@@ -167,8 +158,7 @@ object Contamination {
         }
         .reduce(_ && _))
       .select(col(idCol), col("g"), col("__maybe"))
-    val probed = if (materializeProbe) probed0.localCheckpoint()
-                 else probed0
+      .localCheckpoint()
     val per = probed.groupBy(col(idCol)).agg(
       count(lit(1)).as("n_distinct_grams"),
       sum(when(col("__maybe"), 1L).otherwise(0L)).as("n_maybe"))

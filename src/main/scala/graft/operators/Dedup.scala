@@ -707,7 +707,7 @@ object Dedup {
   def incrementalAdmit(archive: DataFrame, increment: DataFrame,
                        idCol: String, textCol: String,
                        shingleK: Int = 3, numHashes: Int = 16,
-                       bands: Int = 4, verifyN: Int = 3,
+                       bands: Int = 4,
                        minBp: Long = 9500L): DataFrame = {
     val archDig = archive.select(md5(col(textCol)).as("__d"),
         xxhash64(col(textCol)).as("__x"),
@@ -729,8 +729,7 @@ object Dedup {
       .select("a", "b").distinct()
     val corpus = archive.select(col(idCol), col(textCol))
       .unionByName(survivors.select(col(idCol), col(textCol)))
-    val near = jaccardVerify(cands, corpus, idCol, textCol, verifyN,
-      minBp)
+    val near = jaccardVerify(cands, corpus, idCol, textCol, 3, minBp)
     survivors.join(near.select(col("b").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
   }

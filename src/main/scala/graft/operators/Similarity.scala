@@ -304,7 +304,7 @@ object Similarity {
       .select(col("sub"), posexplode(col("__s")).as(Seq("cid", "__e")))
       .select(col("sub"), col("cid").cast(LongType).as("cid"),
         col("__e.sv").as("cv"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     for (_ <- 0 until iters) {
       val upd = nearest(slices, Seq("sub", "id"), "sv", cents, Seq("sub"),
           Seq("sv"))
@@ -318,17 +318,18 @@ object Similarity {
             .as("cx")))).as("ps"))
         .select(col("sub"), col("cid"),
           transform(col("ps"), p => p.getField("cx")).as("cvNew"))
-      // Lazy local checkpoint: truncates lineage across iterations
-      // without executing the Lloyd rounds at plan-construction time
-      // (eager = true would run every iteration on a mere .explain).
-      // Tradeoff: local checkpoint blocks are not recomputable if an
-      // executor is lost mid-job — acceptable for a bounded training
-      // loop; a long multi-hour cluster run should swap this for
-      // reliable .checkpoint() against a DFS checkpoint dir.
+      // Eager local checkpoint: truncates lineage across iterations and
+      // runs each round as its own job. A lazy one loses the round's
+      // SQL metrics: its accumulators can be collected before the tasks
+      // report ("non-existent accumulator"). Tradeoff: local checkpoint
+      // blocks are not recomputable if an executor is lost mid-job —
+      // acceptable for a bounded training loop; a long multi-hour
+      // cluster run should swap this for reliable .checkpoint() against
+      // a DFS checkpoint dir.
       cents = cents.join(upd, Seq("sub", "cid"), "left")
         .select(col("sub"), col("cid"),
           coalesce(col("cvNew"), col("cv")).as("cv"))
-        .localCheckpoint(eager = false)
+        .localCheckpoint()
     }
     cents
   }
@@ -516,14 +517,14 @@ object Similarity {
     val coarse = centroids(vq, coarseK, coarseIters, "coarseK")
     def minusCentroid(v: String) =
       if (residual) zip_with(col(v), col("cv"), (x, c) => x - c) else col(v)
-    // (id, list, v): lazy checkpoint (r21) — the list rows feed BOTH the
+    // (id, list, v): eager checkpoint — the list rows feed BOTH the
     // codebook training and the probed-list candidate prune; without
     // it the assignment join + argmin re-runs for each consumer. At
     // deployment this is the materialized assignment table
     // (IvfLifecycle.build's artifact).
     val lists = nearest(vq, Seq("id"), "v", coarse, Nil, Seq("v", "cv"))
       .select(col("id"), col("cid").as("list"), minusCentroid("v").as("v"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint()
     val book = lloyd(sliced(lists, m, sub), m, pqK, pqIters, "pqK")
     val probes = broadcast(coarse
       .join(broadcast(vq.filter(col("id") === queryId)

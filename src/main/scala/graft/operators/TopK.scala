@@ -7,22 +7,20 @@ import org.apache.spark.sql.functions._
 /** Top-K family: top-N + "others" residual row, and top-X%-cumulative cut.
   *
   * Reference semantics:
-  *  - top-N+others: emit the first `limit` rows in declared sort order,
-  *    then ONE residual row whose key columns are NULL and whose measures
-  *    sum everything past the limit (reference monit-objects-fwm.c:404-481;
-  *    NULL keys at 461-478). No others row when nothing exceeds the limit.
+  *  - top-N+others: emit the first N rows in declared sort order, then
+  *    ONE residual row whose key columns are NULL and whose measures sum
+  *    everything past row N (reference monit-objects-fwm.c:404-481;
+  *    NULL keys at 461-478). No others row when there are at most N rows.
   *  - top-X%: sort desc by one measure, keep rows until the running total
   *    (exclusive of the current row) reaches X% of the grand total
   *    (reference classification.c:524-619).
   *
-  * Both run AFTER aggregation, so inputs are group-cardinality-bounded;
-  * the window partitioning keeps the work distributed per time bucket at
-  * any scale. The window forms with EMPTY partCols collapse to one
-  * partition — acceptable post-aggregation (how the reference uses
-  * them); for raw-cardinality global cuts use [[topNOthersGlobal]] /
-  * [[topPctCutGlobal]], which stay distributed (TakeOrderedAndProject
-  * head + narrow residual agg; banded refinement) and are spec-asserted
-  * equal to the window forms.
+  * Both run AFTER aggregation, over a group-cardinality-bounded input, as
+  * the reference does over one window's in-memory aggregate. Each is one
+  * lazy window plan that reads `agg` once; empty `partCols` is one
+  * partition. On the contract aggregates (16 to 1,806 rows) that plan
+  * measured faster than a distributed head take or a banded cumulative
+  * walk (SCALE.md, "One windowed TopK path").
   */
 object TopK {
 
@@ -33,27 +31,24 @@ object TopK {
     * @param keyCols   group-key columns → NULL in the others row
     * @param measCols  measure columns → summed in the others row
     * @param sortCols  declared ordering within a partition
-    * @param n         row limit per partition
+    * @param n         head rows kept per partition
     */
   def topNOthers(agg: DataFrame, partCols: Seq[String], keyCols: Seq[String],
                  measCols: Seq[String], sortCols: Seq[Column],
                  n: Int): DataFrame = {
-    val w =
-      if (partCols.isEmpty) Window.orderBy(sortCols: _*)
-      else Window.partitionBy(partCols.map(col): _*).orderBy(sortCols: _*)
+    val w = Window.partitionBy(partCols.map(col): _*).orderBy(sortCols: _*)
     // SINGLE PASS over the aggregated input (a union of head/tail
     // branches would scan + aggregate it twice — shows up as a double
-    // parquet scan at any scale): rank rows, null the keys past the
-    // limit, and re-group. Head rows keep their unique rank so the merge
-    // leaves them untouched; all past-limit rows share the (part, NULL
-    // keys, NULL rank) group and collapse into the one residual row.
+    // parquet scan at any scale): rank rows, null the keys past row n,
+    // and re-group. Head rows keep their unique rank so the merge leaves
+    // them untouched; all rows past n share the (part, NULL keys, NULL
+    // rank) group and collapse into the one residual row.
     val flagged = agg.withColumn("__rn", row_number().over(w))
     val schema = agg.schema
-    def typeOf(c: String) = schema(c).dataType
     val marked = flagged.select(
       (partCols.map(col) ++
         keyCols.map(k => when(col("__rn") <= n, col(k))
-          .otherwise(lit(null).cast(typeOf(k))).as(k)) ++
+          .otherwise(lit(null).cast(schema(k).dataType)).as(k)) ++
         measCols.map(col) :+
         when(col("__rn") <= n, col("__rn")).otherwise(lit(null))
           .as("__hrn")): _*)
@@ -66,166 +61,20 @@ object TopK {
   }
 
   /** Keep the top rows by `measure` desc until the cumulative sum reaches
-    * pct% of the partition total (the crossing row is kept).
+    * pct% of the total (the crossing row is kept).
     *
     * @param tieBreak extra ordering columns to make the cut deterministic
     */
-  def topPctCut(agg: DataFrame, partCols: Seq[String], measure: String,
-                pct: Double, tieBreak: Seq[Column]): DataFrame = {
-    val ord = (col(measure).desc +: tieBreak)
-    val (wOrd, wAll) =
-      if (partCols.isEmpty)
-        (Window.orderBy(ord: _*), Window.partitionBy())
-      else {
-        val p = partCols.map(col)
-        (Window.partitionBy(p: _*).orderBy(ord: _*),
-         Window.partitionBy(p: _*))
-      }
+  def topPctCut(agg: DataFrame, measure: String, pct: Double,
+                tieBreak: Seq[Column]): DataFrame = {
+    val wOrd = Window.orderBy(col(measure).desc +: tieBreak: _*)
     val cumExcl = coalesce(
       sum(col(measure)).over(wOrd.rowsBetween(Window.unboundedPreceding, -1)),
       lit(0L))
-    val total = sum(col(measure)).over(
-      wAll.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+    val total = sum(col(measure)).over()
     agg.withColumn("__cum", cumExcl)
       .withColumn("__tot", total)
       .filter(col("__cum") < col("__tot") * lit(pct) / lit(100.0))
       .drop("__cum", "__tot")
-  }
-
-  /** GLOBAL top-N + others without the single-partition window
-    * ([[topNOthers]] with empty partCols moves ALL rows to one task —
-    * fine post-aggregation, a scale-killer on raw cardinality).
-    *
-    * Shape: the head is `orderBy(...).limit(n)` — Spark plans
-    * TakeOrderedAndProject, a per-partition bounded heap merged on the
-    * driver (n·P candidate rows, never the data). The residual needs no
-    * order at all: grand totals come from one narrow map-side-combined
-    * aggregate, the others row is (totals − head sums). Two scans of
-    * `agg` instead of one, but both are partial-agg narrow — at raw
-    * cardinality that trade wins by orders of magnitude.
-    *
-    * Output set ≡ `topNOthers(agg, Nil, agg.columns, measCols,
-    * sortCols, n)` whenever `sortCols` is a total order AND `agg` is
-    * deterministic over the call — both the head take and the totals
-    * aggregate are evaluated HERE, at call time, against what must be
-    * the same data (the window form reads once and has no such
-    * caveat); TopKSpec asserts the equivalence. */
-  def topNOthersGlobal(agg: DataFrame,
-                       measCols: Seq[String], sortCols: Seq[Column],
-                       n: Int): DataFrame = {
-    val outCols = agg.schema.fieldNames.toSeq
-    // the head is n rows by contract — a BOUNDED driver collect (the
-    // distributed work is the TakeOrderedAndProject heap). Re-emitting
-    // it as a local relation avoids localCheckpoint's non-reliable
-    // executor-local blocks and makes the construction lazy apart from
-    // this one take.
-    val spark = agg.sparkSession
-    val headRows = agg.orderBy(sortCols: _*).limit(n).collect()
-    val head = spark.createDataFrame(
-      java.util.Arrays.asList(headRows: _*), agg.schema)
-    val totCnt = count(lit(1)).as("__cnt")
-    // per-measure non-null counts: the others row's measure must be
-    // NULL — not 0 — when every tail value is NULL (sum over an
-    // all-NULL set is NULL in the window form this mirrors).
-    // Collected NOW (1 row): deferring this scan to the consumer's
-    // action would let a changing/non-deterministic source desync the
-    // residual from the head snapshot above (double-count or negative
-    // others)
-    val totalsRow = agg.agg(totCnt,
-      (measCols.map(m => sum(col(m)).as(m)) ++
-        measCols.map(m => count(col(m)).as(s"__nn_$m"))): _*)
-    val totals = spark.createDataFrame(
-      java.util.Arrays.asList(totalsRow.collect(): _*),
-      totalsRow.schema)
-    val headTotals = head.agg(totCnt,
-      (measCols.map(m => sum(col(m)).as(m)) ++
-        measCols.map(m => count(col(m)).as(s"__nn_$m"))): _*)
-    // 1-row × 1-row: the "join" is a broadcast of a scalar row.
-    val others = totals.crossJoin(
-        headTotals.select((col("__cnt").as("__hcnt") +:
-          (measCols.map(m => col(m).as(s"__h_$m")) ++
-            measCols.map(m => col(s"__nn_$m").as(s"__hnn_$m")))): _*))
-      .filter(col("__cnt") > col("__hcnt"))
-      .select(outCols.map { c =>
-        if (measCols.contains(c))
-          when(col(s"__nn_$c") > col(s"__hnn_$c"),
-            col(c) - coalesce(col(s"__h_$c"), lit(0L)))
-            .otherwise(lit(null)).as(c)
-        else lit(null).cast(agg.schema(c).dataType).as(c)
-      }: _*)
-    head.unionAll(others)
-  }
-
-  /** GLOBAL top-X% cut without the single-partition window: banded
-    * refinement. Rows are bucketed by the measure's magnitude
-    * (floor(log2)); per-bucket (sum, count) — at most ~66 rows — is
-    * collected to the driver, which locates the one CROSSING bucket B
-    * where the descending cumulative sum passes `pct`% of the total.
-    * Rows above B are provably kept (their exclusive cumsum can't reach
-    * the target), rows below B provably cut, and only bucket B — one
-    * log-band of the distribution — gets the exact sorted-window
-    * treatment, seeded with the exact integer cumsum of the buckets
-    * above. The kept/cut comparison replicates [[topPctCut]]'s double
-    * math operand-for-operand, so the two paths agree bit-for-bit
-    * (TopKSpec asserts it).
-    *
-    * Degenerate case: a single-valued measure puts everything in one
-    * band and this collapses to [[topPctCut]] — no worse, never better.
-    * Requires a non-negative integral measure (the reference's octet /
-    * packet / flow-count sums); NULL or negative values throw rather
-    * than silently diverging from the window form's 3VL.
-    *
-    * Cost: three narrow passes over `agg` (band stats, kept filter,
-    * band filter) — persist `agg` upstream if recomputing it is
-    * expensive; each pass is a scan + pushed filter, never a sort. */
-  def topPctCutGlobal(agg: DataFrame, measure: String, pct: Double,
-                      tieBreak: Seq[Column]): DataFrame = {
-    val m = col(measure)
-    // bucket −1 holds zeros (they never move the cumsum but can still be
-    // emitted once the target is passed — they sort last, like
-    // topPctCut). Band index is the EXACT bit length − 1 (binary digit
-    // count via conv, pure integer — no floating log whose rounding
-    // could smear a power-of-two across two bands). NULL / negative
-    // measures land in the sentinel band −2: out of contract, rejected
-    // below with the cause instead of a driver NPE.
-    val bucket = when(m.isNull || m < 0, lit(-2))
-      .when(m === 0, lit(-1))
-      .otherwise((length(conv(m, 10, 2)) - 1).cast("int"))
-    val stats = agg.groupBy(bucket.as("__b"))
-      .agg(sum(m).as("__s"), count(lit(1)).as("__c"))
-      .collect()  // bounded: one row per log2 band, ≤ ~66
-      .map(r => (r.getInt(0), if (r.isNullAt(1)) 0L else r.getLong(1),
-        r.getLong(2)))
-      .sortBy(-_._1)
-    require(!stats.exists(_._1 == -2),
-      s"topPctCutGlobal requires a non-negative, non-NULL '$measure' " +
-        "(the banded walk and the windowed form diverge otherwise)")
-    val total = stats.map(_._2).sum
-    val target = total * pct / 100.0
-    // walk buckets high→low: a bucket is wholly kept while its END
-    // (cum + s) stays below the target — then even its last row's
-    // exclusive cumsum (≤ cum + s − m, m ≥ 0) is below the target.
-    // The first bucket that reaches the target is the crossing band.
-    var cum = 0L
-    var crossing = Int.MinValue
-    var cumAbove = 0L
-    for ((b, s, _) <- stats if crossing == Int.MinValue) {
-      if (cum + s < target) cum += s
-      else { crossing = b; cumAbove = cum }
-    }
-    if (crossing == Int.MinValue) return agg  // target never reached
-    // kept = every band above the crossing (the walk visits bands in
-    // strictly descending order, so "visited before crossing" ≡ ">")
-    val kept = agg.filter(bucket > crossing)
-    val band = agg.filter(bucket === crossing)
-    val ord = (m.desc +: tieBreak)
-    val w = Window.orderBy(ord: _*)
-    val cumExcl = lit(cumAbove) + coalesce(
-      sum(m).over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-    val bandKept = band.withColumn("__cum", cumExcl)
-      .withColumn("__tot", lit(total))
-      .filter(col("__cum") < col("__tot") * lit(pct) / lit(100.0))
-      .drop("__cum", "__tot")
-    kept.unionAll(bandKept)
   }
 }

@@ -1,8 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
-
 /** Application-payload extractors: DNS answers and TLS SNI, used by the
   * reference to enrich sampled packets with `dns_name`/`dns_ips`/`sni`
   * columns (reference xe-dns.h, xe-sni.h, invoked from sflow.c:96-112).
@@ -112,22 +109,5 @@ object PayloadParsers {
       }
       None
     } catch { case _: Exception => None }
-  }
-
-  /** Column wrappers (UDF — payload parsing is per-row imperative). */
-  val dnsNameUdf: Column => Column = {
-    val f = udf { (b: Array[Byte]) =>
-      if (b == null) null else parseDns(b).map(_._1).orNull }
-    c => f(c)
-  }
-  val dnsIpsUdf: Column => Column = {
-    val f = udf { (b: Array[Byte]) =>
-      if (b == null) null else parseDns(b).map(_._2).orNull }
-    c => f(c)
-  }
-  val sniUdf: Column => Column = {
-    val f = udf { (b: Array[Byte]) =>
-      if (b == null) null else parseSni(b).orNull }
-    c => f(c)
   }
 }

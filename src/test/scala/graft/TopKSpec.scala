@@ -1,9 +1,49 @@
 package graft
 
 import graft.operators.TopK
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 class TopKSpec extends SparkTest {
+  import TopKSpec.Model
+
+  private def nullable(v: Option[Long]): java.lang.Long =
+    v.map(java.lang.Long.valueOf).orNull
+
+  private def opt(r: Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(r.getLong(i))
+
+  /** `TopK.topNOthers` over (time, key, octets) rows, sorted by octets
+    * desc, key asc, collected in the model's row order. `perWindow`
+    * partitions by time; otherwise time is dropped and reads back 0. */
+  private def topN(rows: Seq[Model.Row3], perWindow: Boolean,
+                   n: Int): Seq[Model.Row3] = {
+    val df = spark.createDataFrame(
+      rows.map(r => Row(r._1, nullable(r._2), nullable(r._3))).asJava,
+      StructType(Seq("time", "key", "octets")
+        .map(StructField(_, LongType, true))))
+    val partCols = if (perWindow) Seq("time") else Nil
+    TopK.topNOthers(df.select((partCols :+ "key" :+ "octets").map(col): _*),
+        partCols, Seq("key"), Seq("octets"),
+        Seq(col("octets").desc, col("key").asc), n)
+      .select(if (perWindow) col("time") else lit(0L), col("key"),
+        col("octets"))
+      .collect().map(r => (r.getLong(0), opt(r, 1), opt(r, 2)))
+      .toSeq.sorted
+  }
+
+  /** `TopK.topPctCut` over (k, v) rows, ties broken by k asc. */
+  private def topPct(rows: Seq[(Long, Option[Long])],
+                     pct: Double): Seq[(Long, Option[Long])] = {
+    val df = spark.createDataFrame(
+      rows.map(r => Row(r._1, nullable(r._2))).asJava,
+      StructType(Seq(StructField("k", LongType, false),
+        StructField("v", LongType, true))))
+    TopK.topPctCut(df, "v", pct, Seq(col("k").asc))
+      .collect().map(r => (r.getLong(0), opt(r, 1))).toSeq.sorted
+  }
 
   private def agg = flowDf(
     Seq("time", "key", "octets"),
@@ -35,105 +75,62 @@ class TopKSpec extends SparkTest {
     assert(out.length == 2) // under the limit → no residual row
   }
 
-  test("topNOthersGlobal ≡ topNOthers(no partition), distributed head") {
+  test("topNOthers ≡ reference model: 120 keys, n in {1, 10, 119, 120, 500}") {
     val rnd = new scala.util.Random(7)
-    // 120 keys, distinct octet values so the sort order is total
+    // 120 keys, distinct octet values so the sort order is total; the
+    // partitioned run splits them over three windows
     val rows = rnd.shuffle((1L to 120L).toList).zipWithIndex.map {
-      case (k, i) => Seq(k, 10000L - i * 3L)
+      case (k, i) => (k % 3, Option(k), Option(10000L - i * 3L))
     }
-    val df = flowDf(Seq("key", "octets"), rows)
-    val sort = Seq(col("octets").desc, col("key").asc)
+    val global = rows.map(r => r.copy(_1 = 0L))
     for (n <- Seq(1, 10, 119, 120, 500)) {
-      val viaWindow = TopK.topNOthers(df, Seq.empty, Seq("key"),
-        Seq("octets"), sort, n).collect()
-        .map(r => (Option(r.get(0)), r.getLong(1))).toSet
-      val global = TopK.topNOthersGlobal(df, Seq("octets"),
-        sort, n)
-      assert(global.collect()
-        .map(r => (Option(r.get(0)), r.getLong(1))).toSet == viaWindow,
+      assert(topN(global, perWindow = false, n) == Model.topN(global, n),
         s"n=$n")
-      if (n == 10) {
-        // the head is localCheckpoint'd inside topNOthersGlobal, so its
-        // plan is sealed there — assert the shape Spark gives that
-        // expression: a distributed bounded-heap take, not a sort
-        val headPlan = df.orderBy(sort: _*).limit(n)
-          .queryExecution.executedPlan.toString
-        assert(headPlan.contains("TakeOrderedAndProject"),
-          "global head must be a distributed bounded-heap take")
-        assert(!global.queryExecution.executedPlan.toString
-          .contains("Window"),
-          "the global form must not move all rows into one window task")
-      }
+      assert(topN(rows, perWindow = true, n) == Model.topN(rows, n),
+        s"n=$n per window")
     }
   }
 
-  test("topNOthersGlobal: an all-NULL tail measure yields a NULL " +
-    "others measure (window-form parity); topPctCutGlobal rejects " +
-    "NULL / negative measures with a clear error") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    def df(rows: Seq[(Long, java.lang.Long)]) = spark.createDataFrame(
-      rows.map { case (k, v) => Row(k, v) }.asJava,
-      StructType(Seq(StructField("k", LongType, false),
-        StructField("v", LongType, true))))
-    val nullTail = df(Seq(1L -> java.lang.Long.valueOf(5L),
-      2L -> null, 3L -> null))
-    val sort = Seq(col("v").desc, col("k").asc)
-    val window = TopK.topNOthers(nullTail, Seq.empty, Seq("k"), Seq("v"),
-      sort, 1).collect().map(r => (Option(r.get(0)), Option(r.get(1))))
-    val global = TopK.topNOthersGlobal(nullTail, Seq("v"),
-      sort, 1).collect().map(r => (Option(r.get(0)), Option(r.get(1))))
-    assert(global.toSet == window.toSet)
-    assert(global.toSet == Set((Some(1L), Some(5L)), (None, None)))
-    val e1 = intercept[IllegalArgumentException](
-      TopK.topPctCutGlobal(nullTail, "v", 50.0, Seq(col("k").asc)))
-    assert(e1.getMessage.contains("non-NULL"))
-    val e2 = intercept[IllegalArgumentException](
-      TopK.topPctCutGlobal(df(Seq(1L -> java.lang.Long.valueOf(-3L))),
-        "v", 50.0, Seq(col("k").asc)))
-    assert(e2.getMessage.contains("non-negative"))
+  test("topNOthers: an all-NULL tail yields a NULL others measure (reference model)") {
+    val nullTail = Seq((0L, Some(1L), Some(5L)), (0L, Some(2L), None),
+      (0L, Some(3L), None))
+    assert(topN(nullTail, perWindow = false, 1) == Model.topN(nullTail, 1))
+    assert(Model.topN(nullTail, 1) ==
+      Seq((0L, None, None), (0L, Some(1L), Some(5L))))
   }
 
-  test("topPctCutGlobal ≡ topPctCut(no partition): banded refinement, " +
-    "zeros, single-band degenerate, never-reached target") {
+  test("topPctCut ≡ reference model: spread/flat/zeros/NULL/negative bands, pct 0 to 150") {
     val rnd = new scala.util.Random(11)
     val spread = (1L to 150L).map(k =>
-      Seq(k, rnd.nextInt(1 << rnd.nextInt(20)).toLong))
-    val flat = (1L to 40L).map(k => Seq(k, 64L))         // one band only
-    val zeros = (1L to 30L).map(k => Seq(k, if (k % 3 == 0) 0L else k))
+      (k, Option(rnd.nextInt(1 << rnd.nextInt(20)).toLong)))
+    val flat = (1L to 40L).map(k => (k, Option(64L)))
+    val zeros = (1L to 30L).map(k => (k, Option(if (k % 3 == 0) 0L else k)))
+    // SQL three-valued logic: NULL measures sort last and add nothing
+    // to a cumsum; an all-NULL total keeps no row
+    val nulls = (1L to 30L).map(k =>
+      (k, if (k % 4 == 0) None else Option(k * 7L)))
+    val allNull = (1L to 5L).map(k => (k, Option.empty[Long]))
+    val negative = (1L to 30L).map(k => (k, Option(k * 11L - 150L)))
     for ((rows, what) <- Seq((spread, "spread"), (flat, "flat"),
-        (zeros, "zeros"))) {
-      val df = flowDf(Seq("k", "v"), rows)
-      for (pct <- Seq(0.0, 10.0, 50.0, 90.0, 99.9, 100.0, 150.0)) {
-        val exact = TopK.topPctCut(df, Seq.empty, "v", pct,
-          Seq(col("k").asc)).select("k")
-          .collect().map(_.getLong(0)).toSet
-        val banded = TopK.topPctCutGlobal(df, "v", pct, Seq(col("k").asc))
-          .select("k").collect().map(_.getLong(0)).toSet
-        assert(banded == exact, s"$what pct=$pct")
-      }
-    }
+        (zeros, "zeros"), (nulls, "nulls"), (allNull, "allNull"),
+        (negative, "negative"));
+        pct <- Seq(0.0, 10.0, 50.0, 90.0, 99.9, 100.0, 150.0))
+      assert(topPct(rows, pct) == Model.topPct(rows, pct),
+        s"$what pct=$pct")
   }
 
-  test("topPctCutGlobal ≡ topPctCut on randomized heavy-tailed data " +
-    "with huge magnitudes and random pcts (band-edge fuzz)") {
+  test("topPctCut ≡ reference model on heavy-tailed data, huge magnitudes, random pcts") {
     val rnd = new scala.util.Random(1729)
     for (trial <- 1 to 5) {
       // heavy-tailed: magnitudes spanning 2^0 .. 2^40, duplicates
-      // common (ties exercise the tieBreak across the band boundary)
+      // common (ties exercise the tieBreak)
       val rows = (1L to 80L).map { k =>
         val mag = rnd.nextInt(41)
-        Seq(k, (1L << mag) + rnd.nextInt(3).toLong - 1L)
+        (k, Option((1L << mag) + rnd.nextInt(3).toLong - 1L))
       }
-      val df = flowDf(Seq("k", "v"), rows)
       val pct = rnd.nextDouble() * 120.0
-      val exact = TopK.topPctCut(df, Seq.empty, "v", pct,
-        Seq(col("k").asc)).select("k")
-        .collect().map(_.getLong(0)).toSet
-      val banded = TopK.topPctCutGlobal(df, "v", pct, Seq(col("k").asc))
-        .select("k").collect().map(_.getLong(0)).toSet
-      assert(banded == exact, s"trial=$trial pct=$pct")
+      assert(topPct(rows, pct) == Model.topPct(rows, pct),
+        s"trial=$trial pct=$pct")
     }
   }
 
@@ -142,13 +139,53 @@ class TopKSpec extends SparkTest {
     val df = flowDf(Seq("k", "v"),
       Seq(Seq(1L, 50L), Seq(2L, 30L), Seq(3L, 15L), Seq(4L, 5L)))
     // total=100; 90%: cum-excl 0,50,80,95 → keep k=1,2,3
-    val out = TopK.topPctCut(df, Seq.empty, "v", 90.0, Seq(col("k").asc))
+    val out = TopK.topPctCut(df, "v", 90.0, Seq(col("k").asc))
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(out == Seq(1L, 2L, 3L))
     // 50%: cum-excl 0,50 → keep only k=1 (50 < 50 is false for k=2)
-    val out50 = TopK.topPctCut(df, Seq.empty, "v", 50.0, Seq(col("k").asc))
+    val out50 = TopK.topPctCut(df, "v", 50.0, Seq(col("k").asc))
       .select("k").collect().map(_.getLong(0)).sorted.toSeq
     assert(out50 == Seq(1L))
+  }
+}
+
+object TopKSpec {
+
+  /** Brute-force reference model of both cuts over collected rows. Rows
+    * sort by (measure desc NULLS LAST, key asc NULLS FIRST), Spark's
+    * defaults for `desc` / `asc`. */
+  object Model {
+    /** (partition, key, measure) */
+    type Row3 = (Long, Option[Long], Option[Long])
+
+    private val order = Ordering.Tuple2(
+      Ordering.Option(Ordering.Long).reverse, Ordering.Option(Ordering.Long))
+
+    /** SQL SUM: NULLs skipped, NULL over no non-NULL value. */
+    private def sum(vs: Seq[Option[Long]]): Option[Long] =
+      vs.flatten.reduceOption(_ + _)
+
+    /** Per partition: the first n rows, then one NULL-key row summing the
+      * rest when there is a rest. */
+    def topN(rows: Seq[Row3], n: Int): Seq[Row3] =
+      rows.groupBy(_._1).toSeq.flatMap { case (p, rs) =>
+        val (head, tail) = rs.sortBy(r => (r._3, r._2))(order).splitAt(n)
+        if (tail.isEmpty) head
+        else head :+ ((p, None, sum(tail.map(_._3))))
+      }.sorted
+
+    /** Keep a row while the sum of the rows before it (0 when none) is
+      * `< total * pct / 100.0`, in the window form's double math. */
+    def topPct(rows: Seq[(Long, Option[Long])],
+               pct: Double): Seq[(Long, Option[Long])] = {
+      val total = sum(rows.map(_._2))
+      val sorted = rows.sortBy(r => (r._2, Option(r._1)))(order)
+      val cumExcl = sorted.scanLeft(0L)(_ + _._2.getOrElse(0L))
+      sorted.zip(cumExcl).collect {
+        case (r, cum) if total.exists(t =>
+          cum.toDouble < t.toDouble * pct / 100.0) => r
+      }.sorted
+    }
   }
 }
 
